@@ -72,7 +72,7 @@ final class Hll(val log2m: Int, val regwidth: Int) extends Serializable {
       if (value > dense(idx)) dense(idx) = value
     } else if (sparse != null) {
       sparse.setMax(idx, value)
-      if (sparse.size > InMemoryPromotion) promoteToDense()
+      if (sparse.size > InMemoryPromotion) toDense()
     } else {
       // small mode
       val n = smallCount
@@ -124,11 +124,16 @@ final class Hll(val log2m: Int, val regwidth: Int) extends Serializable {
     }
   }
 
-  private def promoteToDense(): Unit = {
-    val d = new Array[Byte](m)
-    sparse.foreach((i, v) => d(i) = v)
-    dense = d
-    sparse = null
+  /** Switch to the dense register array (from any mode) and return it. */
+  private def toDense(): Array[Byte] = {
+    if (dense == null) {
+      val d = new Array[Byte](m)
+      foreachRegister((i, v) => d(i) = v)
+      dense = d
+      sparse = null
+      small = 0L
+    }
+    dense
   }
 
   /** Number of registers holding a non-zero value. */
@@ -155,7 +160,12 @@ final class Hll(val log2m: Int, val regwidth: Int) extends Serializable {
   def union(other: Hll): Unit = {
     require(other.log2m == log2m && other.regwidth == regwidth,
       s"HLL settings mismatch: ($log2m,$regwidth) vs (${other.log2m},${other.regwidth})")
-    other.foreachRegister((i, v) => setMax(i, v))
+    if (other.dense != null) { // dense into dense: a plain max loop
+      val d = toDense()
+      val o = other.dense
+      var i = 0
+      while (i < m) { if (o(i) > d(i)) d(i) = o(i); i += 1 }
+    } else other.foreachRegister((i, v) => setMax(i, v))
   }
 
   /**
@@ -211,15 +221,9 @@ final class Hll(val log2m: Int, val regwidth: Int) extends Serializable {
       val out = new BitWriter(3 + (m * regwidth + 7) / 8)
       out.byte((SchemaVersion << 4 | TypeFull).toByte)
       out.byte(hdr1); out.byte(cutoff)
-      if (dense == null) {
-        val d = new Array[Byte](m)
-        foreachRegister((i, v) => d(i) = v)
-        dense = d
-        sparse = null
-        small = 0L
-      }
+      val d = toDense()
       var i = 0
-      while (i < m) { out.bits(dense(i).toLong, regwidth); i += 1 }
+      while (i < m) { out.bits(d(i).toLong, regwidth); i += 1 }
       out.result()
     }
   }
@@ -247,7 +251,9 @@ object Hll {
 
   def apply(): Hll = new Hll(DefaultLog2m, DefaultRegwidth)
 
-  /** Parse AK storage-spec bytes. Accepts EMPTY/EXPLICIT/SPARSE/FULL. */
+  /** Parse AK storage-spec bytes. Accepts EMPTY/EXPLICIT/SPARSE/FULL.
+    * FULL payloads, and SPARSE payloads of more than [[InMemoryPromotion]]
+    * words, decode straight into the dense register array. */
   def fromBytes(bytes: Array[Byte]): Hll = {
     require(bytes.length >= 3, s"HLL bytes too short: ${bytes.length}")
     val version = (bytes(0) & 0xf0) >> 4
@@ -272,12 +278,14 @@ object Hll {
         val r = new BitReader(bytes, 3)
         val wordLen = log2m + regwidth
         val nWords = (bytes.length - 3) * 8 / wordLen
+        val d = if (nWords > InMemoryPromotion) h.toDense() else null
         var k = 0
         while (k < nWords) {
           val w = r.bits(wordLen)
           val idx = (w >>> regwidth).toInt
           val value = (w & ((1 << regwidth) - 1)).toByte
-          if (value != 0) h.setMax(idx, value)
+          if (d != null) { if (value > d(idx)) d(idx) = value }
+          else if (value != 0) h.setMax(idx, value)
           k += 1
         }
       case TypeFull =>
@@ -286,12 +294,9 @@ object Hll {
         require(bytes.length >= need,
           s"FULL HLL payload too short: ${bytes.length} < $need")
         val r = new BitReader(bytes, 3)
+        val d = h.toDense()
         var i = 0
-        while (i < m) {
-          val v = r.bits(regwidth).toByte
-          if (v != 0) h.setMax(i, v)
-          i += 1
-        }
+        while (i < m) { d(i) = r.bits(regwidth).toByte; i += 1 }
       case other => throw new IllegalArgumentException(s"unsupported HLL type $other")
     }
     h
@@ -334,23 +339,20 @@ private[sketch] final class BitWriter(exactSize: Int) {
   }
 }
 
-/** MSB-first bit reader for AK payloads. */
+/** MSB-first bit reader for AK payloads. Reads whole bytes into a 64-bit
+  * window, only as far as the bits asked for; `n` is at most 56. */
 private[sketch] final class BitReader(bytes: Array[Byte], startOff: Int) {
-  private var bitPos = startOff * 8L
+  private var off = startOff
+  private var acc = 0L
+  private var nbits = 0
   def bits(n: Int): Long = {
-    var v = 0L
-    var taken = 0
-    while (taken < n) {
-      val byteIdx = (bitPos >> 3).toInt
-      val bitInByte = (bitPos & 7).toInt
-      val avail = 8 - bitInByte
-      val take = math.min(avail, n - taken)
-      val chunk = (bytes(byteIdx) >> (avail - take)) & ((1 << take) - 1)
-      v = (v << take) | chunk
-      taken += take
-      bitPos += take
+    while (nbits < n) {
+      acc = (acc << 8) | (bytes(off) & 0xffL)
+      off += 1
+      nbits += 8
     }
-    v
+    nbits -= n
+    (acc >>> nbits) & ((1L << n) - 1)
   }
 }
 

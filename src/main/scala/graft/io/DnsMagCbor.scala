@@ -1,10 +1,10 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.core.cbor.DnsMagCodec
 import graft.core.cbor.DnsMagCodec.{Dataset, DomainData}
+import graft.core.sketch.Hll
 
 /**
  * Reference-compatible `.dnsmag` dataset file interop (CBOR sequence of
@@ -26,30 +26,16 @@ import graft.core.cbor.DnsMagCodec.{Dataset, DomainData}
  */
 object DnsMagCbor {
 
-  private val stateSchema = StructType(Seq(
-    StructField("date", DateType, nullable = false),
-    StructField("domain", StringType, nullable = true),
-    StructField("hll", BinaryType, nullable = false),
-    StructField("queries", LongType, nullable = false)))
-
-  /** Read one or many .dnsmag files into sketch-state rows. Files load in
-    * parallel (one task per file via binaryFile); each file may itself be a
-    * CBOR sequence of datasets. Dataset files are driver-CLI-sized by
-    * construction (the reference holds them in memory and truncates to
-    * top-N domains), so per-file decode inside a task is the right shape. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val rows = spark.read.format("binaryFile").load(path)
-      .select(col("content"))
-      .rdd.flatMap { r =>
-        DnsMagCodec.decodeSeq(r.getAs[Array[Byte]](0)).flatMap(datasetToRows)
-      }
-    spark.createDataFrame(rows, stateSchema)
-  }
+  /** Read one or many .dnsmag files (a file, directory or glob) into
+    * sketch-state rows through the `dnsmag` DataSource V2 provider
+    * ([[graft.sources.DnsMagDataSource]]): one task per file, each file a
+    * CBOR sequence of datasets. Lazy: files are listed when the plan runs,
+    * so a missing path fails at the first action, naming the path. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.format("dnsmag").load(path)
 
   /** Dataset -> sketch-state tuples (date ISO string, domain or null, hll
-    * bytes, queries) — the single mapping shared by [[read]] and the
-    * `spark.read.format("dnsmag")` DataSource V2 path
-    * ([[graft.sources.DnsMagDataSource]]), so the two can never drift. */
+    * bytes, queries): the mapping the `dnsmag` reader applies per dataset. */
   private[graft] def datasetToState(ds: Dataset): Seq[(String, String, Array[Byte], Long)] = {
     val domainRows = ds.domains.toSeq.sortBy(_._1).map { case (name, d) =>
       (ds.date, name, d.hll, d.queries)
@@ -59,11 +45,6 @@ object DnsMagCbor {
       s"dnsmag: corrupt dataset ${ds.id}: per-domain query counts exceed all_queries_count")
     domainRows :+ ((ds.date, null, ds.allClientsHll, residualQueries))
   }
-
-  private def datasetToRows(ds: Dataset): Seq[Row] =
-    datasetToState(ds).map { case (date, domain, hll, queries) =>
-      Row(java.sql.Date.valueOf(date), domain, hll, queries)
-    }
 
   /** Write sketch-state rows as a reference-consumable .dnsmag file (one
     * dataset per date, CBOR sequence if several dates). Deliberately
@@ -90,19 +71,21 @@ object DnsMagCbor {
         "DnsMagnitude.truncateState) or raise maxExportRows.")
     val datasets = rows.groupBy(_.getAs[java.sql.Date]("date")).toSeq
       .sortBy(_._1.toString).map { case (date, rs) =>
-        val (nullRows, domRows) = rs.partition(_.isNullAt(1))
-        val domains = domRows.map { r =>
+        // each row's sketch is parsed once: its estimate for a domain row,
+        // and its registers for the global sketch = merge of every row of
+        // the date (incl. NULL bucket)
+        val global = Hll()
+        val domains = Map.newBuilder[String, DomainData]
+        var allQueries = 0L
+        rs.foreach { r =>
           val hllBytes = r.getAs[Array[Byte]]("hll")
-          r.getAs[String]("domain") -> DomainData(
-            hllBytes,
-            clients = graft.core.sketch.Hll.fromBytes(hllBytes).estimate,
-            queries = r.getAs[Long]("queries"))
-        }.toMap
-        // global sketch = merge of every row of the date (incl. NULL bucket)
-        val global = graft.core.sketch.Hll()
-        rs.foreach(r => global.union(graft.core.sketch.Hll.fromBytes(r.getAs[Array[Byte]]("hll"))))
-        val allQueries = domRows.map(_.getAs[Long]("queries")).sum +
-          nullRows.map(_.getAs[Long]("queries")).sum
+          val h = Hll.fromBytes(hllBytes)
+          val queries = r.getAs[Long]("queries")
+          if (!r.isNullAt(1))
+            domains += r.getAs[String]("domain") -> DomainData(hllBytes, h.estimate, queries)
+          global.union(h)
+          allQueries += queries
+        }
         Dataset(
           version = DnsMagCodec.Version,
           id = java.util.UUID.nameUUIDFromBytes(
@@ -112,7 +95,7 @@ object DnsMagCbor {
           allClientsHll = global.toBytes,
           allClientsCount = global.estimate,
           allQueriesCount = allQueries,
-          domains = domains)
+          domains = domains.result())
       }
     writeBytes(state.sparkSession, path, DnsMagCodec.encodeSeq(datasets))
   }

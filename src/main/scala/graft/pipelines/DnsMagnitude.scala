@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 
@@ -56,32 +56,42 @@ object DnsMagnitude {
   }
 
   /** aggregate with the reference's strict-date contract and version check
-    * (states written before the version column existed count as v1). */
+    * (states written before the version column existed count as v1).
+    *
+    * Eager: the merge runs here, as one Spark action that reads every input
+    * once, and the result comes back pinned (`localCheckpoint`), so reports
+    * and exports over it never rescan or re-merge the inputs. The versions and
+    * dates of the inputs are observed on that same scan and checked before
+    * the pinned frame is returned; a bad version or a date mismatch throws
+    * from this call. */
   def aggregate(states: Seq[DataFrame], forceDate: Option[java.sql.Date] = None): DataFrame = {
-    val all0 = states
+    require(states.nonEmpty, "aggregate needs at least one sketch state " +
+      "(pass the states to merge, e.g. one DnsMagCbor.read per .dnsmag file)")
+    val seen = Observation()
+    val all = states
       .map(s => if (s.columns.contains("version")) s
                 else s.withColumn("version", lit(StateVersion)))
       .reduce(_.unionByName(_))
-    // version + date validation run over the DISTINCT rows of the (tiny)
-    // state — one driver-side action, not a source scan
-    val badVersions = all0.select(col("version")).distinct().collect()
-      .map(_.getLong(0)).filterNot(_ == StateVersion)
+      .observe(seen, collect_set(col("version")).as("versions"),
+        collect_set(col("date")).as("dates"))
+    val merged = forceDate.fold(all)(d => all.withColumn("date", lit(d)))
+      .groupBy(col("date"), col("domain"))
+      .agg(hll_merge(col("hll")).as("hll"), sum(col("queries")).as("queries"))
+      .withColumn("version", lit(StateVersion))
+      .localCheckpoint()
+    val observed = seen.get
+    val badVersions = observed("versions").asInstanceOf[Seq[Long]]
+      .filterNot(_ == StateVersion).sorted
     if (badVersions.nonEmpty)
       throw new IllegalArgumentException(
         s"unsupported sketch_state version(s) ${badVersions.mkString(", ")} " +
         s"(supported: $StateVersion) — refusing to merge")
-    val all = forceDate match {
-      case Some(d) => all0.withColumn("date", lit(d))
-      case None =>
-        val dates = all0.select(col("date")).distinct().collect().map(_.get(0))
-        if (dates.length > 1)
-          throw new IllegalArgumentException(
-            s"date mismatch across datasets: ${dates.mkString(", ")} (use forceDate to override)")
-        all0
-    }
-    all.groupBy(col("date"), col("domain"))
-      .agg(hll_merge(col("hll")).as("hll"), sum(col("queries")).as("queries"))
-      .withColumn("version", lit(StateVersion))
+    val dates = observed("dates").asInstanceOf[Seq[Any]]
+    if (forceDate.isEmpty && dates.length > 1)
+      throw new IllegalArgumentException(
+        s"date mismatch across datasets: ${dates.map(_.toString).sorted.mkString(", ")} " +
+        "(use forceDate to override)")
+    merged
   }
 
   /**
@@ -149,7 +159,10 @@ object DnsMagnitude {
   }
 
   /** report rows in reference order; estimates finalised here
-    * (finaliseStats analogue). */
+    * (finaliseStats analogue). With `topN > 0` the result is bounded (at
+    * most topN rows per date), so it is sorted in one partition rather
+    * than range-partitioned: a global sort samples its child first, which
+    * runs the whole report twice. */
   def report(state: DataFrame, topN: Int = 0): DataFrame = {
     val perDomain = state.filter(col("domain").isNotNull)
       .select(col("date"), col("domain"),
@@ -180,7 +193,9 @@ object DnsMagnitude {
         local.withColumn("__r", row_number().over(wGlobal))
           .filter(col("__r") <= topN).drop("__r")
       } else joined
-    limited.orderBy(col("date").asc, floor(col("magnitude") * 1000).asc, col("domain").asc)
+    val order = Seq(col("date").asc, floor(col("magnitude") * 1000).asc, col("domain").asc)
+    if (topN > 0) limited.repartition(1).sortWithinPartitions(order: _*)
+    else limited.orderBy(order: _*)
   }
 
   /**

@@ -22,10 +22,11 @@ import org.apache.spark.util.SerializableConfiguration
  * FIRST-CLASS Spark source: `spark.read.format("dnsmag").load(path)` (the
  * reference CLI treats dataset files as its primary input —
  * /root/reference/internal/store.go:109-172 reads them as an incremental
- * CBOR sequence). Produces exactly the sketch-state rows of
- * [[graft.io.DnsMagCbor.read]] — both paths share
- * [[graft.io.DnsMagCbor.datasetToState]], pinned by test on the golden
- * fixtures (estimate 92 through `spark.read.format`).
+ * CBOR sequence). This is the one `.dnsmag` read path:
+ * [[graft.io.DnsMagCbor.read]] loads through it, and each decoded dataset
+ * maps to rows by [[graft.io.DnsMagCbor.datasetToState]]. Tests pin its rows
+ * against a direct decode of the file bytes and the golden fixtures
+ * (estimate 92 through `spark.read.format`).
  *
  * Scale shape: one input partition per file (dataset files are
  * CLI-exchange-sized by construction — the reference truncates them to

@@ -68,6 +68,22 @@ class HllSpec extends AnyFunSuite {
     assert(hex(abc1) === hex(all.toBytes))
   }
 
+  test("union across in-memory modes (small, sparse, dense) == build over the concatenation") {
+    val rnd = new java.util.Random(13)
+    val sizes = Seq(2, 300, 3000, 20000) // small, sparse map, dense, dense FULL
+    val sets = sizes.map(n => Array.fill(n)(rnd.nextLong()))
+    def build(xs: Array[Long]*): Hll = { val h = Hll(); xs.foreach(_.foreach(h.addRaw)); h }
+    for (a <- sets; b <- sets) {
+      val viaUnion = build(a)
+      viaUnion.union(build(b))
+      val viaBytes = Hll.fromBytes(build(a).toBytes)
+      viaBytes.union(Hll.fromBytes(build(b).toBytes))
+      val want = hex(build(a, b).toBytes)
+      assert(hex(viaUnion.toBytes) === want, s"${a.length} into ${b.length}")
+      assert(hex(viaBytes.toBytes) === want, s"${a.length} into ${b.length}, decoded")
+    }
+  }
+
   test("settings mismatch rejected on union (strict union)") {
     val a = Hll()
     val b = new Hll(11, 5)

@@ -106,6 +106,19 @@ class DnsMagJobSpec extends AnyFunSuite {
     assert(e.getMessage.contains("at most once"))
   }
 
+  test("aggregate of a missing .dnsmag input fails, naming the path") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_job_missing").toString
+    DnsMag.run(spark, Array("collect", "--input", getClass.getResource("/test2.tsv").getPath,
+      "--tsv", "--date", "2000-01-01", "--output", s"$dir/s.dnsmag"))
+    val e = intercept[Exception] {
+      DnsMag.run(spark, Array("aggregate", "--input", s"$dir/s.dnsmag",
+        "--input", s"$dir/absent.dnsmag", "--output", s"$dir/merged"))
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => t.getMessage != null && t.getMessage.contains(s"$dir/absent.dnsmag")), e.toString)
+    assert(!new java.io.File(s"$dir/merged").exists())
+  }
+
   test("stdin input: collect reads gzipped records from '-'") {
     val dir = java.nio.file.Files.createTempDirectory("graft_job_stdin2").toString
     val gz = new java.io.File(dir, "recs.csv.gz")

@@ -1,7 +1,12 @@
 package graft.pipelines
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
+import graft.io.DnsMagCbor
 import graft.sources.RecordsCsv
 
 /** End-to-end replay of the reference CLI flows (collect -> aggregate ->
@@ -16,6 +21,47 @@ class DnsMagnitudeSpec extends AnyFunSuite {
 
   private val d1 = java.sql.Date.valueOf("2000-01-01")
   private val d2 = java.sql.Date.valueOf("2000-01-02")
+
+  /** (jobs, stages run) of the Spark work that `body` starts on this
+    * thread. A listener counts the jobs carrying a fresh local-property tag
+    * and the completed stages of those jobs (skipped stages never complete);
+    * a tagged sentinel job then fences the counts, since the bus delivers
+    * events in order. */
+  private def workOf(body: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.workOf"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger
+    val stagesRun = new AtomicInteger
+    val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val fenced = new CountDownLatch(1)
+    @volatile var sentinel = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(t) if t == tag =>
+            jobs.incrementAndGet()
+            e.stageIds.foreach(id => stageIds.add(id))
+          case Some(t) if t == s"$tag:end" => sentinel = e.jobId
+          case _ => ()
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stageIds.contains(e.stageInfo.stageId)) stagesRun.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinel) fenced.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, s"$tag:end")
+      sc.parallelize(Seq(1), 1).count()
+      assert(fenced.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
+      (jobs.get, stagesRun.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   test("csv source: test2.tsv replays to 200 queries / 7 domains / est 27") {
     val recs = RecordsCsv.read(spark, res("test2.tsv"), tsv = true)
@@ -137,6 +183,44 @@ class DnsMagnitudeSpec extends AnyFunSuite {
     val rep = DnsMagnitude.report(forced).collect()
     assert(rep.head.getAs[Long]("totalUniqueClients") === 27L)
     assert(rep.head.getAs[Long]("totalQueryVolume") === 400L)
+  }
+
+  test("aggregate of no states fails fast with an actionable message") {
+    val e = intercept[IllegalArgumentException](DnsMagnitude.aggregate(Seq.empty))
+    assert(e.getMessage.contains("at least one sketch state"), e.getMessage)
+  }
+
+  test(".dnsmag finish path: aggregate is one action, one scan; report reads only the pin") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dnsmag_once").toString
+    val recs = RecordsCsv.read(spark, res("test2.tsv"), tsv = true)
+    DnsMagCbor.write(DnsMagnitude.collect(recs, d1), s"$dir/a.dnsmag")
+    DnsMagCbor.write(DnsMagnitude.collect(recs, d2), s"$dir/b.dnsmag")
+    def states = Seq(DnsMagCbor.read(spark, s"$dir/a.dnsmag"),
+      DnsMagCbor.read(spark, s"$dir/b.dnsmag"))
+
+    // One action, two stages: one scans every file and merges partially,
+    // one finishes the merge. Adaptive execution submits the first as its
+    // own job, and the action's job reuses its shuffle. The version and
+    // date checks ride that scan, so a date mismatch costs no more work.
+    val oneMerge = (2, 2)
+    var agg: org.apache.spark.sql.DataFrame = null
+    assert(workOf(intercept[IllegalArgumentException](DnsMagnitude.aggregate(states))) === oneMerge)
+    assert(workOf { agg = DnsMagnitude.aggregate(states, forceDate = Some(d1)) } === oneMerge)
+    assert(workOf { agg = DnsMagnitude.aggregate(Seq(states.head)) } === oneMerge)
+
+    val top = DnsMagnitude.report(agg, 2500)
+    val plan = top.queryExecution.executedPlan.toString
+    assert(!plan.contains("BatchScan dnsmag"), s"report rescans the files:\n$plan")
+    assert(!plan.toLowerCase.contains("rangepartitioning"), s"top-N report sorts globally:\n$plan")
+    val all = DnsMagnitude.report(agg, 0)
+    assert(all.queryExecution.executedPlan.toString.toLowerCase.contains("rangepartitioning"))
+    // both paths: the same rows in the reference order
+    val rows = top.collect().toSeq
+    assert(rows === all.collect().toSeq)
+    assert(rows.length === 7 && rows.head.getAs[Long]("totalUniqueClients") === 27L)
+    val keys = rows.map(r => (math.floor(r.getAs[Double]("magnitude") * 1000).toLong,
+      r.getAs[String]("domain")))
+    assert(keys === keys.sorted)
   }
 
   test("report JSON matches the reference schema shape and sort") {

@@ -2,12 +2,14 @@ package graft.sources
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
+import graft.core.cbor.DnsMagCodec
 import graft.functions.GraftFunctions._
 import graft.io.DnsMagCbor
 import graft.pipelines.DnsMagnitude
 
-/** `spark.read.format("dnsmag")` (DataSource V2) vs the helper read path:
-  * identical rows on the reference aggregate fixture (estimate 92),
+/** `spark.read.format("dnsmag")` (DataSource V2, also behind
+  * `DnsMagCbor.read`) vs a direct decode of the file bytes: identical rows,
+  * the reference aggregate fixture (estimate 92),
   * per-file parallelism on directories, column pruning into the reader,
   * and file-source ergonomics (globs, hidden-file skip, missing paths). */
 class DnsMagV2SourceSpec extends AnyFunSuite {
@@ -38,16 +40,25 @@ class DnsMagV2SourceSpec extends AnyFunSuite {
     tmp
   }
 
-  private def canon(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(r => (r.getAs[java.sql.Date]("date").toString,
+  private type StateRow = (String, String, Seq[Byte], Long)
+  private def sorted(rows: Seq[StateRow]) = rows.sortBy(t => (t._1, Option(t._2).getOrElse("")))
+
+  private def canon(df: org.apache.spark.sql.DataFrame): Seq[StateRow] =
+    sorted(df.collect().toSeq.map(r => (r.getAs[java.sql.Date]("date").toString,
       r.getAs[String]("domain"),
       Option(r.getAs[Array[Byte]]("hll")).map(_.toSeq).orNull,
-      r.getAs[Long]("queries"))).sortBy(t => (t._1, Option(t._2).getOrElse("")))
+      r.getAs[Long]("queries"))))
 
-  test("format(\"dnsmag\") rows == DnsMagCbor.read rows, byte-exact, single file") {
+  /** The oracle: the file's bytes decoded in this JVM, without Spark. */
+  private def decoded(file: String): Seq[StateRow] =
+    sorted(DnsMagCodec.decodeSeq(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)))
+      .flatMap(DnsMagCbor.datasetToState)
+      .map { case (date, domain, hll, queries) => (date, domain, hll.toSeq, queries) })
+
+  test("format(\"dnsmag\") rows == direct decode, byte-exact, single file") {
     val v2 = spark.read.format("dnsmag").load(s"$fixtureDir/t1.dnsmag")
     assert(v2.schema === DnsMagDataSource.Schema)
-    assert(canon(v2).toSeq === canon(DnsMagCbor.read(spark, s"$fixtureDir/t1.dnsmag")).toSeq)
+    assert(canon(v2) === decoded(s"$fixtureDir/t1.dnsmag"))
   }
 
   test("aggregate over format(\"dnsmag\") reproduces the reference fixture (est 92)") {
@@ -61,15 +72,14 @@ class DnsMagV2SourceSpec extends AnyFunSuite {
   test("directory read: hidden/metadata files skipped, one partition per file") {
     val df = spark.read.format("dnsmag").load(fixtureDir)
     assert(df.rdd.getNumPartitions === 2, "one input partition per .dnsmag file")
-    val both = canon(DnsMagCbor.read(spark, s"$fixtureDir/t1.dnsmag")).toSeq ++
-      canon(DnsMagCbor.read(spark, s"$fixtureDir/t2.dnsmag")).toSeq
-    assert(canon(df).toSeq === both.sortBy(t => (t._1, Option(t._2).getOrElse(""))))
+    val both = decoded(s"$fixtureDir/t1.dnsmag") ++ decoded(s"$fixtureDir/t2.dnsmag")
+    assert(canon(df) === sorted(both))
     // glob and multi-path load agree with the directory read
     val glob = spark.read.format("dnsmag").load(s"$fixtureDir/*.dnsmag")
-    assert(canon(glob).toSeq === canon(df).toSeq)
+    assert(canon(glob) === canon(df))
     val multi = spark.read.format("dnsmag")
       .load(s"$fixtureDir/t1.dnsmag", s"$fixtureDir/t2.dnsmag")
-    assert(canon(multi).toSeq === canon(df).toSeq)
+    assert(canon(multi) === canon(df))
   }
 
   test("column pruning reaches the reader: HLL bytes never materialize for a count") {
