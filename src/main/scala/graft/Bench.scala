@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /**
  * Benchmark main (driver contract): runs every SparkEntry query against
  * SPARK_GRAFT_SF_DIR, plus the headline BASELINE.json metric — pages/sec
@@ -23,24 +21,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.defaultCpus
     val pagesDir = sys.env.getOrElse("SPARK_GRAFT_PAGES_DIR", "/tmp/graft_pages_bench")
     val pagesN = sys.env.getOrElse("SPARK_GRAFT_PAGES_N", "1000000").toLong
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft_spark"))
-      // >=128 input splits on the 4.9G bench table (BASELINE.md protocol:
-      // both scaling runs must be parallelism-bound, not wave-quantized)
-      .config("spark.sql.files.maxPartitionBytes", (32 * 1024 * 1024).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-    graft.pipelines.Magnitude.tune(spark)
+    val spark = GraftSession.local(cpus, tmpfs = true)
 
     def force(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.mode("overwrite").format("noop").save()

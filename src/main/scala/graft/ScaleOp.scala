@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev utility: two-parallelism scaling evidence for a HEAVY operator (the
@@ -30,25 +29,17 @@ object ScaleOp {
     // split across more buckets compress worse), conflating partitioning
     // effects with compute scaling.
     val parts = sys.env.getOrElse("SCALEOP_PARTS", cores.toString)
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SCALEOP_CODEC", "lz4"))
-      // shuffle-heavy operator + disk-backed /tmp = the I/O, not the CPUs,
-      // sets the ceiling at higher core counts; tmpfs like the bench
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft_spark"))
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cores, tmpfs = true)
+    spark.conf.set("spark.sql.shuffle.partitions", parts)
     // checkpoint dir on tmpfs too: connected_components reliably
     // checkpoints a label table per round, and disk-backed /tmp would make
     // the measurement I/O-bound at higher core counts
-    val ckptBase = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft_spark"))
-    java.nio.file.Files.createDirectories(ckptBase)
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory(ckptBase, "graft-ckpt").toString)
-    graft.pipelines.Magnitude.tune(spark)
+    GraftSession.tmpfsLocalDir().foreach { base =>
+      val ckptBase = java.nio.file.Paths.get(base)
+      java.nio.file.Files.createDirectories(ckptBase)
+      spark.sparkContext.setCheckpointDir(
+        java.nio.file.Files.createTempDirectory(ckptBase, "graft-ckpt").toString)
+    }
     import graft.functions.GraftFunctions._
     // ~24-token docs; every 10th doc is a near-copy of its predecessor
     // (first 23 tokens shared, last token unique), so the join has real
@@ -101,50 +92,52 @@ object ScaleOp {
       m.copy(ngrams = m.ngrams.localCheckpoint(),
         contexts = m.contexts.localCheckpoint())
     }
-    val metrics = if (sys.env.get("SCALEOP_STAGES").contains("1")) {
-      val m = new BenchMetrics; spark.sparkContext.addSparkListener(m); Some(m)
-    } else None
     // materialize the op's inputs BEFORE the timing loop: lazy vals would
-    // otherwise charge model training / edge generation to rep 1, and any
-    // SCALEOP_STAGES read of that rep would conflate setup with the
-    // measured operator (the min across reps hid it; per-rep output lied)
+    // otherwise charge model training / edge generation to rep 1 (the min
+    // across reps hid it; per-rep output lied)
     op match {
       case "lm_score" => lmModel.ngrams.count(); lmModel.contexts.count()
       case "connected_components" => edges.count()
       case "pagerank" => prEdges.count()
       case _ => ()
     }
+    def runOp(): Long = op match {
+      case "minhash_lsh" => graft.operators.Dedup.minhashLshPairs(base,
+        n = 3, numHashes = 32, bands = 8, minJaccard = 0.5).count()
+      case "sparse_cosine" => graft.operators.Dedup.sparseCosinePairs(base,
+        minCos = 0.8).count()
+      case "connected_components" =>
+        graft.operators.Dedup.connectedComponents(edges).count()
+      case "pagerank" =>
+        // sum the ranks so the fixed-point arithmetic can't be pruned
+        graft.operators.LinkGraph.pageRank(prEdges, iters = 5)
+          .agg(sum(col("pr_micro"))).head().getLong(0)
+      case "lm_score" =>
+        // force the FULL computation: a bare count() would let column
+        // pruning discard the probability math (and potentially the
+        // model joins) — summing nll_bits keeps every stage live
+        graft.operators.LangModel.scoreNll(base, lmModel)
+          .agg(count(lit(1)).as("n"), sum(col("nll_bits")))
+          .head().getLong(0)
+      case other => sys.error(
+        s"unknown op $other (minhash_lsh | sparse_cosine | " +
+          "connected_components | lm_score | pagerank)")
+    }
     val reps = 3
     val secs = (1 to reps).map { r =>
-      metrics.foreach(_.clear())
       val t0 = System.nanoTime()
-      val pairs = op match {
-        case "minhash_lsh" => graft.operators.Dedup.minhashLshPairs(base,
-          n = 3, numHashes = 32, bands = 8, minJaccard = 0.5).count()
-        case "sparse_cosine" => graft.operators.Dedup.sparseCosinePairs(base,
-          minCos = 0.8).count()
-        case "connected_components" =>
-          graft.operators.Dedup.connectedComponents(edges).count()
-        case "pagerank" =>
-          // sum the ranks so the fixed-point arithmetic can't be pruned
-          graft.operators.LinkGraph.pageRank(prEdges, iters = 5)
-            .agg(sum(col("pr_micro"))).head().getLong(0)
-        case "lm_score" =>
-          // force the FULL computation: a bare count() would let column
-          // pruning discard the probability math (and potentially the
-          // model joins) — summing nll_bits keeps every stage live
-          graft.operators.LangModel.scoreNll(base, lmModel)
-            .agg(count(lit(1)).as("n"), sum(col("nll_bits")))
-            .head().getLong(0)
-        case other => sys.error(
-          s"unknown op $other (minhash_lsh | sparse_cosine | " +
-            "connected_components | lm_score | pagerank)")
-      }
+      val pairs = runOp()
       val s = (System.nanoTime() - t0) / 1e9
       System.err.println(f"[scaleop] rep $r: $s%.2f s ($pairs pairs)")
-      metrics.foreach(m => System.err.println(m.summary(10)))
       s
     }.min
+    // stage attribution from one more, untimed rep: the timed reps run
+    // with no listener of ours, as the recorded scaling runs did
+    val metrics = new BenchMetrics
+    spark.sparkContext.addSparkListener(metrics)
+    runOp()
+    Thread.sleep(300) // listener bus drain
+    System.err.println(s"[scaleop] stages of an untimed rep:\n${metrics.summary(10)}")
     println(f"""{"op":"$op%s","cores":$cores,"docs":$nDocs,"sec":$secs%.3f,"docs_per_sec":${nDocs / secs}%.0f}""")
     spark.stop()
   }

@@ -34,6 +34,13 @@ object DnsMag {
     if (path.endsWith(".dnsmag")) graft.io.DnsMagCbor.read(spark, path)
     else spark.read.parquet(path)
 
+  // report (and the text view) plan a per-domain and a totals branch over
+  // the state: pin a .dnsmag one (bounded by domains x dates) so its CBOR
+  // decode runs once. A parquet state is cheaper to scan twice than to pin.
+  private def readStatePinned(spark: SparkSession, path: String) =
+    if (path.endsWith(".dnsmag")) readState(spark, path).localCheckpoint()
+    else readState(spark, path)
+
   /** `-` = read this input from stdin, the reference CLI convention
     * (/root/reference/cmd/common.go:38-65). A cluster engine needs a file
     * executor tasks can open, so stdin spools to a driver-local temp file;
@@ -122,11 +129,7 @@ object DnsMag {
 
   def main(argv: Array[String]): Unit = {
     require(argv.nonEmpty, "usage: DnsMag collect|aggregate|report|view ...")
-    val spark = SparkSession.builder()
-      .appName(s"dnsmag-${argv(0)}")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    graft.pipelines.Magnitude.tune(spark)
+    val spark = graft.GraftSession.cluster(s"dnsmag-${argv(0)}")
     try run(spark, argv)
     finally spark.stop()
   }
@@ -207,7 +210,7 @@ object DnsMag {
         val st = arg(rest, "--source-type").getOrElse(sys.error("--source-type required"))
         val top = arg(rest, "--top").map(_.toInt).getOrElse(2500)
         val docs = DnsMagnitude.reportJson(
-          readState(spark, resolveStateInput(input)), source, st, top)
+          readStatePinned(spark, resolveStateInput(input)), source, st, top)
         // Hadoop FS write: report files land on HDFS/object stores too
         val p = new org.apache.hadoop.fs.Path(out)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -223,7 +226,7 @@ object DnsMag {
         if (rest.contains("--json"))
           println(DnsMagnitude.statsJson(readState(spark, in)))
         else
-          println(DnsMagnitude.statsText(readState(spark, in), top))
+          println(DnsMagnitude.statsText(readStatePinned(spark, in), top))
 
       case other => sys.error(s"unknown command '$other' (collect|aggregate|report|view)")
     }

@@ -40,21 +40,38 @@ case class MediaMeta(
  */
 object Multimodal {
 
-  // ImageIO defaults to DISK-backed stream caches: every ImageIO.read /
-  // ImageIO.write over an in-memory blob round-trips the compressed bytes
-  // through a temp FILE (FileCacheImageInput/OutputStream). Our blobs are
-  // already byte arrays, so the disk hop is pure overhead — use the
-  // memory-backed cache streams instead. JVM-global static flag; the
-  // object initializer runs in every executor JVM before the first decode
-  // (the mapPartitions closures reference this object). Decode/encode
-  // results are bit-identical either way.
-  javax.imageio.ImageIO.setUseCache(false)
+  // ImageIO defaults to DISK-backed stream caches: ImageIO.read/write over
+  // a plain java.io stream round-trips the compressed bytes through a temp
+  // FILE (FileCacheImageInput/OutputStream). Our blobs are already byte
+  // arrays, so every call site hands ImageIO a memory-backed cache stream
+  // instead — per call, leaving the JVM-global ImageIO.setUseCache alone.
+  // Decode/encode results are bit-identical either way.
+
+  /** Full decode of `blob`; null when no ImageIO reader accepts it. */
+  private def readImage(blob: Array[Byte]): java.awt.image.BufferedImage = {
+    val in = new javax.imageio.stream.MemoryCacheImageInputStream(
+      new java.io.ByteArrayInputStream(blob))
+    // ImageIO.read closes the stream itself unless no reader matched
+    val img = javax.imageio.ImageIO.read(in)
+    if (img == null) in.close()
+    img
+  }
+
+  /** Encode `img` as `format`; None when the writer refuses the image. */
+  private def writeImage(img: java.awt.image.RenderedImage,
+                         format: String): Option[Array[Byte]] = {
+    val bytes = new java.io.ByteArrayOutputStream()
+    val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bytes)
+    // close before reading: it flushes the cached tail into `bytes`
+    val ok = try javax.imageio.ImageIO.write(img, format, out) finally out.close()
+    if (ok) Some(bytes.toByteArray) else None
+  }
 
   /** Real image decode via the JDK's ImageIO: returns (width, height, 1)
     * for blobs whose container ImageIO can read; None otherwise. Header
     * decode only — `getWidth/getHeight` read the metadata, not the pixels. */
   private[operators] def decodeImage(blob: Array[Byte]): Option[(Int, Int, Int)] = {
-    val in = javax.imageio.ImageIO.createImageInputStream(
+    val in = new javax.imageio.stream.MemoryCacheImageInputStream(
       new java.io.ByteArrayInputStream(blob))
     try {
       val readers = javax.imageio.ImageIO.getImageReaders(in)
@@ -256,7 +273,7 @@ object Multimodal {
     * undecodable blobs. */
   def decodeGray(blob: Array[Byte]): Option[(Int, Int, Array[Int])] = {
     try {
-      val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(blob))
+      val img = readImage(blob)
       if (img == null) None
       else {
         val w = img.getWidth; val h = img.getHeight
@@ -413,8 +430,7 @@ object Multimodal {
       rows.flatMap { r =>
         val blob = if (r.isNullAt(1)) null else r.getAs[Array[Byte]](1)
         val img = if (blob == null) null
-                  else try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(blob))
-                       catch { case _: Exception => null }
+                  else try readImage(blob) catch { case _: Exception => null }
         if (img == null) Iterator.empty
         else {
           requireId(r)
@@ -428,13 +444,12 @@ object Multimodal {
           val th = math.max(1L, math.min(h.toLong,
             math.min(maxH.toLong, h.toLong * maxW / w))).toInt
           val thumb = if (tw == w && th == h) img else boxResizeRgb(img, tw, th)
-          val out = new java.io.ByteArrayOutputStream()
-          if (!javax.imageio.ImageIO.write(thumb, format, out))
+          val bytes = writeImage(thumb, format).getOrElse(
             throw new java.io.IOException(
               s"image resize: the '$format' writer refused a ${tw}x$th " +
                 "TYPE_INT_RGB image — emitting a zero-byte blob would " +
-                "silently empty the corpus downstream")
-          Iterator.single((r.getLong(0), out.toByteArray, tw, th))
+                "silently empty the corpus downstream"))
+          Iterator.single((r.getLong(0), bytes, tw, th))
         }
       }
     }.toDF("id", "media", "width", "height")
@@ -710,10 +725,8 @@ object Multimodal {
         }
         y += 1
       }
-      val out = new java.io.ByteArrayOutputStream()
-      require(javax.imageio.ImageIO.write(img, format, out),
-        s"no ImageIO writer for '$format'")
-      out.toByteArray
+      writeImage(img, format).getOrElse(
+        throw new IllegalArgumentException(s"no ImageIO writer for '$format'"))
     }
   }
 

@@ -3,21 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession across all suites (object, not per-suite —
-  * session startup costs ~5s). */
+  * session startup costs ~5s), built like every main's: GraftSession.local. */
 object SparkTestBase {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
-    graft.pipelines.Magnitude.tune(s)
+    val s = GraftSession.local(4)
     graft.functions.GraftFunctions.registerAll(s)
     s
   }

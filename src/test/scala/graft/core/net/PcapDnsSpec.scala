@@ -1,49 +1,13 @@
 package graft.core.net
 
 import org.scalatest.funsuite.AnyFunSuite
-import java.io.ByteArrayOutputStream
 
 /** Synthesized-capture tests for the pcapng framing and TCP DNS paths (the
   * golden classic-pcap fixture is covered by RecordsPcapSpec). Packets and
   * blocks are hand-built from the public formats, little-endian pcapng. */
 class PcapDnsSpec extends AnyFunSuite {
 
-  // ------------- little-endian byte building -------------
-  private class B {
-    val out = new ByteArrayOutputStream()
-    def u8(v: Int): B = { out.write(v & 0xff); this }
-    def u16le(v: Int): B = { out.write(v & 0xff); out.write((v >> 8) & 0xff); this }
-    def u32le(v: Long): B = { (0 until 4).foreach(i => out.write(((v >> (8 * i)) & 0xff).toInt)); this }
-    def u16be(v: Int): B = { out.write((v >> 8) & 0xff); out.write(v & 0xff); this }
-    def raw(b: Array[Byte]): B = { out.write(b, 0, b.length); this }
-    def bytes: Array[Byte] = out.toByteArray
-  }
-
-  private def dnsQuery(name: String): Array[Byte] = {
-    val b = new B
-    b.u16be(0x1234).u16be(0x0100).u16be(1).u16be(0).u16be(0).u16be(0)
-    name.split('.').filter(_.nonEmpty).foreach { l =>
-      b.u8(l.length); b.raw(l.getBytes("ISO-8859-1"))
-    }
-    b.u8(0).u16be(1).u16be(1)
-    b.bytes
-  }
-
-  private def udpV4Packet(srcIp: Array[Int], name: String): Array[Byte] = {
-    val dns = dnsQuery(name)
-    val b = new B
-    // ethernet
-    b.raw(Array.fill(12)(0.toByte)).u16be(0x0800)
-    // ipv4, ihl 5, proto 17
-    b.u8(0x45).u8(0).u16be(20 + 8 + dns.length).u16be(0).u16be(0)
-      .u8(64).u8(17).u16be(0)
-    srcIp.foreach(b.u8)
-    b.u8(10).u8(0).u8(0).u8(53) // dst
-    // udp
-    b.u16be(40000).u16be(53).u16be(8 + dns.length).u16be(0)
-    b.raw(dns)
-    b.bytes
-  }
+  import PcapBytes._
 
   private def tcpV6Packet(srcTail: Int, name: String): Array[Byte] = {
     val dns = dnsQuery(name)
@@ -140,8 +104,8 @@ class PcapDnsSpec extends AnyFunSuite {
 
   test("pcapng EPB blocks decode: UDP v4, TCP v6, timestamps, unknown blocks skipped") {
     val pkts = Seq(
-      udpV4Packet(Array(192, 168, 1, 7), "example.com"),
-      udpV4Packet(Array(192, 168, 2, 9), "sub.example.org"),
+      udpPacket(Array(192, 168, 1, 7), "example.com"),
+      udpPacket(Array(192, 168, 2, 9), "sub.example.org"),
       tcpV6Packet(0x42, "tcp.example.net"))
     val recs = PcapDns.decode(pcapng(pkts))
     assert(recs.map(_.qname) === Seq("example.com", "sub.example.org", "tcp.example.net"))
@@ -159,7 +123,7 @@ class PcapDnsSpec extends AnyFunSuite {
       .u32le(0xffffffffL).u32le(0xffffffffL).u32le(28)
     b.u32le(1).u32le(32).u16le(1).u16le(0).u32le(0x40000)
     b.u16le(9).u16le(1).u8(3).u8(0).u8(0).u8(0).u16le(0).u16le(0).u32le(32)
-    val p = udpV4Packet(Array(10, 1, 2, 3), "a.com")
+    val p = udpPacket(Array(10, 1, 2, 3), "a.com")
     val padded = (p.length + 3) & ~3
     b.u32le(6).u32le(32 + padded).u32le(0).u32le(0).u32le(5000) // 5000 ms
     b.u32le(p.length).u32le(p.length).raw(p)
@@ -175,7 +139,7 @@ class PcapDnsSpec extends AnyFunSuite {
     // truncated global header
     intercept[IllegalArgumentException](PcapDns.decode(Array[Byte](0xd4.toByte, 0xc3.toByte, 0xb2.toByte)))
     // valid header, truncated trailing record: parsed records kept, tail dropped
-    val good = pcapng(Seq(udpV4Packet(Array(10, 0, 0, 9), "ok.org")))
+    val good = pcapng(Seq(udpPacket(Array(10, 0, 0, 9), "ok.org")))
     assert(PcapDns.decode(good).map(_.qname) === Seq("ok.org"))
     // pcapng with a lying block length
     val lying = good.clone()
@@ -183,7 +147,7 @@ class PcapDnsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](PcapDns.decode(lying))
     // DNS name with a self-pointing compression pointer must not loop
     val selfLoop = {
-      val p = udpV4Packet(Array(10, 0, 0, 1), "aa")
+      val p = udpPacket(Array(10, 0, 0, 1), "aa")
       // question name starts at eth(14)+ip(20)+udp(8)+dnshdr(12) = 54
       p(54) = 0xc0.toByte; p(55) = 12 // pointer to itself (offset 12 = name start)
       p
@@ -303,10 +267,10 @@ class PcapDnsSpec extends AnyFunSuite {
         .u8(0x50).u8(0x02).u16be(1024).u16be(0).u16be(0)
       b.bytes
     }
-    val wrongPort = udpV4Packet(Array(10, 0, 0, 3), "x.com")
+    val wrongPort = udpPacket(Array(10, 0, 0, 3), "x.com")
     wrongPort(14 + 20 + 2) = 0x30 // dst port 53 -> 12341-ish (corrupt the port)
     val recs = PcapDns.decode(pcapng(Seq(dnsLess, wrongPort,
-      udpV4Packet(Array(10, 0, 0, 4), "ok.com"))))
+      udpPacket(Array(10, 0, 0, 4), "ok.com"))))
     assert(recs.map(_.qname) === Seq("ok.com"))
   }
 }

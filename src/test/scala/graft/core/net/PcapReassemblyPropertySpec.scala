@@ -8,25 +8,7 @@ import org.scalacheck.{Gen, Prop, Properties}
   * question list as the uncut stream. */
 object PcapReassemblyPropertySpec extends Properties("pcap-tcp-reassembly") {
 
-  private class B {
-    private val out = new java.io.ByteArrayOutputStream()
-    def u8(v: Int): B = { out.write(v & 0xff); this }
-    def u16le(v: Int): B = { out.write(v & 0xff); out.write((v >> 8) & 0xff); this }
-    def u16be(v: Int): B = { out.write((v >> 8) & 0xff); out.write(v & 0xff); this }
-    def u32le(v: Long): B = { (0 until 4).foreach(i => out.write(((v >> (8 * i)) & 0xff).toInt)); this }
-    def raw(b: Array[Byte]): B = { out.write(b, 0, b.length); this }
-    def bytes: Array[Byte] = out.toByteArray
-  }
-
-  private def dnsQuery(name: String): Array[Byte] = {
-    val b = new B
-    b.u16be(0x1234).u16be(0x0100).u16be(1).u16be(0).u16be(0).u16be(0)
-    name.split('.').filter(_.nonEmpty).foreach { l =>
-      b.u8(l.length); b.raw(l.getBytes("ISO-8859-1"))
-    }
-    b.u8(0).u16be(1).u16be(1)
-    b.bytes
-  }
+  import PcapBytes._
 
   private def tcpV6Segment(seq: Long, payload: Array[Byte]): Array[Byte] = {
     val b = new B

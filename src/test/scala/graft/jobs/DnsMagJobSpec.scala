@@ -72,6 +72,58 @@ class DnsMagJobSpec extends AnyFunSuite {
     assert(json.contains("datasetStatistics"))
   }
 
+  /** `.dnsmag` scans in the plans of the SQL actions `body` runs, counted
+    * in the executed (adaptive final) plans; a reused exchange is one read. */
+  private def dnsmagScans(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val fence = java.util.UUID.randomUUID().toString
+    val scans = new java.util.concurrent.atomic.AtomicInteger
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.logical.toString.contains(fence)) fenced.countDown()
+        else scans.addAndGet(helper.collect(qe.executedPlan) {
+          case s: BatchScanExec if s.table.name.startsWith("dnsmag") => s
+        }.length)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // listener events arrive in order: once the fence query is seen,
+      // every action of `body` has been counted
+      spark.range(1).select(org.apache.spark.sql.functions.lit(fence)).collect()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the fence query")
+      scans.get
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("report and text view read a .dnsmag input once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_job_once").toString
+    val tsvPath = getClass.getResource("/test2.tsv").getPath
+    DnsMag.run(spark, Array("collect", "--input", tsvPath, "--tsv",
+      "--date", "2000-01-01", "--output", s"$dir/state.dnsmag"))
+    // the per-domain and totals branches of the report share one read
+    assert(dnsmagScans {
+      DnsMag.run(spark, Array("report", "--input", s"$dir/state.dnsmag",
+        "--source", "fixtures", "--source-type", "recursive",
+        "--output", s"$dir/report.json"))
+    } === 1)
+    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/report.json"))
+    assert(json.contains("\"totalUniqueClients\":27"))
+    assert("\"domain\":".r.findAllIn(json).length === 7)
+    val text = new java.io.ByteArrayOutputStream()
+    assert(dnsmagScans {
+      Console.withOut(text) {
+        DnsMag.run(spark, Array("view", "--input", s"$dir/state.dnsmag"))
+      }
+    } === 1)
+    assert(text.toString("UTF-8").contains("Total clients (estimated): 27"))
+  }
+
   test("stdin input: aggregate reads a .dnsmag sequence from '-' (est 92)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_job_stdin").toString
     val tsvPath = getClass.getResource("/test2.tsv").getPath
@@ -138,9 +190,8 @@ class DnsMagJobSpec extends AnyFunSuite {
 
   test("pcap routing by magic bytes: .cap.gz extension still hits the pcap decoder") {
     val dir = java.nio.file.Files.createTempDirectory("graft_job_sniff").toString
-    val odd = java.nio.file.Paths.get(dir, "oddly_named.cap.gz")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get("/root/reference/testdata/test1.pcap.gz"), odd)
+    val odd = graft.core.net.PcapBytes.writeTest1Pcap(
+      java.nio.file.Paths.get(dir), "oddly_named.cap.gz")
     // no --date: the job derives it from packet timestamps, which only the
     // pcap path can do — proving the magic sniff routed correctly
     DnsMag.run(spark, Array("collect", "--input", odd.toString,

@@ -1267,6 +1267,31 @@ class OperatorsSpec extends AnyFunSuite {
     assert(pairs.contains((1L, 2L)) && pairs.contains((1L, 3L)), pairs.toString)
   }
 
+  test("multimodal: image decode and encode leave ImageIO's global cache setting alone") {
+    import javax.imageio.ImageIO
+    import graft.operators.Multimodal.Synth
+    val (useCache0, cacheDir0) = (ImageIO.getUseCache, ImageIO.getCacheDirectory)
+    // a disk cache that cannot be used: a call site that still goes through
+    // ImageIO's file-backed streams fails instead of decoding
+    val gone = java.nio.file.Files.createTempDirectory("graft_imageio_cache")
+    try {
+      ImageIO.setUseCache(true)
+      ImageIO.setCacheDirectory(gone.toFile)
+      java.nio.file.Files.delete(gone)
+      val media = Seq((1L, Synth.image(88, 48, 2.4, 1.1, 0.3, "png"))).toDF("doc_id", "media")
+      val meta = Multimodal.mediaMeta(media).collect().head
+      assert(meta.kind === "png" && meta.width === 88 && meta.height === 48)
+      assert(Multimodal.imageDhash(media).collect().map(_.getAs[Int]("width")).toSeq === Seq(88))
+      val thumb = Multimodal.imageResize(media, maxW = 22, maxH = 22).collect().head
+      assert(thumb.getAs[Int]("width") === 22 && thumb.getAs[Int]("height") === 12)
+      assert(Multimodal.decodeGray(thumb.getAs[Array[Byte]]("media")).map(_._1) === Some(22))
+      assert(ImageIO.getUseCache, "an image operator switched ImageIO's disk cache off")
+    } finally {
+      ImageIO.setUseCache(useCache0)
+      ImageIO.setCacheDirectory(cacheDir0)
+    }
+  }
+
   test("multimodal: REAL image resize — aspect fit, no upscale, dhash proximity") {
     import graft.operators.Multimodal.Synth
     val big = Synth.image(88, 48, 2.4, 1.1, 0.3, "png")
