@@ -20,8 +20,9 @@ object GraftSession {
 
   /** `local[cpus]` with the bench settings: one shuffle partition per core,
     * UTC, AQE, no UI and 32 MiB input splits, plus a fresh checkpoint dir
-    * (`Dedup.pin` checkpoints reliably). The timed mains pass `tmpfs` for
-    * shuffle and spill; tests and Verify keep Spark's default local dir. */
+    * (`Dedup.pin` checkpoints reliably), deleted at JVM exit. The timed
+    * mains pass `tmpfs` for shuffle and spill; tests and Verify keep
+    * Spark's default local dir. */
   def local(cpus: Int = defaultCpus, tmpfs: Boolean = false): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -35,10 +36,17 @@ object GraftSession {
     val dir = if (tmpfs) tmpfsLocalDir() else None
     val spark = dir.fold(b)(b.config("spark.local.dir", _)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft-ckpt").toString)
+    setCheckpointDir(spark, java.nio.file.Files.createTempDirectory("graft-ckpt").toFile)
     graft.pipelines.Magnitude.tune(spark)
     spark
+  }
+
+  /** Checkpoint into `dir`, which is deleted when the JVM exits (after the
+    * context stops): checkpoint files outlive the RDDs that wrote them, and
+    * a reader may re-read them at any point of the run. */
+  private[graft] def setCheckpointDir(spark: SparkSession, dir: java.io.File): Unit = {
+    org.apache.spark.sql.graftshim.shims.deleteAtExit(dir)
+    spark.sparkContext.setCheckpointDir(dir.getPath)
   }
 
   /** Session for spark-submit: master, resources and checkpoint dir come

@@ -37,8 +37,8 @@ object ScaleOp {
     GraftSession.tmpfsLocalDir().foreach { base =>
       val ckptBase = java.nio.file.Paths.get(base)
       java.nio.file.Files.createDirectories(ckptBase)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory(ckptBase, "graft-ckpt").toString)
+      GraftSession.setCheckpointDir(spark,
+        java.nio.file.Files.createTempDirectory(ckptBase, "graft-ckpt").toFile)
     }
     import graft.functions.GraftFunctions._
     // ~24-token docs; every 10th doc is a near-copy of its predecessor

@@ -1,7 +1,12 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.shims
+import org.apache.spark.util.AccumulatorV2
 import graft.functions.GraftFunctions._
 
 /**
@@ -24,30 +29,85 @@ import graft.functions.GraftFunctions._
  */
 object Dedup {
 
+  /** A pinned frame and the tallies its checkpoint job took: rows, bytes
+    * of the materialized UnsafeRows, and the exact sum of the requested
+    * long column (zero when none was requested or the frame is empty). */
+  private[operators] final case class Pinned(df: DataFrame, rows: Long, bytes: Long, sum: java.math.BigInteger)
+
+  /** Exact sum of longs: a long partial that spills into a BigInteger on
+    * overflow, so a sum over any number of 64-bit values stays exact. */
+  private final class BigSum extends AccumulatorV2[Long, java.math.BigInteger] {
+    private var big = java.math.BigInteger.ZERO
+    private var part = 0L
+    override def isZero: Boolean = part == 0L && big.signum == 0
+    override def copy(): BigSum = { val c = new BigSum; c.big = big; c.part = part; c }
+    override def reset(): Unit = { big = java.math.BigInteger.ZERO; part = 0L }
+    override def add(v: Long): Unit = {
+      val s = part + v
+      if (((part ^ s) & (v ^ s)) < 0) { big = big.add(java.math.BigInteger.valueOf(part)); part = v }
+      else part = s
+    }
+    override def merge(other: AccumulatorV2[Long, java.math.BigInteger]): Unit =
+      big = big.add(other.value)
+    override def value: java.math.BigInteger = big.add(java.math.BigInteger.valueOf(part))
+  }
+
   /** Materialize + re-root a frame. Catalyst re-expands a referenced
     * subtree at EVERY reference (no cross-reference CSE), so a frame used k
     * times recomputes k times unless pinned. Reliable checkpoint when the
     * session has a checkpoint dir (the cluster deployment path — durable on
     * the shared FS, survives executor loss); localCheckpoint otherwise.
-    * Re-wrapping the checkpoint's internal row RDD mints fresh attribute
-    * ids so the pinned frame can be referenced several times in one plan
-    * (self-joins/self-unions of the same attribute ids trip Catalyst's
-    * constraint rewrites) — via the graftshim internal constructor, NOT
-    * `createDataFrame(toJavaRDD, schema)`, which re-encodes every row
-    * through the boxed RowEncoder (measured ~50 CPU-seconds on a 1.5M-row
-    * pin; the checkpoint already holds copied UnsafeRows, so the re-wrap
-    * is zero-copy). */
-  private[operators] def pin(df: DataFrame): DataFrame = {
+    *
+    * ONE job of its own, inside one SQL execution as `Dataset.checkpoint`
+    * runs it (adaptive execution still submits the frame's shuffle-map
+    * stages as their own jobs first): the checkpoint write IS the
+    * computation, and accumulators in that result stage tally rows,
+    * UnsafeRow bytes and, given `sumCol`, the exact sum of one long column.
+    * Result-stage accumulator updates count once per partition even when a
+    * task is retried; shuffle-map stages get no tallies, since a stage
+    * retry there would count twice. Callers read what the pin saw instead
+    * of running a count or an aggregate over it.
+    *
+    * The checkpointed UnsafeRows are re-wrapped zero-copy with FRESH
+    * attribute ids (via graftshim), so the pinned frame can be referenced
+    * several times in one plan (self-joins/self-unions of the same
+    * attribute ids trip Catalyst's constraint rewrites), and the relation
+    * carries the tallies as exact statistics: joins against a small pin
+    * plan a broadcast from the start instead of shuffling both sides until
+    * adaptive execution has seen the sizes.
+    *
+    * `label` names the work: it is the call site of the pin's job and of
+    * the stages it starts, restored to the caller's afterwards. */
+  private[operators] def pin(df: DataFrame, label: String,
+                             sumCol: Option[String] = None): Pinned = {
     val spark = df.sparkSession
-    // NOTE (r7 audit): Spark 4.1's EAGER Dataset.checkpoint runs exactly ONE
-    // job (`internalRdd.checkpoint(); internalRdd.doCheckpoint()` — the write
-    // job IS the computation), so no persist-before-checkpoint scaffolding is
-    // needed; measured, adding one only buys InMemoryRelation build overhead.
-    val cut =
-      if (spark.sparkContext.getCheckpointDir.isDefined) df.checkpoint()
-      else df.localCheckpoint()
-    org.apache.spark.sql.graftshim.shims.internalCreateDataFrame(
-      spark, cut.queryExecution.toRdd, df.schema)
+    val sc = spark.sparkContext
+    val schema = df.schema
+    val sumAt = sumCol.fold(-1)(schema.fieldIndex)
+    val rows = sc.longAccumulator
+    val bytes = sc.longAccumulator
+    val sum = new BigSum
+    sc.register(sum)
+    val reliable = sc.getCheckpointDir.isDefined
+    val qe = df.queryExecution
+    val cut = shims.withCallSite(sc, label) {
+      SQLExecution.withNewExecutionId(qe, Some(if (reliable) "checkpoint" else "localCheckpoint")) {
+        shims.checkpointNow(qe.executedPlan.execute().mapPartitions { it =>
+          lazy val toUnsafe = UnsafeProjection.create(schema)
+          it.map { r =>
+            val u = (r match { case u: UnsafeRow => u; case _ => toUnsafe(r) }).copy()
+            rows.add(1L)
+            bytes.add(u.getSizeInBytes.toLong)
+            if (sumAt >= 0 && !u.isNullAt(sumAt)) sum.add(u.getLong(sumAt))
+            u: InternalRow
+          }
+        }, reliable)
+      }
+    }
+    org.slf4j.LoggerFactory.getLogger(getClass).info(
+      s"$label: pinned ${rows.sum} rows, ${bytes.sum} bytes")
+    Pinned(shims.internalCreateDataFrame(spark, cut, schema, rows.sum, bytes.sum),
+      rows.sum, bytes.sum, sum.value)
   }
 
   /** Scale-adaptive width for per-row kernel stages (BATCH frames only —
@@ -119,12 +179,26 @@ object Dedup {
     * stream ALREADY WIDENED by the first side's array — measured 1.4 GB at
     * sf0.1 on the sparse-cosine verify for a 70 MB pair list — so when the
     * state fits executor memory, broadcasting it keeps the whole verify in
-    * the candidate-emission stage with zero pair-stream exchanges. 64k
-    * docs at ~1 KB of arrays each is a ~64 MB broadcast: comfortably
-    * inside default executor memory, far under the 8 GB broadcast cap.
-    * Above the cap the shuffle-hash plan is the 100-TB path (build side =
-    * per-partition slice of the state, stream never sorted). */
+    * the candidate-emission stage with zero pair-stream exchanges. Both
+    * figures come from the state's own pin (its checkpoint job tallies rows
+    * and bytes), so the decision costs no job. Above either cap the
+    * shuffle-hash plan is the 100-TB path (build side = per-partition slice
+    * of the state, stream never sorted). */
   private[operators] val VerifyBroadcastMaxDocs = 65536L
+
+  /** Byte cap of the same decision: rows alone cannot bound the broadcast,
+    * since each state row carries whole per-doc arrays — a few thousand
+    * book-length documents would pass the row cap and still build a
+    * multi-GB hash relation on the driver and every executor. 256 MiB of
+    * pinned UnsafeRows (the state's full rows, an upper bound on the
+    * columns the verify broadcasts) stays far under the 8 GB broadcast
+    * limit and inside default executor memory; the largest sf0.1 state
+    * under the row cap is well below it. */
+  private[operators] val VerifyBroadcastMaxBytes = 256L * 1024 * 1024
+
+  /** Broadcast the verify's state table? From the state pin's tallies. */
+  private[operators] def verifyBroadcast(rows: Long, bytes: Long): Boolean =
+    rows <= VerifyBroadcastMaxDocs && bytes <= VerifyBroadcastMaxBytes
 
   private[operators] def verifyJaccardPairsWithSets(
       candidates: DataFrame, sets: DataFrame,
@@ -206,10 +280,11 @@ object Dedup {
     // three times (prefix explode + both verify sides) and Catalyst
     // re-expands a referenced subtree per reference — unpinned, the corpus
     // was shingled and df-aggregated once per reference (three identical
-    // fat stages in the e2e profile). The pinned state has no size stats,
-    // so the joins below pick their strategy explicitly (shuffle_hash)
-    // instead of inheriting lucky small-corpus broadcast estimates.
-    val docSets = pin(shh.join(dfTab, "h")
+    // fat stages in the e2e profile). The pinned state carries exact stats,
+    // but the joins below still pick their strategy explicitly: the prefix
+    // explode multiplies its rows by a per-doc factor the planner can only
+    // guess, and the verify decision needs the byte cap as well.
+    val pinned = pin(shh.join(dfTab, "h")
       .groupBy(col("id"))
       .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("__dfh"))
       .withColumn("sz", size(col("__dfh")).cast("long"))
@@ -217,7 +292,9 @@ object Dedup {
         (col("sz") - ceil(lit(minJaccard) * col("sz") - lit(1e-9)) + 1).cast("int"))
       .withColumn("prefix", transform(slice(col("__dfh"), lit(1), col("__plen")), x => x("h")))
       .withColumn("shs", sort_array(transform(col("__dfh"), x => x("h"))))
-      .select(col("id"), col("sz"), col("prefix"), col("shs")))
+      .select(col("id"), col("sz"), col("prefix"), col("shs")),
+      "Dedup.ngramJaccardPairs docSets")
+    val docSets = pinned.df
 
     val prefix = docSets.select(col("id"), col("sz"),
         posexplode(col("prefix")).as(Seq("pos", "h")))
@@ -239,10 +316,12 @@ object Dedup {
     // candidate volume and the array-widened verify exchange several-fold
     // at sf0.1. ceil slack 1e-9 so float error only ever ADMITS.
     // SHUFFLE-HASH self-join on the prefix shingle (the inverted-index
-    // join): the pinned state has no size stats, so left to the planner
-    // this falls to SortMergeJoin — sorting both exploded prefix streams
-    // for an equi-join whose output is consumed unordered. The explicit
-    // hint keeps the 100-TB-safe shuffle plan without the sorts (a
+    // join): the exploded prefix's size is a planner guess (the pinned
+    // state's exact stats rescaled by row width only; the explode's row
+    // multiplication is unknown to it), so left to the planner this can
+    // fall to SortMergeJoin — sorting both exploded prefix
+    // streams for an equi-join whose output is consumed unordered. The
+    // explicit hint keeps the 100-TB-safe shuffle plan without the sorts (a
     // broadcast would only ever fit by accident of a small corpus).
     val candidates = prefix.as("a").join(prefix.as("b").hint("shuffle_hash"),
         col("a.h") === col("b.h") && col("a.id") < col("b.id") &&
@@ -254,11 +333,9 @@ object Dedup {
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
 
     val sets = docSets.select(col("id"), col("shs"))
-    // docSets is pinned, so counting it is one cheap scan of the
-    // checkpointed state — the exact cardinality the broadcast decision
-    // needs (the pinned frame carries no stats for AQE to decide with)
+    // the broadcast decision reads the pin's own tallies: no extra job
     verifyJaccardPairsWithSets(candidates, sets, minJaccard,
-        broadcastSets = docSets.count() <= VerifyBroadcastMaxDocs)
+        broadcastSets = verifyBroadcast(pinned.rows, pinned.bytes))
       .dropDuplicates("id_a", "id_b")
   }
 
@@ -358,7 +435,7 @@ object Dedup {
     // scale this is the standard "write the linear state once, read it
     // thrice" shape; with a checkpoint dir configured the write is a
     // durable shared-FS table.
-    val state = pin(tf.join(dfTab, "h")
+    val pinned = pin(tf.join(dfTab, "h")
       .withColumn("w0",
         if (idf) col("tf") * (log((lit(1.0) + nDocs.toDouble) / (lit(1.0) + col("df"))) + lit(1.0))
         else col("tf"))
@@ -372,7 +449,9 @@ object Dedup {
       .withColumn("pref", l2ap_prefix(
         transform(col("__dfh"), x => x("h")),
         transform(col("__dfh"), x => x("w0") / col("__nrm")), tEff))
-      .select(col("id"), col("hk"), col("wv"), col("pref")))
+      .select(col("id"), col("hk"), col("wv"), col("pref")),
+      "Dedup.sparseCosinePairs state")
+    val state = pinned.df
 
     // round-robin repartition before the self-join: the pinned state is
     // row-tiny (AQE coalesces it to few partitions), but the join's OUTPUT
@@ -405,9 +484,9 @@ object Dedup {
     // alternative, which also multiplies row count by vector length) —
     // and sort-spill I/O capped 4->16-core scaling at ~0.67.
     // Strategy is size-adaptive like the Jaccard verify
-    // (VerifyBroadcastMaxDocs): the pinned state carries no stats, so the
-    // choice is made from its exact cardinality (one cheap checkpoint
-    // scan). Small state -> BROADCAST both lookups: the candidate stream
+    // (verifyBroadcast): the choice is made from the exact rows and bytes
+    // the state's pin tallied, with no job of its own. Small state ->
+    // BROADCAST both lookups: the candidate stream
     // flows through the whole verify in its emission stage, exchanged
     // zero times (the shuffle-hash plan exchanged it twice, the second
     // time already widened by side A's arrays — measured 1.4 GB at sf0.1
@@ -415,7 +494,7 @@ object Dedup {
     // the per-partition build map: the 100-TB path (no sort, no spill;
     // measured 17.8s -> 9.5s at local[16] vs sort-merge, and scaling
     // recovers to the platform ceiling).
-    val bcast = state.count() <= VerifyBroadcastMaxDocs
+    val bcast = verifyBroadcast(pinned.rows, pinned.bytes)
     def vside(s: DataFrame): DataFrame =
       if (bcast) broadcast(s) else s.hint("shuffle_hash")
     val stateA = state.select(col("id").as("id_a"), col("hk").as("hk_a"), col("wv").as("wv_a"))
@@ -565,7 +644,7 @@ object Dedup {
         col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
         col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct())
+      .distinct(), "Dedup.minhashLshPairs candidates").df
 
     // exact-Jaccard verification with the shingle work pruned to CANDIDATE
     // docs only: the candidate list is pinned (so its references cost
@@ -676,12 +755,12 @@ object Dedup {
     // too cheap for the widening shuffle to pay for itself (measured
     // +0.1s warm at sf0.1); the heavy work is the post-explode agg,
     // which parallelizes through its own exchange
-    val pinned = pin(docs)
+    val pinned = pin(docs, "Dedup.stripBoilerplateLines docs").df
     val lines = pinned.select(col(idCol), posexplode(split(col(textCol), "\n")))
       .withColumnRenamed("col", "line")
-    val boiler = pin(boilerplateLines(pinned, minDf, idCol, textCol)
-      .select(xxh3_64(col("line")).as("__bh")))
-    val nBoiler = boiler.count()
+    val boilerPin = pin(boilerplateLines(pinned, minDf, idCol, textCol)
+      .select(xxh3_64(col("line")).as("__bh")), "Dedup.stripBoilerplateLines boilerplate")
+    val (boiler, nBoiler) = (boilerPin.df, boilerPin.rows)
     org.slf4j.LoggerFactory.getLogger(getClass).info(
       s"stripBoilerplateLines: $nBoiler boilerplate lines at minDf=$minDf")
     if (maxBoilerplateLines > 0 && nBoiler > maxBoilerplateLines)
@@ -747,7 +826,8 @@ object Dedup {
     // identity and neither effect exists.
     val grams = pin(widen(docs).select(col(idCol),
         posexplode(rolling_kgram_hashes(col(textCol), minLen, stride)))
-      .select(col(idCol), (col("pos").cast("long") * stride).as("p"), col("col").as("h")))
+      .select(col(idCol), (col("pos").cast("long") * stride).as("p"), col("col").as("h")),
+      "Dedup.repeatedSpans grams").df
     val hot = grams.groupBy(col("h")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= minDf).select("h")
     grams.join(hot, "h")
@@ -827,7 +907,7 @@ object Dedup {
       val keep = fp0.groupBy(col("f")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= maxFingerprintDf).select("f")
       fp0.join(keep, "f")
-    } else fp0)
+    } else fp0, "Dedup.winnowOverlapPairs fingerprints").df
     fp.as("a").join(fp.as("b"),
         col("a.f") === col("b.f") && col("a.id") < col("b.id"))
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -849,10 +929,15 @@ object Dedup {
    * literature (Kiveris et al. large-star/small-star family).
    *
    * Scale shape: each round is one equi-join (edges x labels, keyed by
-   * vertex id) + one min-aggregation; labels materialize per round via a
-   * RELIABLE checkpoint (when `sc.setCheckpointDir` points at a shared
-   * filesystem — which any real cluster deployment must do), so the plan
-   * does not nest across iterations AND a lost executor recovers by
+   * vertex id) + one min-aggregation, except round 1, which reads the
+   * identity labelling straight off the edges (least(src, min(dst)) per
+   * source vertex) so no round-0 table is ever written. Convergence costs
+   * no job: labels only ever decrease, so a round changed nothing iff its
+   * exact label sum equals the previous round's, and each round's pin
+   * tallies that sum in the job that writes it. Labels materialize per
+   * round via a RELIABLE checkpoint (when `sc.setCheckpointDir` points at
+   * a shared filesystem — which any real cluster deployment must do), so
+   * the plan does not nest across iterations AND a lost executor recovers by
    * re-reading the last round's checkpoint files rather than failing the
    * job. `localCheckpoint` would be the wrong tool here: it truncates
    * lineage but keeps blocks only on executors, so one lost executor makes
@@ -860,8 +945,10 @@ object Dedup {
    * multi-hour 100-TB clustering run will see. Sessions with no checkpoint
    * dir configured (ad-hoc local work) fall back to localCheckpoint with a
    * warning. Checkpoint data is O(|vertices|) small (two longs per row) per
-   * round; Spark reclaims it with
-   * `spark.cleaner.referenceTracking.cleanCheckpoints=true` or at teardown.
+   * round. Spark deletes it only with
+   * `spark.cleaner.referenceTracking.cleanCheckpoints=true`; otherwise it
+   * stays in the checkpoint dir until the dir's owner removes it (the
+   * sessions `graft.GraftSession` builds delete theirs at JVM exit).
    *
    * JOB-RESTART RESUMABILITY: `resumePath` (a durable directory on the
    * shared filesystem) persists each round's labels as a parquet table
@@ -913,15 +1000,18 @@ object Dedup {
         .filter(i => fs.exists(new org.apache.hadoop.fs.Path(s"$p/round_$i/_SUCCESS")))
         .sorted.lastOption
     }
-    // persist-or-pin one round of labels: with a resumePath the parquet
-    // round table IS the pin (a fresh scan re-roots the plan exactly like
-    // checkpoint does, and survives the job). With `pruneRounds` (default)
+    // persist-or-pin one round of labels, returning it with the exact sum
+    // of its component column (the convergence check below). With a
+    // resumePath the parquet round table IS the pin (a fresh scan re-roots
+    // the plan exactly like checkpoint does, and survives the job), and
+    // its sum is one single-column scan of that table; otherwise the sum
+    // comes from the pin's own job. With `pruneRounds` (default)
     // rounds older than the two most recent are deleted after each
     // successful write — resume only ever needs the LATEST complete round,
     // and an O(log diameter) run would otherwise leave O(iterations)
     // copies of the label table behind; pass false to keep the full audit
     // trail
-    def pinRound(df: DataFrame, i: Int): DataFrame = roundDir(i) match {
+    def pinRound(df: DataFrame, i: Int): (DataFrame, java.math.BigInteger) = roundDir(i) match {
       case Some(d) =>
         df.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(d)
         if (pruneRounds && i >= 2) {
@@ -929,14 +1019,23 @@ object Dedup {
           val fs = old.getFileSystem(spark.sparkContext.hadoopConfiguration)
           if (fs.exists(old)) fs.delete(old, true)
         }
-        spark.read.parquet(d)
-      case None => pin(df)
+        val round = spark.read.parquet(d)
+        (round, labelSum(round))
+      case None =>
+        val p = pin(df, s"Dedup.connectedComponents round $i", sumCol = Some("component"))
+        (p.df, p.sum)
     }
+    // decimal(38,0) keeps the sum exact at any scale (|id| < 2^63 has 19
+    // digits; 10^12 rows leave 38-digit headroom) where a long SUM would
+    // overflow under ANSI mode
+    def labelSum(df: DataFrame): java.math.BigInteger =
+      Option(df.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0))
+        .fold(java.math.BigInteger.ZERO)(_.toBigIntegerExact)
 
     // undirected edge list, both directions
     val edges = pin(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct())
+      .distinct(), "Dedup.connectedComponents edges")
     val resumed = latestCompleteRound()
     // edge-set fingerprint guard (see scaladoc): count + XOR of per-edge
     // 64-bit hashes — order-independent, overflow-free (XOR, not SUM —
@@ -947,7 +1046,7 @@ object Dedup {
       val fpDir = s"$p/edges_fingerprint"
       val fs = new org.apache.hadoop.fs.Path(p)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fp = edges.agg(count(lit(1)).as("n"),
+      val fp = edges.df.agg(count(lit(1)).as("n"),
         coalesce(expr("bit_xor(xxhash64(src, dst))"), lit(0L)).as("x")).head()
       val (n, x) = (fp.getLong(0), fp.getLong(1))
       if (resumed.isDefined) {
@@ -971,49 +1070,49 @@ object Dedup {
           .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(fpDir)
       }
     }
-    var labels = resumed match {
-      case Some(i) => spark.read.parquet(roundDir(i).get)
-      case None => pinRound(edges.select(col("src").as("id")).distinct()
-        .withColumn("component", col("id")), 0)
-    }
-    // Convergence check WITHOUT a join: labels are componentwise
+    // Convergence check WITHOUT a join or a job: labels are componentwise
     // NON-INCREASING round over round (the min-agg includes the vertex's
     // own label; the pointer jump contracts because component <= id for
     // every label row), so the label vector changed iff its exact sum
-    // changed. decimal(38,0) keeps the sum exact at any scale (|id| <
-    // 2^63 has 19 digits; 10^12 rows leave 38-digit headroom) where a
-    // long SUM would overflow under ANSI mode. One single-column scan of
-    // the already-pinned round replaces a shuffle join of two label
-    // tables per round.
-    def labelSum(df: DataFrame): Option[java.math.BigDecimal] =
-      Option(df.agg(sum(col("component").cast("decimal(38,0)")).as("s"))
-        .head().getDecimal(0))
-    var prevSum = labelSum(labels)
+    // changed — and each round's pin tallies that sum in the job that
+    // writes the round. Round 0 is the identity labelling, never
+    // materialized: round 1 comes straight from the edges, and it equals
+    // round 0 only when there are no edges (any edge lowers its larger
+    // endpoint's label). A resumed run takes the sum of the round it
+    // loads.
+    var (labels, prevSum) = resumed match {
+      case Some(i) =>
+        val round = spark.read.parquet(roundDir(i).get)
+        (round, Option(labelSum(round)))
+      case None => // the identity labelling, returned as-is only when maxIter <= 0
+        (edges.df.select(col("src").as("id")).distinct().withColumn("component", col("id")),
+          Option.empty[java.math.BigInteger])
+    }
     var iter = resumed.getOrElse(0)
     var converged = false
     while (iter < maxIter && !converged) {
-      // candidate label per vertex = min(own, neighbors' components)
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .select(col("src").as("id"), col("component"))
-      val afterMin = labels.unionByName(viaNeighbors)
-        .groupBy(col("id")).agg(min(col("component")).as("component"))
+      // candidate label per vertex = min(own, neighbors' components); from
+      // the identity labelling that is least(src, min(dst)) per edge source
+      val afterMin =
+        if (prevSum.isEmpty)
+          edges.df.groupBy(col("src"))
+            .agg(least(col("src"), min(col("dst"))).as("component"))
+            .withColumnRenamed("src", "id")
+        else
+          labels.unionByName(edges.df
+              .join(labels.withColumnRenamed("id", "dst"), "dst")
+              .select(col("src").as("id"), col("component")))
+            .groupBy(col("id")).agg(min(col("component")).as("component"))
       // pointer jump: component := component's component (labels only ever
       // decrease and component <= id, so the jump is always a contraction)
-      val next = pinRound(afterMin.as("a")
+      val (next, nextSum) = pinRound(afterMin.as("a")
         .join(afterMin.select(col("id").as("component"), col("component").as("cc")),
           Seq("component"), "left")
         .select(col("id"), coalesce(col("cc"), col("component")).as("component")),
         iter + 1)
-      val nextSum = labelSum(next)
+      converged = prevSum.fold(edges.rows == 0L)(_ == nextSum)
       labels = next
-      // compareTo, not equals: BigDecimal.equals is scale-sensitive
-      converged = (nextSum, prevSum) match {
-        case (Some(a), Some(b)) => a.compareTo(b) == 0
-        case (None, None) => true // empty edge set: nothing to propagate
-        case _ => false
-      }
-      prevSum = nextSum
+      prevSum = Some(nextSum)
       iter += 1
     }
     labels

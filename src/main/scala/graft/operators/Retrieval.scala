@@ -68,7 +68,7 @@ object Retrieval {
       .agg(count(lit(1)).as("tf"))
     val wDoc = Window.partitionBy(col("doc_id"))
     val index = Dedup.pin(tf0.select(col("term"), col("doc_id"), col("tf"),
-      sum(col("tf")).over(wDoc).as("dl")))
+      sum(col("tf")).over(wDoc).as("dl")), "Retrieval.bm25TopK index").df
     // corpus stats from the pinned state: dl is constant within a doc, so
     // max(dl) per doc reproduces the doc-length table exactly
     val dl = index.groupBy(col("doc_id")).agg(max(col("dl")).as("dl"))
@@ -90,10 +90,11 @@ object Retrieval {
 
     // scoring: the query-side (qterms x df, bounded by the query batch) is
     // BROADCAST, so the index is probed in place — never shuffled, never
-    // sorted, no join strategy left to size estimates (the pinned state
-    // has none and used to fall to SortMergeJoin). Probe width: the pinned
-    // state can be AQE-coalesced to a handful of partitions while the join
-    // OUTPUT (matched postings) is the big thing — spread the probe side
+    // sorted, no join strategy left to size estimates (the index is
+    // corpus-sized, so the planner would shuffle and sort both sides).
+    // Probe width: the pinned state can be AQE-coalesced to a handful of
+    // partitions while the join OUTPUT (matched postings) is the big
+    // thing — spread the probe side
     // first, exactly like the sparse-cosine prefix join; guarded so a
     // corpus that is already wide (the 100-TB case) does not reshuffle.
     val probe =

@@ -189,7 +189,7 @@ object Sampling {
     // (plus the counts action above) — Catalyst re-expands referenced
     // subtrees, so unpinned this would scan the corpus three times
     val withQuota = Dedup.pin(inT.join(broadcast(quotaDf), sCol === col("__stratum"))
-      .drop("__stratum"))
+      .drop("__stratum"), "Sampling.resampleToCounts quotas").df
     // the (T mod c) extra-copy rows, selected by the shared two-phase top-k
     val extras = takeByQuota(
         withQuota.drop("__base"), strataCol, keyCol, df.columns.toIndexedSeq :+ "__quota")

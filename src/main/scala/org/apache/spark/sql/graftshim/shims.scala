@@ -1,7 +1,14 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.Column
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.types.StructType
 
 /**
  * Column <-> Expression bridge for Spark 4.x, where the converters in
@@ -23,11 +30,39 @@ object shims {
     * `createDataFrame(df.toJavaRDD, schema)`, round-trips every row
     * through the boxed RowEncoder on write AND per downstream reference —
     * measured ~50 CPU-seconds on a 1.5M-row pin; this is a zero-copy
-    * re-wrap of the already-checkpointed rows. */
+    * re-wrap of the already-checkpointed rows. The relation carries the
+    * exact row count and bytes of those rows as its statistics, so the
+    * planner sizes joins against it from the start instead of assuming an
+    * unknown (maximal) size. */
   def internalCreateDataFrame(
-      spark: org.apache.spark.sql.SparkSession,
-      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-      schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .internalCreateDataFrame(rdd, schema)
+      spark: SparkSession, rdd: RDD[InternalRow], schema: StructType,
+      rows: Long, bytes: Long): DataFrame = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    org.apache.spark.sql.classic.Dataset.ofRows(s,
+      LogicalRDD(DataTypeUtils.toAttributes(schema), rdd)(
+        s, Some(Statistics(sizeInBytes = BigInt(bytes), rowCount = Some(BigInt(rows))))))
+  }
+
+  /** Eagerly checkpoint `rdd` (reliably into the context's checkpoint dir
+    * when one is set, else locally) in exactly one job. */
+  def checkpointNow[T](rdd: RDD[T], reliable: Boolean): RDD[T] = {
+    if (reliable) rdd.checkpoint() else rdd.localCheckpoint()
+    rdd.doCheckpoint()
+    rdd
+  }
+
+  /** Run `body` with `label` as the call site of the jobs and stages it
+    * starts (adaptive stage jobs inherit it through the captured local
+    * properties), then restore the caller's call site. */
+  def withCallSite[T](sc: SparkContext, label: String)(body: => T): T = {
+    val key = org.apache.spark.util.CallSite.SHORT_FORM
+    val prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, label)
+    try body finally sc.setLocalProperty(key, prev)
+  }
+
+  /** Delete `dir` (recursively) when the JVM exits, after the Spark
+    * context has stopped — never while a session may still read it. */
+  def deleteAtExit(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
 }

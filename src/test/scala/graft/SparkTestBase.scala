@@ -1,5 +1,9 @@
 package graft
 
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession across all suites (object, not per-suite —
@@ -9,5 +13,46 @@ object SparkTestBase {
     val s = GraftSession.local(4)
     graft.functions.GraftFunctions.registerAll(s)
     s
+  }
+
+  /** (jobs, stages run) of the Spark work that `body` starts on this
+    * thread. A listener counts the jobs carrying a fresh local-property tag
+    * and the completed stages of those jobs (skipped stages never complete);
+    * a tagged sentinel job then fences the counts, since the bus delivers
+    * events in order. */
+  def workOf(body: => Unit): (Int, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.workOf"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger
+    val stagesRun = new AtomicInteger
+    val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val fenced = new CountDownLatch(1)
+    @volatile var sentinel = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
+          case Some(t) if t == tag =>
+            jobs.incrementAndGet()
+            e.stageIds.foreach(id => stageIds.add(id))
+          case Some(t) if t == s"$tag:end" => sentinel = e.jobId
+          case _ => ()
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stageIds.contains(e.stageInfo.stageId)) stagesRun.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinel) fenced.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      try body finally sc.setLocalProperty(key, s"$tag:end")
+      sc.parallelize(Seq(1), 1).count()
+      require(fenced.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
+      (jobs.get, stagesRun.get)
+    } finally {
+      sc.setLocalProperty(key, null)
+      sc.removeSparkListener(listener)
+    }
   }
 }

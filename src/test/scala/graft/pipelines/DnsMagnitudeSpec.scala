@@ -1,13 +1,10 @@
 package graft.pipelines
 
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.functions._
 import graft.io.DnsMagCbor
 import graft.sources.RecordsCsv
+import graft.SparkTestBase.workOf
 
 /** End-to-end replay of the reference CLI flows (collect -> aggregate ->
   * report) through the record-level pipeline + the CSV source, pinning the
@@ -21,47 +18,6 @@ class DnsMagnitudeSpec extends AnyFunSuite {
 
   private val d1 = java.sql.Date.valueOf("2000-01-01")
   private val d2 = java.sql.Date.valueOf("2000-01-02")
-
-  /** (jobs, stages run) of the Spark work that `body` starts on this
-    * thread. A listener counts the jobs carrying a fresh local-property tag
-    * and the completed stages of those jobs (skipped stages never complete);
-    * a tagged sentinel job then fences the counts, since the bus delivers
-    * events in order. */
-  private def workOf(body: => Unit): (Int, Int) = {
-    val sc = spark.sparkContext
-    val key = "graft.test.workOf"
-    val tag = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger
-    val stagesRun = new AtomicInteger
-    val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val fenced = new CountDownLatch(1)
-    @volatile var sentinel = -1
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(key))) match {
-          case Some(t) if t == tag =>
-            jobs.incrementAndGet()
-            e.stageIds.foreach(id => stageIds.add(id))
-          case Some(t) if t == s"$tag:end" => sentinel = e.jobId
-          case _ => ()
-        }
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (stageIds.contains(e.stageInfo.stageId)) stagesRun.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinel) fenced.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(key, tag)
-      try body finally sc.setLocalProperty(key, s"$tag:end")
-      sc.parallelize(Seq(1), 1).count()
-      assert(fenced.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      (jobs.get, stagesRun.get)
-    } finally {
-      sc.setLocalProperty(key, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("csv source: test2.tsv replays to 200 queries / 7 domains / est 27") {
     val recs = RecordsCsv.read(spark, res("test2.tsv"), tsv = true)
