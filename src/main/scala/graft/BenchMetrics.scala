@@ -33,6 +33,11 @@ final class BenchMetrics extends SparkListener {
 
   def clear(): Unit = rows.clear()
 
+  def stageNames: Seq[String] = {
+    import scala.jdk.CollectionConverters._
+    rows.asScala.map(_.name).toSeq
+  }
+
   def summary(top: Int = 8): String = {
     import scala.jdk.CollectionConverters._
     def mb(b: Long) = f"${b / 1048576.0}%.1fMB"

@@ -52,12 +52,6 @@ final class BloomFilter private (val numHashes: Int, val log2Bits: Int, val word
     while (i < words.length) { words(i) |= other.words(i); i += 1 }
   }
 
-  def setBitCount: Long = {
-    var s = 0L; var i = 0
-    while (i < words.length) { s += java.lang.Long.bitCount(words(i)); i += 1 }
-    s
-  }
-
   def toBytes: Array[Byte] = {
     val bb = java.nio.ByteBuffer.allocate(8 + 8 * words.length)
     bb.put('B'.toByte).put('F'.toByte).put(1.toByte).put(numHashes.toByte)

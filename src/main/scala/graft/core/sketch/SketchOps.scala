@@ -12,7 +12,6 @@ object SketchOps {
   def hllUnion(a: Array[Byte], b: Array[Byte]): Array[Byte] = Hll.unionBytes(a, b)
 
   def cmsEst(bytes: Array[Byte], hash: Long): Long = CountMin.fromBytes(bytes).estimate(hash)
-  def cmsTotal(bytes: Array[Byte]): Long = CountMin.fromBytes(bytes).totalCount
 
   def bloomContains(bytes: Array[Byte], hash: Long): Boolean =
     BloomFilter.fromBytes(bytes).mightContain(hash)
@@ -30,10 +29,8 @@ object SketchOps {
     Array.tabulate(buckets - 1)(i => k.quantile((i + 1).toDouble / buckets))
   }
   def kllRank(bytes: Array[Byte], x: Double): Double = Kll.fromBytes(bytes).rank(x)
-  def kllCount(bytes: Array[Byte]): Long = Kll.fromBytes(bytes).count
 
   def kmvEst(bytes: Array[Byte]): Double = Kmv.fromBytes(bytes).estimate
-  def kmvSize(bytes: Array[Byte]): Int = Kmv.fromBytes(bytes).size
   def kmvHashes(bytes: Array[Byte]): Array[Long] = Kmv.fromBytes(bytes).values
   def kmvJaccard(a: Array[Byte], b: Array[Byte]): Double =
     Kmv.jaccard(Kmv.fromBytes(a), Kmv.fromBytes(b))

@@ -1,11 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.shims
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.util.AccumulatorV2
 import graft.functions.GraftFunctions._
 
@@ -173,37 +174,41 @@ object Dedup {
                                  minJaccard: Double): DataFrame =
     verifyJaccardPairsWithSets(candidates, sets, minJaccard, broadcastSets = false)
 
-  /** Maximum per-doc-state row count for which the verify joins BROADCAST
-    * the set/state table instead of shuffle-hashing the candidate stream
-    * through two exchanges. The second of those exchanges carries the
-    * stream ALREADY WIDENED by the first side's array — measured 1.4 GB at
-    * sf0.1 on the sparse-cosine verify for a 70 MB pair list — so when the
-    * state fits executor memory, broadcasting it keeps the whole verify in
-    * the candidate-emission stage with zero pair-stream exchanges. Both
-    * figures come from the state's own pin (its checkpoint job tallies rows
-    * and bytes), so the decision costs no job. Above either cap the
-    * shuffle-hash plan is the 100-TB path (build side = per-partition slice
-    * of the state, stream never sorted). */
-  private[operators] val VerifyBroadcastMaxDocs = 65536L
+  /** Largest pinned table, in rows, that the engine moves to the driver:
+    * the verify joins BROADCAST their per-doc set/state table, and
+    * [[connectedComponents]] collects its edge list and labels it there.
+    *
+    * Verify: without the broadcast the candidate stream is shuffle-hashed
+    * through two exchanges, and the second carries the stream ALREADY
+    * WIDENED by the first side's array — measured 1.4 GB at sf0.1 on the
+    * sparse-cosine verify for a 70 MB pair list — so when the state fits,
+    * broadcasting it keeps the whole verify in the candidate-emission stage
+    * with zero pair-stream exchanges. Above either cap the shuffle-hash
+    * plan is the 100-TB path (build side = per-partition slice of the
+    * state, stream never sorted), and components run as label rounds.
+    * Both figures come from the table's own pin (its checkpoint job
+    * tallies rows and bytes), so the decision costs no job. */
+  private[operators] val DriverMaxRows = 65536L
 
-  /** Byte cap of the same decision: rows alone cannot bound the broadcast,
-    * since each state row carries whole per-doc arrays — a few thousand
-    * book-length documents would pass the row cap and still build a
-    * multi-GB hash relation on the driver and every executor. 256 MiB of
-    * pinned UnsafeRows (the state's full rows, an upper bound on the
-    * columns the verify broadcasts) stays far under the 8 GB broadcast
-    * limit and inside default executor memory; the largest sf0.1 state
-    * under the row cap is well below it. */
-  private[operators] val VerifyBroadcastMaxBytes = 256L * 1024 * 1024
+  /** Byte cap of the same decision: rows alone cannot bound it, since each
+    * state row carries whole per-doc arrays — a few thousand book-length
+    * documents would pass the row cap and still build a multi-GB hash
+    * relation on the driver and every executor. 256 MiB of pinned
+    * UnsafeRows (the full rows, an upper bound on the columns the verify
+    * broadcasts) stays far under the 8 GB broadcast limit and inside
+    * default executor memory; the largest sf0.1 state under the row cap is
+    * well below it. */
+  private[operators] val DriverMaxBytes = 256L * 1024 * 1024
 
-  /** Broadcast the verify's state table? From the state pin's tallies. */
-  private[operators] def verifyBroadcast(rows: Long, bytes: Long): Boolean =
-    rows <= VerifyBroadcastMaxDocs && bytes <= VerifyBroadcastMaxBytes
+  /** Does a pinned table of `rows` rows and `bytes` bytes fit on the
+    * driver? From the pin's tallies. */
+  private[operators] def fitsDriver(rows: Long, bytes: Long): Boolean =
+    rows <= DriverMaxRows && bytes <= DriverMaxBytes
 
   private[operators] def verifyJaccardPairsWithSets(
       candidates: DataFrame, sets: DataFrame,
       minJaccard: Double, broadcastSets: Boolean): DataFrame = {
-    // Strategy (see VerifyBroadcastMaxDocs): BROADCAST the per-doc set
+    // Strategy (see DriverMaxRows): BROADCAST the per-doc set
     // table when the caller measured it small — the candidate stream then
     // flows through both lookups in one stage, exchanged zero times;
     // otherwise SHUFFLE-HASH joins with the set table as the build side
@@ -335,7 +340,7 @@ object Dedup {
     val sets = docSets.select(col("id"), col("shs"))
     // the broadcast decision reads the pin's own tallies: no extra job
     verifyJaccardPairsWithSets(candidates, sets, minJaccard,
-        broadcastSets = verifyBroadcast(pinned.rows, pinned.bytes))
+        broadcastSets = fitsDriver(pinned.rows, pinned.bytes))
       .dropDuplicates("id_a", "id_b")
   }
 
@@ -484,7 +489,7 @@ object Dedup {
     // alternative, which also multiplies row count by vector length) —
     // and sort-spill I/O capped 4->16-core scaling at ~0.67.
     // Strategy is size-adaptive like the Jaccard verify
-    // (verifyBroadcast): the choice is made from the exact rows and bytes
+    // (fitsDriver): the choice is made from the exact rows and bytes
     // the state's pin tallied, with no job of its own. Small state ->
     // BROADCAST both lookups: the candidate stream
     // flows through the whole verify in its emission stage, exchanged
@@ -494,7 +499,7 @@ object Dedup {
     // the per-partition build map: the 100-TB path (no sort, no spill;
     // measured 17.8s -> 9.5s at local[16] vs sort-merge, and scaling
     // recovers to the platform ceiling).
-    val bcast = verifyBroadcast(pinned.rows, pinned.bytes)
+    val bcast = fitsDriver(pinned.rows, pinned.bytes)
     def vside(s: DataFrame): DataFrame =
       if (bcast) broadcast(s) else s.hint("shuffle_hash")
     val stateA = state.select(col("id").as("id_a"), col("hk").as("hk_a"), col("wv").as("wv_a"))
@@ -918,15 +923,35 @@ object Dedup {
   /**
    * Connected components over a near-dup pair list — the step that turns
    * pairwise matches into KEEP/DROP decisions (docs A~B and B~C must
-   * collapse to one survivor even though A~C was never emitted). Label
-   * propagation to the minimum reachable id with POINTER JUMPING: every
-   * round a vertex takes the smallest component among itself and its
-   * neighbors, then compresses one indirection (component := component of
-   * component). Neighbor steps alone converge in O(diameter) rounds (a
-   * long chain would need one round per hop); the jump halves label-chain
-   * depth each round, giving O(log diameter) convergence — the
-   * pointer-doubling idea of the MapReduce connected-components
-   * literature (Kiveris et al. large-star/small-star family).
+   * collapse to one survivor even though A~C was never emitted). Returns
+   * (id, component) where component = min id of the cluster.
+   *
+   * The undirected edge list (both directions, distinct) is pinned first,
+   * and its exact tally picks one of two strategies:
+   *
+   *  - DRIVER: with no `resumePath`, when the edges fit the driver caps
+   *    that also bound the verify broadcast ([[fitsDriver]]: 65,536 rows
+   *    and 256 MiB), one job (call site `Dedup.connectedComponents
+   *    collect`) collects them and a union-find that roots each set at its
+   *    smallest id labels every vertex: exactly the fixed point the rounds
+   *    converge to, returned as a local frame. On a small graph the rounds
+   *    cost far more than their work — each is its own pinned execution,
+   *    with its own stages and generated classes.
+   *  - ROUNDS otherwise, and whenever a `resumePath` is given (ids that
+   *    are not longs, or null, also take the rounds).
+   *
+   * `maxIter` bounds only the rounds; `maxIter <= 0` returns the identity
+   * labelling (every vertex its own component).
+   *
+   * The rounds: label propagation to the minimum reachable id with POINTER
+   * JUMPING: every round a vertex takes the smallest component among itself
+   * and its neighbors, then compresses one indirection (component :=
+   * component of component). Neighbor steps alone converge in
+   * O(diameter) rounds (a long chain would need one round per hop); the
+   * jump halves label-chain depth each round, giving O(log diameter)
+   * convergence — the pointer-doubling idea of the MapReduce
+   * connected-components literature (Kiveris et al. large-star/small-star
+   * family).
    *
    * Scale shape: each round is one equi-join (edges x labels, keyed by
    * vertex id) + one min-aggregation, except round 1, which reads the
@@ -972,15 +997,64 @@ object Dedup {
    * components would be missing from the output. A directory containing
    * rounds but no fingerprint (pre-upgrade or hand-edited) is equally
    * untrustworthy and also fails fast; clear it to restart from scratch.
-   *
-   * Returns (id, component) where component = min id of the cluster.
    */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
                           resumePath: Option[String] = None,
                           pruneRounds: Boolean = true): DataFrame = {
-    val spark = pairs.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    if (!reliable)
+    val edges = edgeList(pairs)
+    val onDriver =
+      if (resumePath.isEmpty && maxIter > 0 && fitsDriver(edges.rows, edges.bytes))
+        componentsOnDriver(edges)
+      else None
+    onDriver.getOrElse(labelRounds(edges, maxIter, resumePath, pruneRounds))
+  }
+
+  /** [[connectedComponents]] by label rounds whatever the edge count: the
+    * path ScaleOp times and the tests hold the driver path to. */
+  private[graft] def connectedComponentsByRounds(pairs: DataFrame): DataFrame =
+    labelRounds(edgeList(pairs), maxIter = 20, resumePath = None, pruneRounds = true)
+
+  /** The undirected edge list, both directions, distinct, pinned. */
+  private def edgeList(pairs: DataFrame): Pinned =
+    pin(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+      .distinct(), "Dedup.connectedComponents edges")
+
+  /** Components of the pinned edges on the driver: one collect, then a
+    * union-find whose merges keep the smaller root, so every set is rooted
+    * at its smallest id. None for ids that are not longs, or null: the
+    * rounds define those. */
+  private def componentsOnDriver(edges: Pinned): Option[DataFrame] =
+    if (!edges.df.schema.forall(_.dataType == LongType)) None
+    else {
+      val spark = edges.df.sparkSession
+      val es = shims.withCallSite(spark.sparkContext, "Dedup.connectedComponents collect") {
+        edges.df.queryExecution.toRdd
+          .map(r => if (r.anyNull) null else (r.getLong(0), r.getLong(1))).collect()
+      }
+      Option.when(!es.contains(null)) {
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(v: Long): Long = {
+          var root = parent.getOrElseUpdate(v, v)
+          while (parent(root) != root) root = parent(root)
+          var x = v
+          while (x != root) { val up = parent(x); parent(x) = root; x = up }
+          root
+        }
+        es.foreach { case (a, b) =>
+          val (ra, rb) = (find(a), find(b))
+          if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+        }
+        val rows = parent.keys.toArray.map(v => Row(v, find(v)))
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+          new StructType().add("id", LongType).add("component", LongType))
+      }
+    }
+
+  private def labelRounds(edges: Pinned, maxIter: Int, resumePath: Option[String],
+                          pruneRounds: Boolean): DataFrame = {
+    val spark = edges.df.sparkSession
+    if (spark.sparkContext.getCheckpointDir.isEmpty)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         "connectedComponents: no spark checkpoint dir configured; falling " +
           "back to localCheckpoint (NOT fault-tolerant — executor loss fails " +
@@ -1032,10 +1106,6 @@ object Dedup {
       Option(df.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0))
         .fold(java.math.BigInteger.ZERO)(_.toBigIntegerExact)
 
-    // undirected edge list, both directions
-    val edges = pin(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct(), "Dedup.connectedComponents edges")
     val resumed = latestCompleteRound()
     // edge-set fingerprint guard (see scaladoc): count + XOR of per-edge
     // 64-bit hashes — order-independent, overflow-free (XOR, not SUM —
@@ -1139,8 +1209,9 @@ object Dedup {
     * best (RefinedWeb keeps by length; Dolma by quality score — same
     * shape, pluggable column here).
     *
-    * Plan shape: components come from [[connectedComponents]] (O(log d)
-    * equi-join rounds); the winner per component is ONE `max_by`-style
+    * Plan shape: components come from [[connectedComponents]] (a driver
+    * union-find for a small edge list, else O(log d) equi-join rounds);
+    * the winner per component is ONE `max_by`-style
     * aggregation over struct ordering (no window, no sort — a window
     * rank over components would globally sort what an agg can fold), and
     * the survivor filter is a semi-join on the doc id. Docs in no pair

@@ -16,6 +16,8 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(conf.get("spark.sql.shuffle.partitions") === "4")
     assert(conf.get("spark.sql.objectHashAggregate.sortBased.fallbackThreshold") ===
       (4 * 1024 * 1024).toString)
+    assert(conf.get("spark.sql.codegen.cache.maxEntries") ===
+      GraftSession.CodegenCacheEntries.toString)
     assert(spark.sparkContext.getCheckpointDir.isDefined)
     // shuffle and spill stay in Spark's default dir: only the timed mains
     // ask for tmpfs
@@ -24,9 +26,9 @@ class GraftSessionSpec extends AnyFunSuite {
 
   test("tmpfs local dir is named only where the host can create it") {
     val env = sys.env.get("SPARK_LOCAL_DIRS")
-    val missing = new java.io.File(java.nio.file.Files.createTempDirectory("graft-shm").toFile, "absent")
+    val missing = new java.io.File(SparkTestBase.tempDir("graft-shm").toFile, "absent")
     assert(GraftSession.tmpfsLocalDir(missing) === env)
-    val shm = java.nio.file.Files.createTempDirectory("graft-shm").toFile
+    val shm = SparkTestBase.tempDir("graft-shm").toFile
     assert(GraftSession.tmpfsLocalDir(shm) ===
       env.orElse(Some(new java.io.File(shm, "graft_spark").getPath)))
   }

@@ -14,7 +14,7 @@ class PlanShapeSpec extends AnyFunSuite {
   import spark.implicits._
 
   private lazy val pagesDir = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pages_plan").toString
+    val dir = graft.SparkTestBase.tempDir("graft_pages_plan").toString
     graft.sources.Pages.ensureParquet(spark, dir, 5000, hosts = 100, days = 3, partitions = 4)
     dir
   }
@@ -82,7 +82,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("collect with observed invalid-count scans the source exactly once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_plan_csv").toString
+    val dir = graft.SparkTestBase.tempDir("graft_plan_csv").toString
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/r.csv"),
       "192.168.1.1,com,5\n192.168.1.2,org,3\n")
     val recs = sources.RecordsCsv.read(spark, s"$dir/r.csv")
@@ -245,7 +245,7 @@ class PlanShapeSpec extends AnyFunSuite {
   test("bucketed sketch-state tables join with NO exchange (co-located merge)") {
     // the recurring-aggregation layout at scale: states bucketed by the
     // merge key join/merge without shuffling either side
-    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val wh = graft.SparkTestBase.tempDir("graft_wh").toString
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("lang"), col("n_chars"))
     docs.write.mode("overwrite").bucketBy(4, "doc_id").sortBy("doc_id")

@@ -15,6 +15,13 @@ object SparkTestBase {
     s
   }
 
+  /** A fresh temp dir, deleted (recursively) when the test JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    org.apache.spark.sql.graftshim.shims.deleteAtExit(dir.toFile)
+    dir
+  }
+
   /** (jobs, stages run) of the Spark work that `body` starts on this
     * thread. A listener counts the jobs carrying a fresh local-property tag
     * and the completed stages of those jobs (skipped stages never complete);

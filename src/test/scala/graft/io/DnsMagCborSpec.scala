@@ -103,7 +103,7 @@ class DnsMagCborSpec extends AnyFunSuite {
   test("aggregate over CBOR files reproduces the reference fixture (est 92)") {
     import spark.implicits._
     val d1 = java.sql.Date.valueOf("2000-01-01")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cbor").toString
+    val tmp = graft.SparkTestBase.tempDir("graft_cbor").toString
 
     val recs1 = {
       val lines = scala.io.Source.fromInputStream(
@@ -146,7 +146,7 @@ class DnsMagCborSpec extends AnyFunSuite {
   test("export guard: over-cap state fails fast with an actionable error, not a driver OOM") {
     import spark.implicits._
     val d1 = java.sql.Date.valueOf("2000-01-01")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cbor_cap").toString
+    val tmp = graft.SparkTestBase.tempDir("graft_cbor_cap").toString
     val wide = spark.range(50)
       .select(lit(d1).as("date"), concat(lit("d"), col("id")).as("domain"),
         xxh3_64(col("id").cast("string")).as("h"))
@@ -163,7 +163,7 @@ class DnsMagCborSpec extends AnyFunSuite {
 
   test("NULL-bucket residual reproduces totals when all domains are invalid") {
     val d1 = java.sql.Date.valueOf("2000-01-01")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cbor3").toString
+    val tmp = graft.SparkTestBase.tempDir("graft_cbor3").toString
     val res3 = getClass.getResource("/test3.tsv").getPath
     val st = DnsMagnitude.collect(RecordsCsv.read(spark, res3, tsv = true), d1)
     DnsMagCbor.write(st, s"$tmp/t3.dnsmag")

@@ -8,7 +8,7 @@ class TableIOSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestBase.spark
 
   test("pages write is day-partitioned; date predicates prune partitions") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tio").toString
+    val dir = graft.SparkTestBase.tempDir("graft_tio").toString
     val pages = graft.sources.Pages.generateDf(spark, 3000, hosts = 50, days = 3, partitions = 4)
     ParquetTableIO.writePages(pages, dir)
     // layout: date=YYYY-MM-DD subdirectories (Iceberg-shaped day partitioning)
@@ -23,7 +23,7 @@ class TableIOSpec extends AnyFunSuite {
   }
 
   test("sketch state roundtrips through the state table (append mode merges via aggregate)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tio_state").toString
+    val dir = graft.SparkTestBase.tempDir("graft_tio_state").toString
     val pages = graft.sources.Pages.generateDf(spark, 2000, hosts = 30, days = 2, partitions = 4)
     val state = graft.pipelines.Magnitude.collect(pages)
     ParquetTableIO.writeState(state, dir)

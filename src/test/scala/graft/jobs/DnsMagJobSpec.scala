@@ -10,7 +10,7 @@ class DnsMagJobSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestBase.spark
 
   test("collect -> aggregate -> report pipeline via the job CLI") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_job").toString
+    val dir = graft.SparkTestBase.tempDir("graft_job").toString
     val tsvPath = getClass.getResource("/test2.tsv").getPath
     // materialize test1 records as csv for the job
     val t1 = new java.io.File(dir, "test1.csv")
@@ -53,7 +53,7 @@ class DnsMagJobSpec extends AnyFunSuite {
   }
 
   test(".dnsmag CBOR state through the CLI, view --json parity fields") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_job_cbor").toString
+    val dir = graft.SparkTestBase.tempDir("graft_job_cbor").toString
     val tsvPath = getClass.getResource("/test2.tsv").getPath
     // collect straight to a .dnsmag file, aggregate it with itself back to
     // parquet, then view --json — exercising both directions of the codec
@@ -102,7 +102,7 @@ class DnsMagJobSpec extends AnyFunSuite {
   }
 
   test("report and text view read a .dnsmag input once") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_job_once").toString
+    val dir = graft.SparkTestBase.tempDir("graft_job_once").toString
     val tsvPath = getClass.getResource("/test2.tsv").getPath
     DnsMag.run(spark, Array("collect", "--input", tsvPath, "--tsv",
       "--date", "2000-01-01", "--output", s"$dir/state.dnsmag"))
@@ -125,7 +125,7 @@ class DnsMagJobSpec extends AnyFunSuite {
   }
 
   test("stdin input: aggregate reads a .dnsmag sequence from '-' (est 92)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_job_stdin").toString
+    val dir = graft.SparkTestBase.tempDir("graft_job_stdin").toString
     val tsvPath = getClass.getResource("/test2.tsv").getPath
     // build the two reference states, one exported as .dnsmag for stdin
     DnsMag.run(spark, Array("collect", "--input", tsvPath, "--tsv",
@@ -159,7 +159,7 @@ class DnsMagJobSpec extends AnyFunSuite {
   }
 
   test("aggregate of a missing .dnsmag input fails, naming the path") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_job_missing").toString
+    val dir = graft.SparkTestBase.tempDir("graft_job_missing").toString
     DnsMag.run(spark, Array("collect", "--input", getClass.getResource("/test2.tsv").getPath,
       "--tsv", "--date", "2000-01-01", "--output", s"$dir/s.dnsmag"))
     val e = intercept[Exception] {
@@ -172,7 +172,7 @@ class DnsMagJobSpec extends AnyFunSuite {
   }
 
   test("stdin input: collect reads gzipped records from '-'") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_job_stdin2").toString
+    val dir = graft.SparkTestBase.tempDir("graft_job_stdin2").toString
     val gz = new java.io.File(dir, "recs.csv.gz")
     val out = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(gz))
     out.write("192.168.1.1,com,5\n192.168.1.2,org,3\n".getBytes)
@@ -189,7 +189,7 @@ class DnsMagJobSpec extends AnyFunSuite {
   }
 
   test("pcap routing by magic bytes: .cap.gz extension still hits the pcap decoder") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_job_sniff").toString
+    val dir = graft.SparkTestBase.tempDir("graft_job_sniff").toString
     val odd = graft.core.net.PcapBytes.writeTest1Pcap(
       java.nio.file.Paths.get(dir), "oddly_named.cap.gz")
     // no --date: the job derives it from packet timestamps, which only the
@@ -202,7 +202,7 @@ class DnsMagJobSpec extends AnyFunSuite {
   }
 
   test("collect job fails on invalid records unless --skip-invalid") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_job_inv").toString
+    val dir = graft.SparkTestBase.tempDir("graft_job_inv").toString
     val f = new java.io.File(dir, "dirty.csv")
     java.nio.file.Files.writeString(f.toPath,
       "192.168.1.1,com,5\n192.168.1.2,org,-3\n")

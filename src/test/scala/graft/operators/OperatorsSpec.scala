@@ -116,7 +116,9 @@ class OperatorsSpec extends AnyFunSuite {
     assert(spark.sparkContext.getCheckpointDir.isDefined,
       "test session must configure a checkpoint dir")
     val chain = (0 until 60).map(i => (i.toLong, i + 1L)).toDF("id_a", "id_b")
-    val labels = Dedup.connectedComponents(chain)
+    // the rounds path: a 60-edge chain would otherwise be labelled on the
+    // driver, which pins nothing but the edges
+    val labels = Dedup.connectedComponentsByRounds(chain)
     // simulate executor loss: drop EVERY block-manager-resident RDD block
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
     val comps = labels.collect().map(r => r.getLong(0) -> r.getLong(1))
@@ -135,7 +137,7 @@ class OperatorsSpec extends AnyFunSuite {
     // tables are plain parquet + _SUCCESS, so nothing about the mechanism
     // depends on the live session — reading them from a fresh job is
     // exactly what this second call does.
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_resume").toString
+    val dir = graft.SparkTestBase.tempDir("graft_cc_resume").toString
     val chain = (0 until 50).map(i => (i.toLong, i + 1L)).toDF("id_a", "id_b")
     // phase 1: a job that dies after 2 rounds (maxIter caps the rounds).
     // pruneRounds=false keeps the full audit trail so the mtime check
@@ -165,7 +167,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(base.sortBy(_._1).toSeq === comps.sortBy(_._1).toSeq)
 
     // default pruning bounds the label-table copies left behind
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_cc_prune").toString
+    val dir2 = graft.SparkTestBase.tempDir("graft_cc_prune").toString
     Dedup.connectedComponents(chain, maxIter = 20, resumePath = Some(dir2)).count()
     val kept = fs.listStatus(new org.apache.hadoop.fs.Path(dir2))
       .map(_.getPath.getName).filter(_.startsWith("round_"))
@@ -779,7 +781,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("connected components resume rejects a directory from a different edge set") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_fp").toString
+    val dir = graft.SparkTestBase.tempDir("graft_cc_fp").toString
     val chain = (0 until 20).map(i => (i.toLong, i + 1L)).toDF("id_a", "id_b")
     Dedup.connectedComponents(chain, maxIter = 2, resumePath = Some(dir)).count()
     // a restart whose pairs GREW between restarts (new docs arrived) must
@@ -799,7 +801,7 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("connected components resume ignores stray non-round directory names") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_stray").toString
+    val dir = graft.SparkTestBase.tempDir("graft_cc_stray").toString
     val chain = (0 until 20).map(i => (i.toLong, i + 1L)).toDF("id_a", "id_b")
     Dedup.connectedComponents(chain, maxIter = 2, resumePath = Some(dir),
       pruneRounds = false).count()
@@ -1650,7 +1652,7 @@ class OperatorsSpec extends AnyFunSuite {
     // ConvertToLocalRelation optimizer rule (driver-side, before column
     // pruning), which voids the pruning/short-circuit assertions below —
     // real corpora are scans
-    val pdir = java.nio.file.Files.createTempDirectory("graft_gopher_fused").toString
+    val pdir = graft.SparkTestBase.tempDir("graft_gopher_fused").toString
     rows.toDF("doc_id", "text").write.mode("overwrite").parquet(pdir)
     val df = spark.read.parquet(pdir)
     val fused = TextQuality.gopherFilter(df)

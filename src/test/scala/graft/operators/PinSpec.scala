@@ -85,13 +85,15 @@ class PinSpec extends AnyFunSuite {
   }
 
   test("verify broadcast decision: both caps are inclusive, either one refuses") {
-    import Dedup.{verifyBroadcast, VerifyBroadcastMaxBytes => maxB, VerifyBroadcastMaxDocs => maxN}
-    assert(verifyBroadcast(maxN, maxB))
-    assert(!verifyBroadcast(maxN + 1, maxB))
-    assert(!verifyBroadcast(maxN, maxB + 1))
+    // one predicate decides both the verify broadcast and the driver-side
+    // connected components
+    import Dedup.{fitsDriver, DriverMaxBytes => maxB, DriverMaxRows => maxN}
+    assert(fitsDriver(maxN, maxB))
+    assert(!fitsDriver(maxN + 1, maxB))
+    assert(!fitsDriver(maxN, maxB + 1))
     // a few long documents: far under the row cap, over the byte cap
-    assert(!verifyBroadcast(3, maxB + 1))
-    assert(verifyBroadcast(0, 0))
+    assert(!fitsDriver(3, maxB + 1))
+    assert(fitsDriver(0, 0))
   }
 
   private lazy val chain = (0 until 40).map(i => (i.toLong, i + 1L)).toDF("id_a", "id_b")
@@ -106,21 +108,30 @@ class PinSpec extends AnyFunSuite {
   }
 
   test("connected components and dropNearDuplicates: exact job counts") {
-    // round 1 is computed from the edges, each round's convergence sum
-    // comes from its own pin, and joins against the pinned edges and labels
-    // plan broadcasts from the start. The 40-edge chain converges in 6
-    // rounds: 2 jobs pin the edges, 3 pin round 1, 4 pin each later round
-    // (neighbor-label broadcast, min-agg map stage, pointer-jump broadcast,
-    // checkpoint), and the collect is 1 more; dropping the losers adds a
-    // broadcast of them.
+    // the label rounds: round 1 is computed from the edges, each round's
+    // convergence sum comes from its own pin, and joins against the pinned
+    // edges and labels plan broadcasts from the start. The 40-edge chain
+    // converges in 6 rounds: 2 jobs pin the edges, 3 pin round 1, 4 pin
+    // each later round (neighbor-label broadcast, min-agg map stage,
+    // pointer-jump broadcast, checkpoint), and the collect is 1 more.
+    var comps: Array[org.apache.spark.sql.Row] = null
+    val (ccJobs, _) = workOf { comps = Dedup.connectedComponentsByRounds(chain).collect() }
+    assert(comps.length === 41 && comps.forall(_.getLong(1) == 0L))
+    assert(ccJobs === 26, "connectedComponents jobs, rounds path")
+  }
+
+  test("connected components on the driver: exact job counts") {
+    // 80 edge rows fit the driver caps: 2 jobs pin the edges and 1 collects
+    // them; the labels are a local frame, so collecting them runs no job.
+    // Dropping the losers adds 2: the losers' broadcast and the anti-join.
     var comps: Array[org.apache.spark.sql.Row] = null
     val (ccJobs, _) = workOf { comps = Dedup.connectedComponents(chain).collect() }
     assert(comps.length === 41 && comps.forall(_.getLong(1) == 0L))
-    assert(ccJobs === 26, "connectedComponents jobs")
+    assert(ccJobs === 3, "connectedComponents jobs, driver path")
     val docs = (0L until 50L).toDF("doc_id")
     var kept: Array[org.apache.spark.sql.Row] = null
     val (dropJobs, _) = workOf { kept = Dedup.dropNearDuplicates(docs, chain).collect() }
     assert(kept.map(_.getLong(0)).toSet === (0L +: (41L until 50L)).toSet)
-    assert(dropJobs === 27, "dropNearDuplicates jobs")
+    assert(dropJobs === 5, "dropNearDuplicates jobs, driver path")
   }
 }

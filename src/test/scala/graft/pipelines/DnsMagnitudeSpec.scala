@@ -147,7 +147,7 @@ class DnsMagnitudeSpec extends AnyFunSuite {
   }
 
   test(".dnsmag finish path: aggregate is one action, one scan; report reads only the pin") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dnsmag_once").toString
+    val dir = graft.SparkTestBase.tempDir("graft_dnsmag_once").toString
     val recs = RecordsCsv.read(spark, res("test2.tsv"), tsv = true)
     DnsMagCbor.write(DnsMagnitude.collect(recs, d1), s"$dir/a.dnsmag")
     DnsMagCbor.write(DnsMagnitude.collect(recs, d2), s"$dir/b.dnsmag")
@@ -249,7 +249,7 @@ class DnsMagnitudeSpec extends AnyFunSuite {
   }
 
   test("header-row heuristic: 'ip,domain,queries' first line silently dropped") {
-    val tmp = java.nio.file.Files.createTempFile("hdr", ".csv")
+    val tmp = java.nio.file.Files.createTempFile(graft.SparkTestBase.tempDir("graft_csv"), "hdr", ".csv")
     java.nio.file.Files.writeString(tmp,
       "ip,domain,queries\n192.168.1.1,com,5\n192.168.1.2,org,3\n")
     val recs = RecordsCsv.read(spark, tmp.toString)
@@ -259,7 +259,7 @@ class DnsMagnitudeSpec extends AnyFunSuite {
   }
 
   test("zero-count rows vanish; negative counts flagged invalid") {
-    val tmp = java.nio.file.Files.createTempFile("cnts", ".csv")
+    val tmp = java.nio.file.Files.createTempFile(graft.SparkTestBase.tempDir("graft_csv"), "cnts", ".csv")
     java.nio.file.Files.writeString(tmp,
       "192.168.1.1,com,5\n192.0.2.12,net,0\n192.168.1.3,org,-2\n192.168.1.4,me\n")
     val recs = RecordsCsv.read(spark, tmp.toString)

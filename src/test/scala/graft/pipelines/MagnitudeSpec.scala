@@ -102,7 +102,7 @@ class MagnitudeSpec extends AnyFunSuite {
   }
 
   test("kill/resume: resumed run produces byte-identical state to single run") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_resume").toString
+    val dir = graft.SparkTestBase.tempDir("graft_resume").toString
     // materialize 4 source files
     val srcDir = s"$dir/src"
     pages.repartition(4).write.parquet(srcDir)
@@ -132,7 +132,7 @@ class MagnitudeSpec extends AnyFunSuite {
   }
 
   test("resumable: empty source file records zero-row lineage, no NPE") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_resume_empty").toString
+    val dir = graft.SparkTestBase.tempDir("graft_resume_empty").toString
     val srcDir = s"$dir/src"
     pages.limit(0).write.parquet(srcDir) // a parquet file with ZERO rows
     val files = new java.io.File(srcDir).listFiles()
@@ -143,7 +143,7 @@ class MagnitudeSpec extends AnyFunSuite {
   }
 
   test("resumable: lineage listing goes through the Hadoop FS API (file: URI)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_resume_fs").toString
+    val dir = graft.SparkTestBase.tempDir("graft_resume_fs").toString
     val srcDir = s"$dir/src"
     pages.repartition(2).write.parquet(srcDir)
     val files = new java.io.File(srcDir).listFiles()

@@ -19,7 +19,7 @@ class DnsMagV2SourceSpec extends AnyFunSuite {
 
   private lazy val fixtureDir: String = {
     val d1 = java.sql.Date.valueOf("2000-01-01")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dnsmag_v2").toString
+    val tmp = graft.SparkTestBase.tempDir("graft_dnsmag_v2").toString
     val recs1 = {
       val lines = scala.io.Source.fromInputStream(
         getClass.getResourceAsStream("/test1_records.tsv")).getLines()

@@ -40,7 +40,7 @@ class WarcSourceSpec extends AnyFunSuite {
   }
 
   private lazy val warcDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc").toString
+    val dir = graft.SparkTestBase.tempDir("graft_warc").toString
     // plain file: warcinfo + 3 responses
     val plain = new ByteArrayOutputStream()
     plain.write(warcinfo())
@@ -156,7 +156,7 @@ class WarcSourceSpec extends AnyFunSuite {
   }
 
   test("warc WRITE: pages round-trip byte-exact; overwrite truncates; guards") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_warc_w").toString + "/out"
+    val dir = graft.SparkTestBase.tempDir("graft_warc_w").toString + "/out"
     val pages = (0 until 40).map(i =>
       (s"https://w$i.example/p", java.sql.Timestamp.valueOf(f"2024-02-01 10:00:${i % 60}%02d"),
         s"<html>export doc $i</html>".getBytes("UTF-8"), "text/html"))
@@ -245,7 +245,7 @@ class WarcSourceSpec extends AnyFunSuite {
 
   test("warc write: stale crash leftovers reclaimed at commit, live jobs untouched") {
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_warc_stale").toString + "/out"
+    val dir = graft.SparkTestBase.tempDir("graft_warc_stale").toString + "/out"
     // plant a DEAD job's temp subdir (25h-old entries — a driver that died
     // without abort) and a LIVE one (fresh mtimes — a concurrent job)
     Files.createDirectories(Paths.get(s"$dir/_temporary_warc/deadjob"))
@@ -266,7 +266,7 @@ class WarcSourceSpec extends AnyFunSuite {
 
   test("warc STREAMING sink: filtered crawl stream exports to archives per epoch") {
     import org.apache.spark.sql.streaming.Trigger
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_warc_ss").toString
+    val srcDir = graft.SparkTestBase.tempDir("graft_warc_ss").toString
     val sinkDir = srcDir + "/sink"
     val ckpt = srcDir + "/ckpt"
     val pages = (0 until 30).map(i =>

@@ -10,7 +10,7 @@ class StreamingSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("streaming windowed HLL agg matches the batch equivalent") {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val srcDir = graft.SparkTestBase.tempDir("graft_stream").toString
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     // stream the same data in 3 file chunks
     events.repartition(3).write.mode("overwrite").parquet(srcDir)
@@ -52,7 +52,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming windowed quantile + CMS sketches: CMS bytes == batch; quantiles in bound") {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_q").toString
+    val srcDir = graft.SparkTestBase.tempDir("graft_stream_q").toString
     val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .filter($"ts".isNotNull && $"event_type".isNotNull && $"value".isNotNull)
     events.repartition(3).write.mode("overwrite").parquet(srcDir)
@@ -174,7 +174,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming exact dedup emits first arrivals only, equals batch distinct texts") {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_dedup").toString
+    val srcDir = graft.SparkTestBase.tempDir("graft_stream_dedup").toString
     // 300 docs over 100 distinct texts, duplicates spread across 3 chunks;
     // arrival order == id order so the streamed survivor set is comparable
     val docs = (0 until 300).map { i =>
@@ -213,7 +213,7 @@ class StreamingSpec extends AnyFunSuite {
     // formulation (filter + first-arrival-per-text) — composition across
     // a codegen'd filter, flatMap-free stateful dedup, and an external
     // sink with per-epoch commit is what no per-operator test covers.
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_e2e").toString
+    val srcDir = graft.SparkTestBase.tempDir("graft_stream_e2e").toString
     val sinkDir = s"$srcDir/sink"
     // 58 passable words (stopword hits, mean len >= 3, alpha-heavy) with
     // doc-group tails: 120 docs over 40 distinct texts; every 7th doc is
@@ -265,7 +265,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming MinHash-LSH near-dedup == batch band-bucket candidates on a replay") {
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_lsh").toString
+    val srcDir = graft.SparkTestBase.tempDir("graft_stream_lsh").toString
     // 40 base texts x 3 arrivals: an exact copy (est 1.0), then a near copy
     // (a token appended -> most shingles shared); spread over 3 time chunks
     val docs = (0 until 120).map { i =>
@@ -343,7 +343,7 @@ class StreamingSpec extends AnyFunSuite {
     // and emits each unordered pair exactly once per band; double-buffering
     // doc 1 would instead emit (1,2) twice per band, steal doc 2's slot,
     // and never produce (2,3) at all.
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_replay").toString
+    val srcDir = graft.SparkTestBase.tempDir("graft_stream_replay").toString
     val text = {
       val r2 = new java.util.Random(7)
       Array.fill(25)(s"w${r2.nextInt(500)}").mkString(" ")
@@ -380,7 +380,7 @@ class StreamingSpec extends AnyFunSuite {
     // stateless operators need no streaming twin — prove the claim: the
     // SAME gopherFilter/splitByTokens calls run on a file stream and
     // produce exactly the batch result
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_rowlocal")
+    val srcDir = graft.SparkTestBase.tempDir("graft_stream_rowlocal")
       .toString + "/in"
     val good = (graft.core.text.TextOps.GopherStopwords ++
       (0 until 50).map(i => s"tok${('a' + i % 26).toChar}$i")).mkString(" ")
@@ -414,7 +414,7 @@ class StreamingSpec extends AnyFunSuite {
       EventIn(1L, new java.sql.Timestamp(base + 60000)),       // same session
       EventIn(1L, new java.sql.Timestamp(base + 10000000)),    // new session
       EventIn(2L, new java.sql.Timestamp(base)))               // then user 2 goes idle
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_sess").toString
+    val srcDir = graft.SparkTestBase.tempDir("graft_sess").toString
     rows.toDS().write.mode("overwrite").parquet(srcDir)
 
     val stream = spark.readStream.schema(rows.toDS().schema).parquet(srcDir).as[EventIn]
@@ -437,7 +437,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("streaming sketch-state sink + batch report == pure batch magnitude report") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_smag").toString
+    val dir = graft.SparkTestBase.tempDir("graft_smag").toString
     val pages = graft.sources.Pages.generateDf(spark, 6000, hosts = 80, days = 2, partitions = 3)
     // feed files in event-time order (FileStreamSource picks oldest mtime
     // first): day-2 data arriving after day-1 advances the watermark and
