@@ -27,7 +27,7 @@ object GraftSession {
   /** `local[cpus]` with the bench settings: one shuffle partition per core,
     * UTC, AQE, no UI, 32 MiB input splits and a codegen cache that holds a
     * pass over the gates, plus a fresh checkpoint dir
-    * (`Dedup.pin` checkpoints reliably), deleted at JVM exit. The timed
+    * (`Plans.pin` checkpoints reliably), deleted at JVM exit. The timed
     * mains pass `tmpfs` for shuffle and spill; tests and Verify keep
     * Spark's default local dir. */
   def local(cpus: Int = defaultCpus, tmpfs: Boolean = false): SparkSession = {

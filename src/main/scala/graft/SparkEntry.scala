@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
-import graft.operators.{Ann, Dedup, Joins, Multimodal}
+import graft.operators.{Ann, Dedup, Joins, Multimodal, Plans}
 
 /**
  * Driver contract (see SURVEY.md §2 for the operator inventory each query
@@ -332,8 +332,8 @@ object SparkEntry {
       val docs = s.read.parquet(t(dir, "documents"))
         .withColumn("w", (length(col("text")) + 1).cast("double"))
       val k = 30
-      val sample = graft.operators.Sampling
-        .weightedPerStratum(docs, "lang", "w", k).localCheckpoint()
+      val sample = Plans.pin(graft.operators.Sampling
+        .weightedPerStratum(docs, "lang", "w", k), "q_weighted_sample sample").df
       val sizes = sample.groupBy(col("lang")).agg(count(lit(1)).as("n"))
       val expect = docs.filter(col("w") > 0).groupBy(col("lang"))
         .agg(least(count(lit(1)), lit(k.toLong)).as("t"))
@@ -635,11 +635,10 @@ object SparkEntry {
       // one small (bucket, pack) summary, MATERIALIZED once: four branches
       // reference it, and Catalyst re-expands referenced subtrees — unpinned
       // the full collect+fold+join pipeline would run ~5x
-      val packAgg = packed.groupBy(col("bucket"), col("pack_id"))
+      val packAgg = Plans.pin(packed.groupBy(col("bucket"), col("pack_id"))
         .agg(sum(col("toks")).as("total"), count(lit(1)).as("n"),
           min(struct(col("pack_pos"), col("toks"))).as("__f"))
-        .withColumn("first_toks", col("__f.toks"))
-        .localCheckpoint()
+        .withColumn("first_toks", col("__f.toks")), "q_pack_greedy packAgg").df
       val overBudget = packAgg.filter(col("total") > budget && col("n") > 1)
         .select(col("bucket"), col("pack_id"), lit("over_budget").as("violation"))
       val nextFirst = packAgg.select(col("bucket"),
@@ -672,9 +671,9 @@ object SparkEntry {
         .withColumn("toks", size(split(col("text"), " ")).cast("long"))
         .withColumn("bucket", pmod(col("doc_id"), lit(16)))
       val packed = graft.operators.Packing.packBestFit(docs, "toks", budget, "bucket")
-      val packAgg = packed.groupBy(col("bucket"), col("pack_id"))
-        .agg(sum(col("toks")).as("total"), count(lit(1)).as("n"))
-        .localCheckpoint() // referenced by four violation branches
+      // referenced by four violation branches
+      val packAgg = Plans.pin(packed.groupBy(col("bucket"), col("pack_id"))
+        .agg(sum(col("toks")).as("total"), count(lit(1)).as("n")), "q_pack_bestfit packAgg").df
       val overBudget = packAgg.filter(col("total") > budget && col("n") > 1)
         .select(col("bucket"), col("pack_id"), lit("over_budget").as("violation"))
       val mergeable = packAgg.as("a").join(packAgg.as("b"),
@@ -1008,9 +1007,9 @@ object SparkEntry {
       //  (c) precision: every emitted subset pair appears in the brute
       //      force with the same hamming.
       val maxH = 10
-      val sigs = s.read.parquet(t(dir, "documents"))
-        .select(col("doc_id").as("id"), simhash64(col("text")).as("sig"))
-        .localCheckpoint() // referenced 4x (twins, planted, subset, union)
+      // referenced 4x (twins, planted, subset, union)
+      val sigs = Plans.pin(s.read.parquet(t(dir, "documents"))
+        .select(col("doc_id").as("id"), simhash64(col("text")).as("sig")), "q_simhash_pairs sigs").df
       def mask(bits: Seq[Int]): Long = bits.map(1L << _).reduce(_ | _)
       // one flip position inside each 8-bit band, then extras in bands 0/1:
       // all bands of the 8x8 layout are touched at h=8 already
@@ -1022,8 +1021,9 @@ object SparkEntry {
         .otherwise(lit(m10))
       val twins = sigs.select((col("id") + 10000000L).as("id"),
         col("sig").bitwiseXOR(flip).as("sig"))
-      val found = Dedup.simhashPairsFromSigs(sigs.unionByName(twins), maxHamming = maxH)
-        .localCheckpoint() // referenced by checks (a), (b) and (c)
+      // referenced by checks (a), (b) and (c)
+      val found = Plans.pin(Dedup.simhashPairsFromSigs(sigs.unionByName(twins), maxHamming = maxH),
+        "q_simhash_pairs found").df
       val planted = sigs.select(col("id").as("id_a"), (col("id") + 10000000L).as("id_b"))
       val plantedMissed = planted.join(found, Seq("id_a", "id_b"), "left_anti")
         .select(col("id_a"), col("id_b"), lit("planted_missed").as("violation"))
@@ -1263,8 +1263,8 @@ object SparkEntry {
       // contiguous 0-based epochs, whitelist semantics
       val targets = Map("en" -> 500L, "de" -> 1000L, "zh" -> 100L)
       val docs = s.read.parquet(t(dir, "documents"))
-      val out = graft.operators.Sampling.resampleToCounts(docs, "lang", targets)
-        .localCheckpoint()
+      val out = Plans.pin(graft.operators.Sampling.resampleToCounts(docs, "lang", targets),
+        "q_resample_counts out").df
       val exp = docs.filter($"lang".isInCollection(targets.keys.toSeq))
         .groupBy($"lang").agg(count(lit(1)).as("c"))
         .join(targets.toSeq.toDF("lang", "t"), "lang")
@@ -1315,7 +1315,8 @@ object SparkEntry {
       val ids = s.read.parquet(t(dir, "documents")).select(col("doc_id")).as[Long]
         .filter(_ < 2040L)
         .repartition(s.sparkContext.defaultParallelism)
-      val imgs = ids.flatMap { id =>
+      // consumed by sigs + resize
+      val imgs = Plans.pin(ids.flatMap { id =>
         val w = 40 + (id % 5).toInt * 12; val h = 32 + (id % 3).toInt * 8
         val fx = 1.0 + (id % 4) * 0.7; val fy = 0.5 + (id % 3) * 0.6
         val ph = (id % 17) / 17.0
@@ -1325,8 +1326,8 @@ object SparkEntry {
         if (id % 2 == 0)
           out :+ ((id + 2 * n, Multimodal.Synth.image(w / 2, h / 2, fx, fy, ph, "png")))
         else out
-      }.toDF("doc_id", "media").localCheckpoint() // consumed by sigs + resize
-      val sigs = Multimodal.imageDhash(imgs).localCheckpoint()
+      }.toDF("doc_id", "media"), "q_image_dedup imgs").df
+      val sigs = Plans.pin(Multimodal.imageDhash(imgs), "q_image_dedup sigs").df
       val expected = ids.count() * 2 + ids.filter(_ % 2 == 0).count()
       val cardV = sigs.agg(count(lit(1)).as("c"))
         .filter(col("c") =!= expected)
@@ -1347,8 +1348,8 @@ object SparkEntry {
         .filter(col("a.sig") =!= col("b.sig"))
         .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
           lit("reencode_sig").as("violation"))
-      val found = Dedup.simhashPairsFromSigs(
-        sigs.select(col("id"), col("sig")), maxHamming = 10).localCheckpoint()
+      val found = Plans.pin(Dedup.simhashPairsFromSigs(
+        sigs.select(col("id"), col("sig")), maxHamming = 10), "q_image_dedup found").df
       val resizeV = origs.filter(pmod(col("id"), lit(2)) === 0)
         .select(col("id").as("id_a"), (col("id") + 2 * n).as("id_b"))
         .join(found, Seq("id_a", "id_b"), "left_anti")
@@ -1360,8 +1361,8 @@ object SparkEntry {
       //     the dhash — UNCHANGED. (Drift bounds for aggressive downsizes
       //     are fixture-dependent and live in the unit spec.)
       val origImgs = imgs.filter(col("doc_id") < n)
-      val thumbs = Multimodal.imageResize(origImgs, maxW = 32, maxH = 32)
-        .localCheckpoint()
+      val thumbs = Plans.pin(Multimodal.imageResize(origImgs, maxW = 32, maxH = 32),
+        "q_image_dedup thumbs").df
       val twExp = least(wBase, least(lit(32), floor(wBase * 32 / hBase))).cast("int")
       val thExp = least(hBase, least(lit(32), floor(hBase * 32 / wBase))).cast("int")
       val thumbMissing = origs.select(col("id"))
@@ -1479,7 +1480,7 @@ object SparkEntry {
       val pages = s.read.parquet(t(dir, "documents"))
         .select(format_string("https://h%d.example/p/%d", pmod(d, lit(50)), d)
           .as("url"), html.as("html"))
-      val edges = graft.operators.LinkGraph.hostEdges(pages).localCheckpoint()
+      val edges = Plans.pin(graft.operators.LinkGraph.hostEdges(pages), "q_link_graph edges").df
       graft.operators.LinkGraph.degrees(edges)
         .join(graft.operators.LinkGraph.pageRank(edges, iters = 3), Seq("host"))
         .orderBy(col("host"))
@@ -1636,7 +1637,7 @@ object SparkEntry {
             lit("</p></body></html>")).cast("binary").as("html"))
         .repartition(4)
         .write.format("warc").mode("overwrite").save(tmp)
-      // stage boundaries are PINNED (localCheckpoint): each frame below is
+      // stage boundaries are PINNED (Plans.pin): each frame below is
       // consumed by 2+ downstream operators, and an unpinned reference
       // re-expands its whole upstream subtree per consumer (no cross-action
       // CSE in Spark) — the WARC scan + quality kernels would re-run 3x
@@ -1647,7 +1648,7 @@ object SparkEntry {
       // isolated gates never see)
       val bl = corpus.filter(pmod(d, lit(13)) === 3)
         .select(format_string("d%09d.example", d).as("domain"))
-      val docs0 = graft.operators.UrlFilter.dropBlockedHosts(
+      val docs0 = Plans.pin(graft.operators.UrlFilter.dropBlockedHosts(
           s.read.format("warc").option("types", "resource").load(tmp)
             .select(col("url"), col("payload")),
           bl, urlCol = "url", idCol = "url")
@@ -1659,31 +1660,31 @@ object SparkEntry {
         .repartition(s.sparkContext.defaultParallelism)
         .select(regexp_extract(col("url"), "d(\\d+)\\.example", 1)
             .cast("long").as("doc_id"),
-          html_text(col("payload").cast("string")).as("text"))
-        .localCheckpoint()
+          html_text(col("payload").cast("string")).as("text")), "q_pipeline_e2e docs0").df
       val kept = docs0.filter(graft.operators.TextQuality.keepColumn())
-      val stripped = Dedup.stripBoilerplateLines(kept, minDf = 50).localCheckpoint()
-      val dd = stripped.join(Dedup.exact(stripped), Seq("doc_id")).localCheckpoint()
+      val stripped = Plans.pin(Dedup.stripBoilerplateLines(kept, minDf = 50),
+        "q_pipeline_e2e stripped").df
+      val dd = Plans.pin(stripped.join(Dedup.exact(stripped), Seq("doc_id")),
+        "q_pipeline_e2e dd").df
       val pairs = Dedup.ngramJaccardPairs(dd, n = 3, minJaccard = 0.2)
       // keep-BEST survivor per near-dup cluster (longest text, ties to
       // the smallest id) — the RefinedWeb selection rule, composed here
       // instead of the min-id drop the isolated q_dedup_groups gate pins
-      val nd = Dedup.keepBestPerCluster(
+      val nd = Plans.pin(Dedup.keepBestPerCluster(
           dd.withColumn("q", length(col("text"))), pairs, qualityCol = "q")
-        .drop("q").localCheckpoint()
+        .drop("q"), "q_pipeline_e2e nd").df
       val bench = docs0.filter(pmod(col("doc_id"), lit(50)) === 0 &&
         col("doc_id") < 1000000L)
       // lang recovery maps clones (id + 1e6) back to their base row: a
       // clone can now outlive its blocklisted original, and an inner
       // join on the raw id would silently drop it (the exact-dedup stage
       // used to mask this — min-id always kept the original)
-      val surv = nd.join(Dedup.contaminatedDocs(nd, bench, n = 5, minShared = 1)
+      val surv = Plans.pin(nd.join(Dedup.contaminatedDocs(nd, bench, n = 5, minShared = 1)
           .select(col("doc_id")), Seq("doc_id"), "left_anti")
         .withColumn("base_id", pmod(col("doc_id"), lit(1000000L)))
         .join(docsTable.select(col("doc_id").as("base_id"), col("lang")),
           Seq("base_id"))
-        .drop("base_id")
-        .localCheckpoint()
+        .drop("base_id"), "q_pipeline_e2e surv").df
       // exact x2 upsampling: targets = 2 * per-stratum survivor counts, so
       // EVERY doc gets exactly copies {epoch 0, epoch 1} — no
       // hash-dependent selection, the oracle states the counts directly

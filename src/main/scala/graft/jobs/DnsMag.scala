@@ -1,6 +1,7 @@
 package graft.jobs
 
 import org.apache.spark.sql.{SaveMode, SparkSession}
+import graft.operators.Plans
 import graft.pipelines.DnsMagnitude
 import graft.sources.RecordsCsv
 
@@ -38,7 +39,7 @@ object DnsMag {
   // the state: pin a .dnsmag one (bounded by domains x dates) so its CBOR
   // decode runs once. A parquet state is cheaper to scan twice than to pin.
   private def readStatePinned(spark: SparkSession, path: String) =
-    if (path.endsWith(".dnsmag")) readState(spark, path).localCheckpoint()
+    if (path.endsWith(".dnsmag")) Plans.pin(readState(spark, path), "DnsMag state").df
     else readState(spark, path)
 
   /** `-` = read this input from stdin, the reference CLI convention

@@ -153,10 +153,13 @@ object Ann {
     def clampAcos(x: Double): Double = math.acos(math.max(-1.0, math.min(1.0, x)))
 
     val centroids = Ivf.train(embs, blocks, kmeansIters, idCol, vecCol)
-    val base = embs.select(col(idCol).as("id"), col(vecCol).as("vec"))
+    // pinned: the radii collect and both join sides read it, and Catalyst
+    // would re-expand the centroid assignment at each of the three
+    val base = Plans.pin(embs.select(col(idCol).as("id"), col(vecCol).as("vec"))
       .withColumn("block", element_at(Ivf.nearestCentroids(col("vec"), centroids, 1), 1))
       .withColumn("ccos", column(graft.functions.CentroidCos(
-        expression(col("vec")), expression(col("block")), centroids)))
+        expression(col("vec")), expression(col("block")), centroids))),
+      "Ann.cosineNearDupPairs base").df
 
     // per-block max angle to centroid (k rows — bounded by `blocks`)
     val radii = base.groupBy(col("block")).agg(min(col("ccos")).as("min_cos"))

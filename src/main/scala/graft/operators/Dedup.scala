@@ -1,13 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.shims
 import org.apache.spark.sql.types.{LongType, StructType}
-import org.apache.spark.util.AccumulatorV2
+import graft.operators.Plans._
 import graft.functions.GraftFunctions._
 
 /**
@@ -29,101 +26,6 @@ import graft.functions.GraftFunctions._
  * joins) and every verification runs only on candidates.
  */
 object Dedup {
-
-  /** A pinned frame and the tallies its checkpoint job took: rows, bytes
-    * of the materialized UnsafeRows, and the exact sum of the requested
-    * long column (zero when none was requested or the frame is empty). */
-  private[operators] final case class Pinned(df: DataFrame, rows: Long, bytes: Long, sum: java.math.BigInteger)
-
-  /** Exact sum of longs: a long partial that spills into a BigInteger on
-    * overflow, so a sum over any number of 64-bit values stays exact. */
-  private final class BigSum extends AccumulatorV2[Long, java.math.BigInteger] {
-    private var big = java.math.BigInteger.ZERO
-    private var part = 0L
-    override def isZero: Boolean = part == 0L && big.signum == 0
-    override def copy(): BigSum = { val c = new BigSum; c.big = big; c.part = part; c }
-    override def reset(): Unit = { big = java.math.BigInteger.ZERO; part = 0L }
-    override def add(v: Long): Unit = {
-      val s = part + v
-      if (((part ^ s) & (v ^ s)) < 0) { big = big.add(java.math.BigInteger.valueOf(part)); part = v }
-      else part = s
-    }
-    override def merge(other: AccumulatorV2[Long, java.math.BigInteger]): Unit =
-      big = big.add(other.value)
-    override def value: java.math.BigInteger = big.add(java.math.BigInteger.valueOf(part))
-  }
-
-  /** Materialize + re-root a frame. Catalyst re-expands a referenced
-    * subtree at EVERY reference (no cross-reference CSE), so a frame used k
-    * times recomputes k times unless pinned. Reliable checkpoint when the
-    * session has a checkpoint dir (the cluster deployment path — durable on
-    * the shared FS, survives executor loss); localCheckpoint otherwise.
-    *
-    * ONE job of its own, inside one SQL execution as `Dataset.checkpoint`
-    * runs it (adaptive execution still submits the frame's shuffle-map
-    * stages as their own jobs first): the checkpoint write IS the
-    * computation, and accumulators in that result stage tally rows,
-    * UnsafeRow bytes and, given `sumCol`, the exact sum of one long column.
-    * Result-stage accumulator updates count once per partition even when a
-    * task is retried; shuffle-map stages get no tallies, since a stage
-    * retry there would count twice. Callers read what the pin saw instead
-    * of running a count or an aggregate over it.
-    *
-    * The checkpointed UnsafeRows are re-wrapped zero-copy with FRESH
-    * attribute ids (via graftshim), so the pinned frame can be referenced
-    * several times in one plan (self-joins/self-unions of the same
-    * attribute ids trip Catalyst's constraint rewrites), and the relation
-    * carries the tallies as exact statistics: joins against a small pin
-    * plan a broadcast from the start instead of shuffling both sides until
-    * adaptive execution has seen the sizes.
-    *
-    * `label` names the work: it is the call site of the pin's job and of
-    * the stages it starts, restored to the caller's afterwards. */
-  private[operators] def pin(df: DataFrame, label: String,
-                             sumCol: Option[String] = None): Pinned = {
-    val spark = df.sparkSession
-    val sc = spark.sparkContext
-    val schema = df.schema
-    val sumAt = sumCol.fold(-1)(schema.fieldIndex)
-    val rows = sc.longAccumulator
-    val bytes = sc.longAccumulator
-    val sum = new BigSum
-    sc.register(sum)
-    val reliable = sc.getCheckpointDir.isDefined
-    val qe = df.queryExecution
-    val cut = shims.withCallSite(sc, label) {
-      SQLExecution.withNewExecutionId(qe, Some(if (reliable) "checkpoint" else "localCheckpoint")) {
-        shims.checkpointNow(qe.executedPlan.execute().mapPartitions { it =>
-          lazy val toUnsafe = UnsafeProjection.create(schema)
-          it.map { r =>
-            val u = (r match { case u: UnsafeRow => u; case _ => toUnsafe(r) }).copy()
-            rows.add(1L)
-            bytes.add(u.getSizeInBytes.toLong)
-            if (sumAt >= 0 && !u.isNullAt(sumAt)) sum.add(u.getLong(sumAt))
-            u: InternalRow
-          }
-        }, reliable)
-      }
-    }
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
-      s"$label: pinned ${rows.sum} rows, ${bytes.sum} bytes")
-    Pinned(shims.internalCreateDataFrame(spark, cut, schema, rows.sum, bytes.sum),
-      rows.sum, bytes.sum, sum.value)
-  }
-
-  /** Scale-adaptive width for per-row kernel stages (BATCH frames only —
-    * `df.rdd` rejects streaming plans): an input narrower than the
-    * session's parallelism (locally: one small parquet file = one scan
-    * task) runs its codegen'd text kernels — shingling, rolling hashes,
-    * fingerprints — in that handful of tasks, serializing the stage that
-    * carries most of the operator's CPU. Widen ONLY then: the repartition
-    * moves the raw rows once (bytes the kernels were about to read
-    * anyway), and an input that already scans wide (the 100-TB case:
-    * thousands of splits) pays nothing. */
-  private[operators] def widen(df: DataFrame): DataFrame = {
-    val para = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < para) df.repartition(para) else df
-  }
 
   /** Exact dedup: keep the smallest id per identical text, keyed by a
     * 128-bit content signature (XXH3 + an independent rolling hash), so the
@@ -174,55 +76,15 @@ object Dedup {
                                  minJaccard: Double): DataFrame =
     verifyJaccardPairsWithSets(candidates, sets, minJaccard, broadcastSets = false)
 
-  /** Largest pinned table, in rows, that the engine moves to the driver:
-    * the verify joins BROADCAST their per-doc set/state table, and
-    * [[connectedComponents]] collects its edge list and labels it there.
-    *
-    * Verify: without the broadcast the candidate stream is shuffle-hashed
-    * through two exchanges, and the second carries the stream ALREADY
-    * WIDENED by the first side's array — measured 1.4 GB at sf0.1 on the
-    * sparse-cosine verify for a 70 MB pair list — so when the state fits,
-    * broadcasting it keeps the whole verify in the candidate-emission stage
-    * with zero pair-stream exchanges. Above either cap the shuffle-hash
-    * plan is the 100-TB path (build side = per-partition slice of the
-    * state, stream never sorted), and components run as label rounds.
-    * Both figures come from the table's own pin (its checkpoint job
-    * tallies rows and bytes), so the decision costs no job. */
-  private[operators] val DriverMaxRows = 65536L
-
-  /** Byte cap of the same decision: rows alone cannot bound it, since each
-    * state row carries whole per-doc arrays — a few thousand book-length
-    * documents would pass the row cap and still build a multi-GB hash
-    * relation on the driver and every executor. 256 MiB of pinned
-    * UnsafeRows (the full rows, an upper bound on the columns the verify
-    * broadcasts) stays far under the 8 GB broadcast limit and inside
-    * default executor memory; the largest sf0.1 state under the row cap is
-    * well below it. */
-  private[operators] val DriverMaxBytes = 256L * 1024 * 1024
-
-  /** Does a pinned table of `rows` rows and `bytes` bytes fit on the
-    * driver? From the pin's tallies. */
-  private[operators] def fitsDriver(rows: Long, bytes: Long): Boolean =
-    rows <= DriverMaxRows && bytes <= DriverMaxBytes
-
   private[operators] def verifyJaccardPairsWithSets(
       candidates: DataFrame, sets: DataFrame,
       minJaccard: Double, broadcastSets: Boolean): DataFrame = {
-    // Strategy (see DriverMaxRows): BROADCAST the per-doc set
-    // table when the caller measured it small — the candidate stream then
-    // flows through both lookups in one stage, exchanged zero times;
-    // otherwise SHUFFLE-HASH joins with the set table as the build side
-    // (one bounded array row per doc): the candidate side is
-    // pair-count-sized and array-widened after the first join, and a
-    // sort-merge join would SORT that fat intermediate — the same
-    // sort-spill class measured at 10.4GB on the sparse-cosine verify
-    // (see sparseCosinePairs); hash joins stream the pairs and sort
-    // nothing.
-    def side(s: DataFrame): DataFrame =
-      if (broadcastSets) broadcast(s) else s.hint("shuffle_hash")
+    // broadcast when the caller measured the set table small (Plans.lookupSide)
+    def setsAs(x: String) = lookupSide(
+      sets.select(col("id").as(s"id_$x"), col("shs").as(s"shs_$x")), broadcastSets)
     candidates
-      .join(side(sets.select(col("id").as("id_a"), col("shs").as("shs_a"))), "id_a")
-      .join(side(sets.select(col("id").as("id_b"), col("shs").as("shs_b"))), "id_b")
+      .join(setsAs("a"), "id_a")
+      .join(setsAs("b"), "id_b")
       .withColumn("inter", sortedIntersectCount(col("shs_a"), col("shs_b")))
       .withColumn("jaccard",
         col("inter").cast("double") / (size(col("shs_a")) + size(col("shs_b")) - col("inter")))
@@ -481,32 +343,15 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
 
     // verification: attach both docs' sorted (hash, weight) arrays to each
-    // candidate pair and merge-dot per row — NEVER sort-merge: the
-    // candidate side of these joins is pair-count-sized and array-widened;
-    // sort-merge would SORT that fat intermediate, and stage attribution
-    // at 100k docs / ~4.5M candidates showed the sort as the dominant
-    // cost: one stage spilling 10.4GB (25GB for the feature-exploded
-    // alternative, which also multiplies row count by vector length) —
-    // and sort-spill I/O capped 4->16-core scaling at ~0.67.
-    // Strategy is size-adaptive like the Jaccard verify
-    // (fitsDriver): the choice is made from the exact rows and bytes
-    // the state's pin tallied, with no job of its own. Small state ->
-    // BROADCAST both lookups: the candidate stream
-    // flows through the whole verify in its emission stage, exchanged
-    // zero times (the shuffle-hash plan exchanged it twice, the second
-    // time already widened by side A's arrays — measured 1.4 GB at sf0.1
-    // for a 70 MB pair list). Big state -> SHUFFLE-HASH with the state as
-    // the per-partition build map: the 100-TB path (no sort, no spill;
-    // measured 17.8s -> 9.5s at local[16] vs sort-merge, and scaling
-    // recovers to the platform ceiling).
-    val bcast = fitsDriver(pinned.rows, pinned.bytes)
-    def vside(s: DataFrame): DataFrame =
-      if (bcast) broadcast(s) else s.hint("shuffle_hash")
+    // candidate pair and merge-dot per row; the lookup side is chosen from
+    // the exact rows and bytes the state's pin tallied (Plans.lookupSide),
+    // with no job of its own
+    val small = fitsDriver(pinned.rows, pinned.bytes)
     val stateA = state.select(col("id").as("id_a"), col("hk").as("hk_a"), col("wv").as("wv_a"))
     val stateB = state.select(col("id").as("id_b"), col("hk").as("hk_b"), col("wv").as("wv_b"))
     candidates
-      .join(vside(stateA), "id_a")
-      .join(vside(stateB), "id_b")
+      .join(lookupSide(stateA, small), "id_a")
+      .join(lookupSide(stateB, small), "id_b")
       .withColumn("cos", round(
         sorted_weighted_dot(col("hk_a"), col("wv_a"), col("hk_b"), col("wv_b")), 9))
       .filter(col("cos") >= minCos)
@@ -930,7 +775,7 @@ object Dedup {
    * and its exact tally picks one of two strategies:
    *
    *  - DRIVER: with no `resumePath`, when the edges fit the driver caps
-   *    that also bound the verify broadcast ([[fitsDriver]]: 65,536 rows
+   *    that also bound the verify broadcast ([[Plans.fitsDriver]]: 65,536 rows
    *    and 256 MiB), one job (call site `Dedup.connectedComponents
    *    collect`) collects them and a union-find that roots each set at its
    *    smallest id labels every vertex: exactly the fixed point the rounds

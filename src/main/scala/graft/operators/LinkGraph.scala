@@ -150,14 +150,15 @@ object LinkGraph {
           ew("src") === ranks("host"))
         .select(col("dst").as("host"), expr("r div od").as("c"))
       val sums = contribs.groupBy("host").agg(sum(col("c")).as("s"))
-      ranks = nodes.join(sums.hint("shuffle_hash"), Seq("host"), "left")
+      it += 1
+      // pin: the next round must not re-expand this one
+      ranks = Plans.pin(nodes.join(sums.hint("shuffle_hash"), Seq("host"), "left")
         .select(col("host"),
           (lit(base) +
-            expr(s"($dampPct * coalesce(s, cast(0 as bigint))) div 100")).as("r"))
-        .localCheckpoint() // pin: the next round must not re-expand this one
-      it += 1
+            expr(s"($dampPct * coalesce(s, cast(0 as bigint))) div 100")).as("r")),
+        s"LinkGraph.pageRank round $it").df
     }
-    val out = if (iters == 0) ranks.localCheckpoint() else ranks
+    val out = if (iters == 0) Plans.pin(ranks, "LinkGraph.pageRank round 0").df else ranks
     ew.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     out.withColumnRenamed("r", "pr_micro")

@@ -1,0 +1,146 @@
+package graft.operators
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.graftshim.shims
+import org.apache.spark.util.AccumulatorV2
+
+/** The engine's plan idioms, each written once: pin a frame that several
+  * consumers read, widen a narrow input before a per-row kernel, decide
+  * whether a pinned table fits the driver, and pick the lookup side of a
+  * join against a pinned state table. */
+private[graft] object Plans {
+
+  /** A pinned frame and the tallies its checkpoint job took: rows, bytes
+    * of the materialized UnsafeRows, and the exact sum of the requested
+    * long column (zero when none was requested or the frame is empty). */
+  final case class Pinned(df: DataFrame, rows: Long, bytes: Long, sum: java.math.BigInteger)
+
+  /** Exact sum of longs: a long partial that spills into a BigInteger on
+    * overflow, so a sum over any number of 64-bit values stays exact. */
+  private final class BigSum extends AccumulatorV2[Long, java.math.BigInteger] {
+    private var big = java.math.BigInteger.ZERO
+    private var part = 0L
+    override def isZero: Boolean = part == 0L && big.signum == 0
+    override def copy(): BigSum = { val c = new BigSum; c.big = big; c.part = part; c }
+    override def reset(): Unit = { big = java.math.BigInteger.ZERO; part = 0L }
+    override def add(v: Long): Unit = {
+      val s = part + v
+      if (((part ^ s) & (v ^ s)) < 0) { big = big.add(java.math.BigInteger.valueOf(part)); part = v }
+      else part = s
+    }
+    override def merge(other: AccumulatorV2[Long, java.math.BigInteger]): Unit =
+      big = big.add(other.value)
+    override def value: java.math.BigInteger = big.add(java.math.BigInteger.valueOf(part))
+  }
+
+  /** Materialize + re-root a frame. Catalyst re-expands a referenced
+    * subtree at EVERY reference (no cross-reference CSE), so a frame used k
+    * times recomputes k times unless pinned. Reliable checkpoint when the
+    * session has a checkpoint dir (durable on the shared FS, survives
+    * executor loss); localCheckpoint otherwise.
+    *
+    * ONE job of its own, in one SQL execution as `Dataset.checkpoint` runs
+    * it (adaptive execution still submits the frame's shuffle-map stages as
+    * their own jobs first), so observations on the frame complete with it.
+    * Accumulators in the result stage tally rows, UnsafeRow bytes and, given
+    * `sumCol`, the exact sum of one long column: they count once per
+    * partition even when a task is retried, so callers read what the pin
+    * saw instead of running a count or an aggregate over it.
+    *
+    * The rows are re-wrapped zero-copy with FRESH attribute ids (graftshim),
+    * so the pinned frame can be referenced several times in one plan
+    * (self-joins of the same attribute ids trip Catalyst's constraint
+    * rewrites), and the relation carries the tallies as exact statistics:
+    * joins against a small pin plan a broadcast from the start. Unlike
+    * `Dataset.checkpoint` it keeps neither the frame's output partitioning
+    * nor its constraints.
+    *
+    * `label` names the work: it is the call site of the pin's job and of
+    * the stages it starts, restored to the caller's afterwards. */
+  def pin(df: DataFrame, label: String, sumCol: Option[String] = None): Pinned = {
+    val spark = df.sparkSession
+    val sc = spark.sparkContext
+    val schema = df.schema
+    val sumAt = sumCol.fold(-1)(schema.fieldIndex)
+    val rows = sc.longAccumulator
+    val bytes = sc.longAccumulator
+    val sum = new BigSum
+    sc.register(sum)
+    val reliable = sc.getCheckpointDir.isDefined
+    val qe = df.queryExecution
+    val cut = shims.withCallSite(sc, label) {
+      SQLExecution.withNewExecutionId(qe, Some(if (reliable) "checkpoint" else "localCheckpoint")) {
+        shims.checkpointNow(qe.executedPlan.execute().mapPartitions { it =>
+          lazy val toUnsafe = UnsafeProjection.create(schema)
+          it.map { r =>
+            val u = (r match { case u: UnsafeRow => u; case _ => toUnsafe(r) }).copy()
+            rows.add(1L)
+            bytes.add(u.getSizeInBytes.toLong)
+            if (sumAt >= 0 && !u.isNullAt(sumAt)) sum.add(u.getLong(sumAt))
+            u: InternalRow
+          }
+        }, reliable)
+      }
+    }
+    org.slf4j.LoggerFactory.getLogger(getClass).info(
+      s"$label: pinned ${rows.sum} rows, ${bytes.sum} bytes")
+    Pinned(shims.internalCreateDataFrame(spark, cut, schema, rows.sum, bytes.sum),
+      rows.sum, bytes.sum, sum.value)
+  }
+
+  /** Scale-adaptive width for per-row kernel stages (BATCH frames only —
+    * `df.rdd` rejects streaming plans): an input narrower than the
+    * session's parallelism (locally: one small parquet file = one scan
+    * task) runs its codegen'd text kernels — shingling, rolling hashes,
+    * fingerprints, tokenizing — in that handful of tasks, serializing the
+    * stage that carries most of the operator's CPU. Widen ONLY then: the
+    * repartition moves the raw rows once (bytes the kernels were about to
+    * read anyway), and an input that already scans wide (the 100-TB case:
+    * thousands of splits) pays nothing. A `select` keeps its input's
+    * partition count, so widening a projection decides as its input would. */
+  def widen(df: DataFrame): DataFrame = {
+    val para = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < para) df.repartition(para) else df
+  }
+
+  /** Largest pinned table the engine moves to the driver: [[lookupSide]]
+    * broadcasts a state table under both caps, and
+    * [[Dedup.connectedComponents]] collects its edge list and labels it
+    * there; above either cap the state joins by shuffle-hash and the
+    * components run as label rounds. Both figures come from the table's pin,
+    * so the decision costs no job. Rows alone cannot bound it, since each
+    * state row carries whole per-doc arrays: a few thousand book-length
+    * documents would pass the row cap and still build a multi-GB hash
+    * relation on the driver and every executor. 256 MiB of pinned UnsafeRows
+    * stays far under the 8 GB broadcast limit and inside default executor
+    * memory. */
+  val DriverMaxRows = 65536L
+  val DriverMaxBytes = 256L * 1024 * 1024
+
+  /** Does a pinned table of `rows` rows and `bytes` bytes fit on the
+    * driver? From the pin's tallies. */
+  def fitsDriver(rows: Long, bytes: Long): Boolean =
+    rows <= DriverMaxRows && bytes <= DriverMaxBytes
+
+  /** The lookup side of a join that attaches a per-doc state table (sets,
+    * weight vectors) to a candidate-pair stream, one call per side.
+    *
+    * `small` (the state's pin fits the driver): BROADCAST the state, so the
+    * candidate stream flows through every lookup in its emission stage,
+    * exchanged zero times. Shuffled, the second exchange carries the stream
+    * ALREADY WIDENED by the first side's arrays: 1.4 GB at sf0.1 on the
+    * sparse-cosine verify for a 70 MB pair list.
+    *
+    * Otherwise SHUFFLE-HASH with the state as the per-partition build map:
+    * the 100-TB path. Never sort-merge, which SORTS the pair-count-sized,
+    * array-widened stream: at 100k docs / ~4.5M candidates the sparse-cosine
+    * verify spilled 10.4 GB in one stage, and sort-spill I/O capped
+    * 4->16-core scaling at ~0.67; the hash join sorts nothing (17.8 s ->
+    * 9.5 s at local[16]). */
+  def lookupSide(state: DataFrame, small: Boolean): DataFrame =
+    if (small) broadcast(state) else state.hint("shuffle_hash")
+}

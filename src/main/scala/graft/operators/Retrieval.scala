@@ -41,18 +41,11 @@ object Retrieval {
                idCol: String = "doc_id", textCol: String = "text",
                queryIdCol: String = "query_id"): DataFrame = {
     require(k > 0, "bm25TopK: k must be positive")
-    // scale-adaptive width for the tokenize stage: a corpus narrower than
-    // the session's parallelism (one small parquet file locally) would run
-    // the explode+tf aggregation — the index build's whole CPU cost — in
-    // that handful of tasks. Widen ONLY then; a corpus that already scans
-    // wide (the 100-TB case: thousands of input splits) must not pay a
-    // full-text shuffle for nothing.
-    val para = docs.sparkSession.sparkContext.defaultParallelism
-    val docsWide =
-      if (docs.rdd.getNumPartitions < para)
-        docs.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("__text"))
-          .repartition(para)
-      else docs.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("__text"))
+    // widen (Plans.widen) before the tokenize stage: a narrow corpus would
+    // run the explode+tf aggregation — the index build's whole CPU cost —
+    // in a handful of tasks
+    val docsWide = Plans.widen(
+      docs.select(col(idCol).cast("long").as("doc_id"), col(textCol).as("__text")))
     val terms = docsWide
       .select(col("doc_id"), explode(split(lower(col("__text")), "\\s+")).as("term"))
       .filter(col("term") =!= "")
@@ -67,7 +60,7 @@ object Retrieval {
     val tf0 = terms.groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"))
     val wDoc = Window.partitionBy(col("doc_id"))
-    val index = Dedup.pin(tf0.select(col("term"), col("doc_id"), col("tf"),
+    val index = Plans.pin(tf0.select(col("term"), col("doc_id"), col("tf"),
       sum(col("tf")).over(wDoc).as("dl")), "Retrieval.bm25TopK index").df
     // corpus stats from the pinned state: dl is constant within a doc, so
     // max(dl) per doc reproduces the doc-length table exactly
@@ -94,11 +87,9 @@ object Retrieval {
     // corpus-sized, so the planner would shuffle and sort both sides).
     // Probe width: the pinned state can be AQE-coalesced to a handful of
     // partitions while the join OUTPUT (matched postings) is the big
-    // thing — spread the probe side
-    // first, exactly like the sparse-cosine prefix join; guarded so a
-    // corpus that is already wide (the 100-TB case) does not reshuffle.
-    val probe =
-      if (index.rdd.getNumPartitions < para) index.repartition(para) else index
+    // thing — spread the probe side first (Plans.widen), exactly like the
+    // sparse-cosine prefix join.
+    val probe = Plans.widen(index)
     val scored = probe
       .join(broadcast(qterms.join(df, Seq("term"))), Seq("term"))
       .crossJoin(broadcast(stats)) // 1 row: N + avgdl ride along

@@ -188,7 +188,7 @@ object Sampling {
     // pinned: referenced by the extras branch AND the flagged join below
     // (plus the counts action above) — Catalyst re-expands referenced
     // subtrees, so unpinned this would scan the corpus three times
-    val withQuota = Dedup.pin(inT.join(broadcast(quotaDf), sCol === col("__stratum"))
+    val withQuota = Plans.pin(inT.join(broadcast(quotaDf), sCol === col("__stratum"))
       .drop("__stratum"), "Sampling.resampleToCounts quotas").df
     // the (T mod c) extra-copy rows, selected by the shared two-phase top-k
     val extras = takeByQuota(

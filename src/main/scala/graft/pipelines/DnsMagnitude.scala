@@ -3,6 +3,7 @@ package graft.pipelines
 import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
+import graft.operators.Plans
 
 /**
  * The reference-compatible DNS-magnitude pipeline over record tables
@@ -59,7 +60,7 @@ object DnsMagnitude {
     * (states written before the version column existed count as v1).
     *
     * Eager: the merge runs here, as one Spark action that reads every input
-    * once, and the result comes back pinned (`localCheckpoint`), so reports
+    * once, and the result comes back pinned (`Plans.pin`), so reports
     * and exports over it never rescan or re-merge the inputs. The versions and
     * dates of the inputs are observed on that same scan and checked before
     * the pinned frame is returned; a bad version or a date mismatch throws
@@ -74,11 +75,10 @@ object DnsMagnitude {
       .reduce(_.unionByName(_))
       .observe(seen, collect_set(col("version")).as("versions"),
         collect_set(col("date")).as("dates"))
-    val merged = forceDate.fold(all)(d => all.withColumn("date", lit(d)))
+    val merged = Plans.pin(forceDate.fold(all)(d => all.withColumn("date", lit(d)))
       .groupBy(col("date"), col("domain"))
       .agg(hll_merge(col("hll")).as("hll"), sum(col("queries")).as("queries"))
-      .withColumn("version", lit(StateVersion))
-      .localCheckpoint()
+      .withColumn("version", lit(StateVersion)), "DnsMagnitude.aggregate merged").df
     val observed = seen.get
     val badVersions = observed("versions").asInstanceOf[Seq[Long]]
       .filterNot(_ == StateVersion).sorted

@@ -28,11 +28,21 @@ object SparkTestBase {
     * a tagged sentinel job then fences the counts, since the bus delivers
     * events in order. */
   def workOf(body: => Unit): (Int, Int) = {
+    val (jobs, stages) = watch(body)
+    (jobs, stages.size)
+  }
+
+  /** The names of the stages that the Spark work `body` starts on this
+    * thread ran (a stage's name is its call site), as [[workOf]] finds
+    * them. */
+  def stagesOf(body: => Unit): Seq[String] = watch(body)._2
+
+  private def watch(body: => Unit): (Int, Seq[String]) = {
     val sc = spark.sparkContext
     val key = "graft.test.workOf"
     val tag = java.util.UUID.randomUUID().toString
     val jobs = new AtomicInteger
-    val stagesRun = new AtomicInteger
+    val stageNames = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val fenced = new CountDownLatch(1)
     @volatile var sentinel = -1
@@ -46,7 +56,7 @@ object SparkTestBase {
           case _ => ()
         }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        if (stageIds.contains(e.stageInfo.stageId)) stagesRun.incrementAndGet()
+        if (stageIds.contains(e.stageInfo.stageId)) stageNames.add(e.stageInfo.name)
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == sentinel) fenced.countDown()
     }
@@ -56,7 +66,7 @@ object SparkTestBase {
       try body finally sc.setLocalProperty(key, s"$tag:end")
       sc.parallelize(Seq(1), 1).count()
       require(fenced.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      (jobs.get, stagesRun.get)
+      (jobs.get, stageNames.toArray(Array.empty[String]).toSeq)
     } finally {
       sc.setLocalProperty(key, null)
       sc.removeSparkListener(listener)

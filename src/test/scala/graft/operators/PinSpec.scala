@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase.workOf
 
-/** `Dedup.pin`: one checkpoint job that tallies what it wrote, a pinned
+/** `Plans.pin`: one checkpoint job that tallies what it wrote, a pinned
   * frame with exact stats, and the callers that read the tallies instead of
   * running jobs of their own. */
 class PinSpec extends AnyFunSuite {
@@ -25,7 +25,7 @@ class PinSpec extends AnyFunSuite {
     val df = spark.range(0, 500, 1, 3).select(
       (lit(Long.MaxValue) - col("id")).as("v"),
       repeat(lit("x"), (col("id") % 7).cast("int")).as("s"))
-    val p = Dedup.pin(df, "PinSpec tally", sumCol = Some("v"))
+    val p = Plans.pin(df, "PinSpec tally", sumCol = Some("v"))
     val n = df.count()
     assert(p.rows === n)
     assert(p.bytes === rowBytes(df))
@@ -35,7 +35,7 @@ class PinSpec extends AnyFunSuite {
     assert(stats.sizeInBytes === BigInt(p.bytes))
     assert(p.df.count() === n)
 
-    val empty = Dedup.pin(df.filter(lit(false)), "PinSpec empty", sumCol = Some("v"))
+    val empty = Plans.pin(df.filter(lit(false)), "PinSpec empty", sumCol = Some("v"))
     assert((empty.rows, empty.bytes, empty.sum.signum) === ((0L, 0L, 0)))
     assert(empty.df.queryExecution.optimizedPlan.stats.rowCount === Some(BigInt(0)))
     assert(empty.df.count() === 0L)
@@ -46,7 +46,7 @@ class PinSpec extends AnyFunSuite {
     // pin's stats can make the planner broadcast
     val big = spark.createDataFrame(
       spark.sparkContext.parallelize(0L until 1000L).map(Tuple1(_))).toDF("id")
-    val small = Dedup.pin(spark.range(50).toDF("id"), "PinSpec small").df
+    val small = Plans.pin(spark.range(50).toDF("id"), "PinSpec small").df
     def broadcasts = big.join(small, "id").queryExecution.sparkPlan
       .collect { case j: BroadcastHashJoinExec => j }.nonEmpty
     assert(broadcasts, "a small pinned frame broadcasts from the initial plan")
@@ -68,7 +68,7 @@ class PinSpec extends AnyFunSuite {
     try {
       sc.setCallSite("PinSpec caller")
       // a shuffle, so adaptive execution submits a map stage of its own
-      Dedup.pin(spark.range(100).groupBy(col("id") % 3).count(), "PinSpec label")
+      Plans.pin(spark.range(100).groupBy(col("id") % 3).count(), "PinSpec label")
       assert(sc.getLocalProperty("callSite.short") === "PinSpec caller")
       // a fence: the bus delivers events in order
       sc.parallelize(Seq(1), 1).count()
@@ -87,7 +87,7 @@ class PinSpec extends AnyFunSuite {
   test("verify broadcast decision: both caps are inclusive, either one refuses") {
     // one predicate decides both the verify broadcast and the driver-side
     // connected components
-    import Dedup.{fitsDriver, DriverMaxBytes => maxB, DriverMaxRows => maxN}
+    import Plans.{fitsDriver, DriverMaxBytes => maxB, DriverMaxRows => maxN}
     assert(fitsDriver(maxN, maxB))
     assert(!fitsDriver(maxN + 1, maxB))
     assert(!fitsDriver(maxN, maxB + 1))

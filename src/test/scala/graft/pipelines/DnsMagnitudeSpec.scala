@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.io.DnsMagCbor
 import graft.sources.RecordsCsv
-import graft.SparkTestBase.workOf
+import graft.SparkTestBase.{stagesOf, workOf}
 
 /** End-to-end replay of the reference CLI flows (collect -> aggregate ->
   * report) through the record-level pipeline + the CSV source, pinning the
@@ -177,6 +177,12 @@ class DnsMagnitudeSpec extends AnyFunSuite {
     val keys = rows.map(r => (math.floor(r.getAs[Double]("magnitude") * 1000).toLong,
       r.getAs[String]("domain")))
     assert(keys === keys.sorted)
+  }
+
+  test("aggregate names the stages of its merge with its pin's label") {
+    val recs = RecordsCsv.read(spark, res("test2.tsv"), tsv = true)
+    val names = stagesOf(DnsMagnitude.aggregate(Seq(DnsMagnitude.collect(recs, d1))))
+    assert(names.nonEmpty && names.forall(_ == "DnsMagnitude.aggregate merged"), names)
   }
 
   test("report JSON matches the reference schema shape and sort") {
