@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.core.cbor.DnsMagCodec
 import graft.core.cbor.DnsMagCodec.{Dataset, DomainData}
 import graft.core.sketch.Hll
+import graft.sources.DnsMagDataSource
 
 /**
  * Reference-compatible `.dnsmag` dataset file interop (CBOR sequence of
@@ -27,11 +28,42 @@ import graft.core.sketch.Hll
 object DnsMagCbor {
 
   /** Read one or many .dnsmag files (a file, directory or glob) into
-    * sketch-state rows through the `dnsmag` DataSource V2 provider
-    * ([[graft.sources.DnsMagDataSource]]): one task per file, each file a
-    * CBOR sequence of datasets. Lazy: files are listed when the plan runs,
-    * so a missing path fails at the first action, naming the path. */
-  def read(spark: SparkSession, path: String): DataFrame =
+    * sketch-state rows, each file a CBOR sequence of datasets. The files
+    * are listed here, so a missing path fails at this call, naming the
+    * path. At most [[DriverMaxFiles]] files of at most [[DriverMaxBytes]]
+    * in total (the common case: dataset files are top-N-truncated exchange
+    * files) are decoded here, on the driver, into a local frame (`isLocal`),
+    * which [[graft.pipelines.DnsMagnitude.aggregate]] and `report` then
+    * merge and rank on the driver with no Spark job. Larger inputs read
+    * lazily through [[readByScan]], which lists the files again when the
+    * plan runs. Both paths build their rows with the same code,
+    * [[graft.sources.DnsMagDataSource.fileRows]]. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val files = DnsMagDataSource.listFiles(spark, path)
+    if (files.length <= DriverMaxFiles && files.map(_.getLen).sum <= DriverMaxBytes)
+      DnsMagDataSource.readOnDriver(spark, files)
+    else readByScan(spark, path)
+  }
+
+  /** Largest `.dnsmag` input [[read]] decodes on the driver. The driver
+    * decodes, merges and ranks on one thread and holds the decoded rows,
+    * where the scan spreads the files over tasks; the driver path wins while
+    * the Spark job it saves costs more than that. Measured on 4 cores
+    * (`local[4]`, local disk), read -> aggregate -> reportJson, driver vs
+    * scan, median of 5: 4 files of 16 MiB in total 0.43 vs 0.93 s (every
+    * run faster) and 25-28 MB live heap; 32 MiB 0.66 vs 1.06 s; 64 MiB
+    * 1.51 vs 1.71 s (101 MB live), near the crossover; more executor cores
+    * would speed the scan side (not measured). By file count, 16 MiB in total: 64 files took 0.24
+    * vs 1.56 s and 512 files 0.29 vs 3.62 s; the scan pays a task per file.
+    * On a store with a slow open per file (an object store GET, not
+    * measured) the driver pays those opens one after another; the file cap
+    * bounds them at 64. */
+  private[graft] val DriverMaxFiles = 64
+  private[graft] val DriverMaxBytes = 16L * 1024 * 1024
+
+  /** [[read]] through the `dnsmag` DataSource V2 provider whatever the
+    * input's size: one scan task per file, decoded when the plan runs. */
+  private[graft] def readByScan(spark: SparkSession, path: String): DataFrame =
     spark.read.format("dnsmag").load(path)
 
   /** Dataset -> sketch-state tuples (date ISO string, domain or null, hll

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import graft.operators.Plans
 import graft.pipelines.DnsMagnitude
 import graft.sources.RecordsCsv
@@ -36,11 +36,17 @@ object DnsMag {
     else spark.read.parquet(path)
 
   // report (and the text view) plan a per-domain and a totals branch over
-  // the state: pin a .dnsmag one (bounded by domains x dates) so its CBOR
-  // decode runs once. A parquet state is cheaper to scan twice than to pin.
+  // the state: pin a .dnsmag one read through the scan (bounded by domains
+  // x dates) so its CBOR decode runs once. A small .dnsmag is already local
+  // and reports on the driver; a parquet state is cheaper to scan twice
+  // than to pin.
   private def readStatePinned(spark: SparkSession, path: String) =
-    if (path.endsWith(".dnsmag")) Plans.pin(readState(spark, path), "DnsMag state").df
-    else readState(spark, path)
+    pinForReport(readState(spark, path), path)
+
+  /** `state`, read from `path`, as report and view take it. */
+  private[graft] def pinForReport(state: DataFrame, path: String): DataFrame =
+    if (path.endsWith(".dnsmag") && !state.isLocal) Plans.pin(state, "DnsMag state").df
+    else state
 
   /** `-` = read this input from stdin, the reference CLI convention
     * (/root/reference/cmd/common.go:38-65). A cluster engine needs a file

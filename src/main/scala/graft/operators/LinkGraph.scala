@@ -113,12 +113,17 @@ object LinkGraph {
     * deserialized rows AND loses the partitioning, so every round
     * re-shuffled and re-sorted all edges — measured 87 MB map + 90 MB
     * reduce per round at 8M edges plus GC-inflated CPU). Each round is
-    * then: exchange the NODE-sized rank table to the edge partitioning,
-    * one shuffle-HASH join (hinted: no per-round sort of the edge side,
-    * no driver-side broadcast build — ranks are host-cardinality and
-    * unbounded at web scale), one groupBy(dst) sum (exchanging map-side
-    * combined partials: <= min(edges, nodes x partitions) rows), one
-    * node-sized left join — the edge table itself never re-shuffles. */
+    * then: one join of the edges against the NODE-sized rank table, one
+    * groupBy(dst) sum (exchanging map-side combined partials: <= min(edges,
+    * nodes x partitions) rows), one node-sized left join — the edge table
+    * itself never re-shuffles. Round 1's ranks come straight from the
+    * host-partitioned nodes, so that join is a shuffle-HASH join with no
+    * exchange on either side. Later rounds join the previous round's
+    * pinned ranks through `Plans.lookupSide` on the pin's tallies: ranks
+    * that fit the driver broadcast, and the edges flow through the join in
+    * place; above the caps (ranks are host-cardinality, unbounded at web
+    * scale) the ranks exchange to the edge partitioning for a
+    * shuffle-HASH join (hinted: no per-round sort of the edge side). */
   def pageRank(edges: DataFrame, iters: Int, dampPct: Int = 85,
                srcCol: String = "src", dstCol: String = "dst"): DataFrame = {
     require(iters >= 0, "pageRank: iters must be >= 0")
@@ -144,19 +149,22 @@ object LinkGraph {
     val scale = 1000000000000L
     val base = (scale * (100 - dampPct)) / (100 * n) // exact long floor
     var ranks = nodes.select(col("host"), lit(scale / n).as("r"))
+    var small = false // round 1: the ranks are partitioned like the edges
     var it = 0
     while (it < iters) {
-      val contribs = ew.join(ranks.hint("shuffle_hash"),
+      val contribs = ew.join(Plans.lookupSide(ranks, small),
           ew("src") === ranks("host"))
         .select(col("dst").as("host"), expr("r div od").as("c"))
       val sums = contribs.groupBy("host").agg(sum(col("c")).as("s"))
       it += 1
       // pin: the next round must not re-expand this one
-      ranks = Plans.pin(nodes.join(sums.hint("shuffle_hash"), Seq("host"), "left")
+      val pinned = Plans.pin(nodes.join(sums.hint("shuffle_hash"), Seq("host"), "left")
         .select(col("host"),
           (lit(base) +
             expr(s"($dampPct * coalesce(s, cast(0 as bigint))) div 100")).as("r")),
-        s"LinkGraph.pageRank round $it").df
+        s"LinkGraph.pageRank round $it")
+      ranks = pinned.df
+      small = Plans.fitsDriver(pinned.rows, pinned.bytes)
     }
     val out = if (iters == 0) Plans.pin(ranks, "LinkGraph.pageRank round 0").df else ranks
     ew.unpersist(blocking = false)

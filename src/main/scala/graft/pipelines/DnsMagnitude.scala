@@ -1,7 +1,14 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.shims
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.core.sketch.{Hll, SketchOps}
 import graft.functions.GraftFunctions._
 import graft.operators.Plans
 
@@ -59,15 +66,32 @@ object DnsMagnitude {
   /** aggregate with the reference's strict-date contract and version check
     * (states written before the version column existed count as v1).
     *
-    * Eager: the merge runs here, as one Spark action that reads every input
-    * once, and the result comes back pinned (`Plans.pin`), so reports
-    * and exports over it never rescan or re-merge the inputs. The versions and
-    * dates of the inputs are observed on that same scan and checked before
-    * the pinned frame is returned; a bad version or a date mismatch throws
-    * from this call. */
+    * Eager, on one of two paths:
+    *  - every input is local (a bare LocalRelation with the state's column
+    *    types, as [[graft.io.DnsMagCbor.read]] returns for small files): the
+    *    merge runs on the driver, `hll_merge` and overflow-checked `sum`
+    *    semantics per (date, domain), and the result is a local frame, so
+    *    the whole `.dnsmag` finish runs no Spark job;
+    *  - otherwise [[aggregateByPlan]]: one Spark action reads every input
+    *    once and the result comes back pinned (`Plans.pin`), so reports and
+    *    exports over it never rescan or re-merge the inputs.
+    * Both paths check the versions and dates of the inputs before returning
+    * and fail with the same messages; a bad version or a date mismatch
+    * throws from this call. */
   def aggregate(states: Seq[DataFrame], forceDate: Option[java.sql.Date] = None): DataFrame = {
     require(states.nonEmpty, "aggregate needs at least one sketch state " +
       "(pass the states to merge, e.g. one DnsMagCbor.read per .dnsmag file)")
+    val local = states.map(localState)
+    if (local.forall(_.isDefined)) aggregateOnDriver(states.head.sparkSession,
+      local.flatten, forceDate.map(DateTimeUtils.fromJavaDate))
+    else aggregateByPlan(states, forceDate)
+  }
+
+  /** [[aggregate]] as one Spark action whatever the inputs: the merge reads
+    * every input once and is pinned; the versions and dates are observed on
+    * that same scan. */
+  private[graft] def aggregateByPlan(states: Seq[DataFrame],
+                                     forceDate: Option[java.sql.Date] = None): DataFrame = {
     val seen = Observation()
     val all = states
       .map(s => if (s.columns.contains("version")) s
@@ -79,19 +103,88 @@ object DnsMagnitude {
       .groupBy(col("date"), col("domain"))
       .agg(hll_merge(col("hll")).as("hll"), sum(col("queries")).as("queries"))
       .withColumn("version", lit(StateVersion)), "DnsMagnitude.aggregate merged").df
+    // a plan the optimizer proves empty drops the observation: no rows seen
     val observed = seen.get
-    val badVersions = observed("versions").asInstanceOf[Seq[Long]]
-      .filterNot(_ == StateVersion).sorted
+    checkInputs(observed.getOrElse("versions", Nil).asInstanceOf[Seq[Long]],
+      observed.getOrElse("dates", Nil).asInstanceOf[Seq[Any]].map(_.toString), forceDate.isDefined)
+    merged
+  }
+
+  /** The reference refuses unknown versions and, unless a date is forced,
+    * datasets of different dates. */
+  private def checkInputs(versions: Seq[Long], dates: Seq[String], forced: Boolean): Unit = {
+    val badVersions = versions.filterNot(_ == StateVersion).sorted
     if (badVersions.nonEmpty)
       throw new IllegalArgumentException(
         s"unsupported sketch_state version(s) ${badVersions.mkString(", ")} " +
         s"(supported: $StateVersion) — refusing to merge")
-    val dates = observed("dates").asInstanceOf[Seq[Any]]
-    if (forceDate.isEmpty && dates.length > 1)
+    if (!forced && dates.length > 1)
       throw new IllegalArgumentException(
-        s"date mismatch across datasets: ${dates.map(_.toString).sorted.mkString(", ")} " +
+        s"date mismatch across datasets: ${dates.sorted.mkString(", ")} " +
         "(use forceDate to override)")
-    merged
+  }
+
+  /** One state row held on the driver; null where the column is NULL (and
+    * `version` where the state has no such column). */
+  private final case class StateRow(date: Integer, domain: UTF8String, hll: Array[Byte],
+                                    queries: java.lang.Long, version: java.lang.Long)
+
+  /** A local state: the schema and rows of a bare LocalRelation with the
+    * state's columns and types (`version` optional). None for any other
+    * frame, which then takes the plan path. */
+  private def localState(state: DataFrame): Option[(StructType, Seq[StateRow])] =
+    shims.localRows(state).flatMap { case (schema, rows) =>
+      def index(name: String) = Some(schema.fieldNames.indexOf(name)).filter(_ >= 0)
+      def at(name: String, t: DataType) = index(name).filter(i => schema(i).dataType == t)
+      val version = index("version")
+      for {
+        d <- at("date", DateType); n <- at("domain", StringType)
+        h <- at("hll", BinaryType); q <- at("queries", LongType)
+        if version.forall(i => schema(i).dataType == LongType)
+      } yield (schema, rows.map { r =>
+        StateRow(if (r.isNullAt(d)) null else r.getInt(d),
+          if (r.isNullAt(n)) null else r.getUTF8String(n),
+          if (r.isNullAt(h)) null else r.getBinary(h),
+          if (r.isNullAt(q)) null else r.getLong(q),
+          version.filterNot(r.isNullAt).map(i => java.lang.Long.valueOf(r.getLong(i))).orNull)
+      })
+    }
+
+  /** `hll_merge`: the union of the non-null sketches, an empty sketch when
+    * there are none. */
+  private def mergeHll(sketches: Iterable[Array[Byte]]): Hll =
+    Option(sketches.foldLeft(null: Hll) { (merged, b) =>
+      if (b == null) merged
+      else if (merged == null) Hll.fromBytes(b)
+      else { merged.union(Hll.fromBytes(b)); merged }
+    }).getOrElse(Hll())
+
+  /** `sum` of longs under ANSI: nulls skipped, null when all are, an
+    * overflow fails. */
+  private def sumQueries(queries: Iterable[java.lang.Long]): java.lang.Long =
+    queries.foldLeft(null: java.lang.Long) { (acc, q) =>
+      if (q == null) acc else if (acc == null) q else Math.addExact(acc.longValue, q.longValue)
+    }
+
+  /** [[aggregate]] of local states, on the driver. */
+  private def aggregateOnDriver(spark: SparkSession, states: Seq[(StructType, Seq[StateRow])],
+                                forceDate: Option[Int]): DataFrame = {
+    val rows = states.flatMap(_._2)
+    checkInputs(rows.flatMap(r => Option(r.version)).map(_.longValue).distinct,
+      rows.flatMap(r => Option(r.date)).distinct.map(d => DateTimeUtils.toJavaDate(d).toString),
+      forceDate.isDefined)
+    val groups = rows.groupBy(r => (forceDate.fold(r.date)(Int.box), r.domain))
+    def nullable(name: String) = states.exists { case (schema, _) => schema(name).nullable }
+    val schema = StructType(Seq(
+      StructField("date", DateType, forceDate.isEmpty && nullable("date")),
+      StructField("domain", StringType, nullable("domain")),
+      StructField("hll", BinaryType),
+      StructField("queries", LongType),
+      StructField("version", LongType, nullable = false)))
+    shims.localFrame(spark, schema, groups.toSeq.map { case ((date, domain), rs) =>
+      new GenericInternalRow(Array[Any](date, domain, mergeHll(rs.map(_.hll)).toBytes,
+        sumQueries(rs.map(_.queries)), StateVersion)): InternalRow
+    })
   }
 
   /**
@@ -159,11 +252,27 @@ object DnsMagnitude {
   }
 
   /** report rows in reference order; estimates finalised here
-    * (finaliseStats analogue). With `topN > 0` the result is bounded (at
-    * most topN rows per date), so it is sorted in one partition rather
-    * than range-partitioned: a global sort samples its child first, which
-    * runs the whole report twice. */
-  def report(state: DataFrame, topN: Int = 0): DataFrame = {
+    * (finaliseStats analogue): per domain row of each date, its estimate
+    * and queries, the date's totals (every row of the date, the NULL
+    * bucket included), and magnitude = ln(clients) / ln(total) * 10. With
+    * `topN > 0` each date keeps its top N rows by (magnitude desc, domain
+    * desc).
+    *
+    * A local state (a bare LocalRelation with the state's column types, as
+    * [[aggregate]] and [[graft.io.DnsMagCbor.read]] return for small
+    * inputs) is reported on the driver into a local frame of the same
+    * schema, so collecting it runs no Spark job; any other state goes
+    * through [[reportByPlan]]. */
+  def report(state: DataFrame, topN: Int = 0): DataFrame =
+    localState(state).fold(reportByPlan(state, topN)) { case (schema, rows) =>
+      reportOnDriver(state.sparkSession, schema, rows, topN)
+    }
+
+  /** [[report]] as a Spark plan whatever the state. With `topN > 0` the
+    * result is bounded (at most topN rows per date), so it is sorted in one
+    * partition rather than range-partitioned: a global sort samples its
+    * child first, which runs the whole report twice. */
+  private[graft] def reportByPlan(state: DataFrame, topN: Int = 0): DataFrame = {
     val perDomain = state.filter(col("domain").isNotNull)
       .select(col("date"), col("domain"),
         hll_est(col("hll")).as("uniqueClients"), col("queries").as("queryVolume"))
@@ -196,6 +305,77 @@ object DnsMagnitude {
     val order = Seq(col("date").asc, floor(col("magnitude") * 1000).asc, col("domain").asc)
     if (topN > 0) limited.repartition(1).sortWithinPartitions(order: _*)
     else limited.orderBy(order: _*)
+  }
+
+  /** One report row on the driver (null: SQL NULL). */
+  private final case class ReportRow(date: Int, domain: UTF8String, clients: java.lang.Long,
+      queries: java.lang.Long, total: Long, totalQueries: java.lang.Long,
+      magnitude: java.lang.Double) {
+    def toRow: InternalRow = new GenericInternalRow(
+      Array[Any](date, domain, clients, queries, total, totalQueries, magnitude))
+    /** floor(magnitude * 1000), the reference's sort key */
+    def milli: java.lang.Long =
+      if (magnitude == null) null else Math.floor(magnitude * 1000).toLong
+  }
+
+  /** Spark's order of doubles: NaN above everything, -0.0 equal to 0.0. */
+  private def cmpDouble(x: Double, y: Double): Int =
+    if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** ascending, NULLS FIRST (Spark's default for `asc`) */
+  private def cmpNullsFirst[T](a: T, b: T)(cmp: (T, T) => Int): Int =
+    if (a == null) { if (b == null) 0 else -1 } else if (b == null) 1 else cmp(a, b)
+
+  /** The top-N window: magnitude desc (NULLS LAST), then domain desc. */
+  private val ByRank: Ordering[ReportRow] = (a, b) => {
+    val m = cmpNullsFirst(b.magnitude, a.magnitude)((x, y) => cmpDouble(x, y))
+    if (m != 0) m else b.domain.binaryCompare(a.domain)
+  }
+
+  /** The report's order: date, floor(magnitude * 1000) NULLS FIRST, domain. */
+  private val ByReference: Ordering[ReportRow] = (a, b) => {
+    val d = Integer.compare(a.date, b.date)
+    if (d != 0) d else {
+      val m = cmpNullsFirst(a.milli, b.milli)((x, y) => java.lang.Long.compare(x, y))
+      if (m != 0) m else a.domain.binaryCompare(b.domain)
+    }
+  }
+
+  /** `magnitude(clients, total)` as Spark computes it: `log` of a value
+    * <= 0 is NULL, `log` is StrictMath.log. `total` is never 1, where
+    * Spark's division would fail: `hll_est` ceils its estimate, and a
+    * sketch of one client estimates m * ln(m / (m - 1)) > 1, so 2. */
+  private def magnitudeOf(clients: java.lang.Long, total: Long): java.lang.Double =
+    if (total <= 0 || clients == null || clients <= 0) null
+    else StrictMath.log(clients.toDouble) / StrictMath.log(total.toDouble) * 10.0
+
+  /** [[report]] of a local state, on the driver. The schema is the one
+    * [[reportByPlan]] gives the same state. */
+  private def reportOnDriver(spark: SparkSession, state: StructType, rows: Seq[StateRow],
+                             topN: Int): DataFrame = {
+    val dated = rows.filter(_.date != null).groupBy(_.date.intValue)
+    val out = dated.toSeq.flatMap { case (date, rs) =>
+      val domains = rs.filter(_.domain != null)
+      if (domains.isEmpty) Nil else {
+        val total = mergeHll(rs.map(_.hll)).estimate
+        val totalQueries = sumQueries(rs.map(_.queries))
+        val ranked = domains.map { r =>
+          val clients = if (r.hll == null) null else java.lang.Long.valueOf(SketchOps.hllEst(r.hll))
+          ReportRow(date, r.domain, clients, r.queries, total, totalQueries,
+            magnitudeOf(clients, total))
+        }
+        if (topN > 0) ranked.sorted(ByRank).take(topN) else ranked
+      }
+    }.sorted(ByReference)
+    val schema = StructType(Seq(
+      StructField("date", DateType, state("date").nullable),
+      StructField("domain", StringType, state("domain").nullable),
+      StructField("uniqueClients", LongType, state("hll").nullable),
+      StructField("queryVolume", LongType, state("queries").nullable),
+      StructField("totalUniqueClients", LongType),
+      StructField("totalQueryVolume", LongType),
+      StructField("magnitude", DoubleType)))
+    shims.localFrame(spark, schema, out.map(_.toRow))
   }
 
   /**

@@ -5,7 +5,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.StructType
@@ -42,6 +42,23 @@ object shims {
       LogicalRDD(DataTypeUtils.toAttributes(schema), rdd)(
         s, Some(Statistics(sizeInBytes = BigInt(bytes), rowCount = Some(BigInt(rows))))))
   }
+
+  /** DataFrame over rows held on the driver: a bare LocalRelation, so
+    * `Dataset.isLocal` holds and collecting it runs no Spark job. */
+  def localFrame(spark: SparkSession, schema: StructType, rows: Seq[InternalRow]): DataFrame = {
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    org.apache.spark.sql.classic.Dataset.ofRows(s,
+      LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+  }
+
+  /** The schema and rows of a frame that is a bare LocalRelation (what
+    * [[localFrame]] and `createDataFrame` over local rows build); None for
+    * any other plan. */
+  def localRows(df: DataFrame): Option[(StructType, Seq[InternalRow])] =
+    df.queryExecution.analyzed match {
+      case l: LocalRelation => Some((DataTypeUtils.fromAttributes(l.output), l.data))
+      case _ => None
+    }
 
   /** Eagerly checkpoint `rdd` (reliably into the context's checkpoint dir
     * when one is set, else locally) in exactly one job. */

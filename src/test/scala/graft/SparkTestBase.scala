@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local SparkSession across all suites (object, not per-suite —
@@ -28,7 +28,7 @@ object SparkTestBase {
     * a tagged sentinel job then fences the counts, since the bus delivers
     * events in order. */
   def workOf(body: => Unit): (Int, Int) = {
-    val (jobs, stages) = watch(body)
+    val (jobs, stages, _) = watch(body)
     (jobs, stages.size)
   }
 
@@ -37,13 +37,18 @@ object SparkTestBase {
     * them. */
   def stagesOf(body: => Unit): Seq[String] = watch(body)._2
 
-  private def watch(body: => Unit): (Int, Seq[String]) = {
+  /** The input bytes (task `inputMetrics.bytesRead`, summed) of the Spark
+    * work that `body` starts on this thread, as [[workOf]] finds it. */
+  def inputBytesOf(body: => Unit): Long = watch(body)._3
+
+  private def watch(body: => Unit): (Int, Seq[String], Long) = {
     val sc = spark.sparkContext
     val key = "graft.test.workOf"
     val tag = java.util.UUID.randomUUID().toString
     val jobs = new AtomicInteger
     val stageNames = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val stageIds = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val inputBytes = new java.util.concurrent.atomic.AtomicLong
     val fenced = new CountDownLatch(1)
     @volatile var sentinel = -1
     val listener = new SparkListener {
@@ -57,6 +62,9 @@ object SparkTestBase {
         }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
         if (stageIds.contains(e.stageInfo.stageId)) stageNames.add(e.stageInfo.name)
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stageIds.contains(e.stageId) && e.taskMetrics != null)
+          inputBytes.addAndGet(e.taskMetrics.inputMetrics.bytesRead)
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == sentinel) fenced.countDown()
     }
@@ -66,7 +74,7 @@ object SparkTestBase {
       try body finally sc.setLocalProperty(key, s"$tag:end")
       sc.parallelize(Seq(1), 1).count()
       require(fenced.await(60, TimeUnit.SECONDS), "listener never saw the sentinel job")
-      (jobs.get, stageNames.toArray(Array.empty[String]).toSeq)
+      (jobs.get, stageNames.toArray(Array.empty[String]).toSeq, inputBytes.get)
     } finally {
       sc.setLocalProperty(key, null)
       sc.removeSparkListener(listener)

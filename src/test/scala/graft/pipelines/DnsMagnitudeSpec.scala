@@ -151,32 +151,64 @@ class DnsMagnitudeSpec extends AnyFunSuite {
     val recs = RecordsCsv.read(spark, res("test2.tsv"), tsv = true)
     DnsMagCbor.write(DnsMagnitude.collect(recs, d1), s"$dir/a.dnsmag")
     DnsMagCbor.write(DnsMagnitude.collect(recs, d2), s"$dir/b.dnsmag")
-    def states = Seq(DnsMagCbor.read(spark, s"$dir/a.dnsmag"),
-      DnsMagCbor.read(spark, s"$dir/b.dnsmag"))
 
-    // One action, two stages: one scans every file and merges partially,
-    // one finishes the merge. Adaptive execution submits the first as its
-    // own job, and the action's job reuses its shuffle. The version and
-    // date checks ride that scan, so a date mismatch costs no more work.
+    // small files: read, aggregate and reportJson all stay on the driver
+    var docs: Seq[String] = Nil
+    assert(workOf {
+      val states = Seq(DnsMagCbor.read(spark, s"$dir/a.dnsmag"), DnsMagCbor.read(spark, s"$dir/b.dnsmag"))
+      docs = DnsMagnitude.reportJson(DnsMagnitude.aggregate(states, forceDate = Some(d1)),
+        "test2", "recursive")
+    } === ((0, 0)))
+    assert(docs.length === 1 && docs.head.contains("\"totalUniqueClients\":27,"), docs)
+
+    def states = Seq(DnsMagCbor.readByScan(spark, s"$dir/a.dnsmag"),
+      DnsMagCbor.readByScan(spark, s"$dir/b.dnsmag"))
+    // The plan path: one action, two stages: one scans every file and
+    // merges partially, one finishes the merge. Adaptive execution submits
+    // the first as its own job, and the action's job reuses its shuffle.
+    // The version and date checks ride that scan, so a date mismatch costs
+    // no more work.
     val oneMerge = (2, 2)
     var agg: org.apache.spark.sql.DataFrame = null
-    assert(workOf(intercept[IllegalArgumentException](DnsMagnitude.aggregate(states))) === oneMerge)
-    assert(workOf { agg = DnsMagnitude.aggregate(states, forceDate = Some(d1)) } === oneMerge)
-    assert(workOf { agg = DnsMagnitude.aggregate(Seq(states.head)) } === oneMerge)
+    assert(workOf(intercept[IllegalArgumentException](DnsMagnitude.aggregateByPlan(states))) === oneMerge)
+    assert(workOf { agg = DnsMagnitude.aggregateByPlan(states, forceDate = Some(d1)) } === oneMerge)
+    assert(workOf { agg = DnsMagnitude.aggregateByPlan(Seq(states.head)) } === oneMerge)
+    // a scanned input is not local, so the public entry takes the plan path
+    assert(!DnsMagnitude.aggregate(states, forceDate = Some(d1)).isLocal)
 
-    val top = DnsMagnitude.report(agg, 2500)
+    val top = DnsMagnitude.reportByPlan(agg, 2500)
     val plan = top.queryExecution.executedPlan.toString
     assert(!plan.contains("BatchScan dnsmag"), s"report rescans the files:\n$plan")
     assert(!plan.toLowerCase.contains("rangepartitioning"), s"top-N report sorts globally:\n$plan")
-    val all = DnsMagnitude.report(agg, 0)
+    val all = DnsMagnitude.reportByPlan(agg, 0)
     assert(all.queryExecution.executedPlan.toString.toLowerCase.contains("rangepartitioning"))
-    // both paths: the same rows in the reference order
+    // both plans and the driver: the same rows in the reference order
     val rows = top.collect().toSeq
     assert(rows === all.collect().toSeq)
+    assert(rows === DnsMagnitude.report(DnsMagnitude.aggregate(
+      Seq(DnsMagCbor.read(spark, s"$dir/a.dnsmag"))), 2500).collect().toSeq)
     assert(rows.length === 7 && rows.head.getAs[Long]("totalUniqueClients") === 27L)
     val keys = rows.map(r => (math.floor(r.getAs[Double]("magnitude") * 1000).toLong,
       r.getAs[String]("domain")))
     assert(keys === keys.sorted)
+  }
+
+  test("a date of one unique client reports magnitude 10 on both paths") {
+    // hll_est ceils, and one client's sketch estimates m * ln(m / (m - 1)),
+    // just above 1: the total is 2, so ln(total) is never 0
+    val dir = graft.SparkTestBase.tempDir("graft_dnsmag_one").toString
+    val one = graft.core.sketch.Hll()
+    one.addRaw(0x1234567890abcdefL)
+    import spark.implicits._
+    DnsMagCbor.write(Seq((d1, "com", one.toBytes, 5L), (d1, null, one.toBytes, 0L))
+      .toDF("date", "domain", "hll", "queries"), s"$dir/one.dnsmag")
+    val onDriver = DnsMagnitude.report(DnsMagCbor.read(spark, s"$dir/one.dnsmag"))
+    val byPlan = DnsMagnitude.reportByPlan(DnsMagCbor.readByScan(spark, s"$dir/one.dnsmag"))
+    for (rows <- Seq(onDriver.collect().toSeq, byPlan.collect().toSeq)) {
+      assert(rows.map(r => (r.getAs[String]("domain"), r.getAs[Long]("uniqueClients"),
+        r.getAs[Long]("totalUniqueClients"), r.getAs[Double]("magnitude"))) ===
+        Seq(("com", 2L, 2L, 10.0)))
+    }
   }
 
   test("aggregate names the stages of its merge with its pin's label") {

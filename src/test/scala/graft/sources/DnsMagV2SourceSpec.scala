@@ -95,6 +95,48 @@ class DnsMagV2SourceSpec extends AnyFunSuite {
     assert(df.select($"queries").agg(sum($"queries")).collect()(0).getLong(0) === 300L)
   }
 
+  test("scan tasks count the bytes of the files they decode") {
+    val f = s"$fixtureDir/t1.dnsmag"
+    val len = new java.io.File(f).length
+    val read = graft.SparkTestBase.inputBytesOf(spark.read.format("dnsmag").load(f).collect())
+    assert(read >= len, s"tasks read $read bytes of a $len-byte file")
+  }
+
+  test("DnsMagCbor.read: small files decode on the driver into the scan's rows") {
+    val onDriver = DnsMagCbor.read(spark, fixtureDir)
+    val byScan = DnsMagCbor.readByScan(spark, fixtureDir)
+    assert(onDriver.isLocal && !byScan.isLocal)
+    assert(onDriver.schema === byScan.schema)
+    assert(graft.SparkTestBase.workOf(canon(onDriver)) === ((0, 0)))
+    assert(canon(onDriver) === canon(byScan))
+    assert(canon(onDriver) === sorted(decoded(s"$fixtureDir/t1.dnsmag") ++
+      decoded(s"$fixtureDir/t2.dnsmag")))
+    // the driver read lists eagerly: a missing path fails at read, naming it
+    val e = intercept[java.io.FileNotFoundException](DnsMagCbor.read(spark, s"$fixtureDir/nope.dnsmag"))
+    assert(e.getMessage.contains("nope.dnsmag"))
+  }
+
+  test("DnsMagCbor.read: the driver caps are inclusive; above either the scan reads") {
+    val t1 = java.nio.file.Paths.get(s"$fixtureDir/t1.dnsmag")
+    def dirOf(n: Int) = {
+      val d = graft.SparkTestBase.tempDir(s"graft_dnsmag_cap$n")
+      (0 until n).foreach(i => java.nio.file.Files.copy(t1, d.resolve(f"part-$i%03d.dnsmag")))
+      d.toString
+    }
+    val atCap = DnsMagCbor.read(spark, dirOf(DnsMagCbor.DriverMaxFiles))
+    assert(atCap.isLocal)
+    val overCap = dirOf(DnsMagCbor.DriverMaxFiles + 1)
+    val scanned = DnsMagCbor.read(spark, overCap)
+    assert(!scanned.isLocal)
+    assert(canon(scanned) === canon(DnsMagDataSource.readOnDriver(
+      spark, DnsMagDataSource.listFiles(spark, overCap))))
+    // one file a byte over the byte cap (sparse, never decoded: the scan is lazy)
+    val big = graft.SparkTestBase.tempDir("graft_dnsmag_big").resolve("big.dnsmag").toFile
+    val raf = new java.io.RandomAccessFile(big, "rw")
+    try raf.setLength(DnsMagCbor.DriverMaxBytes + 1) finally raf.close()
+    assert(!DnsMagCbor.read(spark, big.getPath).isLocal)
+  }
+
   test("missing path fails fast; corrupt file fails with the codec's error") {
     val e = intercept[Exception](
       spark.read.format("dnsmag").load(s"$fixtureDir/nope.dnsmag").collect())
