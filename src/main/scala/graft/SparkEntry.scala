@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
 import graft.operators.{Ann, Dedup, Joins, Multimodal, Plans}
@@ -50,6 +50,83 @@ object SparkEntry {
     java.nio.file.Files.createDirectories(p)
     p.toString
   }
+
+  /** A violation query's rows: each named branch's rows tagged with its
+    * name in a `violation` column (appended last), the branches unioned by
+    * name in the order given. */
+  private def violations(branches: (String, DataFrame)*): DataFrame =
+    branches.map { case (name, df) => df.withColumn("violation", lit(name)) }
+      .reduce(_.unionByName(_))
+
+  /** The multiset difference of two frames both ways, as violation rows:
+    * rows of `a` not in `b` tagged `missed`, rows of `b` not in `a` tagged
+    * `extra` (a row held k times more on one side shows k times). Empty iff
+    * both hold the same rows, each as often. */
+  private def mismatches(a: DataFrame, b: DataFrame, missed: String, extra: String): DataFrame =
+    violations(missed -> a.exceptAll(b), extra -> b.exceptAll(a))
+
+  /** The sampling gates' violation rows, in (lang, violation) order: the
+    * gate's own check `own`; `quota` where the per-lang row count of
+    * `sample` differs from `want` (lang, want); `determinism` for each row
+    * that `sample` and `resample` (the same sampler over a repartitioned
+    * input) do not share. */
+  private def samplerViolations(sample: DataFrame, resample: DataFrame, want: DataFrame,
+                                own: (String, DataFrame)): DataFrame =
+    violations(
+        "quota" -> want.join(sample.groupBy(col("lang")).agg(count(lit(1)).as("got")),
+            Seq("lang"), "full_outer")
+          .filter(coalesce(col("got"), lit(0L)) =!= coalesce(col("want"), lit(0L)))
+          .select(col("lang")),
+        own)
+      .unionByName(mismatches(sample.select(col("doc_id"), col("lang")),
+        resample.select(col("doc_id"), col("lang")), "determinism", "determinism").drop("doc_id"))
+      .orderBy(col("lang"), col("violation"))
+
+  /** Subset exactness of a Hamming pair join over signatures (id, sig):
+    * on the signatures whose id passes `inSubset`, the operator's `found`
+    * pairs (id_a, id_b, hamming) equal a brute-force bit_count self-join
+    * within `maxH` — `subset_missed` / `subset_extra` rows of (id_a, id_b,
+    * violation) otherwise. */
+  private def hammingSubsetMismatches(sigs: DataFrame, found: DataFrame, maxH: Int,
+                                      inSubset: Column => Column): DataFrame = {
+    val sub = sigs.filter(inSubset(col("id")))
+    val brute = sub.as("a").join(sub.as("b"), col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
+        bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
+      .filter(col("hamming") <= maxH)
+    val foundSub = found.filter(inSubset(col("id_a")) && inSubset(col("id_b")))
+      .select(col("id_a"), col("id_b"), col("hamming"))
+    mismatches(brute, foundSub, "subset_missed", "subset_extra").drop("hamming")
+  }
+
+  /** The documents the packing gates pack: a token count and one of 16
+    * buckets per doc. */
+  private def packDocs(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(t(dir, "documents"))
+      .withColumn("toks", size(split(col("text"), " ")).cast("long"))
+      .withColumn("bucket", pmod(col("doc_id"), lit(16)))
+
+  /** The packing gates' violation rows over a packer's pinned (bucket,
+    * pack_id, total, n) summary, in (bucket, pack_id, violation) order:
+    * the packer's own check `own` plus the three both packers share —
+    * (a) pack totals <= budget unless the pack is one oversized doc;
+    * (c) pack ids dense from 0 per bucket; (d) every doc packed once. */
+  private def packViolations(packAgg: DataFrame, docs: DataFrame, budget: Long,
+                             own: (String, DataFrame)): DataFrame =
+    violations(
+      "over_budget" -> packAgg.filter(col("total") > budget && col("n") > 1)
+        .select(col("bucket"), col("pack_id")),
+      own,
+      "density" -> packAgg.groupBy(col("bucket"))
+        .agg(count(lit(1)).as("np"), // one packAgg row per (bucket, pack)
+          max(col("pack_id")).as("mx"), min(col("pack_id")).as("mn"))
+        .filter(col("np") =!= col("mx") + 1 || col("mn") =!= 0)
+        .select(col("bucket"), lit(-1L).as("pack_id")),
+      "cardinality" -> packAgg.agg(sum(col("n")).as("n")) // total docs packed
+        .crossJoin(docs.agg(count(lit(1)).as("m")))
+        .filter(col("n") =!= col("m"))
+        .select(lit(-1L).as("bucket"), lit(-1L).as("pack_id")))
+      .orderBy(col("bucket"), col("pack_id"), col("violation"))
 
   /** Flagship: the full magnitude pipeline (collect -> aggregate -> report)
     * over the synthetic Common-Crawl-style pages table. */
@@ -345,11 +422,9 @@ object SparkEntry {
         .select(concat(lit("alien:"), col("doc_id")).as("what"))
       val sample7 = graft.operators.Sampling
         .weightedPerStratum(docs.repartition(7), "lang", "w", k)
-      val v3 = sample.select(col("doc_id"))
-        .exceptAll(sample7.select(col("doc_id")))
-        .unionByName(sample7.select(col("doc_id"))
-          .exceptAll(sample.select(col("doc_id"))))
-        .select(concat(lit("nondet:"), col("doc_id")).as("what"))
+      val v3 = mismatches(sample.select(col("doc_id")), sample7.select(col("doc_id")),
+          "nondet:", "nondet:")
+        .select(concat(col("violation"), col("doc_id")).as("what"))
       v1.unionByName(v2).unionByName(v3)
     }),
     "q_asof_join" -> ((s, dir) => {
@@ -628,9 +703,7 @@ object SparkEntry {
       // p+1's first doc would NOT have fit in pack p; (c) pack ids dense
       // from 0 per bucket; (d) every doc packed exactly once.
       val budget = 200L
-      val docs = s.read.parquet(t(dir, "documents"))
-        .withColumn("toks", size(split(col("text"), " ")).cast("long"))
-        .withColumn("bucket", pmod(col("doc_id"), lit(16)))
+      val docs = packDocs(s, dir)
       val packed = graft.operators.Packing.packGreedy(docs, "toks", budget, "bucket")
       // one small (bucket, pack) summary, MATERIALIZED once: four branches
       // reference it, and Catalyst re-expands referenced subtrees — unpinned
@@ -639,25 +712,12 @@ object SparkEntry {
         .agg(sum(col("toks")).as("total"), count(lit(1)).as("n"),
           min(struct(col("pack_pos"), col("toks"))).as("__f"))
         .withColumn("first_toks", col("__f.toks")), "q_pack_greedy packAgg").df
-      val overBudget = packAgg.filter(col("total") > budget && col("n") > 1)
-        .select(col("bucket"), col("pack_id"), lit("over_budget").as("violation"))
       val nextFirst = packAgg.select(col("bucket"),
         (col("pack_id") - 1).as("pack_id"), col("first_toks").as("next_first"))
-      val loose = packAgg.join(nextFirst, Seq("bucket", "pack_id"))
-        .filter(col("total") + col("next_first") <= budget)
-        .select(col("bucket"), col("pack_id"), lit("not_tight").as("violation"))
-      val density = packAgg.groupBy(col("bucket"))
-        .agg(count(lit(1)).as("np"), // one packAgg row per (bucket, pack)
-          max(col("pack_id")).as("mx"), min(col("pack_id")).as("mn"))
-        .filter(col("np") =!= col("mx") + 1 || col("mn") =!= 0)
-        .select(col("bucket"), lit(-1L).as("pack_id"), lit("density").as("violation"))
-      val cardinality = packAgg.agg(sum(col("n")).as("n")) // total docs packed
-        .crossJoin(docs.agg(count(lit(1)).as("m")))
-        .filter(col("n") =!= col("m"))
-        .select(lit(-1L).as("bucket"), lit(-1L).as("pack_id"),
-          lit("cardinality").as("violation"))
-      overBudget.unionByName(loose).unionByName(density).unionByName(cardinality)
-        .orderBy(col("bucket"), col("pack_id"), col("violation"))
+      packViolations(packAgg, docs, budget,
+        "not_tight" -> packAgg.join(nextFirst, Seq("bucket", "pack_id"))
+          .filter(col("total") + col("next_first") <= budget)
+          .select(col("bucket"), col("pack_id")))
     }),
     "q_pack_bestfit" -> ((s, dir) => {
       // best-fit-decreasing packing invariants as a violation query:
@@ -667,40 +727,23 @@ object SparkEntry {
       //     fits nowhere), which bounds padding waste;
       // (c) pack ids dense from 0 per bucket; (d) every doc packed once.
       val budget = 200L
-      val docs = s.read.parquet(t(dir, "documents"))
-        .withColumn("toks", size(split(col("text"), " ")).cast("long"))
-        .withColumn("bucket", pmod(col("doc_id"), lit(16)))
+      val docs = packDocs(s, dir)
       val packed = graft.operators.Packing.packBestFit(docs, "toks", budget, "bucket")
       // referenced by four violation branches
       val packAgg = Plans.pin(packed.groupBy(col("bucket"), col("pack_id"))
         .agg(sum(col("toks")).as("total"), count(lit(1)).as("n")), "q_pack_bestfit packAgg").df
-      val overBudget = packAgg.filter(col("total") > budget && col("n") > 1)
-        .select(col("bucket"), col("pack_id"), lit("over_budget").as("violation"))
-      val mergeable = packAgg.as("a").join(packAgg.as("b"),
-          col("a.bucket") === col("b.bucket") && col("a.pack_id") < col("b.pack_id") &&
-          col("a.total") + col("b.total") <= budget)
-        .select(col("a.bucket").as("bucket"), col("a.pack_id").as("pack_id"),
-          lit("mergeable").as("violation"))
-      val density = packAgg.groupBy(col("bucket"))
-        .agg(count(lit(1)).as("np"), max(col("pack_id")).as("mx"), min(col("pack_id")).as("mn"))
-        .filter(col("np") =!= col("mx") + 1 || col("mn") =!= 0)
-        .select(col("bucket"), lit(-1L).as("pack_id"), lit("density").as("violation"))
-      val cardinality = packAgg.agg(sum(col("n")).as("n"))
-        .crossJoin(docs.agg(count(lit(1)).as("m")))
-        .filter(col("n") =!= col("m"))
-        .select(lit(-1L).as("bucket"), lit(-1L).as("pack_id"),
-          lit("cardinality").as("violation"))
-      overBudget.unionByName(mergeable).unionByName(density).unionByName(cardinality)
-        .orderBy(col("bucket"), col("pack_id"), col("violation"))
+      packViolations(packAgg, docs, budget,
+        "mergeable" -> packAgg.as("a").join(packAgg.as("b"),
+            col("a.bucket") === col("b.bucket") && col("a.pack_id") < col("b.pack_id") &&
+            col("a.total") + col("b.total") <= budget)
+          .select(col("a.bucket").as("bucket"), col("a.pack_id").as("pack_id")))
     }),
     "q_pack_concat" -> ((s, dir) => {
       // sequence-pack assignment (concat-and-chunk): whole docs into
       // 200-token budget windows, bucketed so no global sort exists;
       // oracled 1:1 against a DuckDB window cumulative sum
-      val docs = s.read.parquet(t(dir, "documents"))
-        .withColumn("toks", size(split(col("text"), " ")).cast("long"))
-        .withColumn("bucket", pmod(col("doc_id"), lit(16)))
-      graft.operators.Packing.packConcat(docs, "toks", budget = 200, bucketCol = "bucket")
+      graft.operators.Packing.packConcat(packDocs(s, dir), "toks", budget = 200,
+          bucketCol = "bucket")
         .select(col("doc_id"), col("bucket"), col("pack_id"),
           col("pack_pos").cast("long").as("pack_pos"))
         .orderBy(col("doc_id"))
@@ -925,22 +968,14 @@ object SparkEntry {
       // reproducibility claim — hash order, not partition order); hash
       // sampling within a generous rate bound. Any row is a bug.
       val docs = s.read.parquet(t(dir, "documents"))
-      val s1 = graft.operators.Sampling.stratified(docs, "lang", 0.2)
-      val s2 = graft.operators.Sampling.stratified(docs.repartition(7), "lang", 0.2)
       val want = docs.groupBy(col("lang"))
         .agg(ceil(count(lit(1)) * 0.2).cast("long").as("want"))
-      val got = s1.groupBy(col("lang")).agg(count(lit(1)).as("got"))
-      val quotaV = want.join(got, Seq("lang"), "full_outer")
-        .filter(coalesce(col("got"), lit(0L)) =!= coalesce(col("want"), lit(0L)))
-        .select(col("lang"), lit("quota").as("violation"))
-      val detV = s1.select(col("doc_id"), col("lang"))
-        .exceptAll(s2.select(col("doc_id"), col("lang")))
-        .select(col("lang"), lit("determinism").as("violation"))
-      val rateV = graft.operators.Sampling.byHash(docs, 0.3)
-        .agg(count(lit(1)).as("n")).crossJoin(docs.agg(count(lit(1)).as("total")))
-        .filter(abs(col("n") - col("total") * 0.3) > col("total") * 0.15)
-        .select(lit("byhash").as("lang"), lit("rate").as("violation"))
-      quotaV.unionByName(detV).unionByName(rateV).orderBy(col("lang"), col("violation"))
+      samplerViolations(graft.operators.Sampling.stratified(docs, "lang", 0.2),
+        graft.operators.Sampling.stratified(docs.repartition(7), "lang", 0.2), want,
+        "rate" -> graft.operators.Sampling.byHash(docs, 0.3)
+          .agg(count(lit(1)).as("n")).crossJoin(docs.agg(count(lit(1)).as("total")))
+          .filter(abs(col("n") - col("total") * 0.3) > col("total") * 0.15)
+          .select(lit("byhash").as("lang")))
     }),
     "q_sample_mix" -> ((s, dir) => {
       // distribution-matching sampler as a violation query: the largest
@@ -960,17 +995,8 @@ object SparkEntry {
         .withColumn("cap", floor(col("cnt") / p + lit(1e-9))) // eps as the operator
       val want = withP.crossJoin(broadcast(withP.agg(min(col("cap")).as("N"))))
         .select(col("lang"), floor(p * col("N") + lit(1e-9)).cast("long").as("want"))
-      val got = s1.groupBy(col("lang")).agg(count(lit(1)).as("got"))
-      val quotaV = want.join(got, Seq("lang"), "full_outer")
-        .filter(coalesce(col("got"), lit(0L)) =!= coalesce(col("want"), lit(0L)))
-        .select(col("lang"), lit("quota").as("violation"))
-      val detV = s1.select(col("doc_id"), col("lang"))
-        .exceptAll(s2.select(col("doc_id"), col("lang")))
-        .select(col("lang"), lit("determinism").as("violation"))
-      val strayV = s1.filter(!col("lang").isin("en", "de", "zh"))
-        .select(col("lang"), lit("stray_stratum").as("violation"))
-      quotaV.unionByName(detV).unionByName(strayV)
-        .orderBy(col("lang"), col("violation"))
+      samplerViolations(s1, s2, want,
+        "stray_stratum" -> s1.filter(!col("lang").isin("en", "de", "zh")).select(col("lang")))
     }),
     "q_sparse_cosine" -> ((s, dir) => {
       // exact L2AP-prefix sparse cosine join over bag-of-words tf vectors,
@@ -1025,20 +1051,8 @@ object SparkEntry {
       val found = Plans.pin(Dedup.simhashPairsFromSigs(sigs.unionByName(twins), maxHamming = maxH),
         "q_simhash_pairs found").df
       val planted = sigs.select(col("id").as("id_a"), (col("id") + 10000000L).as("id_b"))
-      val plantedMissed = planted.join(found, Seq("id_a", "id_b"), "left_anti")
-        .select(col("id_a"), col("id_b"), lit("planted_missed").as("violation"))
-      val sub = sigs.filter(col("id") < 1500)
-      val exact = sub.as("a").join(sub.as("b"), col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
-        .filter(col("hamming") <= maxH)
-      val foundSub = found.filter(col("id_a") < 1500 && col("id_b") < 1500)
-        .select(col("id_a"), col("id_b"), col("hamming"))
-      val subMissed = exact.exceptAll(foundSub)
-        .select(col("id_a"), col("id_b"), lit("subset_missed").as("violation"))
-      val subExtra = foundSub.exceptAll(exact)
-        .select(col("id_a"), col("id_b"), lit("subset_extra").as("violation"))
-      plantedMissed.unionByName(subMissed).unionByName(subExtra)
+      violations("planted_missed" -> planted.join(found, Seq("id_a", "id_b"), "left_anti"))
+        .unionByName(hammingSubsetMismatches(sigs, found, maxH, _ < 1500))
         .orderBy(col("id_a"), col("id_b"), col("violation"))
     }),
     // ---------------- violation queries (oracle: empty) ----------------
@@ -1077,7 +1091,7 @@ object SparkEntry {
       val labeled = sentences.toDF("text", "want")
       val wrong = labeled
         .filter(lang_id(col("text")) =!= col("want"))
-        .select(lit(-1L).as("doc_id"), lit("lang_id").as("violation"))
+        .select(lit(-1L).as("doc_id"))
       // (c) gibberish and mixed-script soup must come back "und" with
       //     margin 0 — a scorer that always answers with the nearest
       //     profile is unusable as a pipeline filter
@@ -1089,28 +1103,28 @@ object SparkEntry {
         .toDF("text")
         .withColumn("lc", lang_id_conf(col("text")))
         .filter(col("lc.code") =!= "und" || col("lc.margin") =!= 0.0)
-        .select(lit(-2L).as("doc_id"), lit("und_fallback").as("violation"))
+        .select(lit(-2L).as("doc_id"))
       // (d) clear monolingual prose must carry POSITIVE margin, and the
       //     conf struct's code must equal lang_id on every fixture row
       //     (single code path — any split is a bug)
       val conf = labeled.withColumn("lc", lang_id_conf(col("text")))
       val margins = conf
         .filter(col("lc.code") =!= lang_id(col("text")) || col("lc.margin") <= 0.0)
-        .select(lit(-3L).as("doc_id"), lit("conf_margin").as("violation"))
+        .select(lit(-3L).as("doc_id"))
       val docsT = s.read.parquet(t(dir, "documents"))
       val consistency = docsT
         .withColumn("lc", lang_id_conf(col("text")))
         .filter(col("lc.code") =!= lang_id(col("text")) ||
           (col("lc.code") === "und" && col("lc.margin") =!= 0.0))
-        .select(col("doc_id"), lit("conf_consistency").as("violation"))
+        .select(col("doc_id"))
       val tokenBounds = docsT
         .withColumn("pieces", token_count_bpeish(col("text")).cast("long"))
         .withColumn("words",
           size(filter(split(col("text"), " "), x => x =!= "")).cast("long"))
         .filter(col("pieces") < col("words") || col("pieces") > length(col("text")))
-        .select(col("doc_id"), lit("token_bounds").as("violation"))
-      wrong.unionByName(junk).unionByName(margins)
-        .unionByName(consistency).unionByName(tokenBounds)
+        .select(col("doc_id"))
+      violations("lang_id" -> wrong, "und_fallback" -> junk, "conf_margin" -> margins,
+        "conf_consistency" -> consistency, "token_bounds" -> tokenBounds)
     }),
     "q_winnow_overlap" -> ((s, dir) => {
       // winnowing guarantee (Schleimer et al. 2003): any common substring
@@ -1271,20 +1285,20 @@ object SparkEntry {
       val perDoc = out.groupBy($"lang", $"doc_id")
         .agg(count(lit(1)).as("k"), min($"epoch").as("emin"),
           max($"epoch").as("emax"), countDistinct($"epoch").as("edis"))
-      val v1 = out.groupBy($"lang").agg(count(lit(1)).as("n")).join(exp, "lang")
-        .filter($"n" =!= $"t").select($"lang", lit("stratum_total").as("violation"))
-      val v2 = perDoc.join(exp, "lang")
-        .filter($"k" =!= floor($"t" / $"c") && $"k" =!= floor($"t" / $"c") + 1)
-        .select($"lang", lit("copies_uneven").as("violation"))
-      val v3 = perDoc.filter($"emin" =!= 0L || $"emax" =!= $"k" - 1L || $"edis" =!= $"k")
-        .select($"lang", lit("epoch_range").as("violation"))
-      val v4 = perDoc.join(exp, "lang").groupBy($"lang", $"t", $"c")
-        .agg(sum(when($"k" === floor($"t" / $"c") + 1L, 1L).otherwise(0L)).as("nceil"))
-        .filter($"nceil" =!= pmod($"t", $"c"))
-        .select($"lang", lit("extra_count").as("violation"))
-      val v5 = out.filter(!$"lang".isInCollection(targets.keys.toSeq))
-        .select($"lang", lit("whitelist").as("violation"))
-      v1.unionByName(v2).unionByName(v3).unionByName(v4).unionByName(v5)
+      violations(
+        "stratum_total" -> out.groupBy($"lang").agg(count(lit(1)).as("n")).join(exp, "lang")
+          .filter($"n" =!= $"t").select($"lang"),
+        "copies_uneven" -> perDoc.join(exp, "lang")
+          .filter($"k" =!= floor($"t" / $"c") && $"k" =!= floor($"t" / $"c") + 1)
+          .select($"lang"),
+        "epoch_range" -> perDoc
+          .filter($"emin" =!= 0L || $"emax" =!= $"k" - 1L || $"edis" =!= $"k")
+          .select($"lang"),
+        "extra_count" -> perDoc.join(exp, "lang").groupBy($"lang", $"t", $"c")
+          .agg(sum(when($"k" === floor($"t" / $"c") + 1L, 1L).otherwise(0L)).as("nceil"))
+          .filter($"nceil" =!= pmod($"t", $"c"))
+          .select($"lang"),
+        "whitelist" -> out.filter(!$"lang".isInCollection(targets.keys.toSeq)).select($"lang"))
     }),
     "q_image_dedup" -> ((s, dir) => {
       import s.implicits._
@@ -1331,8 +1345,7 @@ object SparkEntry {
       val expected = ids.count() * 2 + ids.filter(_ % 2 == 0).count()
       val cardV = sigs.agg(count(lit(1)).as("c"))
         .filter(col("c") =!= expected)
-        .select(lit(-1L).as("id_a"), lit(-1L).as("id_b"),
-          lit("cardinality").as("violation"))
+        .select(lit(-1L).as("id_a"), lit(-1L).as("id_b"))
       val base = pmod(col("id"), lit(n))
       val wBase = lit(40) + pmod(base, lit(5)).cast("int") * lit(12)
       val hBase = lit(32) + pmod(base, lit(3)).cast("int") * lit(8)
@@ -1340,20 +1353,18 @@ object SparkEntry {
       val dimsV = sigs.filter(
           col("width") =!= when(half, (wBase / 2).cast("int")).otherwise(wBase) ||
           col("height") =!= when(half, (hBase / 2).cast("int")).otherwise(hBase))
-        .select(col("id").as("id_a"), lit(-1L).as("id_b"), lit("dims").as("violation"))
+        .select(col("id").as("id_a"), lit(-1L).as("id_b"))
       val origs = sigs.filter(col("id") < n)
       val reencV = origs.as("a")
         .join(sigs.filter(col("id") >= n && col("id") < 2 * n).as("b"),
           col("a.id") + n === col("b.id"))
         .filter(col("a.sig") =!= col("b.sig"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          lit("reencode_sig").as("violation"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       val found = Plans.pin(Dedup.simhashPairsFromSigs(
         sigs.select(col("id"), col("sig")), maxHamming = 10), "q_image_dedup found").df
       val resizeV = origs.filter(pmod(col("id"), lit(2)) === 0)
         .select(col("id").as("id_a"), (col("id") + 2 * n).as("id_b"))
         .join(found, Seq("id_a", "id_b"), "left_anti")
-        .select(col("id_a"), col("id_b"), lit("resized_missed").as("violation"))
       // (f) REAL resize invariants, all exact: a 32x32-box thumbnail of
       //     every original must exist (full decode->box-resample->encode
       //     worked), carry the arithmetic aspect-fit dims, and a resize
@@ -1367,35 +1378,21 @@ object SparkEntry {
       val thExp = least(hBase, least(lit(32), floor(hBase * 32 / wBase))).cast("int")
       val thumbMissing = origs.select(col("id"))
         .join(thumbs, Seq("id"), "left_anti")
-        .select(col("id").as("id_a"), lit(-1L).as("id_b"),
-          lit("thumb_missing").as("violation"))
+        .select(col("id").as("id_a"), lit(-1L).as("id_b"))
       val thumbDims = thumbs
         .filter(col("width") =!= twExp || col("height") =!= thExp)
-        .select(col("id").as("id_a"), lit(-1L).as("id_b"),
-          lit("thumb_dims").as("violation"))
+        .select(col("id").as("id_a"), lit(-1L).as("id_b"))
       val noopSigs = Multimodal.imageDhash(
         Multimodal.imageResize(origImgs, maxW = 4096, maxH = 4096),
         idCol = "id")
       val thumbNoop = origs.as("a")
         .join(noopSigs.as("t"), Seq("id"))
         .filter(col("a.sig") =!= col("t.sig"))
-        .select(col("id").as("id_a"), lit(-1L).as("id_b"),
-          lit("thumb_noop_sig").as("violation"))
-      val sub = sigs.filter(base < 300)
-      val brute = sub.as("a").join(sub.as("b"), col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          bit_count(col("a.sig").bitwiseXOR(col("b.sig"))).as("hamming"))
-        .filter(col("hamming") <= 10)
-      val foundSub = found
-        .filter(pmod(col("id_a"), lit(n)) < 300 && pmod(col("id_b"), lit(n)) < 300)
-        .select(col("id_a"), col("id_b"), col("hamming"))
-      val subMissed = brute.exceptAll(foundSub)
-        .select(col("id_a"), col("id_b"), lit("subset_missed").as("violation"))
-      val subExtra = foundSub.exceptAll(brute)
-        .select(col("id_a"), col("id_b"), lit("subset_extra").as("violation"))
-      cardV.unionByName(dimsV).unionByName(reencV).unionByName(resizeV)
-        .unionByName(thumbMissing).unionByName(thumbDims).unionByName(thumbNoop)
-        .unionByName(subMissed).unionByName(subExtra)
+        .select(col("id").as("id_a"), lit(-1L).as("id_b"))
+      violations("cardinality" -> cardV, "dims" -> dimsV, "reencode_sig" -> reencV,
+          "resized_missed" -> resizeV, "thumb_missing" -> thumbMissing,
+          "thumb_dims" -> thumbDims, "thumb_noop_sig" -> thumbNoop)
+        .unionByName(hammingSubsetMismatches(sigs, found, 10, pmod(_, lit(n)) < 300))
         .orderBy(col("id_a"), col("id_b"), col("violation"))
     }),
     "q_audio_fingerprint" -> ((s, dir) => {

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.functions.GraftFunctions._
 
 /**
@@ -63,22 +62,11 @@ object Ann {
     topKPerQuery(scored, k)
   }
 
-  /** Exact top-k per query in two phases: a local top-k inside each (query,
-    * physical partition) first, so the global per-query sort only sees
-    * <= partitions*k survivors — a single per-query window would funnel the
-    * whole scored corpus into #queries partitions. */
-  private[operators] def topKPerQuery(scored: DataFrame, k: Int): DataFrame = {
-    val wLocal = Window.partitionBy(col("query_id"), col("__pid"))
-      .orderBy(col("cos").desc, col("nn_id").asc)
-    val local = scored.withColumn("__pid", spark_partition_id())
-      .withColumn("__r", row_number().over(wLocal))
-      .filter(col("__r") <= k)
-      .drop("__r", "__pid")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos").desc, col("nn_id").asc)
-    local.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("nn_id"), col("rank"), col("cos"))
-  }
+  /** Exact top-k per query ([[Plans.topPerGroup]]): a single per-query
+    * window would funnel the whole scored corpus into #queries partitions. */
+  private[operators] def topKPerQuery(scored: DataFrame, k: Int): DataFrame =
+    Plans.topPerGroup(scored, Seq(col("query_id")), Seq(col("cos").desc, col("nn_id").asc), lit(k))
+      .select(col("query_id"), col("nn_id"), col("__rank").as("rank"), col("cos"))
 
   /** Signature column: `planes`-bit sign sketch under the deterministic
     * hyperplane table (single codegen'd expression; the per-element

@@ -1,17 +1,21 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+import org.apache.spark.sql.execution.{CoalesceExec, LeafExecNode, SQLExecution, SparkPlan, UnionExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.shims
 import org.apache.spark.util.AccumulatorV2
 
 /** The engine's plan idioms, each written once: pin a frame that several
   * consumers read, widen a narrow input before a per-row kernel, decide
-  * whether a pinned table fits the driver, and pick the lookup side of a
-  * join against a pinned state table. */
+  * whether a pinned table fits the driver, pick the lookup side of a join
+  * against a pinned state table, and keep the exact top rows per group. */
 private[graft] object Plans {
 
   /** A pinned frame and the tallies its checkpoint job took: rows, bytes
@@ -93,18 +97,37 @@ private[graft] object Plans {
   }
 
   /** Scale-adaptive width for per-row kernel stages (BATCH frames only —
-    * `df.rdd` rejects streaming plans): an input narrower than the
-    * session's parallelism (locally: one small parquet file = one scan
-    * task) runs its codegen'd text kernels — shingling, rolling hashes,
+    * a streaming plan cannot be planned as a batch): an input narrower
+    * than the session's parallelism (locally: one small parquet file = one
+    * scan task) runs its codegen'd text kernels — shingling, rolling hashes,
     * fingerprints, tokenizing — in that handful of tasks, serializing the
     * stage that carries most of the operator's CPU. Widen ONLY then: the
     * repartition moves the raw rows once (bytes the kernels were about to
     * read anyway), and an input that already scans wide (the 100-TB case:
-    * thousands of splits) pays nothing. A `select` keeps its input's
-    * partition count, so widening a projection decides as its input would. */
+    * thousands of splits) pays nothing. The width comes from the physical
+    * plan ([[width]]), so deciding runs no job. */
   def widen(df: DataFrame): DataFrame = {
     val para = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < para) df.repartition(para) else df
+    if (width(df.queryExecution.sparkPlan) < para) df.repartition(para) else df
+  }
+
+  /** The partition count a physical plan's output stage starts from, read
+    * off the plan without executing it. For a plan with no exchange it is
+    * the partition count of its RDD: a leaf scan's own count, kept by
+    * row-wise operators and the stream side of a broadcast hash join and
+    * summed over a union's branches. An explicit repartition or coalesce
+    * declares its count. A shuffle that an aggregate or a shuffled join
+    * needs is not planned yet, so such a plan takes its inputs' width: the
+    * post-shuffle width is only known once adaptive execution has run the
+    * shuffle (`df.rdd.getNumPartitions` runs it, and then the plan runs it
+    * again). */
+  private[graft] def width(plan: SparkPlan): Int = plan match {
+    case e: ShuffleExchangeLike => e.numPartitions
+    case c: CoalesceExec => math.min(c.numPartitions, width(c.child))
+    case u: UnionExec => u.children.map(width).sum
+    case j: BroadcastHashJoinExec => width(if (j.buildSide == BuildLeft) j.right else j.left)
+    case l: LeafExecNode => l.execute().getNumPartitions
+    case p => p.children.map(width).max
   }
 
   /** Largest pinned table the engine moves to the driver: [[lookupSide]]
@@ -143,4 +166,27 @@ private[graft] object Plans {
     * 9.5 s at local[16]). */
   def lookupSide(state: DataFrame, small: Boolean): DataFrame =
     if (small) broadcast(state) else state.hint("shuffle_hash")
+
+  /** Exact top `limit` rows of each group by `order`, in two phases: rank
+    * inside each (group, input partition) and keep `limit`, then rank the
+    * at most partitions * limit survivors per group and keep `limit`. One
+    * per-group window would sort every row of a group in one task, so a hot
+    * group, or a handful of groups (magnitude reports have one per date),
+    * funnels the whole input through a few reducers (a per-date window
+    * took 105 s on 14M hosts x 4 days; two phases take seconds); the local
+    * cut runs in the input's own tasks. `limit` is a column, so each group
+    * can carry its own (a per-stratum quota); it must be the same on every
+    * row of a group. `order` must be total within a group (end it on a
+    * unique key), or rows tied at the cut are kept arbitrarily. The result
+    * is the input's columns plus `__rank`, each row's 1-based place in its
+    * group. */
+  def topPerGroup(df: DataFrame, groups: Seq[Column], order: Seq[Column], limit: Column): DataFrame = {
+    val local = df.withColumn("__pid", spark_partition_id())
+      .withColumn("__r", row_number().over(Window.partitionBy(groups :+ col("__pid"): _*)
+        .orderBy(order: _*)))
+      .filter(col("__r") <= limit)
+      .drop("__r", "__pid")
+    local.withColumn("__rank", row_number().over(Window.partitionBy(groups: _*).orderBy(order: _*)))
+      .filter(col("__rank") <= limit)
+  }
 }

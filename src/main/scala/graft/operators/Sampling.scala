@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.functions.GraftFunctions._
 
 /**
@@ -45,11 +44,10 @@ object Sampling {
       < lit((fraction * m).round))
   }
 
-  /** Shared two-phase hashed-order rank: keep each stratum's rows of rank
-    * <= `__quota` (a column the caller attaches). The local rank inside
-    * each (stratum, input partition) cuts survivors to
-    * <= partitions * quota BEFORE the per-stratum global rank, so no
-    * stratum funnels its full row set through one reducer. */
+  /** Keep each stratum's rows of rank <= `__quota` (a column the caller
+    * attaches) in hashed-key order, through the two-phase
+    * [[Plans.topPerGroup]]: no stratum funnels its full row set through one
+    * reducer. */
   private def takeByQuota(withQuota: DataFrame, strataCol: String,
                           keyCol: String, originalCols: Seq[String]): DataFrame =
     takeByQuotaOrdered(withQuota, strataCol, keyCol, originalCols,
@@ -61,20 +59,10 @@ object Sampling {
     * sampler passes its exponential-variate key. */
   private def takeByQuotaOrdered(withQuota: DataFrame, strataCol: String,
                                  keyCol: String, originalCols: Seq[String],
-                                 orderCol: Column): DataFrame = {
-    val hashed = withQuota.withColumn("__h", orderCol)
-    val wLocal = Window.partitionBy(col(strataCol), col("__pid"))
-      .orderBy(col("__h").asc, col(keyCol).asc_nulls_first)
-    val local = hashed.withColumn("__pid", spark_partition_id())
-      .withColumn("__r", row_number().over(wLocal))
-      .filter(col("__r") <= col("__quota"))
-      .drop("__r", "__pid")
-    val wGlobal = Window.partitionBy(col(strataCol))
-      .orderBy(col("__h").asc, col(keyCol).asc_nulls_first)
-    local.withColumn("__r", row_number().over(wGlobal))
-      .filter(col("__r") <= col("__quota"))
+                                 orderCol: Column): DataFrame =
+    Plans.topPerGroup(withQuota.withColumn("__h", orderCol), Seq(col(strataCol)),
+        Seq(col("__h").asc, col(keyCol).asc_nulls_first), col("__quota"))
       .select(originalCols.map(col).toIndexedSeq: _*) // original column order
-  }
 
   /** Keep at most `maxRows` rows per stratum, chosen deterministically by
     * hashed-key order — the crawl-pipeline "per-domain cap" (a handful of

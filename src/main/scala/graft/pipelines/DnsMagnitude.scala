@@ -268,44 +268,11 @@ object DnsMagnitude {
       reportOnDriver(state.sparkSession, schema, rows, topN)
     }
 
-  /** [[report]] as a Spark plan whatever the state. With `topN > 0` the
-    * result is bounded (at most topN rows per date), so it is sorted in one
-    * partition rather than range-partitioned: a global sort samples its
-    * child first, which runs the whole report twice. */
-  private[graft] def reportByPlan(state: DataFrame, topN: Int = 0): DataFrame = {
-    val perDomain = state.filter(col("domain").isNotNull)
-      .select(col("date"), col("domain"),
-        hll_est(col("hll")).as("uniqueClients"), col("queries").as("queryVolume"))
-    // totals derived from the (small) state incl. the NULL bucket
-    val global = state
-      .groupBy(col("date"))
-      .agg(hll_merge(col("hll")).as("hll"), sum(col("queries")).as("queries"))
-      .select(col("date"),
-        hll_est(col("hll")).as("totalUniqueClients"),
-        col("queries").as("totalQueryVolume"))
-    val joined = perDomain.join(broadcast(global), Seq("date"))
-      .withColumn("magnitude", magnitude(col("uniqueClients"), col("totalUniqueClients")))
-    // two-phase exact top-N (see Magnitude.report: a single per-date window
-    // collapses parallelism to #dates)
-    val limited =
-      if (topN > 0) {
-        val wLocal = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("date"), col("__pid"))
-          .orderBy(col("magnitude").desc, col("domain").desc)
-        val local = joined.withColumn("__pid", spark_partition_id())
-          .withColumn("__r", row_number().over(wLocal))
-          .filter(col("__r") <= topN)
-          .drop("__r", "__pid")
-        val wGlobal = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("date"))
-          .orderBy(col("magnitude").desc, col("domain").desc)
-        local.withColumn("__r", row_number().over(wGlobal))
-          .filter(col("__r") <= topN).drop("__r")
-      } else joined
-    val order = Seq(col("date").asc, floor(col("magnitude") * 1000).asc, col("domain").asc)
-    if (topN > 0) limited.repartition(1).sortWithinPartitions(order: _*)
-    else limited.orderBy(order: _*)
-  }
+  /** [[report]] as a Spark plan whatever the state: the shared magnitude
+    * report plan ([[Magnitude.reportPlan]]) under this pipeline's names. */
+  private[graft] def reportByPlan(state: DataFrame, topN: Int = 0): DataFrame =
+    Magnitude.reportPlan(state, "domain", "uniqueClients", "queryVolume",
+      "totalUniqueClients", "totalQueryVolume", topN)
 
   /** One report row on the driver (null: SQL NULL). */
   private final case class ReportRow(date: Int, domain: UTF8String, clients: java.lang.Long,

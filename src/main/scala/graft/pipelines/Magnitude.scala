@@ -1,8 +1,9 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions._
+import graft.operators.Plans
 
 /**
  * The magnitude pipeline — the reference's collect / aggregate / report
@@ -112,46 +113,38 @@ object Magnitude {
     * highest magnitude (exact top-N — see SURVEY.md §2.3 A6 on the
     * reference's order-dependent incremental truncation, which we
     * deliberately do not replicate). */
-  def report(state: DataFrame, topN: Int = 0): DataFrame = {
-    val perHost = state.filter(col("host").isNotNull)
-      .select(col("date"), col("host"),
-        hll_est(col("hll")).as("unique_pages"), col("queries"))
+  def report(state: DataFrame, topN: Int = 0): DataFrame =
+    reportPlan(state, "host", "unique_pages", "queries", "total_unique_pages", "total_queries", topN)
+
+  /** The magnitude report over a sketch state of (date, `key`, hll,
+    * queries), shared by this pipeline and [[DnsMagnitude]], which name
+    * the same figures differently: per non-NULL key of each date, its
+    * estimate (`clients`) and `queries`, the date's totals (`total`,
+    * `totalQueries`) merged from the state's rows of that date, the NULL
+    * bucket included, and magnitude = ln(clients) / ln(total) * 10. With
+    * `topN > 0` each date keeps its top N rows by (magnitude desc, key
+    * desc) through [[Plans.topPerGroup]], and the bounded result is sorted
+    * in one partition rather than range-partitioned: a global sort samples
+    * its child first, which runs the whole report twice. Rows ascend by
+    * (date, floor(magnitude * 1000), key). */
+  private[pipelines] def reportPlan(state: DataFrame, key: String, clients: String, queries: String,
+                                    total: String, totalQueries: String, topN: Int): DataFrame = {
+    val perKey = state.filter(col(key).isNotNull)
+      .select(col("date"), col(key), hll_est(col("hll")).as(clients), col("queries").as(queries))
     // global totals derived by merging the state (small input: one row per
-    // host, not per page) — includes the NULL-host bucket
+    // key, not per client) — includes the NULL bucket
     val globals = state
       .groupBy(col("date"))
       .agg(hll_merge(col("hll")).as("hll"), sum(col("queries")).as("queries"))
-      .select(col("date"),
-        hll_est(col("hll")).as("total_unique_pages"),
-        col("queries").as("total_queries"))
-
+      .select(col("date"), hll_est(col("hll")).as(total), col("queries").as(totalQueries))
     // one row per date on the right: broadcast equi-join
-    val joined = perHost.join(broadcast(globals), Seq("date"))
-      .withColumn("magnitude", magnitude(col("unique_pages"), col("total_unique_pages")))
-
-    // Exact top-N per date in two phases: a per-(date, physical partition)
-    // local top-N first, then the global window over the <= partitions*N
-    // survivors. A single per-date window sorts ALL rows in #dates
-    // partitions — with few dates that collapses parallelism to #dates
-    // (measured 105s on 14M hosts x 4 days; two-phase runs in seconds).
-    val limited =
-      if (topN > 0) {
-        val wLocal = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("date"), col("__pid"))
-          .orderBy(col("magnitude").desc, col("host").desc)
-        val local = joined.withColumn("__pid", spark_partition_id())
-          .withColumn("__r", row_number().over(wLocal))
-          .filter(col("__r") <= topN)
-          .drop("__r", "__pid")
-        val wGlobal = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("date"))
-          .orderBy(col("magnitude").desc, col("host").desc)
-        local.withColumn("__rank", row_number().over(wGlobal))
-          .filter(col("__rank") <= topN).drop("__rank")
-      } else joined
-
-    limited.orderBy(col("date").asc,
-      floor(col("magnitude") * 1000).asc, col("host").asc)
+    val joined = perKey.join(broadcast(globals), Seq("date"))
+      .withColumn("magnitude", magnitude(col(clients), col(total)))
+    val order = Seq(col("date").asc, floor(col("magnitude") * 1000).asc, col(key).asc)
+    if (topN <= 0) joined.orderBy(order: _*)
+    else Plans.topPerGroup(joined, Seq(col("date")), Seq(col("magnitude").desc, col(key).desc),
+        lit(topN)).drop("__rank")
+      .repartition(1).sortWithinPartitions(order: _*)
   }
 
   // ------------------------- resumable collect -------------------------

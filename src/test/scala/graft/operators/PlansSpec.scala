@@ -3,12 +3,12 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.SparkTestBase.stagesOf
+import graft.SparkTestBase.{stagesOf, tempDir, workOf}
 
-/** `Plans.lookupSide` both ways, and the stage labels of pins routed
-  * through `Plans.pin`. The byte cap itself is covered only as the pure
-  * `fitsDriver` predicate (PinSpec): a real state over 256 MiB would need
-  * more than that inside the 4 GB test JVM. */
+/** `Plans.lookupSide` both ways, `Plans.widen`'s width, and the stage
+  * labels of pins routed through `Plans.pin`. The byte cap itself is
+  * covered only as the pure `fitsDriver` predicate (PinSpec): a real state
+  * over 256 MiB would need more than that inside the 4 GB test JVM. */
 class PlansSpec extends AnyFunSuite {
 
   lazy val spark = graft.SparkTestBase.spark
@@ -44,6 +44,24 @@ class PlansSpec extends AnyFunSuite {
     val viaBroadcast = verify(bcast = true)
     assert(viaBroadcast.nonEmpty && viaBroadcast.size < candidates.count())
     assert(viaBroadcast === verify(bcast = false))
+  }
+
+  test("widen reads the width off the plan: no job, even over a shuffle") {
+    val agg = spark.range(0, 100000, 1, 4).groupBy(col("id") % 10).count()
+    val (jobs, _) = workOf(Plans.widen(agg))
+    assert(jobs === 0)
+  }
+
+  test("widen's width is the RDD's on scans, projections, unions, broadcast joins, pins, repartitions") {
+    val dir = tempDir("graft_widen").resolve("t").toString
+    spark.range(0, 3000, 1, 3).select(col("id"), (col("id") % 7).as("k")).write.parquet(dir)
+    val scan = spark.read.parquet(dir)
+    val small = Seq((0L, "a"), (3L, "b")).toDF("k", "tag")
+    val frames = Seq(scan, scan.filter(col("k") > 2).select(col("id")), scan.unionByName(scan),
+      scan.join(broadcast(small), "k"), small, spark.range(0, 10, 1, 7),
+      Plans.pin(scan, "PlansSpec scan").df, scan.coalesce(1), scan.repartition(5))
+    for (f <- frames)
+      assert(Plans.width(f.queryExecution.sparkPlan) === f.rdd.getNumPartitions, f.queryExecution.sparkPlan)
   }
 
   test("pageRank names the stages of each round's pin") {
