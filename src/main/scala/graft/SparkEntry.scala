@@ -31,8 +31,9 @@ object SparkEntry {
     * cycles) overwrite one path instead of leaking a corpus-sized dir per
     * run, while two concurrent JVMs on the same SF dir (bench in one
     * terminal, verify in another) cannot clobber each other's archives
-    * mid-read. Dead processes' dirs are reclaimed opportunistically past
-    * a 24 h mtime horizon (the WarcWrite.sweepStaleTemp discipline). */
+    * mid-read. The dir is deleted when its JVM exits; the dirs of JVMs
+    * that were killed are reclaimed opportunistically past a 24 h mtime
+    * horizon (the WarcWrite.sweepStaleTemp discipline). */
   private def gateScratch(sfDir: String, gate: String): String = {
     val tmp = java.nio.file.Paths.get(sys.props("java.io.tmpdir"))
     val prefix = f"graft_gate_${gate}%s_${math.abs(sfDir.hashCode)}%x_"
@@ -48,6 +49,7 @@ object SparkEntry {
     } catch { case _: java.io.IOException => () }
     val p = tmp.resolve(prefix + ProcessHandle.current().pid())
     java.nio.file.Files.createDirectories(p)
+    org.apache.spark.sql.graftshim.shims.deleteAtExit(p.toFile)
     p.toString
   }
 

@@ -62,27 +62,3 @@ object BpeDecodeLit {
     UTF8String.fromString(model.decode(ids.toIntArray()))
   }
 }
-
-/** Lossless GPT-2-style segmentation (space attaches to the FOLLOWING
-  * segment): `array_join(text_segments(t), '') == t`. Exposed mostly for
-  * the trainer's distributed segment-count aggregation. */
-case class TextSegments(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override val dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "text_segments"
-  override def nullSafeEval(v: Any): Any =
-    TextSegments.segs(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextSegments.segs($c)")
-  override protected def withNewChildInternal(c: Expression): TextSegments =
-    copy(child = c)
-}
-
-object TextSegments {
-  def segs(text: UTF8String): GenericArrayData = {
-    val out = graft.core.text.Bpe.segments(text.toString)
-      .map(s => UTF8String.fromString(s): Any).toArray
-    new GenericArrayData(out)
-  }
-}

@@ -2,15 +2,50 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Scalar Catalyst expressions for the graft engine. All implement
- * `doGenCode` by calling the static forwarders of the pure-JVM cores
- * (graft.core.*), so they stay inside whole-stage codegen — no Scala UDF
- * wrapping, no encoder round-trips (reference behaviors cited per class).
+ * Scalar Catalyst expressions for the graft engine. A function whose whole
+ * logic is one call into a static kernel (graft.core.*, or the adapters in
+ * [[SketchKernels]], [[TextKernels]] and [[VectorKernels]] that take and
+ * return Spark's internal values) is a [[KernelCall]]: it is declared once,
+ * as its row in [[GraftFunctions.builders]], and the optimizer replaces it
+ * with Spark's own `StaticInvoke`, so eval and codegen are written nowhere
+ * here. The hand-written expressions (here, and in the other
+ * `*Expressions.scala` files) are the ones that take two input types,
+ * check their own input types or carry model or array state; all of them
+ * codegen into static calls too, so they stay inside whole-stage codegen —
+ * no Scala UDF wrapping, no encoder round-trips.
  */
+
+/** One static kernel call as a SQL function: `name(children)` analyses
+  * with implicit casts to `inputTypes`, and the optimizer replaces it with
+  * `StaticInvoke(target.method(children ++ literals))`. `literals` are the
+  * build-time arguments (a shingle size, a crawler agent): the kernel gets
+  * them after the columns and `toString` shows them, but they are not
+  * children, so the output column is named `name(children)`. The result is
+  * NULL when any child is NULL, and, with `returnsNull`, when the kernel
+  * returns null. */
+case class KernelCall(
+    name: String,
+    target: Class[_],
+    method: String,
+    resultType: DataType,
+    inputTypes: Seq[DataType],
+    children: Seq[Expression],
+    literals: Seq[Literal] = Nil,
+    returnsNull: Boolean = false)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+  override lazy val replacement: Expression = StaticInvoke(target, resultType, method,
+    children ++ literals, inputTypes ++ literals.map(_.dataType), returnNullable = returnsNull)
+  override def prettyName: String = name
+  override def flatArguments: Iterator[Any] = (children ++ literals).iterator
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KernelCall =
+    copy(children = c)
+}
 
 /** XXH3-64 over binary or UTF-8 string bytes. Reference hashes the 16-byte
   * truncated address (/root/reference/internal/ip_address.go:44-45); the
@@ -43,361 +78,40 @@ case class Xxh3(child: Expression) extends UnaryExpression {
   override protected def withNewChildInternal(c: Expression): Xxh3 = copy(child = c)
 }
 
-/** Truncate + canonicalize an IP string to 16 bytes (v4 -> /24 v4-mapped,
-  * v6 -> /48; v4-mapped-v6 inputs collapse to `::` — the reference quirk,
-  * /root/reference/internal/ip_address.go:26-52). NULL for invalid input. */
-case class TruncateIp(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = true
-  override def prettyName: String = "truncate_ip"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.net.IpUtil.truncate(v.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.core.net.IpUtil.truncate($c.toString());
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(c: Expression): TruncateIp = copy(child = c)
-}
+/** The sketch kernels whose result is not a plain `graft.core.sketch.SketchOps`
+  * value: arrays and structs in Spark's internal form, and the KMV union. */
+object SketchKernels {
+  /** The held bottom-k hashes, unsigned ascending. */
+  def kmvHashes(sketch: Array[Byte]): ArrayData =
+    new GenericArrayData(graft.core.sketch.SketchOps.kmvHashes(sketch))
 
-/** Normalize a domain: lowercase, strip one trailing dot, keep last N
-  * labels, validate TLD ("." for root, NULL for invalid —
-  * /root/reference/internal/domain_name.go:14-43). */
-case class NormalizeDomain(child: Expression, numLabels: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "normalize_domain"
-  override def nullSafeEval(v: Any): Any = {
-    val r = graft.core.net.DomainUtil.normalize(v.asInstanceOf[UTF8String].toString, numLabels)
-    if (r == null) null else UTF8String.fromString(r)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      java.lang.String r = graft.core.net.DomainUtil.normalize($c.toString(), $numLabels);
-      if (r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(r); }
-    """)
-  override protected def withNewChildInternal(c: Expression): NormalizeDomain = copy(child = c)
-}
-
-/** Decode `\DDD` octal / `\xHH` hex escapes with the reference's quirks
-  * (/root/reference/internal/csv.go:129-194). */
-case class UnescapeDomain(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def prettyName: String = "unescape_domain"
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(graft.core.net.DomainUtil.unescape(v.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-      s"graft.core.net.DomainUtil.unescape($c.toString()))")
-  override protected def withNewChildInternal(c: Expression): UnescapeDomain = copy(child = c)
-}
-
-/** Lowercased hostname of a URL; NULL when there is no authority. The
-  * pages-table analogue of the reference's domain key. */
-case class HostOfUrl(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "host_of_url"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.net.DomainUtil.hostOfUrlUTF8(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.core.net.DomainUtil.hostOfUrlUTF8($c);
-      if (${ev.value} == null) { ${ev.isNull} = true; }
-    """)
-  override protected def withNewChildInternal(c: Expression): HostOfUrl = copy(child = c)
-}
-
-/** Deterministic text extraction from the synthetic page html (byte-exact
-  * inverse of the generator's wrap — the per-row invariant demanded by
-  * BASELINE.json input_hint). Pure function of the bytes: no charset
-  * guessing, no locale, no time. */
-case class ExtractText(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "extract_text"
-  override def nullSafeEval(v: Any): Any = {
-    val r = graft.core.text.HtmlText.extract(v.asInstanceOf[Array[Byte]])
-    if (r == null) null else UTF8String.fromBytes(r)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      byte[] r = graft.core.text.HtmlText.extract($c);
-      if (r == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromBytes(r); }
-    """)
-  override protected def withNewChildInternal(c: Expression): ExtractText = copy(child = c)
-}
-
-// ----------------------------- estimators -----------------------------
-
-/** HLL cardinality estimate from AK-spec sketch bytes. */
-case class HllEst(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "hll_est"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.sketch.SketchOps.hllEst(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.sketch.SketchOps.hllEst($c)")
-  override protected def withNewChildInternal(c: Expression): HllEst = copy(child = c)
-}
-
-/** Count-Min point estimate for a pre-hashed key. */
-case class CmsEst(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, LongType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "cms_est"
-  override def nullSafeEval(sketch: Any, hash: Any): Any =
-    graft.core.sketch.SketchOps.cmsEst(sketch.asInstanceOf[Array[Byte]], hash.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, h) => s"graft.core.sketch.SketchOps.cmsEst($s, $h)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): CmsEst =
-    copy(left = l, right = r)
-}
-
-/** Bloom membership for a pre-hashed key (no false negatives). */
-case class BloomContains(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, LongType)
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_contains"
-  override def nullSafeEval(sketch: Any, hash: Any): Any =
-    graft.core.sketch.SketchOps.bloomContains(sketch.asInstanceOf[Array[Byte]], hash.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, h) => s"graft.core.sketch.SketchOps.bloomContains($s, $h)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): BloomContains =
-    copy(left = l, right = r)
-}
-
-/** t-digest quantile from sketch bytes. */
-case class TDigestQuantile(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "tdigest_quantile"
-  override def nullSafeEval(sketch: Any, q: Any): Any =
-    graft.core.sketch.SketchOps.tdigestQuantile(sketch.asInstanceOf[Array[Byte]], q.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, q) => s"graft.core.sketch.SketchOps.tdigestQuantile($s, $q)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TDigestQuantile =
-    copy(left = l, right = r)
-}
-
-/** t-digest CDF (fraction of mass <= x). */
-case class TDigestCdf(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "tdigest_cdf"
-  override def nullSafeEval(sketch: Any, x: Any): Any =
-    graft.core.sketch.SketchOps.tdigestCdf(sketch.asInstanceOf[Array[Byte]], x.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, x) => s"graft.core.sketch.SketchOps.tdigestCdf($s, $x)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): TDigestCdf =
-    copy(left = l, right = r)
-}
-
-/** KLL quantile from sketch bytes. */
-case class KllQuantile(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "kll_quantile"
-  override def nullSafeEval(sketch: Any, q: Any): Any =
-    graft.core.sketch.SketchOps.kllQuantile(sketch.asInstanceOf[Array[Byte]], q.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, q) => s"graft.core.sketch.SketchOps.kllQuantile($s, $q)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KllQuantile =
-    copy(left = l, right = r)
-}
-
-/** KLL normalized rank of x. */
-case class KllRank(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, DoubleType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "kll_rank"
-  override def nullSafeEval(sketch: Any, x: Any): Any =
-    graft.core.sketch.SketchOps.kllRank(sketch.asInstanceOf[Array[Byte]], x.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, x) => s"graft.core.sketch.SketchOps.kllRank($s, $x)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KllRank =
-    copy(left = l, right = r)
-}
-
-// ------------------------- KMV / FreqItems estimators -------------------------
-
-/** KMV distinct estimate: exact size below capacity, else the bottom-k
-  * order-statistic estimate (k-1)*2^64/kthMin (Beyer et al. 2007). */
-case class KmvEst(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "kmv_est"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.sketch.SketchOps.kmvEst(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.sketch.SketchOps.kmvEst($c)")
-  override protected def withNewChildInternal(c: Expression): KmvEst = copy(child = c)
-}
-
-/** The held bottom-k hashes, unsigned ascending — the sketch's coordinated
-  * distinct-sample (same keys win in every partition/partial). */
-case class KmvHashes(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "kmv_hashes"
-  override def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      graft.core.sketch.SketchOps.kmvHashes(v.asInstanceOf[Array[Byte]]))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-      s"graft.core.sketch.SketchOps.kmvHashes($c))")
-  override protected def withNewChildInternal(c: Expression): KmvHashes = copy(child = c)
-}
-
-/** Jaccard estimate from two KMV sketches (min-wise coordination over the
-  * union's bottom-k'); exact when both sketches are below capacity. */
-case class KmvJaccard(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "kmv_jaccard"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.sketch.SketchOps.kmvJaccard(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.core.sketch.SketchOps.kmvJaccard($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KmvJaccard =
-    copy(left = l, right = r)
-}
-
-/** Misra-Gries items: array<struct<hash, lo, hi>> with lo the stored
-  * lower bound and hi = lo + errBound, hash unsigned-ascending. */
-case class FreqItemsList(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("hash", LongType, nullable = false),
-      StructField("lo", LongType, nullable = false),
-      StructField("hi", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "freq_items"
-  override def nullSafeEval(v: Any): Any =
-    FreqItemsList.items(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.FreqItemsList.items($c)")
-  override protected def withNewChildInternal(c: Expression): FreqItemsList = copy(child = c)
-}
-
-object FreqItemsList {
-  def items(bytes: Array[Byte]): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val s = graft.core.sketch.FreqItems.fromBytes(bytes)
-    val err = s.errBound
-    val rows: Array[Any] = s.items.map { case (h, c) =>
-      new GenericInternalRow(Array[Any](h, c, c + err))
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
-  }
-}
-
-/** Misra-Gries tracked error bound (max undercount; <= n/(k+1)). */
-case class FreqItemsErr(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "freq_err"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.sketch.SketchOps.fiErr(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.sketch.SketchOps.fiErr($c)")
-  override protected def withNewChildInternal(c: Expression): FreqItemsErr = copy(child = c)
-}
-
-/** Misra-Gries stored lower bound for a pre-hashed key (0 if absent). */
-case class FreqItemsLowerBound(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, LongType)
-  override def dataType: DataType = LongType
-  override def prettyName: String = "freq_lower_bound"
-  override def nullSafeEval(sketch: Any, hash: Any): Any =
-    graft.core.sketch.SketchOps.fiLowerBound(
-      sketch.asInstanceOf[Array[Byte]], hash.asInstanceOf[Long])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, h) => s"graft.core.sketch.SketchOps.fiLowerBound($s, $h)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): FreqItemsLowerBound =
-    copy(left = l, right = r)
-}
-
-/** Misra-Gries top-k: the k heaviest items as array<struct<hash, lo, hi>>
-  * sorted by stored count DESCENDING (ties by hash unsigned-ascending) —
-  * the "what are the top domains" read API over a freq_build/freq_merge
-  * column. k > stored items returns them all. */
-case class FreqTop(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("hash", LongType, nullable = false),
-      StructField("lo", LongType, nullable = false),
-      StructField("hi", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "freq_top"
-  override def nullSafeEval(sketch: Any, k: Any): Any =
-    FreqTop.top(sketch.asInstanceOf[Array[Byte]], k.asInstanceOf[Int])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, k) => s"graft.functions.FreqTop.top($s, $k)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): FreqTop =
-    copy(left = l, right = r)
-}
-
-object FreqTop {
-  def top(bytes: Array[Byte], k: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    require(k >= 0, s"freq_top: k must be >= 0, got $k")
-    val s = graft.core.sketch.FreqItems.fromBytes(bytes)
-    val err = s.errBound
-    val ordered = s.items.sortBy { case (h, c) => (-c, h ^ Long.MinValue) }
-    val rows: Array[Any] = ordered.take(k).map { case (h, c) =>
-      new GenericInternalRow(Array[Any](h, c, c + err))
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
-  }
-}
-
-/** Scalar KMV union (lattice join of two sketch byte values) — with
-  * kmv_jaccard and kmv_est this completes the set-op family:
-  * |A∩B| ~= kmv_jaccard(a,b) * kmv_est(kmv_union(a,b)). */
-case class KmvUnion(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "kmv_union"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    KmvUnion.union(a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.KmvUnion.union($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KmvUnion =
-    copy(left = l, right = r)
-}
-
-object KmvUnion {
-  def union(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+  /** Lattice join of two KMV sketches. */
+  def kmvUnion(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
     val ka = graft.core.sketch.Kmv.fromBytes(a)
     ka.merge(graft.core.sketch.Kmv.fromBytes(b))
     ka.toBytes
   }
+
+  /** `buckets - 1` equi-height split points of a KLL sketch. */
+  def kllSplits(sketch: Array[Byte], buckets: Int): ArrayData =
+    new GenericArrayData(graft.core.sketch.SketchOps.kllSplits(sketch, buckets))
+
+  /** Misra-Gries items as (hash, lo, hi), hash unsigned-ascending. */
+  def freqItems(sketch: Array[Byte]): ArrayData = {
+    val s = graft.core.sketch.FreqItems.fromBytes(sketch)
+    itemRows(s.items, s.errBound)
+  }
+
+  /** The `k` heaviest Misra-Gries items as (hash, lo, hi), by stored count
+    * descending, ties by hash unsigned-ascending. */
+  def freqTop(sketch: Array[Byte], k: Int): ArrayData = {
+    require(k >= 0, s"freq_top: k must be >= 0, got $k")
+    val s = graft.core.sketch.FreqItems.fromBytes(sketch)
+    itemRows(s.items.sortBy { case (h, c) => (-c, h ^ Long.MinValue) }.take(k), s.errBound)
+  }
+
+  private def itemRows(items: Array[(Long, Long)], err: Long): ArrayData =
+    new GenericArrayData(items.map { case (h, c) =>
+      new GenericInternalRow(Array[Any](h, c, c + err)): Any
+    })
 }

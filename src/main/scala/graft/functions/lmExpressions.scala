@@ -2,195 +2,16 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** Language-model / classifier feature kernels.
-  *
-  * All three are codegen'd scalar expressions (static companion kernels,
-  * no UDFs) whose semantics are deliberately SQL-replicable so the DuckDB
-  * oracle can recompute them exactly: space-split tokens (`split(text,
-  * " ", -1)`, trailing empties kept — the behavior of Spark's
-  * `split(text, ' ')` and DuckDB's `string_split(text, ' ')`), grams
-  * joined with a single space, and a 31-base polynomial codepoint hash.
-  */
-
-/** Per-document word n-gram multiplicities: `array<struct<gram, m>>` in
-  * first-occurrence order. Unlike [[WordShingles]] (set semantics, short
-  * -text fallback — built for Jaccard blocking) this keeps COUNTS and
-  * emits nothing for texts with fewer than `n` tokens, which is what
-  * n-gram LM estimation needs. Emitting per-doc (gram, m) pairs instead
-  * of one row per token position is map-side pre-aggregation for free:
-  * the training `groupBy(gram)` shuffles one row per DISTINCT gram per
-  * doc, not one per occurrence. */
-case class WordNgramCounts(child: Expression, n: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(n >= 1, "gram size must be >= 1")
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override val dataType: DataType = ArrayType(StructType(Seq(
-    StructField("gram", StringType, nullable = false),
-    StructField("m", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "word_ngram_counts"
-  override def nullSafeEval(v: Any): Any =
-    WordNgramCounts.counts(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WordNgramCounts.counts($c, $n)")
-  override protected def withNewChildInternal(c: Expression): WordNgramCounts =
-    copy(child = c)
-}
-
-object WordNgramCounts {
-  def counts(text: UTF8String, n: Int): GenericArrayData = {
-    val toks = text.toString.split(" ", -1)
-    if (toks.length < n) return new GenericArrayData(Array.empty[Any])
-    val m = new java.util.LinkedHashMap[String, Long]()
-    val sb = new java.lang.StringBuilder(64)
-    var i = 0
-    while (i <= toks.length - n) {
-      sb.setLength(0)
-      var j = 0
-      while (j < n) {
-        if (j > 0) sb.append(' ')
-        sb.append(toks(i + j))
-        j += 1
-      }
-      val g = sb.toString
-      val prev = m.get(g)
-      m.put(g, if (prev == null) 1L else prev + 1L)
-      i += 1
-    }
-    val rows = new Array[Any](m.size)
-    val it = m.entrySet().iterator()
-    var k = 0
-    while (it.hasNext) {
-      val e = it.next()
-      rows(k) = new GenericInternalRow(
-        Array[Any](UTF8String.fromString(e.getKey), e.getValue))
-      k += 1
-    }
-    new GenericArrayData(rows)
-  }
-}
-
-/** Hashed n-gram bag-of-words features (fastText/DCLM-style quality
-  * classifiers): word 1..maxN-grams hashed into `dim` buckets with a
-  * 31-base polynomial over Unicode CODE POINTS mod 1,000,003 (prime),
-  * then mod `dim`; collisions sum. Output `array<struct<idx, v>>` sorted
-  * by idx (deterministic; sorted order also makes downstream dot products
-  * cache-friendly). The hash is small-integer arithmetic on purpose — the
-  * DuckDB oracle replays it with `list_reduce` over `string_split(g, '')`
-  * — and is NOT xxh3: feature hashing needs replayability across engines,
-  * not avalanche quality (Weinberger et al. 2009 use a plain signed hash
-  * too). */
-case class HashedNgramFeatures(child: Expression, dim: Int, maxN: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(dim >= 2, "feature dim must be >= 2")
-  require(maxN >= 1 && maxN <= 5, "maxN must be in [1, 5]")
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override val dataType: DataType = ArrayType(StructType(Seq(
-    StructField("idx", IntegerType, nullable = false),
-    StructField("v", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "hashed_ngram_features"
-  override def nullSafeEval(v: Any): Any =
-    HashedNgramFeatures.features(v.asInstanceOf[UTF8String], dim, maxN)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"graft.functions.HashedNgramFeatures.features($c, $dim, $maxN)")
-  override protected def withNewChildInternal(c: Expression): HashedNgramFeatures =
-    copy(child = c)
-}
-
-object HashedNgramFeatures {
-  final val HashMod = 1000003L
-
-  /** Polynomial codepoint hash, mod-at-each-step (no overflow for any
-    * input): h_{i+1} = (31 h_i + cp_i) mod 1000003; bucket = h mod dim. */
-  def bucketOf(gram: String, dim: Int): Int = {
-    var h = 0L
-    var i = 0
-    while (i < gram.length) {
-      val cp = gram.codePointAt(i)
-      h = (31L * h + cp) % HashMod
-      i += Character.charCount(cp)
-    }
-    (h % dim).toInt
-  }
-
-  def features(text: UTF8String, dim: Int, maxN: Int): GenericArrayData = {
-    val toks = text.toString.split(" ", -1)
-    val acc = new java.util.TreeMap[Integer, Long]()
-    val sb = new java.lang.StringBuilder(64)
-    var n = 1
-    while (n <= maxN) {
-      var i = 0
-      while (i <= toks.length - n) {
-        sb.setLength(0)
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(toks(i + j))
-          j += 1
-        }
-        val b = Integer.valueOf(bucketOf(sb.toString, dim))
-        val prev = acc.get(b)
-        acc.put(b, if (prev == null) 1L else prev + 1L)
-        i += 1
-      }
-      n += 1
-    }
-    val rows = new Array[Any](acc.size)
-    val it = acc.entrySet().iterator()
-    var k = 0
-    while (it.hasNext) {
-      val e = it.next()
-      rows(k) = new GenericInternalRow(Array[Any](e.getKey.intValue(), e.getValue))
-      k += 1
-    }
-    new GenericArrayData(rows)
-  }
-}
-
-/** All dot-suffixes of a hostname, most-specific first:
-  * `a.b.example.com -> [a.b.example.com, b.example.com, example.com,
-  * com]`. Powers UT1-style blocklist filtering ([[
-  * graft.operators.UrlFilter]]): blocking `example.com` must catch every
-  * subdomain, and an equi-join on exploded suffixes does that with a
-  * plain hash join — no prefix LIKE scans, no per-pattern regex. Label
-  * count is the split of the '.'-separated name (empty labels kept, so a
-  * malformed `a..com` produces its literal suffixes rather than silently
-  * collapsing). */
-case class DomainSuffixes(child: Expression)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override val dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "domain_suffixes"
-  override def nullSafeEval(v: Any): Any =
-    DomainSuffixes.suffixes(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.DomainSuffixes.suffixes($c)")
-  override protected def withNewChildInternal(c: Expression): DomainSuffixes =
-    copy(child = c)
-}
-
-object DomainSuffixes {
-  def suffixes(host: UTF8String): GenericArrayData = {
-    val s0 = host.toString
-    // one trailing root dot stripped first: "blocked.com." resolves
-    // identically to "blocked.com" in DNS, so a rooted-FQDN URL must not
-    // slip past a blocklist entry for the unrooted name
-    val s = if (s0.endsWith(".")) s0.substring(0, s0.length - 1) else s0
-    if (s.isEmpty) return new GenericArrayData(Array.empty[Any])
-    val out = scala.collection.mutable.ArrayBuffer[Any](UTF8String.fromString(s))
-    var i = 0
-    while (i < s.length) {
-      if (s.charAt(i) == '.' && i + 1 <= s.length - 1)
-        out += UTF8String.fromString(s.substring(i + 1))
-      i += 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-}
+/** Language-model / classifier scoring. The feature kernels
+  * (`word_ngram_counts`, `hashed_ngram_features`, `domain_suffixes`) are
+  * [[KernelCall]] rows over [[TextKernels]], deliberately SQL-replicable so
+  * the DuckDB oracle can recompute them exactly: space-split tokens
+  * (`split(text, " ", -1)`, trailing empties kept — the behavior of
+  * Spark's `split(text, ' ')` and DuckDB's `string_split(text, ' ')`),
+  * grams joined with a single space, and a 31-base polynomial codepoint
+  * hash. The scorer below embeds its weights, which a literal cannot. */
 
 /** Dense linear scorer over sparse hashed features with the weight vector
   * EMBEDDED in the expression (ctx.addReferenceObj — the

@@ -1,141 +1,141 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.unsafe.types.UTF8String.fromString
+import graft.core.text.{HtmlExtract, TextOps, UnicodeClean}
 
-/** Text-analysis scalar expressions (training-data pipeline: SimHash,
-  * winnowing fingerprints, n-gram language id, quality ratios, token
-  * counting). All codegen'd calls into graft.core.text.TextOps. */
+/** Text-analysis functions (training-data pipeline: SimHash, winnowing
+  * fingerprints, n-gram language id, quality ratios, token counting, HTML
+  * and robots.txt extraction). Most are [[KernelCall]] rows over the
+  * [[TextKernels]] adapters; the three expressions below carry state a
+  * literal cannot (threshold objects, n-gram size lists, a term list). */
 
-abstract class TextUnary extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  protected def fn: String // static method on TextOps taking String
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.text.TextOps.$fn($c.toString())")
-}
+/** The static kernels behind the text functions of
+  * [[GraftFunctions.builders]]: each takes and returns Spark's internal
+  * values (UTF8String, ArrayData, InternalRow) and calls the String kernel
+  * of graft.core (TextOps, UnicodeClean, HtmlExtract, net.*) or builds the
+  * array/struct result in one tight loop — Spark's higher-order functions
+  * that would compose the same results are CodegenFallback and allocate per
+  * element. */
+object TextKernels {
+  private def strings(xs: Array[String]): ArrayData =
+    new GenericArrayData(xs.map(fromString).asInstanceOf[Array[Any]])
 
-/** 64-bit SimHash over whitespace tokens (Charikar 2002). */
-case class SimHash64(child: Expression) extends TextUnary {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-  override protected def fn: String = "simhash64"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.simhash64(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): SimHash64 = copy(child = c)
-}
+  // ----- net -----
+  /** v4 -> /24 v4-mapped, v6 -> /48, 16 bytes; NULL for invalid input
+    * (reference internal/ip_address.go:26-52). */
+  def truncateIp(ip: UTF8String): Array[Byte] = graft.core.net.IpUtil.truncate(ip.toString)
+  /** "." for root, NULL for an invalid name
+    * (reference internal/domain_name.go:14-43). */
+  def normalizeDomain(d: UTF8String, numLabels: Int): UTF8String =
+    fromString(graft.core.net.DomainUtil.normalize(d.toString, numLabels))
+  /** `\DDD` / `\xHH` escapes (reference internal/csv.go:129-194). */
+  def unescapeDomain(d: UTF8String): UTF8String =
+    fromString(graft.core.net.DomainUtil.unescape(d.toString))
+  def canonicalizeUrl(url: UTF8String): UTF8String =
+    fromString(graft.core.net.UrlUtil.canonicalize(url.toString))
+  def robotsMatch(pattern: UTF8String, path: UTF8String): Boolean =
+    graft.core.net.RobotsTxt.matches(pattern.toString, path.toString)
 
-/** Rabin-Karp rolling content hash (identity semantics: equal texts ->
-  * equal fingerprints; distinct texts collide with ~2^-64 probability).
-  * For NEAR-dup blocking use [[WinnowMin64]] instead. */
-case class Fingerprint64(child: Expression) extends TextUnary {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "fingerprint64"
-  override protected def fn: String = "fingerprint64"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.fingerprint64(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): Fingerprint64 = copy(child = c)
-}
+  /** Robots rules of one agent as (allow, pattern), document order. */
+  def robotsRules(content: UTF8String, agent: UTF8String): ArrayData =
+    new GenericArrayData(graft.core.net.RobotsTxt.rulesFor(content.toString, agent.toString)
+      .map(r => new GenericInternalRow(Array[Any](r.allow, fromString(r.pattern))): Any))
 
-/** Winnowing-style near-dup blocking key: min XXH3 over char 8-grams —
-  * shared by most near-identical texts (Schleimer et al. 2003 simplified). */
-case class WinnowMin64(child: Expression) extends TextUnary {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "winnow_min64"
-  override protected def fn: String = "winnowMin64"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.winnowMin64(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): WinnowMin64 = copy(child = c)
-}
-
-/** Language id: decisive Unicode-script detection (zh/ja/ko/el/ar/he/
-  * th/hi + native ru) followed by trigram profiles over
-  * {en,de,sv,fr,es,it,pt,nl,pl,ru-translit}; "und" if unsure. */
-case class LangId(child: Expression) extends TextUnary {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "lang_id"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(graft.core.text.TextOps.langId(v.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-      s"graft.core.text.TextOps.langId($c.toString()))")
-  override protected def withNewChildInternal(c: Expression): LangId = copy(child = c)
-}
-
-/** Language id WITH confidence: struct<code string, margin double>. Same
-  * single code path as [[LangId]] (`code == lang_id(text)` always); the
-  * margin is what a pipeline thresholds on before trusting the label —
-  * deciding-script letter share for the script pass, relative
-  * best-vs-runner-up gap for the trigram pass, 0.0 for "und"
-  * (gibberish / mixed-script soup / too little evidence). */
-case class LangIdConf(child: Expression) extends TextUnary {
-  override def dataType: DataType = LangIdConf.Schema
-  override def prettyName: String = "lang_id_conf"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any =
-    LangIdConf.evalText(v.asInstanceOf[UTF8String].toString)
-  // NB: must target the companion explicitly — scalac suppresses the
-  // static forwarder because Expression already declares eval(InternalRow)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.LangIdConf.evalText($c.toString())")
-  override protected def withNewChildInternal(c: Expression): LangIdConf = copy(child = c)
-}
-
-object LangIdConf {
-  val Schema: StructType = StructType(Seq(
-    StructField("code", StringType, nullable = false),
-    StructField("margin", DoubleType, nullable = false)))
-  // named evalText (not eval): the case class inherits eval(InternalRow)
-  // from Expression, which would suppress a same-named static forwarder
-  // and break the generated Java's static call
-  def evalText(s: String): org.apache.spark.sql.catalyst.InternalRow = {
-    val (code, margin) = graft.core.text.TextOps.langIdConf(s)
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](UTF8String.fromString(code), margin))
+  /** All dot-suffixes of a hostname, most-specific first; one trailing
+    * root dot is stripped first ("blocked.com." resolves like
+    * "blocked.com"), empty labels are kept. */
+  def domainSuffixes(host: UTF8String): ArrayData = {
+    val s0 = host.toString
+    val s = if (s0.endsWith(".")) s0.substring(0, s0.length - 1) else s0
+    if (s.isEmpty) return new GenericArrayData(Array.empty[Any])
+    val out = scala.collection.mutable.ArrayBuffer[Any](fromString(s))
+    var i = 0
+    while (i < s.length) {
+      if (s.charAt(i) == '.' && i + 1 <= s.length - 1) out += fromString(s.substring(i + 1))
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
   }
-}
 
-/** BPE-ish token-count heuristic (sub-word pieces). */
-case class TokenCountBpeish(child: Expression) extends TextUnary {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "token_count_bpeish"
-  override protected def fn: String = "tokenCountBpeish"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.tokenCountBpeish(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): TokenCountBpeish = copy(child = c)
-}
+  // ----- html -----
+  /** Byte-exact inverse of the synthetic page wrap; NULL when not one. */
+  def extractText(html: Array[Byte]): UTF8String = {
+    val r = graft.core.text.HtmlText.extract(html)
+    if (r == null) null else UTF8String.fromBytes(r)
+  }
+  def htmlText(html: UTF8String): UTF8String = fromString(HtmlExtract.text(html.toString))
+  /** NULL when the document has no `<title>`. */
+  def htmlTitle(html: UTF8String): UTF8String = fromString(HtmlExtract.title(html.toString))
+  def htmlLinks(html: UTF8String): ArrayData = strings(HtmlExtract.links(html.toString))
+  /** (href, text) per `<a href>`, document order. */
+  def htmlAnchors(html: UTF8String): ArrayData =
+    new GenericArrayData(HtmlExtract.anchors(html.toString)
+      .map { case (href, text) =>
+        new GenericInternalRow(Array[Any](fromString(href), fromString(text))): Any })
 
-/**
- * Distinct word n-gram shingles as array<string>. Semantics are exactly the
- * builtin composition array_distinct(transform(sequence(...), i ->
- * array_join(slice(split(text,' '), i, n), ' '))) with the < n-token
- * whole-text fallback — but Spark's higher-order functions are
- * CodegenFallback (interpreted, per-element boxing; one shingle pass over
- * 5k docs measured ~3-6 s), while this is one codegen'd tight loop.
- */
-case class WordShingles(child: Expression, n: Int) extends UnaryExpression
-    with ImplicitCastInputTypes {
-  require(n >= 1, "shingle size must be >= 1")
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_shingles"
-  override def nullSafeEval(v: Any): Any =
-    WordShingles.shingle(v.asInstanceOf[UTF8String], n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.WordShingles.shingle($c, $n)")
-  override protected def withNewChildInternal(c: Expression): WordShingles = copy(child = c)
-}
+  // ----- unicode -----
+  def nfc(s: UTF8String): UTF8String = fromString(UnicodeClean.nfc(s.toString))
+  def nfkc(s: UTF8String): UTF8String = fromString(UnicodeClean.nfkc(s.toString))
+  def fixMojibake(s: UTF8String): UTF8String = fromString(UnicodeClean.fixMojibake(s.toString))
+  def mojibakeScore(s: UTF8String): Int = UnicodeClean.mojibakeScore(s.toString)
 
-object WordShingles {
-  def shingle(text: UTF8String, n: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val s = text.toString
+  // ----- signatures and language id -----
+  def simhash64(t: UTF8String): Long = TextOps.simhash64(t.toString)
+  def fingerprint64(t: UTF8String): Long = TextOps.fingerprint64(t.toString)
+  def winnowMin64(t: UTF8String): Long = TextOps.winnowMin64(t.toString)
+  def winnowSet(t: UTF8String, k: Int, w: Int): ArrayData =
+    new GenericArrayData(TextOps.winnow(t.toString, k, w))
+  def rollingKgramHashes(t: UTF8String, k: Int, stride: Int): ArrayData =
+    new GenericArrayData(TextOps.rollingKgramHashes(t.toString, k, stride))
+  def langId(t: UTF8String): UTF8String = fromString(TextOps.langId(t.toString))
+  /** (code, margin): the same code as [[langId]] with its confidence. */
+  def langIdConf(t: UTF8String): InternalRow = {
+    val (code, margin) = TextOps.langIdConf(t.toString)
+    new GenericInternalRow(Array[Any](fromString(code), margin))
+  }
+
+  // ----- quality signals -----
+  def tokenCountBpeish(t: UTF8String): Int = TextOps.tokenCountBpeish(t.toString)
+  def wordCount(t: UTF8String): Int = TextOps.wordCount(t.toString)
+  def stopwordHits(t: UTF8String): Int = TextOps.stopwordHits(t.toString)
+  def alphaRatio(t: UTF8String): Double = TextOps.alphaRatio(t.toString)
+  def punctRatio(t: UTF8String): Double = TextOps.punctRatio(t.toString)
+  def stopwordRatio(t: UTF8String): Double = TextOps.stopwordRatio(t.toString)
+  def meanWordLen(t: UTF8String): Double = TextOps.meanWordLen(t.toString)
+  def maxTokenRatio(t: UTF8String): Double = TextOps.maxTokenRatio(t.toString)
+  def charEntropy(t: UTF8String): Double = TextOps.charEntropy(t.toString)
+  def dupLineRatio(t: UTF8String): Double = TextOps.dupLineRatio(t.toString)
+  def dupLineCharRatio(t: UTF8String): Double = TextOps.dupLineCharRatio(t.toString)
+  def bulletLineRatio(t: UTF8String): Double = TextOps.bulletLineRatio(t.toString)
+  def ellipsisLineRatio(t: UTF8String): Double = TextOps.ellipsisLineRatio(t.toString)
+  def alphaWordRatio(t: UTF8String): Double = TextOps.alphaWordRatio(t.toString)
+  def symbolWordRatio(t: UTF8String, symbol: UTF8String): Double =
+    TextOps.symbolWordRatio(t.toString, symbol.toString)
+  def topNgramCharRatio(t: UTF8String, n: Int): Double = TextOps.topNgramCharRatio(t.toString, n)
+  def dupNgramCharRatio(t: UTF8String, n: Int): Double = TextOps.dupNgramCharRatio(t.toString, n)
+
+  // ----- chunks, shingles, spans -----
+  def chunks(t: UTF8String, maxTokens: Int, overlap: Int): ArrayData =
+    strings(TextOps.chunks(t.toString, maxTokens, overlap))
+
+  /** Lossless GPT-2-style segments: `array_join(text_segments(t), '') == t`. */
+  def segments(t: UTF8String): ArrayData =
+    strings(graft.core.text.Bpe.segments(t.toString).toArray)
+
+  /** Distinct word n-grams, first-occurrence order: exactly
+    * array_distinct(transform(sequence(...), i -> array_join(slice(split(
+    * text, ' '), i, n), ' '))), with a text of fewer than n tokens as its
+    * one shingle. */
+  def shingles(text: UTF8String, n: Int): ArrayData = {
     // split(" ", -1): single-space separator, trailing empties kept — the
     // exact semantics of Spark's split(text, " ") builtin
-    val toks = s.split(" ", -1)
+    val toks = text.toString.split(" ", -1)
     val out = new java.util.LinkedHashSet[UTF8String]()
     if (toks.length < n) {
       out.add(text) // re-joining all tokens with " " reproduces the input
@@ -150,159 +150,105 @@ object WordShingles {
           sb.append(toks(i + j))
           j += 1
         }
-        out.add(UTF8String.fromString(sb.toString))
+        out.add(fromString(sb.toString))
         i += 1
       }
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      out.toArray(new Array[UTF8String](out.size)).asInstanceOf[Array[Any]])
+    new GenericArrayData(out.toArray(new Array[UTF8String](out.size)).asInstanceOf[Array[Any]])
   }
-}
 
-/** winnow_set(text, k, w) -> sorted array<long> of winnowing fingerprints
-  * (Schleimer et al. 2003); any >= w+k-1-char substring match shares one. */
-case class WinnowSet(child: Expression, k: Int, w: Int) extends TextUnary {
-  require(k >= 2 && w >= 1, "winnow needs k >= 2 and w >= 1")
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "winnow_set"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      graft.core.text.TextOps.winnow(v.asInstanceOf[UTF8String].toString, k, w))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-      s"graft.core.text.TextOps.winnow($c.toString(), $k, $w))")
-  override protected def withNewChildInternal(c: Expression): WinnowSet = copy(child = c)
-}
+  /** Word n-gram multiplicities as (gram, m) in first-occurrence order;
+    * empty for fewer than n tokens. */
+  def wordNgramCounts(text: UTF8String, n: Int): ArrayData = {
+    val toks = text.toString.split(" ", -1)
+    if (toks.length < n) return new GenericArrayData(Array.empty[Any])
+    val m = new java.util.LinkedHashMap[String, Long]()
+    val sb = new java.lang.StringBuilder(64)
+    var i = 0
+    while (i <= toks.length - n) {
+      sb.setLength(0)
+      var j = 0
+      while (j < n) {
+        if (j > 0) sb.append(' ')
+        sb.append(toks(i + j))
+        j += 1
+      }
+      val g = sb.toString
+      val prev = m.get(g)
+      m.put(g, if (prev == null) 1L else prev + 1L)
+      i += 1
+    }
+    val rows = new Array[Any](m.size)
+    val it = m.entrySet().iterator()
+    var k = 0
+    while (it.hasNext) {
+      val e = it.next()
+      rows(k) = new GenericInternalRow(Array[Any](fromString(e.getKey), e.getValue))
+      k += 1
+    }
+    new GenericArrayData(rows)
+  }
 
-/** canonicalize_url: scheme/host lowercase, fragment strip, default-port
-  * strip (graft.core.net.UrlUtil — the crawl-dedup normalization). */
-case class CanonicalizeUrl(child: Expression) extends TextUnary {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "canonicalize_url"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(graft.core.net.UrlUtil.canonicalize(v.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-      s"graft.core.net.UrlUtil.canonicalize($c.toString()))")
-  override protected def withNewChildInternal(c: Expression): CanonicalizeUrl = copy(child = c)
-}
+  final val HashMod = 1000003L
 
-/** Gopher-style quality signals (SQL-reproducible definitions). */
-case class StopwordRatio(child: Expression) extends TextUnary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "stopword_ratio"
-  override protected def fn: String = "stopwordRatio"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.stopwordRatio(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): StopwordRatio = copy(child = c)
-}
+  /** Polynomial codepoint hash, mod-at-each-step (no overflow for any
+    * input): h_{i+1} = (31 h_i + cp_i) mod 1000003; bucket = h mod dim. */
+  def bucketOf(gram: String, dim: Int): Int = {
+    var h = 0L
+    var i = 0
+    while (i < gram.length) {
+      val cp = gram.codePointAt(i)
+      h = (31L * h + cp) % HashMod
+      i += Character.charCount(cp)
+    }
+    (h % dim).toInt
+  }
 
-case class MeanWordLen(child: Expression) extends TextUnary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "mean_word_len"
-  override protected def fn: String = "meanWordLen"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.meanWordLen(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): MeanWordLen = copy(child = c)
-}
+  /** Word 1..maxN-grams hashed into `dim` buckets by [[bucketOf]], as
+    * (idx, count) sorted by idx; collisions sum. */
+  def hashedNgramFeatures(text: UTF8String, dim: Int, maxN: Int): ArrayData = {
+    val toks = text.toString.split(" ", -1)
+    val acc = new java.util.TreeMap[Integer, Long]()
+    val sb = new java.lang.StringBuilder(64)
+    var n = 1
+    while (n <= maxN) {
+      var i = 0
+      while (i <= toks.length - n) {
+        sb.setLength(0)
+        var j = 0
+        while (j < n) {
+          if (j > 0) sb.append(' ')
+          sb.append(toks(i + j))
+          j += 1
+        }
+        val b = Integer.valueOf(bucketOf(sb.toString, dim))
+        val prev = acc.get(b)
+        acc.put(b, if (prev == null) 1L else prev + 1L)
+        i += 1
+      }
+      n += 1
+    }
+    val rows = new Array[Any](acc.size)
+    val it = acc.entrySet().iterator()
+    var k = 0
+    while (it.hasNext) {
+      val e = it.next()
+      rows(k) = new GenericInternalRow(Array[Any](e.getKey.intValue(), e.getValue))
+      k += 1
+    }
+    new GenericArrayData(rows)
+  }
 
-case class MaxTokenRatio(child: Expression) extends TextUnary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "max_token_ratio"
-  override protected def fn: String = "maxTokenRatio"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.maxTokenRatio(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): MaxTokenRatio = copy(child = c)
-}
-
-/** Shannon entropy of the character distribution (gibberish filter). */
-case class CharEntropy(child: Expression) extends TextUnary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "char_entropy"
-  override protected def fn: String = "charEntropy"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.charEntropy(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): CharEntropy = copy(child = c)
-}
-
-/** Gopher duplicate-line fraction (repetition filter, Rae et al. 2021). */
-case class DupLineRatio(child: Expression) extends TextUnary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "dup_line_ratio"
-  override protected def fn: String = "dupLineRatio"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.dupLineRatio(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): DupLineRatio = copy(child = c)
-}
-
-/** Gopher duplicate-line character fraction (Rae et al. 2021). */
-case class DupLineCharRatio(child: Expression) extends TextUnary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "dup_line_char_ratio"
-  override protected def fn: String = "dupLineCharRatio"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.dupLineCharRatio(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): DupLineCharRatio = copy(child = c)
-}
-
-/** Fraction of alphabetic characters. */
-case class AlphaRatio(child: Expression) extends TextUnary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "alpha_ratio"
-  override protected def fn: String = "alphaRatio"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.alphaRatio(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): AlphaRatio = copy(child = c)
-}
-
-/** Fraction of punctuation characters. */
-case class PunctRatio(child: Expression) extends TextUnary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "punct_ratio"
-  override protected def fn: String = "punctRatio"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.punctRatio(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): PunctRatio = copy(child = c)
-}
-
-/** minhash_sig(shingles, k) -> array<long>: the k-permutation min-hash
-  * signature of a shingle array computed PER ROW — bit-identical to the
-  * aggregation formulation `min(xxhash64(lit(i), xxh3_64(sh)))` of the
-  * batch LSH join (the seeded re-hash chain is Spark's own XXH64 with its
-  * expression seed 42, signed min), but with no explode + shuffle. That
-  * one-pass shape is what Structured Streaming needs: a streaming
-  * pipeline gets one stateful-operator budget, and the signature must not
-  * spend it on a groupBy. An empty shingle array yields the identity
-  * signature (all Long.MaxValue). */
-case class MinHashSig(child: Expression, k: Int) extends UnaryExpression
-    with ImplicitCastInputTypes {
-  require(k >= 1 && k <= 1024, s"numHashes must be in [1, 1024], got $k")
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(StringType, containsNull = false))
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_sig"
-  override def nullSafeEval(v: Any): Any =
-    MinHashSig.sig(v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], k)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MinHashSig.sig($c, $k)")
-  override protected def withNewChildInternal(c: Expression): MinHashSig = copy(child = c)
-}
-
-object MinHashSig {
-  private val seedCache =
-    new java.util.concurrent.ConcurrentHashMap[Integer, Array[Long]]()
+  private val seedCache = new java.util.concurrent.ConcurrentHashMap[Integer, Array[Long]]()
   /** Per-permutation seeds = XXH64(i, seed=42), the exact inner state of
     * Spark's xxhash64(lit(i), _) after consuming the int literal. */
   def seedsFor(k: Int): Array[Long] = seedCache.computeIfAbsent(k,
-    kk => Array.tabulate(kk)(i =>
-      org.apache.spark.sql.catalyst.expressions.XXH64.hashInt(i, 42L)))
+    kk => Array.tabulate(kk)(i => XXH64.hashInt(i, 42L)))
 
-  def sig(shingles: org.apache.spark.sql.catalyst.util.ArrayData,
-          k: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
+  /** The k-permutation min-hash signature of a shingle array,
+    * bit-identical to the aggregation `min(xxhash64(lit(i), xxh3_64(sh)))`;
+    * an empty array yields all Long.MaxValue. */
+  def minhashSig(shingles: ArrayData, k: Int): ArrayData = {
     val seeds = seedsFor(k)
     val out = Array.fill(k)(Long.MaxValue)
     val n = shingles.numElements()
@@ -311,142 +257,60 @@ object MinHashSig {
       val h = graft.core.hash.XXH3.hashUTF8(shingles.getUTF8String(i))
       var j = 0
       while (j < k) {
-        val v = org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(h, seeds(j))
+        val v = XXH64.hashLong(h, seeds(j))
         if (v < out(j)) out(j) = v
         j += 1
       }
       i += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
+    new GenericArrayData(out)
   }
-}
 
-/** Gopher "fraction of characters in the most frequent n-gram" (n=2..4 in
-  * the paper) — parameterized codegen'd wrapper over TextOps. */
-case class TopNgramCharRatio(child: Expression, n: Int) extends UnaryExpression
-    with ImplicitCastInputTypes {
-  require(n >= 1, "n must be >= 1")
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "top_ngram_char_ratio"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.topNgramCharRatio(v.asInstanceOf[UTF8String].toString, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.core.text.TextOps.topNgramCharRatio($c.toString(), $n)")
-  override protected def withNewChildInternal(c: Expression): TopNgramCharRatio = copy(child = c)
-}
-
-/** Gopher "fraction of characters in duplicated n-grams" (n=5..10 in the
-  * paper; overlapping occurrences cover each token position once). */
-case class DupNgramCharRatio(child: Expression, n: Int) extends UnaryExpression
-    with ImplicitCastInputTypes {
-  require(n >= 1, "n must be >= 1")
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "dup_ngram_char_ratio"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.dupNgramCharRatio(v.asInstanceOf[UTF8String].toString, n)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.core.text.TextOps.dupNgramCharRatio($c.toString(), $n)")
-  override protected def withNewChildInternal(c: Expression): DupNgramCharRatio = copy(child = c)
-}
-
-/** chunk_text(text, maxTokens, overlap) -> array<string>: overlapping
-  * token-window chunks (context-length preparation). Codegen'd wrapper over
-  * TextOps.chunks — the builtin HOF composition (filter/transform/slice)
-  * is CodegenFallback and allocates per element. */
-case class ChunkText(child: Expression, maxTokens: Int, overlap: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(maxTokens >= 1, "maxTokens must be >= 1")
-  require(overlap >= 0 && overlap < maxTokens, "overlap must be in [0, maxTokens)")
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "chunk_text"
-  override def nullSafeEval(v: Any): Any = ChunkText.chunk(
-    v.asInstanceOf[UTF8String], maxTokens, overlap)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.ChunkText.chunk($c, $maxTokens, $overlap)")
-  override protected def withNewChildInternal(c: Expression): ChunkText = copy(child = c)
-}
-
-object ChunkText {
-  // named `chunk`, NOT `eval`: a companion method shadowed by an inherited
-  // instance method (Expression.eval) gets no static forwarder from scalac,
-  // and the generated Java then fails to compile under Janino — silently
-  // deoptimizing the whole stage to interpreted execution
-  def chunk(text: UTF8String, maxTokens: Int,
-            overlap: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val cs = graft.core.text.TextOps.chunks(text.toString, maxTokens, overlap)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      cs.map(UTF8String.fromString).asInstanceOf[Array[Any]])
+  /** Merged [start, end) spans covered by winLen-wide windows at the given
+    * start positions (any order; NULL elements rejected). */
+  def mergeSpans(positions: ArrayData, winLen: Int): ArrayData = {
+    var ni = 0
+    while (ni < positions.numElements()) {
+      if (positions.isNullAt(ni))
+        throw new IllegalArgumentException(
+          "merge_spans: position array must not contain NULL elements")
+      ni += 1
+    }
+    val flat = TextOps.mergeSpans(positions.toLongArray(), winLen)
+    new GenericArrayData(Array.tabulate[Any](flat.length / 2)(i =>
+      new GenericInternalRow(Array[Any](flat(2 * i), flat(2 * i + 1)))))
   }
-}
 
-/** Gopher bullet-line fraction. */
-case class BulletLineRatio(child: Expression) extends TextUnary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "bullet_line_ratio"
-  override protected def fn: String = "bulletLineRatio"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.bulletLineRatio(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): BulletLineRatio = copy(child = c)
-}
-
-/** Gopher ellipsis-ending-line fraction. */
-case class EllipsisLineRatio(child: Expression) extends TextUnary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "ellipsis_line_ratio"
-  override protected def fn: String = "ellipsisLineRatio"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.ellipsisLineRatio(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): EllipsisLineRatio = copy(child = c)
-}
-
-/** Gopher fraction of words containing an ASCII letter. */
-case class AlphaWordRatio(child: Expression) extends TextUnary {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "alpha_word_ratio"
-  override protected def fn: String = "alphaWordRatio"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.alphaWordRatio(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): AlphaWordRatio = copy(child = c)
-}
-
-/** Gopher distinct required-stopword hits (needs >= 2 of 8). */
-case class StopwordHits(child: Expression) extends TextUnary {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "stopword_hits"
-  override protected def fn: String = "stopwordHits"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.stopwordHits(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): StopwordHits = copy(child = c)
-}
-
-/** Gopher symbol-to-word ratio for a fixed symbol ("#", "...", "…"). */
-case class SymbolWordRatio(child: Expression, symbol: String)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "symbol_word_ratio"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.symbolWordRatio(v.asInstanceOf[UTF8String].toString, symbol)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val symRef = ctx.addReferenceObj("symbol", symbol, "java.lang.String")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.core.text.TextOps.symbolWordRatio($c.toString(), $symRef)")
+  /** `text` with the [start, end) char ranges of `spans` removed (unsorted
+    * or overlapping ranges fine; out-of-bounds offsets clamp). */
+  def spliceOut(text: UTF8String, spans: ArrayData): UTF8String = {
+    val n = spans.numElements()
+    if (n == 0) return text
+    val starts = new Array[Long](n)
+    val ends = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      if (spans.isNullAt(i))
+        throw new IllegalArgumentException("splice_out: span array must not contain NULLs")
+      val r = spans.getStruct(i, 2)
+      if (r.isNullAt(0) || r.isNullAt(1))
+        throw new IllegalArgumentException(
+          "splice_out: span_start/span_end must not be NULL (getLong on a " +
+            "null slot would silently splice offset 0)")
+      starts(i) = r.getLong(0)
+      ends(i) = r.getLong(1)
+      i += 1
+    }
+    fromString(TextOps.spliceOut(text.toString, starts, ends))
   }
-  override protected def withNewChildInternal(c: Expression): SymbolWordRatio = copy(child = c)
 }
 
 /**
  * gopher_signals(text) -> struct of EVERY Gopher quality signal (Rae et al.
  * 2021 Table A1) from ONE pass over the text — the fused kernel behind
- * [[graft.operators.TextQuality.gopherFilter]]. The per-signal expressions
+ * [[graft.operators.TextQuality.gopherFilter]]. The per-signal functions
  * above re-tokenize per signal (~15 passes/row when composed); this
- * evaluates [[graft.core.text.TextOps.gopherStats]] once and extracts
+ * evaluates [[TextOps.gopherStats]] once and extracts
  * struct fields. Field order: the ten base signals, then
  * top_{n}gram_ratio for each ascending n in `topNs`, then
  * dup_{n}gram_ratio for each ascending n in `dupNs`.
@@ -492,7 +356,7 @@ case class GopherSignalsStruct(child: Expression, topNs: Seq[Int], dupNs: Seq[In
 object GopherSignalsStruct {
   def compute(text: UTF8String, topNs: Array[Int],
               dupNs: Array[Int]): org.apache.spark.sql.catalyst.InternalRow = {
-    val s = graft.core.text.TextOps.gopherStats(text.toString, topNs, dupNs)
+    val s = TextOps.gopherStats(text.toString, topNs, dupNs)
     val vals = new Array[Any](10 + topNs.length + dupNs.length)
     vals(0) = s.nWords
     vals(1) = s.meanWordLen
@@ -515,7 +379,7 @@ object GopherSignalsStruct {
 
 /**
  * gopher_keep(text) -> boolean: the complete Gopher keep decision as ONE
- * short-circuiting kernel ([[graft.core.text.TextOps.gopherKeep]]). Always
+ * short-circuiting kernel ([[TextOps.gopherKeep]]). Always
  * equals the conjunction of threshold checks over `gopher_signals` fields
  * (bit-identical stats), but a rejected document exits at its first
  * violated stage — which a struct-valued expression cannot do. Use this
@@ -525,13 +389,13 @@ object GopherSignalsStruct {
  * struct kernel per conjunct inside FilterExec (no subexpression
  * elimination within a single predicate).
  */
-case class GopherKeep(child: Expression, params: graft.core.text.TextOps.GopherParams)
+case class GopherKeep(child: Expression, params: TextOps.GopherParams)
     extends UnaryExpression with ImplicitCastInputTypes {
   override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = BooleanType
   override def prettyName: String = "gopher_keep"
   override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.gopherKeep(v.asInstanceOf[UTF8String].toString, params)
+    TextOps.gopherKeep(v.asInstanceOf[UTF8String].toString, params)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     // binary name: GopherParams nests in the TextOps object, so the
     // generated Java must reference TextOps$GopherParams
@@ -543,257 +407,20 @@ case class GopherKeep(child: Expression, params: graft.core.text.TextOps.GopherP
   override protected def withNewChildInternal(c: Expression): GopherKeep = copy(child = c)
 }
 
-/** rolling_kgram_hashes(text, k, stride) -> array<long>: Rabin-Karp
-  * rolling hash of every k-char window (O(n), avalanched at emission) —
-  * the anchor primitive of substring-repetition dedup (Lee et al. 2021).
-  * Window start positions are implicit: out(i) covers chars
-  * [i*stride, i*stride + k). */
-case class RollingKgramHashes(child: Expression, k: Int, stride: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(k >= 2, "window length k must be >= 2")
-  require(stride >= 1, "stride must be >= 1")
-  override def inputTypes: Seq[DataType] = Seq(StringType)
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "rolling_kgram_hashes"
-  override def nullSafeEval(v: Any): Any =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      graft.core.text.TextOps.rollingKgramHashes(
-        v.asInstanceOf[UTF8String].toString, k, stride))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-      s"graft.core.text.TextOps.rollingKgramHashes($c.toString(), $k, $stride))")
-  override protected def withNewChildInternal(c: Expression): RollingKgramHashes =
-    copy(child = c)
-}
-
-/** merge_spans(positions, winLen) -> array<struct<span_start, span_end>>:
-  * maximal merged char spans covered by winLen-wide windows at the given
-  * start positions (any order — the result is a property of the window
-  * SET; null elements rejected); ends exclusive. */
-case class MergeSpans(child: Expression, winLen: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  require(winLen >= 1, "winLen must be >= 1")
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
-  override val dataType: DataType = ArrayType(StructType(Seq(
-    StructField("span_start", LongType, nullable = false),
-    StructField("span_end", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "merge_spans"
-  override def nullSafeEval(v: Any): Any = MergeSpans.merge(
-    v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], winLen)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.MergeSpans.merge($c, $winLen)")
-  override protected def withNewChildInternal(c: Expression): MergeSpans = copy(child = c)
-}
-
-object MergeSpans {
-  def merge(arr: org.apache.spark.sql.catalyst.util.ArrayData,
-            winLen: Int): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    var ni = 0
-    val nel = arr.numElements()
-    while (ni < nel) {
-      if (arr.isNullAt(ni))
-        throw new IllegalArgumentException(
-          "merge_spans: position array must not contain NULL elements")
-      ni += 1
-    }
-    val flat = graft.core.text.TextOps.mergeSpans(arr.toLongArray(), winLen)
-    val rows = new Array[Any](flat.length / 2)
-    var i = 0
-    while (i < rows.length) {
-      rows(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](flat(2 * i), flat(2 * i + 1)))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(rows)
-  }
-}
-
-/** http_body(payload) -> binary: strip the HTTP message header block from
-  * a WARC response payload (body passthrough when no HTTP status line
-  * leads the bytes — `resource` records carry content directly). */
-case class HttpBody(child: Expression) extends UnaryExpression
-    with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "http_body"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.warc.WarcParser.httpBody(v.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.core.warc.WarcParser.httpBody($c)")
-  override protected def withNewChildInternal(c: Expression): HttpBody = copy(child = c)
-}
-
-/** splice_out(text, array<struct<span_start, span_end>>) -> string with
-  * the [start, end) char ranges removed — the apply step of span-level
-  * dedup ([[graft.operators.Dedup.stripSpans]]). Ranges may be unsorted or
-  * overlapping; out-of-bounds offsets clamp. */
-case class SpliceOut(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType,
-    ArrayType(StructType(Seq(
-      StructField("span_start", LongType), StructField("span_end", LongType)))))
-  override def dataType: DataType = StringType
-  override def prettyName: String = "splice_out"
-  override def nullSafeEval(text: Any, spans: Any): Any =
-    SpliceOut.splice(text.asInstanceOf[UTF8String],
-      spans.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, s) => s"graft.functions.SpliceOut.splice($t, $s)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SpliceOut =
-    copy(left = l, right = r)
-}
-
-object SpliceOut {
-  def splice(text: UTF8String,
-             spans: org.apache.spark.sql.catalyst.util.ArrayData): UTF8String = {
-    val n = spans.numElements()
-    if (n == 0) return text
-    val starts = new Array[Long](n)
-    val ends = new Array[Long](n)
-    var i = 0
-    while (i < n) {
-      if (spans.isNullAt(i))
-        throw new IllegalArgumentException("splice_out: span array must not contain NULLs")
-      val r = spans.getStruct(i, 2)
-      if (r.isNullAt(0) || r.isNullAt(1))
-        throw new IllegalArgumentException(
-          "splice_out: span_start/span_end must not be NULL (getLong on a " +
-            "null slot would silently splice offset 0)")
-      starts(i) = r.getLong(0)
-      ends(i) = r.getLong(1)
-      i += 1
-    }
-    UTF8String.fromString(
-      graft.core.text.TextOps.spliceOut(text.toString, starts, ends))
-  }
-}
-
-/** Codegen'd non-empty word count (size(filter(split(...))) is a
-  * CodegenFallback higher-order composition). */
-case class WordCount(child: Expression) extends TextUnary {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "word_count"
-  override protected def fn: String = "wordCount"
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.wordCount(v.asInstanceOf[UTF8String].toString)
-  override protected def withNewChildInternal(c: Expression): WordCount = copy(child = c)
-}
-
-// ------------------- real HTML extraction (crawl stage) -------------------
-
-/** Real HTML -> document text (the crawl "payload -> text" stage; full
-  * extraction spec in [[graft.core.text.HtmlExtract]]): script/style
-  * dropped, block tags break lines, entities decoded, whitespace
-  * collapsed. */
-case class HtmlTextOf(child: Expression) extends TextUnary {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "html_text"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(
-      graft.core.text.HtmlExtract.text(v.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-      s"graft.core.text.HtmlExtract.text($c.toString()))")
-  override protected def withNewChildInternal(c: Expression): HtmlTextOf = copy(child = c)
-}
-
-/** First `<title>` content (entity-decoded, collapsed); NULL when the
-  * document has none. */
-case class HtmlTitleOf(child: Expression) extends TextUnary {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = true
-  override def prettyName: String = "html_title"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any = {
-    val t = graft.core.text.HtmlExtract.title(v.asInstanceOf[UTF8String].toString)
-    if (t == null) null else UTF8String.fromString(t)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      String t = graft.core.text.HtmlExtract.title($c.toString());
-      if (t == null) { ${ev.isNull} = true; }
-      else { ${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(t); }
-    """)
-  override protected def withNewChildInternal(c: Expression): HtmlTitleOf = copy(child = c)
-}
-
-/** NFC normalization (UAX #15, JDK Normalizer); oracled independently
-  * against DuckDB's `nfc_normalize` in the gate. */
-case class NfcNormalize(child: Expression) extends TextUnary {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfc"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(
-      graft.core.text.UnicodeClean.nfc(v.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-      s"graft.core.text.UnicodeClean.nfc($c.toString()))")
-  override protected def withNewChildInternal(c: Expression): NfcNormalize = copy(child = c)
-}
-
-/** NFKC compatibility normalization (ligatures, width, circled digits). */
-case class NfkcNormalize(child: Expression) extends TextUnary {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "nfkc"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(
-      graft.core.text.UnicodeClean.nfkc(v.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-      s"graft.core.text.UnicodeClean.nfkc($c.toString()))")
-  override protected def withNewChildInternal(c: Expression): NfkcNormalize = copy(child = c)
-}
-
-/** Undo UTF-8-read-as-windows-1252 mojibake (up to 3 layers); clean text
-  * passes through unchanged — see [[graft.core.text.UnicodeClean]]. */
-case class FixMojibake(child: Expression) extends TextUnary {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "fix_mojibake"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any =
-    UTF8String.fromString(
-      graft.core.text.UnicodeClean.fixMojibake(v.asInstanceOf[UTF8String].toString))
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"org.apache.spark.unsafe.types.UTF8String.fromString(" +
-      s"graft.core.text.UnicodeClean.fixMojibake($c.toString()))")
-  override protected def withNewChildInternal(c: Expression): FixMojibake = copy(child = c)
-}
-
-/** Mojibake evidence count (cp1252-shaped UTF-8 lead/continuation pairs
-  * plus U+FFFD replacements) — a quality signal; 0 on clean text. */
-case class MojibakeScore(child: Expression) extends TextUnary {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "mojibake_score"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any =
-    graft.core.text.UnicodeClean.mojibakeScore(v.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.core.text.UnicodeClean.mojibakeScore($c.toString())")
-  override protected def withNewChildInternal(c: Expression): MojibakeScore = copy(child = c)
-}
-
 /** Wordlist (badwords) occurrence count — the C4 blocklist-filter
   * signal: normalized-token hits against a fixed term list (single terms
   * by set membership, phrases at every start position). `terms` is a
   * build-time Seq so structurally identical expressions canonicalize
-  * equal; the normalized [[graft.core.text.TextOps.TermList]] builds
+  * equal; the normalized [[TextOps.TermList]] builds
   * lazily and embeds per executor via addReferenceObj. */
-case class TermHits(child: Expression, terms: Seq[String]) extends TextUnary {
+case class TermHits(child: Expression, terms: Seq[String])
+    extends UnaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[DataType] = Seq(StringType)
   override def dataType: DataType = IntegerType
   override def prettyName: String = "term_hits"
-  override protected def fn: String = "" // custom codegen below
-  @transient private lazy val tl = new graft.core.text.TextOps.TermList(terms)
+  @transient private lazy val tl = new TextOps.TermList(terms)
   override def nullSafeEval(v: Any): Any =
-    graft.core.text.TextOps.termHits(v.asInstanceOf[UTF8String].toString, tl)
+    TextOps.termHits(v.asInstanceOf[UTF8String].toString, tl)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("termList", tl,
       "graft.core.text.TextOps.TermList")
@@ -801,115 +428,4 @@ case class TermHits(child: Expression, terms: Seq[String]) extends TextUnary {
       s"graft.core.text.TextOps.termHits($c.toString(), $ref)")
   }
   override protected def withNewChildInternal(c: Expression): TermHits = copy(child = c)
-}
-
-/** Parsed robots.txt rules for one crawler agent (RFC 9309 group
-  * selection inside [[graft.core.net.RobotsTxt.rulesFor]]): array of
-  * (allow, pattern) structs in document order. `agent` is a build-time
-  * literal — the crawler identity is per job, not per row. */
-case class RobotsRules(child: Expression, agent: String) extends TextUnary {
-  override def dataType: DataType =
-    ArrayType(RobotsRules.ElementSchema, containsNull = false)
-  override def prettyName: String = "robots_rules"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any =
-    RobotsRules.evalText(v.asInstanceOf[UTF8String].toString, agent)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val agentRef = ctx.addReferenceObj("agent", agent, "java.lang.String")
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.RobotsRules.evalText($c.toString(), $agentRef)")
-  }
-  override protected def withNewChildInternal(c: Expression): RobotsRules = copy(child = c)
-}
-
-object RobotsRules {
-  val ElementSchema: StructType = StructType(Seq(
-    StructField("allow", BooleanType, nullable = false),
-    StructField("pattern", StringType, nullable = false)))
-  def evalText(content: String, agent: String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val rules = graft.core.net.RobotsTxt.rulesFor(content, agent)
-    val out = new Array[Any](rules.length)
-    var i = 0
-    while (i < rules.length) {
-      out(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](rules(i).allow, UTF8String.fromString(rules(i).pattern)))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-}
-
-/** Does a robots.txt pattern (`*` wildcards, final-`$` anchor) match the
-  * URL path from its start? (RFC 9309 §2.2.2 matching.) */
-case class RobotsMatch(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(StringType, StringType)
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "robots_match"
-  override def nullSafeEval(p: Any, path: Any): Any =
-    graft.core.net.RobotsTxt.matches(
-      p.asInstanceOf[UTF8String].toString, path.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (p, s) =>
-      s"graft.core.net.RobotsTxt.matches($p.toString(), $s.toString())")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): RobotsMatch =
-    copy(left = l, right = r)
-}
-
-/** Every `<a href>` value in document order (entity-decoded, unresolved). */
-case class HtmlLinksOf(child: Expression) extends TextUnary {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "html_links"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any =
-    HtmlLinksOf.evalText(v.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HtmlLinksOf.evalText($c.toString())")
-  override protected def withNewChildInternal(c: Expression): HtmlLinksOf = copy(child = c)
-}
-
-object HtmlLinksOf {
-  // named evalText, not eval: Expression.eval(InternalRow) would suppress
-  // the same-named static forwarder (the LangIdConf lesson)
-  def evalText(s: String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val links = graft.core.text.HtmlExtract.links(s)
-    val out = new Array[Any](links.length)
-    var i = 0
-    while (i < links.length) { out(i) = UTF8String.fromString(links(i)); i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-}
-
-/** Every `<a href>` with its rendered anchor text, in document order, as
-  * array<struct<href,text>> — the link-description signal (anchor-term
-  * host profiles, link spam, alt-text corpora). */
-case class HtmlAnchorsOf(child: Expression) extends TextUnary {
-  override def dataType: DataType =
-    ArrayType(HtmlAnchorsOf.ElementSchema, containsNull = false)
-  override def prettyName: String = "html_anchors"
-  override protected def fn: String = "" // custom codegen below
-  override def nullSafeEval(v: Any): Any =
-    HtmlAnchorsOf.evalText(v.asInstanceOf[UTF8String].toString)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.HtmlAnchorsOf.evalText($c.toString())")
-  override protected def withNewChildInternal(c: Expression): HtmlAnchorsOf = copy(child = c)
-}
-
-object HtmlAnchorsOf {
-  val ElementSchema: StructType = StructType(Seq(
-    StructField("href", StringType, nullable = false),
-    StructField("text", StringType, nullable = false)))
-  def evalText(s: String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val as = graft.core.text.HtmlExtract.anchors(s)
-    val out = new Array[Any](as.length)
-    var i = 0
-    while (i < as.length) {
-      out(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](UTF8String.fromString(as(i)._1), UTF8String.fromString(as(i)._2)))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
 }

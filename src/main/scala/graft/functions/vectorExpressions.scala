@@ -3,13 +3,80 @@ package graft.functions
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Vector expressions over array<float>/array<double> columns, codegen'd
   * into graft.core.vector.VectorOps tight loops (Spark's zip_with/aggregate
   * higher-order functions are CodegenFallback and allocate per element —
-  * measured 20x slower on the candidate-pair cosine path). */
+  * measured 20x slower on the candidate-pair cosine path). The expressions
+  * here take either element type or carry a matrix; the sorted-array
+  * kernels of the set-similarity joins are [[KernelCall]] rows over
+  * [[VectorKernels]]. */
+
+/** The static kernels of the sorted-array functions of
+  * [[GraftFunctions.builders]]: one linear merge per row over Spark's
+  * internal arrays, no per-element boxing, no hash set. */
+object VectorKernels {
+  /** |a ∩ b| for two SORTED array<long> — the exact overlap of two
+    * shingle-hash sets in the set-similarity verifiers. */
+  def sortedIntersectCount(a: ArrayData, b: ArrayData): Long = {
+    val x = a.toLongArray()
+    val y = b.toLongArray()
+    var i = 0; var j = 0; var n = 0L
+    while (i < x.length && j < y.length) {
+      if (x(i) < y(j)) i += 1
+      else if (x(i) > y(j)) j += 1
+      else { n += 1; i += 1; j += 1 }
+    }
+    n
+  }
+
+  /** The L2AP prefix (Anastasiu & Karypis 2014) of a unit-normalized
+    * sparse vector given as parallel (keys, weights) arrays in global
+    * rarest-first order, as array<struct<h, w, nx>>: features are kept
+    * while the running SUFFIX norm stays >= t, each with its own weight
+    * `w` and the suffix norm AFTER it, `nx = ||x[i+1..]||`. At the
+    * globally smallest SHARED feature of a pair (position i of a, j of b)
+    * every other shared feature ranks after both, so
+    * cos(a,b) <= w_a[i]*w_b[j] + nx_a[i]*nx_b[j] (Cauchy-Schwarz on the
+    * suffixes) — the positional bound, strictly tighter than the plain
+    * suffix-norm product sqrt(w_a^2+nx_a^2)*sqrt(w_b^2+nx_b^2), and exact:
+    * the first-shared-feature row of a qualifying pair always passes, so
+    * completeness is preserved while non-first rows that fail only shed
+    * duplicate candidates. */
+  def l2apPrefix(keys: ArrayData, weights: ArrayData, t: Double): ArrayData = {
+    val k = keys.toLongArray()
+    val w = weights.toDoubleArray()
+    val n = math.min(k.length, w.length)
+    val out = new scala.collection.mutable.ArrayBuffer[Any](8)
+    var s = 0.0 // sum of squares BEFORE position i
+    var i = 0
+    while (i < n && !(1.0 - s < t * t)) {
+      val nx = math.sqrt(math.max(0.0, (1.0 - s) - w(i) * w(i)))
+      out += new GenericInternalRow(Array[Any](k(i), w(i), nx))
+      s += w(i) * w(i)
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+
+  /** Dot product of two sparse vectors given as key-sorted parallel
+    * arrays — the verification kernel of the exact sparse cosine join. */
+  def sortedWeightedDot(ka: ArrayData, wa: ArrayData, kb: ArrayData, wb: ArrayData): Double = {
+    val xa = ka.toLongArray(); val va = wa.toDoubleArray()
+    val xb = kb.toLongArray(); val vb = wb.toDoubleArray()
+    var i = 0; var j = 0; var s = 0.0
+    val na = math.min(xa.length, va.length)
+    val nb = math.min(xb.length, vb.length)
+    while (i < na && j < nb) {
+      if (xa(i) < xb(j)) i += 1
+      else if (xa(i) > xb(j)) j += 1
+      else { s += va(i) * vb(j); i += 1; j += 1 }
+    }
+    s
+  }
+}
 
 private object VecType {
   def elem(dt: DataType): Option[DataType] = dt match {
@@ -73,38 +140,6 @@ case class LshSig(child: Expression, planes: Int, table: Int) extends UnaryExpre
   override protected def withNewChildInternal(c: Expression): LshSig = copy(child = c)
 }
 
-/** sorted_intersect_count(a, b) -> |a ∩ b| for two SORTED array<long>
-  * columns, via a single linear merge (no per-element boxing, no hash set).
-  * Used by the set-similarity verifiers: candidate pairs carry two sorted
-  * 64-bit shingle-hash arrays; the intersect count is the exact overlap. */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType, containsNull = false), ArrayType(LongType, containsNull = false))
-  override def dataType: DataType = LongType
-  override def prettyName: String = "sorted_intersect_count"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    SortedIntersectCount.count(
-      a.asInstanceOf[ArrayData].toLongArray(), b.asInstanceOf[ArrayData].toLongArray())
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.SortedIntersectCount.count($a.toLongArray(), $b.toLongArray())")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): SortedIntersectCount =
-    copy(left = l, right = r)
-}
-
-object SortedIntersectCount {
-  def count(a: Array[Long], b: Array[Long]): Long = {
-    var i = 0; var j = 0; var n = 0L
-    while (i < a.length && j < b.length) {
-      if (a(i) < b(j)) i += 1
-      else if (a(i) > b(j)) j += 1
-      else { n += 1; i += 1; j += 1 }
-    }
-    n
-  }
-}
-
 /** centroid_cos(vec, cluster) -> cosine(vec, centroids[cluster]). The
   * centroid matrix is plan-embedded (addReferenceObj), same pattern as
   * NearestCentroids — used by the exact cluster-pruned similarity join to
@@ -161,143 +196,6 @@ case class BloomContainsLit(child: Expression, filterBytes: Array[Byte])
     defineCodeGen(ctx, ev, h => s"$ref.mightContain($h)")
   }
   override protected def withNewChildInternal(c: Expression): BloomContainsLit = copy(child = c)
-}
-
-/** hll_union(a, b) -> unioned AK-spec sketch bytes (scalar two-sketch
-  * composition; the aggregate form is hll_merge). */
-case class HllUnion(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, BinaryType)
-  override def dataType: DataType = BinaryType
-  override def prettyName: String = "hll_union"
-  override def nullSafeEval(a: Any, b: Any): Any =
-    graft.core.sketch.SketchOps.hllUnion(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.core.sketch.SketchOps.hllUnion($a, $b)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): HllUnion =
-    copy(left = l, right = r)
-}
-
-/** kll_splits(sketch, n) -> n-1 equi-height bucket boundaries — the
-  * sketch-driven range-partitioning primitive: compute split points from a
-  * KLL built in one pass, then range-partition 100 TB by them (what
-  * RangePartitioner does by sampling, but mergeable and exact-one-pass). */
-case class KllSplits(left: Expression, right: Expression)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] = Seq(BinaryType, IntegerType)
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "kll_splits"
-  override def nullSafeEval(sketch: Any, n: Any): Any = {
-    val bytes = sketch.asInstanceOf[Array[Byte]]
-    val buckets = n.asInstanceOf[Int]
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      graft.core.sketch.SketchOps.kllSplits(bytes, buckets))
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, n) =>
-      s"new org.apache.spark.sql.catalyst.util.GenericArrayData(" +
-      s"graft.core.sketch.SketchOps.kllSplits($s, $n))")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): KllSplits =
-    copy(left = l, right = r)
-}
-
-/** l2ap_prefix(keys, weights) -> array<struct<h:long, w:double, nx:double>>
-  * — the L2AP prefix (Anastasiu & Karypis 2014): features in global
-  * rarest-first order are kept while the running SUFFIX norm (of the
-  * unit-normalized weight vector) stays >= t. Each kept feature carries its
-  * own weight `w` and the suffix norm AFTER it, `nx = ||x[i+1..]||`:
-  * at the globally smallest SHARED feature of a pair (position i of a, j of
-  * b) every other shared feature ranks after both, so
-  * cos(a,b) <= w_a[i]*w_b[j] + nx_a[i]*nx_b[j] (Cauchy-Schwarz on the
-  * suffixes) — the positional bound, strictly tighter than the plain
-  * suffix-norm product sqrt(w_a^2+nx_a^2)*sqrt(w_b^2+nx_b^2) (2-D
-  * Cauchy-Schwarz), and exact: the first-shared-feature row of a
-  * qualifying pair always passes, so completeness is preserved while
-  * non-first rows that fail only shed duplicate candidates. */
-case class L2apPrefix(left: Expression, right: Expression, t: Double)
-    extends BinaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false))
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("h", LongType, nullable = false),
-      StructField("w", DoubleType, nullable = false),
-      StructField("nx", DoubleType, nullable = false))), containsNull = false)
-  override def prettyName: String = "l2ap_prefix"
-  override def nullSafeEval(k: Any, w: Any): Any =
-    L2apPrefix.prefix(k.asInstanceOf[ArrayData].toLongArray(),
-      w.asInstanceOf[ArrayData].toDoubleArray(), t)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (k, w) =>
-      s"graft.functions.L2apPrefix.prefix($k.toLongArray(), $w.toDoubleArray(), $t)")
-  override protected def withNewChildrenInternal(l: Expression, r: Expression): L2apPrefix =
-    copy(left = l, right = r)
-}
-
-object L2apPrefix {
-  def prefix(keys: Array[Long], w: Array[Double],
-             t: Double): org.apache.spark.sql.catalyst.util.GenericArrayData = {
-    val n = math.min(keys.length, w.length)
-    val out = new scala.collection.mutable.ArrayBuffer[Any](8)
-    var s = 0.0 // sum of squares BEFORE position i
-    var i = 0
-    var go = true
-    while (go && i < n) {
-      val suffixSq = 1.0 - s
-      if (suffixSq < t * t) go = false
-      else {
-        val nx = math.sqrt(math.max(0.0, suffixSq - w(i) * w(i)))
-        out += new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-          Array[Any](keys(i), w(i), nx))
-        s += w(i) * w(i)
-        i += 1
-      }
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray)
-  }
-}
-
-/** sorted_weighted_dot(ka, wa, kb, wb) -> dot product of two sparse vectors
-  * given as key-sorted parallel arrays — the verification kernel of the
-  * exact sparse cosine join (one linear merge per candidate pair, no
-  * per-element allocation). */
-case class SortedWeightedDot(first: Expression, second: Expression,
-                             third: Expression, fourth: Expression)
-    extends QuaternaryExpression with ImplicitCastInputTypes {
-  override def inputTypes: Seq[DataType] =
-    Seq(ArrayType(LongType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false),
-      ArrayType(LongType, containsNull = false),
-      ArrayType(DoubleType, containsNull = false))
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "sorted_weighted_dot"
-  override def nullSafeEval(ka: Any, wa: Any, kb: Any, wb: Any): Any =
-    SortedWeightedDot.dot(
-      ka.asInstanceOf[ArrayData].toLongArray(), wa.asInstanceOf[ArrayData].toDoubleArray(),
-      kb.asInstanceOf[ArrayData].toLongArray(), wb.asInstanceOf[ArrayData].toDoubleArray())
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (ka, wa, kb, wb) =>
-      s"graft.functions.SortedWeightedDot.dot($ka.toLongArray(), $wa.toDoubleArray(), " +
-      s"$kb.toLongArray(), $wb.toDoubleArray())")
-  override protected def withNewChildrenInternal(a: Expression, b: Expression,
-                                                 c: Expression, d: Expression): SortedWeightedDot =
-    copy(first = a, second = b, third = c, fourth = d)
-}
-
-object SortedWeightedDot {
-  def dot(ka: Array[Long], wa: Array[Double],
-          kb: Array[Long], wb: Array[Double]): Double = {
-    var i = 0; var j = 0; var s = 0.0
-    val na = math.min(ka.length, wa.length)
-    val nb = math.min(kb.length, wb.length)
-    while (i < na && j < nb) {
-      if (ka(i) < kb(j)) i += 1
-      else if (ka(i) > kb(j)) j += 1
-      else { s += wa(i) * wb(j); i += 1; j += 1 }
-    }
-    s
-  }
 }
 
 /** rotate_vec(vec) -> R^T * vec as array<double> — the OPQ rotation applied

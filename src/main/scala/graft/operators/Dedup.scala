@@ -44,15 +44,10 @@ object Dedup {
     * equivalent builtin composition (transform/sequence/slice/array_join) is
     * CodegenFallback and measured 5-10x slower per pass. */
   def shingles(text: Column, n: Int): Column =
-    org.apache.spark.sql.graftshim.shims.column(
-      graft.functions.WordShingles(
-        org.apache.spark.sql.graftshim.shims.expression(text), n))
+    fn("word_shingles", text, lit(n))
 
   private def sortedIntersectCount(a: Column, b: Column): Column =
-    org.apache.spark.sql.graftshim.shims.column(
-      graft.functions.SortedIntersectCount(
-        org.apache.spark.sql.graftshim.shims.expression(a),
-        org.apache.spark.sql.graftshim.shims.expression(b)))
+    fn("sorted_intersect_count", a, b)
 
   /**
    * Exact verification of candidate pairs by full-set Jaccard over a
@@ -268,7 +263,7 @@ object Dedup {
     // its own exchange, and the candidate/verify stages are spread by the
     // explicit prefix repartition below
     val nonEmpty = docs.filter(trim(col(textCol)) =!= "")
-    // NOTE: WordShingles dedupes, so n-gram tf needs occurrence counts —
+    // NOTE: word_shingles dedupes, so n-gram tf needs occurrence counts —
     // use the positional sliding window for ngram > 1, plain split for 1
     val features =
       if (ngram == 1)
@@ -333,7 +328,7 @@ object Dedup {
     // every downstream row, while the dedup itself shuffles only 16-byte
     // id pairs.
     // Join filter = the POSITIONAL bound w_a*w_b + nx_a*nx_b >= t (exact at
-    // the first shared feature, see L2apPrefix scaladoc) — strictly tighter
+    // the first shared feature, see VectorKernels.l2apPrefix) — strictly tighter
     // than the plain suffix-norm product, so fewer candidates reach the
     // dedup shuffle and the verify join
     val candidates = prefix.as("a").join(prefix.as("b"),
@@ -461,7 +456,7 @@ object Dedup {
 
   /**
    * MinHash + LSH near-dup pairs. k min-hash signatures computed PER ROW by
-   * the codegen'd [[graft.functions.MinHashSig]] kernel (bit-identical to
+   * the codegen'd `minhash_sig` kernel (bit-identical to
    * the k-min-aggregates formulation min(xxhash64(lit(i), xxh3(sh))) —
    * pinned by test — but with NO corpus-sized shuffle: the previous
    * explode + 32-min groupBy moved every shingle row through an exchange,

@@ -23,7 +23,7 @@ import graft.functions.GraftFunctions.word_ngram_counts
   * is the unseen/OOV type).
   *
   * Scale shape (100-TB corpus, the design target):
-  *  - [[WordNgramCounts]] emits per-doc (gram, multiplicity) pairs —
+  *  - `word_ngram_counts` emits per-doc (gram, multiplicity) pairs —
   *    map-side pre-aggregation — so both training and scoring shuffle one
   *    row per DISTINCT gram per doc, never one per token.
   *  - Training is ONE `groupBy(gram)` count; context counts and V derive

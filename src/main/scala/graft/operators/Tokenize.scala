@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.shims.{column, expression}
 import graft.core.text.{Bpe, BpeModel}
-import graft.functions.{BpeDecodeLit, BpeEncodeLit, TextSegments}
+import graft.functions.{BpeDecodeLit, BpeEncodeLit}
+import graft.functions.GraftFunctions.fn
 
 /** Corpus-trained byte-level BPE tokenization — the step that turns a
   * cleaned/dedup'd corpus into the token ids the packing operators
@@ -14,7 +15,9 @@ import graft.functions.{BpeDecodeLit, BpeEncodeLit, TextSegments}
   * segment-TYPE table (fastBPE/HF-tokenizers design). */
 object Tokenize {
 
-  def textSegments(c: Column): Column = column(TextSegments(expression(c)))
+  /** Lossless GPT-2-style segmentation (space attaches to the FOLLOWING
+    * segment): `array_join(textSegments(t), '') == t`. */
+  def textSegments(c: Column): Column = fn("text_segments", c)
   def bpeEncode(c: Column, model: BpeModel): Column =
     column(BpeEncodeLit(expression(c), model))
   def bpeDecode(c: Column, model: BpeModel): Column =

@@ -2,16 +2,14 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.shims.{column, expression}
-import graft.functions.DomainSuffixes
-import graft.functions.GraftFunctions.host_of_url
+import graft.functions.GraftFunctions.{fn, host_of_url}
 
 /** URL/domain blocklist filtering — the CCNet/RefinedWeb "UT1 blocklist"
   * step: drop every document whose host falls under a blocked domain,
   * where blocking `example.com` must catch `a.b.example.com`.
   *
   * Mechanics: explode each doc's host into its dot-suffix chain
-  * ([[DomainSuffixes]], ≤ label-count rows per doc) and semi-join the
+  * (`domain_suffixes`, ≤ label-count rows per doc) and semi-join the
   * blocklist on exact string equality. That turns subdomain matching into
   * a plain hash equi-join: no LIKE scans, no per-pattern regex, and the
   * blocklist side (unique domains) is the natural broadcast/build side at
@@ -21,7 +19,11 @@ import graft.functions.GraftFunctions.host_of_url
   * the output. */
 object UrlFilter {
 
-  def domain_suffixes(c: Column): Column = column(DomainSuffixes(expression(c)))
+  /** All dot-suffixes of a hostname, most-specific first:
+    * `a.b.example.com -> [a.b.example.com, b.example.com, example.com,
+    * com]`; label count is the split of the '.'-separated name (empty
+    * labels kept, so a malformed `a..com` produces its literal suffixes). */
+  def domain_suffixes(c: Column): Column = fn("domain_suffixes", c)
 
   /** Ids of docs whose `urlCol` host has a suffix in `blocklist`
     * (`domainCol`, lowercase exact labels). */

@@ -21,8 +21,14 @@ import org.apache.spark.sql.types.StructType
 object shims {
   def column(e: Expression): Column =
     org.apache.spark.sql.classic.ExpressionUtils.column(e)
-  def expression(c: Column): Expression =
-    org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+  /** A `lit` column converts now, to the Literal it becomes at analysis,
+    * so a function builder can read its value; any other column stays the
+    * converter's lazy wrapper. */
+  def expression(c: Column): Expression = c.node match {
+    case l: org.apache.spark.sql.internal.Literal =>
+      org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(l)
+    case _ => org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+  }
 
   /** DataFrame over an InternalRow RDD with FRESH attribute ids — the
     * re-rooting primitive behind the engine's `pin` (self-join-safe

@@ -65,6 +65,11 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan.contains("*(1) Project [xxh3_64") || plan.contains("*(1) Project [graft"),
       plan.take(1500))
     assert("\\*\\(1\\) Filter".r.findFirstIn(plan).isDefined, plan.take(1500))
+    // a function declared as a KernelCall row (host_of_url) fuses into the
+    // same codegen'd Project as the hand-written xxh3_64
+    val project = plan.split("\n").find(_.contains("*(1) Project [")).getOrElse("")
+    assert(project.contains("xxh3_64(url") &&
+      project.contains("static_invoke(graft.core.net.DomainUtil.hostOfUrlUTF8(url"), plan.take(1500))
     // and eval works through codegen end-to-end
     assert(df.limit(5).collect().length === 5)
   }

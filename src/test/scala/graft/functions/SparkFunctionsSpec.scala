@@ -173,7 +173,7 @@ class SparkFunctionsSpec extends AnyFunSuite {
   }
 
   test("hashed_ngram_features: polynomial bucket hash, collision sums, idx-sorted") {
-    import graft.functions.HashedNgramFeatures.bucketOf
+    import graft.functions.TextKernels.bucketOf
     // bucket math is the documented recurrence
     assert(bucketOf("ab", 64) === ((31L * 'a' + 'b') % 1000003 % 64).toInt)
     val dim = 8 // force collisions
@@ -195,7 +195,7 @@ class SparkFunctionsSpec extends AnyFunSuite {
     val df = Seq((1L, "a b a")).toDF("id", "text")
     val feats = hashed_ngram_features($"text", 3, 1)
     val got = df.select(linear_score_lit(feats, w, 10.0)).collect()(0).getDouble(0)
-    import graft.functions.HashedNgramFeatures.bucketOf
+    import graft.functions.TextKernels.bucketOf
     val want = 10.0 + 2.0 * w(bucketOf("a", 3)) + 1.0 * w(bucketOf("b", 3))
     assert(math.abs(got - want) < 1e-12)
     // weights array shorter than dim: hashed idx beyond w.length contributes 0
@@ -313,7 +313,7 @@ class SparkFunctionsSpec extends AnyFunSuite {
     // registry must have no duplicate SQL names that would shadow silently
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext)
-    val names = GraftFunctions.builders.map(_._1)
+    val names = GraftFunctions.builders.map(_.name)
     assert(names.distinct.size === names.size, "duplicate SQL function names")
     // every builder constructs an expression from dummy children without
     // blowing up at wiring time (arity errors surface at analysis instead)
