@@ -1,6 +1,7 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
 import graft.operators.Plans
 import graft.pipelines.DnsMagnitude
 import graft.sources.RecordsCsv
@@ -162,9 +163,7 @@ object DnsMag {
           // pass --date explicitly to skip it on big captures.
           if (!isPcap)
             sys.error("--date YYYY-MM-DD required for csv/tsv (no wall-clock defaults in jobs)")
-          val d = recs.agg(org.apache.spark.sql.functions.min(
-              org.apache.spark.sql.functions.to_date(
-                org.apache.spark.sql.functions.col("ts"))).as("d"))
+          val d = recs.agg(min(to_date(col("ts"))).as("d"))
             .collect()(0).getAs[java.sql.Date]("d")
           if (d == null)
             sys.error(s"empty capture: $input has no decodable DNS records " +
@@ -174,18 +173,21 @@ object DnsMag {
         // reference semantics: invalid records (negative count, bad IP past
         // the header heuristic) abort the collect
         // (/root/reference/internal/csv.go:98-110 returns an error). The
-        // invalid count rides the SAME scan as the aggregation via observe()
-        // — a separate pre-count doubles input IO at every scale — so the
-        // check runs after the write and uncommits the output on failure.
-        val obs = org.apache.spark.sql.Observation("graft_invalid")
-        val observed = recs.observe(obs,
-          org.apache.spark.sql.functions.coalesce(
-            org.apache.spark.sql.functions.sum(
-              org.apache.spark.sql.functions.when(
-                org.apache.spark.sql.functions.col("invalid"), 1L).otherwise(0L)),
-            org.apache.spark.sql.functions.lit(0L)).as("bad"))
+        // record and invalid counts ride the SAME scan as the aggregation
+        // via observe() — a separate pre-count doubles input IO at every
+        // scale — so the check runs after the write and uncommits the
+        // output on failure.
+        val obs = Observation("graft_records")
+        val observed = recs.observe(obs, count(lit(1)).as("records"),
+          coalesce(sum(when(col("invalid"), 1L).otherwise(0L)), lit(0L)).as("bad"))
+        val start = System.nanoTime()
         writeState(DnsMagnitude.collect(observed, date), out)
-        val bad = obs.get("bad").asInstanceOf[Long]
+        val elapsed = (System.nanoTime() - start) / 1e9
+        val seen = obs.get
+        val (records, bad) = (seen("records").asInstanceOf[Long], seen("bad").asInstanceOf[Long])
+        // run stats, the reference collector's records/s counter
+        System.err.println(f"""{"records":$records,"invalid":$bad,""" +
+          f""""records_per_sec":${records / elapsed}%.1f,"elapsed_s":$elapsed%.3f}""")
         if (bad > 0 && !rest.contains("--skip-invalid")) {
           val p = new org.apache.hadoop.fs.Path(out)
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)

@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -11,6 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.core.sketch.{Hll, SketchOps}
 import graft.functions.GraftFunctions._
 import graft.operators.Plans
+import scala.jdk.CollectionConverters._
 
 /**
  * The reference-compatible DNS-magnitude pipeline over record tables
@@ -46,21 +47,108 @@ object DnsMagnitude {
     * client sketches == the global client sketch exactly — register-wise
     * max distributes over set union). This reproduces the reference's
     * "count all queries, even invalid ones" semantics
-    * (/root/reference/internal/dataset.go:161-184) without a second pass. */
+    * (/root/reference/internal/dataset.go:161-184) without a second pass.
+    *
+    * Rows flagged `invalid` (negative/bad counts, unparseable IPs) are
+    * excluded — the reference hard-errors on these; here the caller counts
+    * them, e.g. with `observe` (see jobs.DnsMag failOnInvalid).
+    *
+    * Eager, on one of two paths:
+    *  - the records' plan reads files of at most [[DriverMaxInputBytes]]
+    *    in total (sizes known from its file index, as for
+    *    [[graft.sources.RecordsCsv.read]] and `RecordsPcap.read`): one
+    *    Spark job builds one partial sketch and query sum per domain per
+    *    partition, the driver merges them (`Hll.union`, overflow-checked
+    *    sums), and the state comes back as a local frame of the same schema
+    *    as the plan path's. `DnsMagCbor.write`, [[aggregate]] and
+    *    [[report]] then run no further Spark job. The job is a Dataset
+    *    action, so an `observe` on the records fires;
+    *  - any other input (larger, unsized or streaming) returns
+    *    [[collectByPlan]], lazily. */
   def collect(records: DataFrame, date: java.sql.Date): DataFrame = {
-    // honor the source's invalid flag when present (negative/bad counts,
-    // unparseable IPs) — the reference hard-errors on these; here they are
-    // excluded and countable by the caller (see jobs.DnsMag failOnInvalid)
+    val plan = collectByPlan(records, date)
+    if (fitsDriver(records)) collectOnDriver(records, date, plan.schema) else plan
+  }
+
+  /** Largest input [[collect]] merges on the driver, in file bytes as
+    * listed (compressed bytes for gzip). Both paths scan and partially
+    * aggregate alike; the driver path saves the exchange, the final
+    * aggregate's stage and its job, but merges every partition's partial
+    * sketches on one thread, which costs more as sketches turn dense.
+    * Measured on 4 cores (`local[4]`, local disk), collect ->
+    * `DnsMagCbor.write` of gzip CSV in 8 files over about 1,500 domains,
+    * driver vs plan, median of 5 to 7 warm runs: 0.3 MB 0.23 vs 0.24 s;
+    * 3.5 MB 0.59 vs 0.65 s; 7.1 MB 1.07 vs 1.14 s; 10 MB 1.23 vs 1.23 s,
+    * the crossover; 14.5 MB 1.83 vs 1.53 s; 61 MB 5.25 vs 4.86 s. In 256
+    * files, 4.6 MB took 0.88 vs 0.90 s. */
+  private[graft] val DriverMaxInputBytes = 8L * 1024 * 1024
+
+  private def fitsDriver(records: DataFrame): Boolean = {
+    def typed(name: String, t: DataType) =
+      records.schema.find(_.name == name).exists(_.dataType == t)
+    !records.isStreaming && typed("hash", LongType) && typed("domain", StringType) &&
+      typed("cnt", LongType) && shims.inputFileBytes(records).exists(_ <= DriverMaxInputBytes)
+  }
+
+  /** The rows that count: valid, with a client hash. */
+  private def counted(records: DataFrame): DataFrame = {
     val clean =
       if (records.columns.contains("invalid")) records.filter(!col("invalid"))
       else records
     clean.filter(col("hash").isNotNull)
-      .groupBy(when(col("domain").isNull || col("domain") === ".",
-        lit(null).cast("string")).otherwise(col("domain")).as("domain"))
+  }
+
+  /** The group key: root "." and invalid (NULL) domains share the NULL key. */
+  private def domainKey: Column =
+    when(col("domain").isNull || col("domain") === ".", lit(null).cast("string"))
+      .otherwise(col("domain")).as("domain")
+
+  /** [[collect]] as a lazy Spark plan whatever the input: a partial and a
+    * final aggregate around one exchange. */
+  private[graft] def collectByPlan(records: DataFrame, date: java.sql.Date): DataFrame =
+    counted(records)
+      .groupBy(domainKey)
       .agg(hll_build(col("hash")).as("hll"), sum(col("cnt")).as("queries"))
       .withColumn("date", lit(date))
       .withColumn("version", lit(StateVersion))
       .select(col("date"), col("domain"), col("hll"), col("queries"), col("version"))
+
+  /** One domain's sketch and query sum within a partition. */
+  private final class Partial {
+    val hll: Hll = Hll()
+    var queries: java.lang.Long = null
+  }
+
+  /** Per partition: one sketch and query sum per domain. */
+  private def partials(rows: Iterator[(String, Long, java.lang.Long)])
+      : Iterator[(String, Array[Byte], java.lang.Long)] = {
+    val groups = new java.util.HashMap[String, Partial]
+    rows.foreach { case (domain, hash, cnt) =>
+      var p = groups.get(domain)
+      if (p == null) { p = new Partial; groups.put(domain, p) }
+      p.hll.addRaw(hash)
+      if (cnt != null)
+        p.queries = if (p.queries == null) cnt else Math.addExact(p.queries.longValue, cnt.longValue)
+    }
+    groups.asScala.iterator.map { case (d, p) => (d, p.hll.toBytes, p.queries) }
+  }
+
+  /** [[collect]] of small records: partial sketches per partition in one
+    * job, merged on the driver into a local frame of `schema`. */
+  private def collectOnDriver(records: DataFrame, date: java.sql.Date,
+                              schema: StructType): DataFrame = {
+    val spark = records.sparkSession
+    val rows = counted(records).select(domainKey, col("hash"), col("cnt"))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.LONG))
+      .mapPartitions(partials)(Encoders.tuple(Encoders.STRING, Encoders.BINARY, Encoders.LONG))
+    val merged = shims.withCallSite(spark.sparkContext, "DnsMagnitude.collect partials") {
+      rows.collect()
+    }.groupBy(_._1)
+    val day = DateTimeUtils.fromJavaDate(date)
+    shims.localFrame(spark, schema, merged.toSeq.map { case (domain, ps) =>
+      new GenericInternalRow(Array[Any](day, UTF8String.fromString(domain),
+        mergeHll(ps.map(_._2)).toBytes, sumQueries(ps.map(_._3)), StateVersion)): InternalRow
+    })
   }
 
   /** aggregate with the reference's strict-date contract and version check

@@ -2,8 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions._
-import graft.core.net.PcapDns
+import graft.core.hash.XXH3
+import graft.core.net.{DomainUtil, IpUtil, PcapDns}
 
 /**
  * PCAP record source — the reference CLI's primary input
@@ -16,31 +16,33 @@ import graft.core.net.PcapDns
  * Scale shape: pcap is not splittable (records aren't self-synchronizing),
  * so parallelism is per FILE — `binaryFile` hands each capture file to one
  * task, which is exactly how multi-file capture archives are laid out. The
- * decode loop streams one file's bytes; gzip is sniffed by magic.
+ * decode loop streams one file's bytes; gzip is sniffed by magic. The same
+ * loop derives each record's columns, each value once: filters above it
+ * (say `DnsMagnitude.collect`'s) cannot be pushed into the decode, so no
+ * filter re-runs the IP truncation.
  */
 object RecordsPcap {
 
+  /** One decoded record with its derived columns. */
+  final case class Parsed(tsMicros: Long, client_ip: String, domain_raw: String, cnt: Long,
+                          invalid: Boolean, hash: java.lang.Long, domain: String)
+
+  // no unescaping: backslash escapes are a CSV-encoding artifact
+  // (csv.go:85,126-129); pcap names are the raw label bytes already
+  private def parsed(r: PcapDns.Record): Parsed = {
+    val truncated = IpUtil.truncate(r.srcIp)
+    Parsed(r.tsMicros, r.srcIp, r.qname, 1L, invalid = truncated == null,
+      if (truncated == null) null else XXH3.hash(truncated), DomainUtil.normalize(r.qname, 1))
+  }
+
   def read(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val recs = spark.read.format("binaryFile").load(path)
+    spark.read.format("binaryFile").load(path)
       .select(col("content"))
       .as[Array[Byte]]
-      .flatMap(bytes => PcapDns.decode(bytes))
-      .toDF()
-      .select(
-        (col("tsMicros").cast("double") / 1e6).cast("timestamp").as("ts"),
-        col("srcIp").as("client_ip"),
-        col("qname"))
-    recs
-      // no unescaping: backslash escapes are a CSV-encoding artifact
-      // (csv.go:85,126-129); pcap names are the raw label bytes already
-      .withColumn("domain_raw", col("qname"))
-      .withColumn("cnt", lit(1L))
-      .withColumn("invalid", col("client_ip").isNull ||
-        truncate_ip(col("client_ip")).isNull)
-      .withColumn("hash", xxh3_64(truncate_ip(col("client_ip"))))
-      .withColumn("domain", normalize_domain(col("domain_raw")))
-      .select(col("ts"), col("client_ip"), col("domain_raw"), col("cnt"),
-        col("invalid"), col("hash"), col("domain"))
+      .flatMap(bytes => PcapDns.decode(bytes).map(parsed))
+      .select((col("tsMicros").cast("double") / 1e6).cast("timestamp").as("ts"),
+        col("client_ip"), col("domain_raw"), col("cnt"), col("invalid"), col("hash"),
+        col("domain"))
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.StructType
 
@@ -65,6 +66,21 @@ object shims {
       case l: LocalRelation => Some((DataTypeUtils.fromAttributes(l.output), l.data))
       case _ => None
     }
+
+  /** The bytes of the files `df`'s plan reads, when every leaf of the plan
+    * is a batch file relation (its index lists the files, so the size is
+    * known without a job); None when any leaf is something else (an RDD,
+    * local rows, a V2 or streaming source). */
+  def inputFileBytes(df: DataFrame): Option[Long] = {
+    val sizes = df.queryExecution.analyzed.collectLeaves().map {
+      case l: LogicalRelation if !l.isStreaming => l.relation match {
+        case fs: HadoopFsRelation => Some(fs.location.sizeInBytes)
+        case _ => None
+      }
+      case _ => None
+    }
+    if (sizes.nonEmpty && sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None
+  }
 
   /** Eagerly checkpoint `rdd` (reliably into the context's checkpoint dir
     * when one is set, else locally) in exactly one job. */

@@ -93,10 +93,58 @@ class PlanShapeSpec extends AnyFunSuite {
     val recs = sources.RecordsCsv.read(spark, s"$dir/r.csv")
     val obs = org.apache.spark.sql.Observation()
     val observed = recs.observe(obs, sum(when(col("invalid"), 1L).otherwise(0L)).as("bad"))
-    val plan = pipelines.DnsMagnitude.collect(observed, java.sql.Date.valueOf("2000-01-01"))
+    val plan = pipelines.DnsMagnitude.collectByPlan(observed, java.sql.Date.valueOf("2000-01-01"))
       .queryExecution.executedPlan.toString
     val scans = "Scan (csv|text)".r.findAllIn(plan).length
     assert(scans === 1, s"expected ONE source scan, got $scans:\n${plan.take(2000)}")
+  }
+
+  /** The static kernel calls of `plan`'s operators, as (operator, method). */
+  private def kernelCalls(plan: org.apache.spark.sql.execution.SparkPlan): Seq[(String, String)] =
+    (plan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }).collect { case node => node }.flatMap { node =>
+      node.expressions.flatMap(_.collect {
+        case k: org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke =>
+          (node.nodeName, k.functionName)
+      })
+    }
+
+  test("collect's records truncate each IP once; no Filter calls a kernel") {
+    val dir = graft.SparkTestBase.tempDir("graft_plan_kernel").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/r.csv"),
+      "192.168.1.1,com,5\n192.168.1.2,org,3\n")
+    val date = java.sql.Date.valueOf("2000-01-01")
+    val csv = pipelines.DnsMagnitude.collectByPlan(sources.RecordsCsv.read(spark, s"$dir/r.csv")
+      .observe(org.apache.spark.sql.Observation(), count(lit(1)).as("n")), date)
+    // the one kernel call parses each record and truncates its IP once
+    assert(kernelCalls(csv.queryExecution.executedPlan) === Seq(("Generate", "parse")),
+      csv.queryExecution.executedPlan)
+    // pcap: the decode loop derives the columns, so the plan truncates nothing
+    val pcap = pipelines.DnsMagnitude.collectByPlan(sources.RecordsPcap.read(spark,
+      graft.core.net.PcapBytes.writeTest1Pcap(graft.SparkTestBase.tempDir("graft_plan_pcap"))
+        .toString), date)
+    val pcapPlan = pcap.queryExecution.executedPlan
+    assert(kernelCalls(pcapPlan).filter(c => c._1 == "Filter" || c._2 == "truncateIp") === Nil,
+      pcapPlan)
+    for (plan <- Seq(csv.queryExecution.executedPlan, pcapPlan))
+      assert(!plan.toString.contains("truncateIp"), plan)
+  }
+
+  test("a small collect merges on the driver: one job, one stage, a local frame") {
+    val dir = graft.SparkTestBase.tempDir("graft_plan_small").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/r.csv"),
+      "192.168.1.1,com,5\n192.168.1.2,org,3\n192.168.1.3,.,1\n")
+    val recs = sources.RecordsCsv.read(spark, s"$dir/r.csv")
+    var state: org.apache.spark.sql.DataFrame = null
+    assert(SparkTestBase.workOf {
+      state = pipelines.DnsMagnitude.collect(recs, java.sql.Date.valueOf("2000-01-01"))
+    } === ((1, 1)))
+    assert(state.isLocal)
+    assert(SparkTestBase.workOf(state.collect()) === ((0, 0)))
+    assert(state.schema === pipelines.DnsMagnitude.collectByPlan(recs,
+      java.sql.Date.valueOf("2000-01-01")).schema)
   }
 
   test("embedding near-dup join has no nested-loop/cartesian anywhere") {

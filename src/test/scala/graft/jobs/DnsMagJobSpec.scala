@@ -223,6 +223,52 @@ class DnsMagJobSpec extends AnyFunSuite {
     assert(st.agg(sum(col("queries"))).collect()(0).getLong(0) === 5L)
   }
 
+  /** What `body` prints on stderr. */
+  private def stderrOf(body: => Unit): String = {
+    val buf = new java.io.ByteArrayOutputStream
+    val prev = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try body finally System.setErr(prev)
+    buf.toString("UTF-8")
+  }
+
+  test("collect prints its run stats as one JSON line on stderr") {
+    val dir = graft.SparkTestBase.tempDir("graft_job_stats").toString
+    val tsv = getClass.getResource("/test2.tsv").getPath
+    val err = stderrOf(DnsMag.run(spark, Array("collect", "--input", tsv, "--tsv",
+      "--date", "2000-01-01", "--output", s"$dir/state.dnsmag")))
+    val line = err.linesIterator.filter(_.startsWith("{\"records\":")).toSeq
+    assert(line.size === 1, err)
+    val stats = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line.head)
+    val records = graft.sources.RecordsCsv.read(spark, tsv, tsv = true).count()
+    assert(stats.get("records").asLong === records)
+    assert(stats.get("invalid").asLong === 0L)
+    val elapsed = stats.get("elapsed_s").asDouble
+    assert(elapsed > 0)
+    assert(math.abs(stats.get("records_per_sec").asDouble - records / elapsed) <=
+      0.01 * records / elapsed, line.head)
+  }
+
+  test("a count beyond a long aborts collect as an invalid record, ANSI on or off") {
+    val dir = graft.SparkTestBase.tempDir("graft_job_big").toString
+    val f = new java.io.File(dir, "big.csv")
+    java.nio.file.Files.writeString(f.toPath,
+      "192.168.1.1,com,5\n192.168.1.2,org,99999999999999999999\n")
+    for (ansi <- Seq("true", "false")) {
+      val prev = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        val e = intercept[RuntimeException] {
+          DnsMag.run(spark, Array("collect", "--input", f.toString,
+            "--date", "2000-01-01", "--output", s"$dir/state$ansi"))
+        }
+        assert(e.getMessage.startsWith("1 invalid record(s) in") &&
+          e.getMessage.contains("--skip-invalid"), s"ansi=$ansi: ${e.getMessage}")
+        assert(!new java.io.File(s"$dir/state$ansi").exists())
+      } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+    }
+  }
+
   test("report and text view of a .dnsmag read through the scan decode it once") {
     val dir = graft.SparkTestBase.tempDir("graft_job_scan_once").toString
     val path = s"$dir/state.dnsmag"

@@ -213,7 +213,7 @@ class DnsMagnitudeSpec extends AnyFunSuite {
 
   test("aggregate names the stages of its merge with its pin's label") {
     val recs = RecordsCsv.read(spark, res("test2.tsv"), tsv = true)
-    val names = stagesOf(DnsMagnitude.aggregate(Seq(DnsMagnitude.collect(recs, d1))))
+    val names = stagesOf(DnsMagnitude.aggregate(Seq(DnsMagnitude.collectByPlan(recs, d1))))
     assert(names.nonEmpty && names.forall(_ == "DnsMagnitude.aggregate merged"), names)
   }
 
@@ -306,5 +306,21 @@ class DnsMagnitudeSpec extends AnyFunSuite {
     assert(rows.count(_.getAs[Boolean]("invalid")) === 1)              // negative flagged
     assert(rows.find(_.getAs[String]("client_ip") == "192.168.1.4")
       .get.getAs[Long]("cnt") === 1L)                                  // default 1
+  }
+
+  test("a count beyond a long is an invalid row, ANSI on or off") {
+    val tmp = java.nio.file.Files.createTempFile(graft.SparkTestBase.tempDir("graft_csv"), "big", ".csv")
+    java.nio.file.Files.writeString(tmp,
+      "192.168.1.1,com,5\n192.168.1.2,org,99999999999999999999\n192.168.1.3,net,9223372036854775807\n")
+    for (ansi <- Seq("true", "false")) {
+      val prev = spark.conf.get("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        val rows = RecordsCsv.read(spark, tmp.toString).collect()
+          .map(r => r.getAs[String]("client_ip") -> (r.get(2), r.getAs[Boolean]("invalid"))).toMap
+        assert(rows === Map("192.168.1.1" -> (5L, false), "192.168.1.2" -> (null, true),
+          "192.168.1.3" -> (Long.MaxValue, false)), s"ansi=$ansi")
+      } finally spark.conf.set("spark.sql.ansi.enabled", prev)
+    }
   }
 }
