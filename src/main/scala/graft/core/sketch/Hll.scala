@@ -93,19 +93,27 @@ final class Hll(val log2m: Int, val regwidth: Int) extends Serializable {
         small = (small & ~(3L << 60)) | (nw << (20 * n)) | ((n + 1).toLong << 60)
       } else {
         // overflow: spill small entries into a fresh map, then insert
-        val map = new IntByteMap(16)
-        var j = 0
-        while (j < n) {
-          val w = smallSlot(j)
-          map.setMax(w >>> regwidth, (w & ((1 << regwidth) - 1)).toByte)
-          j += 1
-        }
-        small = 0L
-        sparse = map
+        toSparse(n + 1)
         sparse.setMax(idx, value)
       }
     }
   }
+
+  /** Switch from small mode to a sparse map that holds `entries` registers
+    * without rehashing, or make room for that many in the sparse map. */
+  private def toSparse(entries: Int): Unit =
+    if (sparse != null) sparse.reserve(entries)
+    else {
+      val map = new IntByteMap(entries)
+      var j = 0
+      while (j < smallCount) {
+        val w = smallSlot(j)
+        map.setMax(w >>> regwidth, (w & ((1 << regwidth) - 1)).toByte)
+        j += 1
+      }
+      small = 0L
+      sparse = map
+    }
 
   /** Visit every non-zero register (mode-agnostic read path). */
   @inline private def foreachRegister(f: (Int, Byte) => Unit): Unit = {
@@ -160,12 +168,26 @@ final class Hll(val log2m: Int, val regwidth: Int) extends Serializable {
   def union(other: Hll): Unit = {
     require(other.log2m == log2m && other.regwidth == regwidth,
       s"HLL settings mismatch: ($log2m,$regwidth) vs (${other.log2m},${other.regwidth})")
+    // storage is sized once, up front: dense when either side is dense or
+    // the two register counts sum past InMemoryPromotion, else, when either
+    // side is a map, a map with room for both
     if (other.dense != null) { // dense into dense: a plain max loop
       val d = toDense()
       val o = other.dense
       var i = 0
       while (i < m) { if (o(i) > d(i)) d(i) = o(i); i += 1 }
-    } else other.foreachRegister((i, v) => setMax(i, v))
+    } else if (dense != null) other.foreachRegister((i, v) => setMax(i, v))
+    else {
+      val both = nonZeroRegisters + other.nonZeroRegisters
+      if (both > InMemoryPromotion) {
+        val d = toDense()
+        other.foreachRegister((i, v) => if (v > d(i)) d(i) = v)
+      } else {
+        // two small sketches may overlap and stay small: setMax spills them
+        if (sparse != null || other.sparse != null) toSparse(both)
+        other.foreachRegister((i, v) => setMax(i, v))
+      }
+    }
   }
 
   /**
@@ -279,6 +301,7 @@ object Hll {
         val wordLen = log2m + regwidth
         val nWords = (bytes.length - 3) * 8 / wordLen
         val d = if (nWords > InMemoryPromotion) h.toDense() else null
+        if (d == null && nWords > h.smallCap) h.toSparse(nWords)
         var k = 0
         while (k < nWords) {
           val w = r.bits(wordLen)
@@ -362,8 +385,8 @@ private[sketch] final class BitReader(bytes: Array[Byte], startOff: Int) {
  * boxed HashMap entries; matters because one HLL buffer lives per group in
  * Spark's object-hash aggregation map).
  */
-private[sketch] final class IntByteMap(initialCapacity: Int) extends Serializable {
-  private var cap = Integer.highestOneBit(math.max(initialCapacity, 8) * 2 - 1)
+private[sketch] final class IntByteMap(entries: Int) extends Serializable {
+  private var cap = IntByteMap.capacity(entries)
   private var keys = new Array[Int](cap)
   private var vals = new Array[Byte](cap)
   private var used = new Array[Boolean](cap)
@@ -376,8 +399,14 @@ private[sketch] final class IntByteMap(initialCapacity: Int) extends Serializabl
     while (used(i) && keys(i) != key) i = (i + 1) & (cap - 1)
     if (!used(i)) {
       used(i) = true; keys(i) = key; vals(i) = value; _size += 1
-      if (_size * 10 > cap * 7) grow()
+      if (_size * 10 > cap * 7) rehash(cap << 1)
     } else if (value > vals(i)) vals(i) = value
+  }
+
+  /** Make room for `n` entries without a further rehash. */
+  def reserve(n: Int): Unit = {
+    val c = IntByteMap.capacity(n)
+    if (c > cap) rehash(c)
   }
 
   def foreach(f: (Int, Byte) => Unit): Unit = {
@@ -390,12 +419,19 @@ private[sketch] final class IntByteMap(initialCapacity: Int) extends Serializabl
     h ^ (h >>> 16)
   }
 
-  private def grow(): Unit = {
+  private def rehash(newCap: Int): Unit = {
     val ok = keys; val ov = vals; val ou = used; val ocap = cap
-    cap <<= 1
+    cap = newCap
     keys = new Array[Int](cap); vals = new Array[Byte](cap); used = new Array[Boolean](cap)
     _size = 0
     var i = 0
     while (i < ocap) { if (ou(i)) setMax(ok(i), ov(i)); i += 1 }
   }
+}
+
+private[sketch] object IntByteMap {
+  /** The power-of-two slot count that holds `entries` under the 0.7 load
+    * factor (at least 16). */
+  def capacity(entries: Int): Int =
+    Integer.highestOneBit(math.max(entries * 10 / 7 + 1, 16) * 2 - 1)
 }

@@ -2,6 +2,7 @@ package graft.io
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.shims
 import graft.core.cbor.DnsMagCodec
 import graft.core.cbor.DnsMagCodec.{Dataset, DomainData}
 import graft.core.sketch.Hll
@@ -84,18 +85,23 @@ object DnsMagCbor {
     * top-N-truncated exchange format — cap the state with
     * Magnitude/DnsMagnitude top-N before exporting huge states.
     *
+    * A local state (a bare LocalRelation, as `DnsMagnitude.collect` and
+    * `aggregate` return for small inputs) is read with no query; any other
+    * state is selected and collected by a Spark query.
+    *
     * `maxExportRows` enforces that contract: exporting an untruncated
     * crawl-scale state would OOM the driver with an opaque error, so the
     * collect is bounded (limit cap+1 — at most cap+1 rows ever reach the
-    * driver) and over-cap states fail fast with an actionable message. At
+    * driver; a local state's rows are there already) and over-cap states
+    * fail fast with an actionable message, on both paths. At
     * the default 100k rows a worst-case all-dense state is ~1.6 GB of HLL
     * bytes — within a default driver heap. */
   def write(state: DataFrame, path: String,
             generator: String = "graft-spark 0.1.0",
             maxExportRows: Int = 100000): Unit = {
-    val rows = state.select(col("date"), col("domain"), col("hll"), col("queries"))
-      .limit(maxExportRows + 1)
-      .collect()
+    val columns = Seq("date", "domain", "hll", "queries")
+    val rows = shims.localSelect(state, columns).getOrElse(
+      state.select(columns.map(col): _*).limit(maxExportRows + 1).collect())
     require(rows.length <= maxExportRows,
       s"dnsmag export: state has more than $maxExportRows rows — .dnsmag is " +
         "the reference CLI's in-memory top-N exchange format, not a bulk " +

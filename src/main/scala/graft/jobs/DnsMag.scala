@@ -29,6 +29,14 @@ import graft.sources.RecordsCsv
  * temp file — the reference CLI's convention (cmd/common.go:38-65).
  * Collect inputs route to the pcap or csv reader by MAGIC BYTES of the
  * first file, not by extension.
+ *
+ * `collect`, `aggregate` and `report` each print one JSON line of run
+ * stats on stderr, read off what the run already holds on the driver (no
+ * extra job): `collect` its records, invalid records, records/s and
+ * elapsed seconds; `aggregate` its inputs, the state rows they held, the
+ * rows out and elapsed seconds (the counts are null for one non-local
+ * `--chunked` input, which passes through unmerged); `report` its dates,
+ * the rows reported and elapsed seconds.
  */
 object DnsMag {
 
@@ -126,6 +134,9 @@ object DnsMag {
     if (path.endsWith(".dnsmag")) graft.io.DnsMagCbor.write(df, path)
     else df.write.mode(SaveMode.Overwrite).parquet(path)
 
+  /** Seconds since `start` (a `System.nanoTime`). */
+  private def elapsed(start: Long): Double = (System.nanoTime() - start) / 1e9
+
   private def arg(args: Array[String], name: String): Option[String] = {
     val i = args.indexOf(name)
     if (i >= 0 && i + 1 < args.length) Some(args(i + 1)) else None
@@ -182,12 +193,12 @@ object DnsMag {
           coalesce(sum(when(col("invalid"), 1L).otherwise(0L)), lit(0L)).as("bad"))
         val start = System.nanoTime()
         writeState(DnsMagnitude.collect(observed, date), out)
-        val elapsed = (System.nanoTime() - start) / 1e9
+        val took = elapsed(start)
         val seen = obs.get
         val (records, bad) = (seen("records").asInstanceOf[Long], seen("bad").asInstanceOf[Long])
         // run stats, the reference collector's records/s counter
         System.err.println(f"""{"records":$records,"invalid":$bad,""" +
-          f""""records_per_sec":${records / elapsed}%.1f,"elapsed_s":$elapsed%.3f}""")
+          f""""records_per_sec":${records / took}%.1f,"elapsed_s":$took%.3f}""")
         if (bad > 0 && !rest.contains("--skip-invalid")) {
           val p = new org.apache.hadoop.fs.Path(out)
           p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
@@ -202,15 +213,20 @@ object DnsMag {
         require(inputs.count(_ == "-") <= 1, "--input - may appear at most once")
         val out = arg(rest, "--output").getOrElse(sys.error("--output required"))
         val force = arg(rest, "--force-date").map(java.sql.Date.valueOf)
+        val start = System.nanoTime()
         val states = inputs.map(p => readState(spark, resolveStateInput(p)))
         // default: exact order-free merge; --chunked replays the reference
         // CLI's sequential fold with between-chunk --top truncation
         val merged =
           if (rest.contains("--chunked"))
-            DnsMagnitude.aggregateChunked(states,
+            DnsMagnitude.mergeChunked(states,
               topN = arg(rest, "--top").map(_.toInt).getOrElse(2500), forceDate = force)
-          else DnsMagnitude.aggregate(states, forceDate = force)
-        writeState(merged, out)
+          else DnsMagnitude.merge(states, forceDate = force)
+        writeState(merged.state, out)
+        def json(n: Option[Long]) = n.fold("null")(_.toString)
+        System.err.println(f"""{"inputs":${inputs.length},""" +
+          s""""state_rows_in":${json(merged.rowsIn)},"rows_out":${json(merged.rowsOut)},""" +
+          f""""elapsed_s":${elapsed(start)}%.3f}""")
 
       case "report" =>
         val input = arg(rest, "--input").getOrElse(sys.error("--input required"))
@@ -218,14 +234,17 @@ object DnsMag {
         val source = arg(rest, "--source").getOrElse(sys.error("--source required"))
         val st = arg(rest, "--source-type").getOrElse(sys.error("--source-type required"))
         val top = arg(rest, "--top").map(_.toInt).getOrElse(2500)
-        val docs = DnsMagnitude.reportJson(
+        val start = System.nanoTime()
+        val report = DnsMagnitude.reportDocs(
           readStatePinned(spark, resolveStateInput(input)), source, st, top)
         // Hadoop FS write: report files land on HDFS/object stores too
         val p = new org.apache.hadoop.fs.Path(out)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         val os = fs.create(p, true)
-        try os.write((docs.mkString("\n") + "\n").getBytes("UTF-8"))
+        try os.write((report.docs.mkString("\n") + "\n").getBytes("UTF-8"))
         finally os.close()
+        System.err.println(f"""{"dates":${report.docs.length},"rows":${report.rows},""" +
+          f""""elapsed_s":${elapsed(start)}%.3f}""")
 
       case "view" =>
         val input = arg(rest, "--input").getOrElse(sys.error("--input required"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UnsafeRow}
@@ -75,25 +76,36 @@ private[graft] object Plans {
     val sum = new BigSum
     sc.register(sum)
     val reliable = sc.getCheckpointDir.isDefined
-    val qe = df.queryExecution
-    val cut = shims.withCallSite(sc, label) {
-      SQLExecution.withNewExecutionId(qe, Some(if (reliable) "checkpoint" else "localCheckpoint")) {
-        shims.checkpointNow(qe.executedPlan.execute().mapPartitions { it =>
-          lazy val toUnsafe = UnsafeProjection.create(schema)
-          it.map { r =>
-            val u = (r match { case u: UnsafeRow => u; case _ => toUnsafe(r) }).copy()
-            rows.add(1L)
-            bytes.add(u.getSizeInBytes.toLong)
-            if (sumAt >= 0 && !u.isNullAt(sumAt)) sum.add(u.getLong(sumAt))
-            u: InternalRow
-          }
-        }, reliable)
-      }
+    val cut = execute(df, label, if (reliable) "checkpoint" else "localCheckpoint") { rdd =>
+      shims.checkpointNow(rdd.mapPartitions { it =>
+        lazy val toUnsafe = UnsafeProjection.create(schema)
+        it.map { r =>
+          val u = (r match { case u: UnsafeRow => u; case _ => toUnsafe(r) }).copy()
+          rows.add(1L)
+          bytes.add(u.getSizeInBytes.toLong)
+          if (sumAt >= 0 && !u.isNullAt(sumAt)) sum.add(u.getLong(sumAt))
+          u: InternalRow
+        }
+      }, reliable)
     }
     org.slf4j.LoggerFactory.getLogger(getClass).info(
       s"$label: pinned ${rows.sum} rows, ${bytes.sum} bytes")
     Pinned(shims.internalCreateDataFrame(spark, cut, schema, rows.sum, bytes.sum),
       rows.sum, bytes.sum, sum.value)
+  }
+
+  /** Run `action` over the rows of `df`'s executed plan, in one SQL
+    * execution named `name` (as a Dataset action runs its plan), with
+    * `label` as the call site of the jobs and stages it starts. The frame's
+    * plan is used as it is, with no Dataset node added above it, so no
+    * encoder or typed operator is analyzed or planned, and observations on
+    * the frame complete when the execution ends. The rows may be reused
+    * `UnsafeRow`s: copy what outlives a row. */
+  def execute[T](df: DataFrame, label: String, name: String)(action: RDD[InternalRow] => T): T = {
+    val qe = df.queryExecution
+    shims.withCallSite(df.sparkSession.sparkContext, label) {
+      SQLExecution.withNewExecutionId(qe, Some(name))(action(qe.executedPlan.execute()))
+    }
   }
 
   /** Scale-adaptive width for per-row kernel stages (BATCH frames only —

@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -56,19 +56,29 @@ object DnsMagnitude {
     * Eager, on one of two paths:
     *  - the records' plan reads files of at most [[DriverMaxInputBytes]]
     *    in total (sizes known from its file index, as for
-    *    [[graft.sources.RecordsCsv.read]] and `RecordsPcap.read`): one
-    *    Spark job builds one partial sketch and query sum per domain per
-    *    partition, the driver merges them (`Hll.union`, overflow-checked
-    *    sums), and the state comes back as a local frame of the same schema
-    *    as the plan path's. `DnsMagCbor.write`, [[aggregate]] and
-    *    [[report]] then run no further Spark job. The job is a Dataset
-    *    action, so an `observe` on the records fires;
-    *  - any other input (larger, unsized or streaming) returns
-    *    [[collectByPlan]], lazily. */
-  def collect(records: DataFrame, date: java.sql.Date): DataFrame = {
-    val plan = collectByPlan(records, date)
-    if (fitsDriver(records)) collectOnDriver(records, date, plan.schema) else plan
-  }
+    *    [[graft.sources.RecordsCsv.read]] and `RecordsPcap.read`), and
+    *    `hash`, `domain`, `cnt` and `invalid` (when present) each name one
+    *    column of the expected type: one Spark job runs the records' own
+    *    executed plan and builds one partial sketch and query sum per
+    *    domain per partition, the driver merges them (`Hll.union`,
+    *    overflow-checked sums), and the state comes back as a local frame
+    *    of [[StateSchema]]. That job is the only query planned: no plan of
+    *    the state is built, and `DnsMagCbor.write`, [[aggregate]],
+    *    [[report]] and [[reportJson]] then read the local rows with no
+    *    query. The job runs in a SQL execution of the records' plan, so an
+    *    `observe` on the records completes;
+    *  - any other input (larger, unsized, streaming or otherwise shaped)
+    *    returns [[collectByPlan]], lazily. */
+  def collect(records: DataFrame, date: java.sql.Date): DataFrame =
+    if (fitsDriver(records)) collectOnDriver(records, date) else collectByPlan(records, date)
+
+  /** The schema of a collected state, on both paths of [[collect]]. */
+  private[graft] val StateSchema: StructType = StructType(Seq(
+    StructField("date", DateType, nullable = false),
+    StructField("domain", StringType),
+    StructField("hll", BinaryType),
+    StructField("queries", LongType),
+    StructField("version", LongType, nullable = false)))
 
   /** Largest input [[collect]] merges on the driver, in file bytes as
     * listed (compressed bytes for gzip). Both paths scan and partially
@@ -83,11 +93,27 @@ object DnsMagnitude {
     * files, 4.6 MB took 0.88 vs 0.90 s. */
   private[graft] val DriverMaxInputBytes = 8L * 1024 * 1024
 
+  /** The records' columns [[collectOnDriver]] reads, each `name ->
+    * type`; `invalid` is optional. */
+  private val RecordColumns = Seq("domain" -> StringType, "hash" -> LongType, "cnt" -> LongType)
+
+  /** The position of `name` in `schema` when exactly one column resolves
+    * to it, spelled `name` and of type `t`. Otherwise (absent, ambiguous,
+    * spelled differently or of another type) the plan path resolves the
+    * name, or fails as it always has. */
+  private def position(schema: StructType, name: String, t: DataType): Option[Int] =
+    schema.fields.indices.filter(i => schema(i).name.equalsIgnoreCase(name)) match {
+      case Seq(i) if schema(i).name == name && schema(i).dataType == t => Some(i)
+      case _ => None
+    }
+
   private def fitsDriver(records: DataFrame): Boolean = {
-    def typed(name: String, t: DataType) =
-      records.schema.find(_.name == name).exists(_.dataType == t)
-    !records.isStreaming && typed("hash", LongType) && typed("domain", StringType) &&
-      typed("cnt", LongType) && shims.inputFileBytes(records).exists(_ <= DriverMaxInputBytes)
+    val schema = records.schema
+    !records.isStreaming &&
+      RecordColumns.forall { case (name, t) => position(schema, name, t).isDefined } &&
+      (!schema.fieldNames.exists(_.equalsIgnoreCase("invalid")) ||
+        position(schema, "invalid", BooleanType).isDefined) &&
+      shims.inputFileBytes(records).exists(_ <= DriverMaxInputBytes)
   }
 
   /** The rows that count: valid, with a client hash. */
@@ -119,34 +145,50 @@ object DnsMagnitude {
     var queries: java.lang.Long = null
   }
 
-  /** Per partition: one sketch and query sum per domain. */
-  private def partials(rows: Iterator[(String, Long, java.lang.Long)])
-      : Iterator[(String, Array[Byte], java.lang.Long)] = {
-    val groups = new java.util.HashMap[String, Partial]
-    rows.foreach { case (domain, hash, cnt) =>
-      var p = groups.get(domain)
-      if (p == null) { p = new Partial; groups.put(domain, p) }
-      p.hll.addRaw(hash)
-      if (cnt != null)
-        p.queries = if (p.queries == null) cnt else Math.addExact(p.queries.longValue, cnt.longValue)
+  private val Root = UTF8String.fromString(".")
+
+  /** Per partition: one sketch and query sum per domain, over the records'
+    * rows as their plan emits them, `domain`, `hash` and `cnt` at
+    * `d`, `h` and `c` and `invalid` at `inv` (-1: no such column). This
+    * loop is [[counted]] and [[domainKey]]: it drops a row whose `invalid`
+    * is true or NULL or whose `hash` is NULL, and keys root "." and NULL
+    * domains alike as NULL. */
+  private def partials(d: Int, h: Int, c: Int, inv: Int)(rows: Iterator[InternalRow])
+      : Iterator[(UTF8String, Array[Byte], java.lang.Long)] = {
+    val groups = new java.util.HashMap[UTF8String, Partial]
+    rows.foreach { r =>
+      if ((inv < 0 || !(r.isNullAt(inv) || r.getBoolean(inv))) && !r.isNullAt(h)) {
+        val domain =
+          if (r.isNullAt(d)) null
+          else { val s = r.getUTF8String(d); if (s == Root) null else s }
+        var p = groups.get(domain)
+        if (p == null) {
+          p = new Partial
+          groups.put(if (domain == null) null else domain.clone(), p)
+        }
+        p.hll.addRaw(r.getLong(h))
+        if (!r.isNullAt(c)) {
+          val cnt = r.getLong(c)
+          p.queries = if (p.queries == null) cnt else Math.addExact(p.queries.longValue, cnt)
+        }
+      }
     }
     groups.asScala.iterator.map { case (d, p) => (d, p.hll.toBytes, p.queries) }
   }
 
   /** [[collect]] of small records: partial sketches per partition in one
-    * job, merged on the driver into a local frame of `schema`. */
-  private def collectOnDriver(records: DataFrame, date: java.sql.Date,
-                              schema: StructType): DataFrame = {
-    val spark = records.sparkSession
-    val rows = counted(records).select(domainKey, col("hash"), col("cnt"))
-      .as(Encoders.tuple(Encoders.STRING, Encoders.scalaLong, Encoders.LONG))
-      .mapPartitions(partials)(Encoders.tuple(Encoders.STRING, Encoders.BINARY, Encoders.LONG))
-    val merged = shims.withCallSite(spark.sparkContext, "DnsMagnitude.collect partials") {
-      rows.collect()
+    * job over the records' executed plan, merged on the driver into a
+    * local frame of [[StateSchema]]. */
+  private def collectOnDriver(records: DataFrame, date: java.sql.Date): DataFrame = {
+    val schema = records.schema
+    val Seq(d, h, c) = RecordColumns.map { case (name, t) => position(schema, name, t).get }
+    val inv = position(schema, "invalid", BooleanType).getOrElse(-1)
+    val merged = Plans.execute(records, "DnsMagnitude.collect partials", "collect") {
+      _.mapPartitions(partials(d, h, c, inv)).collect()
     }.groupBy(_._1)
     val day = DateTimeUtils.fromJavaDate(date)
-    shims.localFrame(spark, schema, merged.toSeq.map { case (domain, ps) =>
-      new GenericInternalRow(Array[Any](day, UTF8String.fromString(domain),
+    shims.localFrame(records.sparkSession, StateSchema, merged.toSeq.map { case (domain, ps) =>
+      new GenericInternalRow(Array[Any](day, domain,
         mergeHll(ps.map(_._2)).toBytes, sumQueries(ps.map(_._3)), StateVersion)): InternalRow
     })
   }
@@ -166,36 +208,52 @@ object DnsMagnitude {
     * Both paths check the versions and dates of the inputs before returning
     * and fail with the same messages; a bad version or a date mismatch
     * throws from this call. */
-  def aggregate(states: Seq[DataFrame], forceDate: Option[java.sql.Date] = None): DataFrame = {
+  def aggregate(states: Seq[DataFrame], forceDate: Option[java.sql.Date] = None): DataFrame =
+    merge(states, forceDate).state
+
+  /** A merged state and what the merge read and wrote: the state rows of
+    * all its inputs and the rows out. They are read off what the merge
+    * already holds on the driver (local rows, or the plan path's
+    * observation and pin tally), so taking them runs no job. None where
+    * no merge ran and the rows are not on the driver: a single non-local
+    * input to [[aggregateChunked]], which returns it as it is. */
+  private[graft] final case class Merged(state: DataFrame, rowsIn: Option[Long],
+                                         rowsOut: Option[Long])
+
+  /** [[aggregate]], with its row counts. */
+  private[graft] def merge(states: Seq[DataFrame], forceDate: Option[java.sql.Date]): Merged = {
     require(states.nonEmpty, "aggregate needs at least one sketch state " +
       "(pass the states to merge, e.g. one DnsMagCbor.read per .dnsmag file)")
     val local = states.map(localState)
     if (local.forall(_.isDefined)) aggregateOnDriver(states.head.sparkSession,
       local.flatten, forceDate.map(DateTimeUtils.fromJavaDate))
-    else aggregateByPlan(states, forceDate)
+    else mergeByPlan(states, forceDate)
   }
 
   /** [[aggregate]] as one Spark action whatever the inputs: the merge reads
     * every input once and is pinned; the versions and dates are observed on
     * that same scan. */
   private[graft] def aggregateByPlan(states: Seq[DataFrame],
-                                     forceDate: Option[java.sql.Date] = None): DataFrame = {
+                                     forceDate: Option[java.sql.Date] = None): DataFrame =
+    mergeByPlan(states, forceDate).state
+
+  private def mergeByPlan(states: Seq[DataFrame], forceDate: Option[java.sql.Date]): Merged = {
     val seen = Observation()
     val all = states
       .map(s => if (s.columns.contains("version")) s
                 else s.withColumn("version", lit(StateVersion)))
       .reduce(_.unionByName(_))
       .observe(seen, collect_set(col("version")).as("versions"),
-        collect_set(col("date")).as("dates"))
+        collect_set(col("date")).as("dates"), count(lit(1)).as("rows"))
     val merged = Plans.pin(forceDate.fold(all)(d => all.withColumn("date", lit(d)))
       .groupBy(col("date"), col("domain"))
       .agg(hll_merge(col("hll")).as("hll"), sum(col("queries")).as("queries"))
-      .withColumn("version", lit(StateVersion)), "DnsMagnitude.aggregate merged").df
+      .withColumn("version", lit(StateVersion)), "DnsMagnitude.aggregate merged")
     // a plan the optimizer proves empty drops the observation: no rows seen
     val observed = seen.get
     checkInputs(observed.getOrElse("versions", Nil).asInstanceOf[Seq[Long]],
       observed.getOrElse("dates", Nil).asInstanceOf[Seq[Any]].map(_.toString), forceDate.isDefined)
-    merged
+    Merged(merged.df, Some(observed.getOrElse("rows", 0L).asInstanceOf[Long]), Some(merged.rows))
   }
 
   /** The reference refuses unknown versions and, unless a date is forced,
@@ -256,7 +314,7 @@ object DnsMagnitude {
 
   /** [[aggregate]] of local states, on the driver. */
   private def aggregateOnDriver(spark: SparkSession, states: Seq[(StructType, Seq[StateRow])],
-                                forceDate: Option[Int]): DataFrame = {
+                                forceDate: Option[Int]): Merged = {
     val rows = states.flatMap(_._2)
     checkInputs(rows.flatMap(r => Option(r.version)).map(_.longValue).distinct,
       rows.flatMap(r => Option(r.date)).distinct.map(d => DateTimeUtils.toJavaDate(d).toString),
@@ -269,10 +327,10 @@ object DnsMagnitude {
       StructField("hll", BinaryType),
       StructField("queries", LongType),
       StructField("version", LongType, nullable = false)))
-    shims.localFrame(spark, schema, groups.toSeq.map { case ((date, domain), rs) =>
+    Merged(shims.localFrame(spark, schema, groups.toSeq.map { case ((date, domain), rs) =>
       new GenericInternalRow(Array[Any](date, domain, mergeHll(rs.map(_.hll)).toBytes,
         sumQueries(rs.map(_.queries)), StateVersion)): InternalRow
-    })
+    }), Some(rows.size.toLong), Some(groups.size.toLong))
   }
 
   /**
@@ -295,10 +353,21 @@ object DnsMagnitude {
    * carries), which also keeps the per-step Spark plan shallow.
    */
   def aggregateChunked(states: Seq[DataFrame], topN: Int = 2500,
-                       forceDate: Option[java.sql.Date] = None): DataFrame = {
+                       forceDate: Option[java.sql.Date] = None): DataFrame =
+    mergeChunked(states, topN, forceDate).state
+
+  /** [[aggregateChunked]], with its row counts. Each step re-reads the
+    * previous step's rows, so the rows in are each step's rows in less the
+    * rows it took from the step before. */
+  private[graft] def mergeChunked(states: Seq[DataFrame], topN: Int,
+                                  forceDate: Option[java.sql.Date]): Merged = {
     require(states.nonEmpty, "aggregateChunked needs at least one state")
-    states.reduceLeft { (acc, next) =>
-      materialize(truncateState(aggregate(Seq(acc, next), forceDate), topN))
+    val first = shims.localRows(states.head).map(_._2.size.toLong)
+    states.tail.foldLeft(Merged(states.head, first, first)) { (acc, next) =>
+      val step = merge(Seq(acc.state, next), forceDate)
+      val out = materialize(truncateState(step.state, topN))
+      val carried = acc.rowsIn.zip(acc.rowsOut).fold(0L) { case (in, out) => in - out }
+      Merged(out, step.rowsIn.map(_ + carried), shims.localRows(out).map(_._2.size.toLong))
     }
   }
 
@@ -437,14 +506,26 @@ object DnsMagnitude {
    * Reference report JSON (/root/reference/schema/report-schema.yaml): one
    * document per date. Report cardinality is bounded by top-N (default
    * 2500), so a driver-side encode is the right tool — this is the one
-   * deliberate `collect()` in the engine.
+   * deliberate `collect()` in the engine. A local state (as [[collect]],
+   * [[aggregate]] and [[graft.io.DnsMagCbor.read]] return for small inputs)
+   * is reported on the driver and its rows are read with no query; any
+   * other state runs the report plan and collects it.
    */
   def reportJson(state: DataFrame, source: String, sourceType: String,
-                 topN: Int = 2500, generator: String = "graft-spark 0.1.0"): Seq[String] = {
+                 topN: Int = 2500, generator: String = "graft-spark 0.1.0"): Seq[String] =
+    reportDocs(state, source, sourceType, topN, generator).docs
+
+  /** [[reportJson]]'s documents, one per date, and the report rows they
+    * hold. */
+  private[graft] final case class ReportDocs(docs: Seq[String], rows: Int)
+
+  private[graft] def reportDocs(state: DataFrame, source: String, sourceType: String,
+                                topN: Int, generator: String = "graft-spark 0.1.0"): ReportDocs = {
     require(sourceType == "authoritative" || sourceType == "recursive",
       s"sourceType must be authoritative|recursive, got $sourceType") // cmd/report.go:20-29
-    val rows = report(state, topN).collect()
-    rows.groupBy(_.getAs[java.sql.Date]("date")).toSeq.sortBy(_._1.toString).map {
+    val rep = report(state, topN)
+    val rows = shims.localSelect(rep, rep.columns.toSeq).getOrElse(rep.collect())
+    ReportDocs(rows.groupBy(_.getAs[java.sql.Date]("date")).toSeq.sortBy(_._1.toString).map {
       case (date, rs) =>
         val sb = new StringBuilder
         def esc(s: String) = s.flatMap {
@@ -469,7 +550,7 @@ object DnsMagnitude {
         }.mkString(","))
         sb.append("]}")
         sb.toString
-    }
+    }, rows.length)
   }
 
   /** JSON stats view — the reference's `view --json`

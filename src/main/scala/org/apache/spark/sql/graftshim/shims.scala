@@ -2,9 +2,9 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericRowWithSchema}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Statistics}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -65,6 +65,32 @@ object shims {
     df.queryExecution.analyzed match {
       case l: LocalRelation => Some((DataTypeUtils.fromAttributes(l.output), l.data))
       case _ => None
+    }
+
+  /** `df.select(columns).collect()` read with no query, for a frame that is
+    * a bare LocalRelation and whose columns each resolve to one field
+    * spelled as given: the rows' selected fields converted as `collect`
+    * converts them (`CatalystTypeConverters`), in rows that carry their
+    * schema. None for any other frame. */
+  def localSelect(df: DataFrame, columns: Seq[String]): Option[Array[Row]] =
+    localRows(df).flatMap { case (schema, rows) =>
+      val picked = columns.map { c =>
+        schema.fields.indices.filter(i => schema(i).name.equalsIgnoreCase(c)) match {
+          case Seq(i) if schema(i).name == c => Some(i)
+          case _ => None
+        }
+      }
+      if (picked.exists(_.isEmpty)) None else {
+        val at = picked.flatten.toArray
+        val types = at.map(schema(_).dataType)
+        val convert = types.map(CatalystTypeConverters.createToScalaConverter)
+        val out = StructType(at.map(schema(_)))
+        Some(rows.iterator.map { r =>
+          new GenericRowWithSchema(Array.tabulate[Any](at.length) { k =>
+            if (r.isNullAt(at(k))) null else convert(k)(r.get(at(k), types(k)))
+          }, out): Row
+        }.toArray)
+      }
     }
 
   /** The bytes of the files `df`'s plan reads, when every leaf of the plan

@@ -41,6 +41,41 @@ object SparkTestBase {
     * work that `body` starts on this thread, as [[workOf]] finds it. */
   def inputBytesOf(body: => Unit): Long = watch(body)._3
 
+  /** The SQL executions (each query a Dataset action or a `Plans.execute`
+    * runs) that `body` completes or fails, in order. A listener collects
+    * them between two marker queries, one run before `body` and one after:
+    * the listener bus delivers events in order, so what arrives before the
+    * first marker is an earlier query's, and the second fences the list. */
+  def queriesOf(body: => Unit): Seq[org.apache.spark.sql.execution.QueryExecution] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    val fence = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]
+    val started = new CountDownLatch(1)
+    val fenced = new CountDownLatch(1)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      private def see(qe: QueryExecution): Unit = {
+        val plan = qe.logical.toString
+        if (plan.contains(s"$fence:start")) started.countDown()
+        else if (plan.contains(s"$fence:end")) fenced.countDown()
+        else if (started.getCount == 0) seen.add(qe)
+      }
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = see(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = see(qe)
+    }
+    def marker(tag: String): Unit =
+      spark.range(1).select(org.apache.spark.sql.functions.lit(s"$fence:$tag")).collect()
+    spark.listenerManager.register(listener)
+    try {
+      marker("start")
+      require(started.await(60, TimeUnit.SECONDS), "listener never saw the start marker")
+      try body finally {
+        marker("end")
+        require(fenced.await(60, TimeUnit.SECONDS), "listener never saw the end marker")
+      }
+      seen.toArray(Array.empty[QueryExecution]).toSeq
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   private def watch(body: => Unit): (Int, Seq[String], Long) = {
     val sc = spark.sparkContext
     val key = "graft.test.workOf"

@@ -84,6 +84,25 @@ class HllSpec extends AnyFunSuite {
     }
   }
 
+  test("union and decode sized up front give the bytes of a build over the concatenation") {
+    val rnd = new java.util.Random(29)
+    def build(xs: Array[Long]*): Hll = { val h = Hll(); xs.foreach(_.foreach(h.addRaw)); h }
+    // overlapping halves: counts that sum past the promotion point whose
+    // union stays under it, sum under it, a union into an empty sketch, and
+    // small sketches that overlap
+    val shared = Array.fill(900)(rnd.nextLong())
+    for ((n, m) <- Seq((300, 300), (200, 1000), (1200, 1000), (0, 1500), (4, 2), (2, 3))) {
+      val a = shared.take(n) ++ Array.fill(n / 4)(rnd.nextLong())
+      val b = shared.take(m) ++ Array.fill(m / 4)(rnd.nextLong())
+      val want = hex(build(a, b).toBytes)
+      val u = Hll.fromBytes(build(a).toBytes)
+      u.union(Hll.fromBytes(build(b).toBytes))
+      assert(hex(u.toBytes) === want, s"$n with $m")
+      assert(u.estimate === build(a, b).estimate, s"$n with $m")
+      assert(hex(Hll.fromBytes(build(a, b).toBytes).toBytes) === want, s"$n with $m, decoded")
+    }
+  }
+
   test("settings mismatch rejected on union (strict union)") {
     val a = Hll()
     val b = new Hll(11, 5)

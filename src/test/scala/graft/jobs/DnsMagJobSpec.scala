@@ -2,6 +2,7 @@ package graft.jobs
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.SparkTestBase.workOf
+import graft.io.DnsMagCbor
 
 /** Drives the CLI-equivalent job end-to-end: collect two inputs ->
   * aggregate -> report, asserting the golden union estimate (92) lands in
@@ -76,30 +77,11 @@ class DnsMagJobSpec extends AnyFunSuite {
   /** `.dnsmag` scans in the plans of the SQL actions `body` runs, counted
     * in the executed (adaptive final) plans; a reused exchange is one read. */
   private def dnsmagScans(body: => Unit): Int = {
-    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    val fence = java.util.UUID.randomUUID().toString
-    val scans = new java.util.concurrent.atomic.AtomicInteger
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (qe.logical.toString.contains(fence)) fenced.countDown()
-        else scans.addAndGet(helper.collect(qe.executedPlan) {
-          case s: BatchScanExec if s.table.name.startsWith("dnsmag") => s
-        }.length)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
-    try {
-      body
-      // listener events arrive in order: once the fence query is seen,
-      // every action of `body` has been counted
-      spark.range(1).select(org.apache.spark.sql.functions.lit(fence)).collect()
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener never saw the fence query")
-      scans.get
-    } finally spark.listenerManager.unregister(listener)
+    graft.SparkTestBase.queriesOf(body).map(qe => helper.collect(qe.executedPlan) {
+      case s: BatchScanExec if s.table.name.startsWith("dnsmag") => s
+    }.length).sum
   }
 
   test("report and text view read a .dnsmag input once") {
@@ -247,6 +229,52 @@ class DnsMagJobSpec extends AnyFunSuite {
     assert(elapsed > 0)
     assert(math.abs(stats.get("records_per_sec").asDouble - records / elapsed) <=
       0.01 * records / elapsed, line.head)
+  }
+
+  /** The one stderr line of `body` that starts with `{"<key>":`, parsed. */
+  private def statsLine(key: String)(body: => Unit): com.fasterxml.jackson.databind.JsonNode = {
+    val err = stderrOf(body)
+    val lines = err.linesIterator.filter(_.startsWith(s"{\"$key\":")).toSeq
+    assert(lines.size === 1, err)
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(lines.head)
+  }
+
+  test("aggregate and report print their run stats as one JSON line on stderr") {
+    val dir = graft.SparkTestBase.tempDir("graft_job_stats2").toString
+    val tsv = getClass.getResource("/test2.tsv").getPath
+    for (out <- Seq("a.dnsmag", "b")) DnsMag.run(spark, Array("collect", "--input", tsv, "--tsv",
+      "--date", "2000-01-01", "--output", s"$dir/$out"))
+    // 7 domains; the .dnsmag adds the NULL bucket (the all-clients
+    // residual), so every merge keeps 8 rows
+    val rowsOf = Map("a.dnsmag" -> 8L, "b" -> 7L)
+    for ((inputs, chunked) <- Seq((Seq("a.dnsmag"), false), (Seq("a.dnsmag", "b"), false),
+        (Seq("a.dnsmag", "a.dnsmag", "b"), true), (Seq("a.dnsmag"), true))) {
+      val out = s"$dir/merged${inputs.length}$chunked.dnsmag"
+      val stats = statsLine("inputs")(DnsMag.run(spark, Array("aggregate") ++
+        inputs.flatMap(i => Seq("--input", s"$dir/$i")) ++ Array("--output", out) ++
+        (if (chunked) Seq("--chunked", "--top", "5") else Nil)))
+      val kept = if (chunked) 6L else 8L // top 5 and the NULL bucket
+      assert(stats.get("inputs").asInt === inputs.length)
+      assert(stats.get("state_rows_in").asLong === inputs.map(rowsOf).sum, stats)
+      assert(stats.get("rows_out").asLong === (if (inputs.length > 1) kept else 8L), stats)
+      assert(stats.get("rows_out").asLong === DnsMagCbor.read(spark, out).count(), stats)
+      assert(stats.get("elapsed_s").asDouble > 0)
+    }
+    // a parquet input with --chunked passes through unmerged: no counts
+    val passed = statsLine("inputs")(DnsMag.run(spark, Array("aggregate", "--input", s"$dir/b",
+      "--chunked", "--output", s"$dir/passed")))
+    assert(passed.get("state_rows_in").isNull && passed.get("rows_out").isNull, passed)
+
+    for ((top, rows) <- Seq((2500, 7L), (3, 3L))) {
+      val stats = statsLine("dates")(DnsMag.run(spark, Array("report", "--input", s"$dir/a.dnsmag",
+        "--source", "fixtures", "--source-type", "recursive", "--top", top.toString,
+        "--output", s"$dir/report$top.json")))
+      assert(stats.get("dates").asInt === 1)
+      assert(stats.get("rows").asLong === rows)
+      val json = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/report$top.json"))
+      assert("\"domain\":".r.findAllIn(json).length === rows)
+      assert(stats.get("elapsed_s").asDouble > 0)
+    }
   }
 
   test("a count beyond a long aborts collect as an invalid record, ANSI on or off") {

@@ -323,4 +323,95 @@ class DnsMagnitudeSpec extends AnyFunSuite {
       } finally spark.conf.set("spark.sql.ansi.enabled", prev)
     }
   }
+
+  /** Records with one invalid row, in one file: a driver-path collect. */
+  private def dirtyRecords(): org.apache.spark.sql.DataFrame = {
+    val f = java.nio.file.Files.createTempFile(graft.SparkTestBase.tempDir("graft_obs"), "r", ".csv")
+    java.nio.file.Files.writeString(f,
+      "192.168.1.1,com,5\n192.168.1.2,org,-3\n192.168.1.3,.,2\n10.0.0.1,com,1\n")
+    RecordsCsv.read(spark, f.toString)
+  }
+
+  test("an observe on the records completes after a driver-path collect, as after the plan's") {
+    import org.apache.spark.sql.Observation
+    def observed(run: org.apache.spark.sql.DataFrame => Unit): Map[String, Any] = {
+      val obs = Observation()
+      run(dirtyRecords().observe(obs, count(lit(1)).as("records"),
+        sum(when(col("invalid"), 1L).otherwise(0L)).as("bad")))
+      obs.get
+    }
+    val onDriver = observed { recs =>
+      val state = DnsMagnitude.collect(recs, d1)
+      assert(state.isLocal)
+    }
+    val byPlan = observed(recs => DnsMagnitude.collectByPlan(recs, d1).collect())
+    assert(onDriver === Map("records" -> 4L, "bad" -> 1L))
+    assert(onDriver === byPlan)
+  }
+
+  test("a small collect, write and reportJson run one query: the collect's job") {
+    val dir = graft.SparkTestBase.tempDir("graft_dnsmag_one_query").toString
+    val recs = RecordsCsv.read(spark, res("test2.tsv"), tsv = true)
+    var docs = Seq.empty[String]
+    val queries = graft.SparkTestBase.queriesOf {
+      val state = DnsMagnitude.collect(recs, d1)
+      DnsMagCbor.write(state, s"$dir/s.dnsmag")
+      docs = DnsMagnitude.reportJson(state, "test2", "recursive")
+    }
+    assert(queries.length === 1, queries.map(_.logical.simpleString(100)))
+    assert(docs.head.contains("\"totalUniqueClients\":27,"), docs)
+  }
+
+  test("write and reportJson give a local state's bytes and strings as for the same rows in a plan") {
+    val dir = graft.SparkTestBase.tempDir("graft_dnsmag_local").toString
+    val recs = Seq(res("test1_records.tsv"), res("test2.tsv"), res("test3.tsv"))
+      .map(RecordsCsv.read(spark, _, tsv = true)).reduce(_.union(_))
+    // two dates, so the file is a sequence of two datasets
+    val rows = DnsMagnitude.collect(recs, d1).collect() ++
+      DnsMagnitude.collect(RecordsCsv.read(spark, res("test2.tsv"), tsv = true), d2).collect()
+    val local = spark.createDataFrame(java.util.Arrays.asList(rows: _*), DnsMagnitude.StateSchema)
+    assert(local.isLocal)
+    // the same rows behind a plan: not a bare LocalRelation
+    val planned = local.repartition(2)
+    assert(!planned.isLocal)
+    def bytes(name: String) = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/$name"))
+    assert(graft.SparkTestBase.queriesOf(DnsMagCbor.write(local, s"$dir/local.dnsmag")).isEmpty)
+    DnsMagCbor.write(planned, s"$dir/planned.dnsmag")
+    assert(bytes("local.dnsmag").toSeq === bytes("planned.dnsmag").toSeq)
+    for (top <- Seq(0, 3, 2500)) {
+      var fromLocal = Seq.empty[String]
+      assert(graft.SparkTestBase.queriesOf {
+        fromLocal = DnsMagnitude.reportJson(local, "src", "authoritative", top)
+      }.isEmpty)
+      val fromPlan = DnsMagnitude.reportJson(planned, "src", "authoritative", top)
+      assert(fromLocal.length === 2)
+      assert(fromLocal === fromPlan, s"top $top")
+    }
+  }
+
+  test("an over-cap local state still fails the export with the maxExportRows message") {
+    val dir = graft.SparkTestBase.tempDir("graft_dnsmag_cap").toString
+    val local = DnsMagnitude.collect(RecordsCsv.read(spark, res("test2.tsv"), tsv = true), d1)
+    assert(local.isLocal && local.count() === 7L)
+    val e = intercept[IllegalArgumentException] {
+      DnsMagCbor.write(local, s"$dir/cap.dnsmag", maxExportRows = 6)
+    }
+    assert(e.getMessage.contains("state has more than 6 rows") &&
+      e.getMessage.contains("Truncate first"), e.getMessage)
+    assert(!new java.io.File(s"$dir/cap.dnsmag").exists())
+    DnsMagCbor.write(local, s"$dir/ok.dnsmag", maxExportRows = 7)
+    assert(new java.io.File(s"$dir/ok.dnsmag").isFile)
+  }
+
+  test("records whose invalid column is not BOOLEAN take the plan path") {
+    val recs = RecordsCsv.read(spark, res("test2.tsv"), tsv = true)
+    val dir = graft.SparkTestBase.tempDir("graft_dnsmag_badinv").toString
+    recs.withColumn("invalid", col("invalid").cast("string")).write.parquet(s"$dir/p")
+    val odd = spark.read.parquet(s"$dir/p")
+    val state = DnsMagnitude.collect(odd, d1)
+    assert(!state.isLocal)
+    assert(state.schema === DnsMagnitude.collectByPlan(odd, d1).schema)
+    assert(state.collect().toSet.map((r: org.apache.spark.sql.Row) => r.getAs[String]("domain")) ===
+      Set("uk", "local", "org", "arpa", "me", "net", "com"))
+  }
 }

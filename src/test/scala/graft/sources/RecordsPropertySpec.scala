@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.propBoolean
 import graft.functions.GraftFunctions._
@@ -17,7 +17,10 @@ import graft.pipelines.DnsMagnitude
   *  - `RecordsCsv.read` gives the rows and schema of the Column expressions
   *    it replaced, kept verbatim below as the oracle;
   *  - `collect` (the driver merge of small inputs) gives the schema and
-  *    rows of `collectByPlan`, HLL bytes equal. */
+  *    rows of `collectByPlan`, HLL bytes equal, over those files and over
+  *    parquet record frames of any shape: with or without an `invalid`
+  *    column (true, false or NULL), NULL hashes, domains and counts, root
+  *    "." domains, columns in any order and extra columns. */
 object RecordsPropertySpec extends Properties("records-csv") {
 
   // every case runs a few plans on Spark
@@ -155,4 +158,57 @@ object RecordsPropertySpec extends Properties("records-csv") {
     val byPlan = outcome(state(DnsMagnitude.collectByPlan(recs, date)))
     (onDriver == byPlan) :| s"lines=${in.lines}\ndriver=$onDriver\nplan=$byPlan"
   }
+
+  /** A record frame as a parquet file holds it: `hash`, `domain`, `cnt`,
+    * maybe `invalid`, and extra columns, in the generated column order. */
+  private final case class Frame(fields: Seq[StructField], rows: Seq[Row], parts: Int)
+
+  private def nullable[T](g: Gen[T]): Gen[Any] = Gen.frequency(5 -> g, 1 -> Gen.const(null))
+
+  private val genFrame: Gen[Frame] = for {
+    withInvalid <- Gen.oneOf(true, false)
+    extras <- Gen.choose(0, 2)
+    fields = Seq(StructField("hash", LongType), StructField("domain", StringType),
+      StructField("cnt", LongType)) ++
+      (if (withInvalid) Seq(StructField("invalid", BooleanType)) else Nil) ++
+      Seq(StructField("client_ip", StringType), StructField("ts", LongType)).take(extras)
+    keys <- Gen.listOfN(fields.length, Gen.choose(0, 1 << 20))
+    order = fields.indices.sortBy(keys)
+    n <- Gen.choose(0, 40)
+    rows <- Gen.listOfN(n, for {
+      hash <- nullable(Gen.frequency(3 -> Gen.choose(0L, 20L).map(_ * 0x9E3779B97F4A7C15L),
+        1 -> Gen.long))
+      domain <- nullable(Gen.oneOf("com", "org", "net", ".", "a.b.uk", "", "Com"))
+      cnt <- nullable(Gen.frequency(8 -> Gen.choose(-2L, 300L),
+        1 -> Gen.const(Long.MaxValue / 2 + 1)))
+      invalid <- nullable(Gen.oneOf(true, false))
+      ip <- Gen.oneOf("10.0.0.1", "::1")
+      ts <- Gen.choose(0L, 99L)
+    } yield Seq[Any](hash, domain, cnt, invalid, ip, ts))
+    parts <- Gen.choose(1, 3)
+  } yield {
+    val byName = Map("hash" -> 0, "domain" -> 1, "cnt" -> 2, "invalid" -> 3, "client_ip" -> 4, "ts" -> 5)
+    val picked = order.map(fields(_))
+    Frame(picked, rows.map(r => Row.fromSeq(picked.map(f => r(byName(f.name))))), parts)
+  }
+
+  private def parquet(frame: Frame): DataFrame = {
+    val path = dir.resolve(s"p${files.incrementAndGet()}").toString
+    spark.createDataFrame(java.util.Arrays.asList(frame.rows: _*), StructType(frame.fields))
+      .repartition(frame.parts).write.parquet(path)
+    spark.read.parquet(path)
+  }
+
+  property("collect on the driver == collectByPlan over parquet record frames") =
+    Prop.forAll(genFrame) { frame =>
+      val recs = parquet(frame)
+      val onDriver = outcome {
+        val collected = DnsMagnitude.collect(recs, date)
+        require(collected.isLocal, "a small input merges on the driver")
+        state(collected)
+      }
+      val byPlan = outcome(state(DnsMagnitude.collectByPlan(recs, date)))
+      (onDriver == byPlan) :| s"fields=${frame.fields}\nrows=${frame.rows}\n" +
+        s"driver=$onDriver\nplan=$byPlan"
+    }
 }
